@@ -28,8 +28,8 @@ from __future__ import annotations
 import io
 import os
 import struct
-from dataclasses import dataclass
-from typing import BinaryIO, Iterator, Optional
+from dataclasses import dataclass, field
+from typing import BinaryIO, Callable, Iterator, Optional
 
 import numpy as np
 import pyarrow as pa
@@ -124,8 +124,15 @@ class BlockColumn:
 
 @dataclass
 class Block:
+    """One Native block. ``header`` holds the (name, type) of every
+    column in wire order, decoded or not; ``columns`` holds the decoded
+    ones. A ``dead`` block is one PREWHERE proved empty: ``n_rows``
+    still counts its rows, but none of its columns are kept."""
+
     n_rows: int
     columns: list[BlockColumn]
+    header: list[tuple[str, CHType]] = field(default_factory=list)
+    dead: bool = False
 
     def to_record_batch(self) -> pa.RecordBatch:
         return pa.RecordBatch.from_arrays(
@@ -1354,51 +1361,75 @@ def read_block(
     lossy_uint64: bool = False,
     unsupported_as_varchar: bool = False,
     marks=None,
+    prewhere: Optional[tuple[set[str], Callable[[Block], bool]]] = None,
+    header: Optional[list] = None,
 ) -> Optional[Block]:
     """Read one block; None at EOF or on the 0-row end marker
-    (reference lib.rs:215-224). ``columns`` projects: payloads of
-    unrequested columns are skipped, not decoded. ``marks`` (a
-    ``native.marks.BlockMarks`` for THIS block, or None) short-cuts
-    plain String columns: unwanted columns seek past their recorded
-    wire size instead of walking prefixes, wanted ones decode via the
-    vectorized length path (verified, with streaming fallback)."""
+    (reference lib.rs:215-224). This is the only Native block walker:
+    every column's name and type land in ``Block.header``.
+
+    ``columns`` projects: payloads of unrequested columns are skipped,
+    not decoded, so ``columns=set()`` is the header-only walk (schema
+    probes, block offsets). ``marks`` (a ``native.marks.BlockMarks``
+    for THIS block, or None) short-cuts plain String columns: unwanted
+    columns seek past their recorded wire size instead of walking
+    prefixes, wanted ones decode via the vectorized length path
+    (verified, with streaming fallback).
+
+    ``prewhere`` is ``(names, survives)``: the predicate's columns,
+    decoded even when ``columns`` leaves them out, and a test of
+    whether any row can pass. ``survives(block)`` runs once every
+    column of ``names`` has been decoded (before the first column when
+    ``names`` is empty), on the block read so far. If it says no, every
+    remaining column is skipped and the block comes back ``dead``: no
+    columns, ``n_rows`` and ``header`` intact. A block lacking one of
+    ``names`` is never judged, so it is never dead.
+
+    ``header``, when given, is the list the (name, type) pairs are
+    appended to as they parse, so a caller sees how far a failed walk
+    got (the compression sniff in ``compress.py``)."""
     hdr = read_block_header(buf)
     if hdr is None:
         return None
     n_cols, n_rows = hdr
     if n_cols == 0 and n_rows == 0:
         return None
-    out: list[BlockColumn] = []
+    blk = Block(n_rows=n_rows, columns=[], header=[] if header is None else header)
+    names, survives = prewhere or ((), None)
+    pending = set(names)
+    blk.dead = survives is not None and not pending and not survives(blk)
     for _ in range(n_cols):
         name = read_str(buf)
         type_str = read_str(buf)
         t = parse_type(type_str, unsupported_as_varchar=unsupported_as_varchar)
-        wanted = columns is None or name in columns
-        if marks is not None:
-            info = marks_col_info(marks, name, type_str, n_rows)
-            if info is not None:
-                if not wanted:
-                    buf.seek(info[0], io.SEEK_CUR)
-                    continue
-                arr = _decode_marked_strings(
-                    buf, n_rows, info, scrub=scrub_strings
-                )
-                if arr is not None:
-                    out.append(
-                        BlockColumn(
-                            name=name, type_str=type_str, ch_type=t, array=arr
-                        )
-                    )
-                    continue
-                # stale sidecar: bytes were restored; stream decode below
-        if not wanted:
-            skip_column(buf, t, n_rows)
-            continue
-        arr = decode_column(
-            buf, t, n_rows, scrub_strings=scrub_strings, lossy_uint64=lossy_uint64
+        blk.header.append((name, t))
+        wanted = not blk.dead and (
+            columns is None or name in columns or name in pending
         )
-        out.append(BlockColumn(name=name, type_str=type_str, ch_type=t, array=arr))
-    return Block(n_rows=n_rows, columns=out)
+        info = marks_col_info(marks, name, type_str, n_rows)
+        if not wanted:
+            if info is not None:
+                buf.seek(info[0], io.SEEK_CUR)
+            else:
+                skip_column(buf, t, n_rows)
+            continue
+        arr = None
+        if info is not None:
+            arr = _decode_marked_strings(buf, n_rows, info, scrub=scrub_strings)
+            # None: stale sidecar, bytes were restored; stream decode below
+        if arr is None:
+            arr = decode_column(
+                buf, t, n_rows, scrub_strings=scrub_strings, lossy_uint64=lossy_uint64
+            )
+        blk.columns.append(
+            BlockColumn(name=name, type_str=type_str, ch_type=t, array=arr)
+        )
+        if name in pending:
+            pending.discard(name)
+            if not pending and not survives(blk):
+                blk.dead = True
+                blk.columns = []
+    return blk
 
 
 def iter_blocks(
@@ -1409,12 +1440,14 @@ def iter_blocks(
     lossy_uint64: bool = False,
     unsupported_as_varchar: bool = False,
     marks_reader=None,
+    prewhere=None,
 ) -> Iterator[Block]:
     """Lazy block iterator — bounded memory, unlike the reference's
     whole-file materialization (lib.rs:274). ``marks_reader``
     (native.marks.MarksReader) engages the per-block string marks by
     the block's byte offset (``buf.tell()`` before each header), so it
-    is only passed for raw uncompressed file streams."""
+    is only passed for raw uncompressed file streams. ``prewhere``
+    passes through to ``read_block``."""
     while True:
         marks = None
         if marks_reader is not None:
@@ -1429,6 +1462,7 @@ def iter_blocks(
             lossy_uint64=lossy_uint64,
             unsupported_as_varchar=unsupported_as_varchar,
             marks=marks,
+            prewhere=prewhere,
         )
         if blk is None:
             return
@@ -1438,10 +1472,11 @@ def iter_blocks(
 def read_file_schema(
     path: str, *, compression: str = "auto", unsupported_as_varchar: bool = False
 ) -> list[tuple[str, CHType]]:
-    """Parse only the FIRST block's headers — schema discovery without
-    a full file parse (fixes the reference's parse-twice lifecycle,
-    lib.rs:251+274). Column payloads before later headers are skipped
-    bytewise. Transparently unwraps compressed frames (compress.py)."""
+    """The FIRST block's header — schema discovery without a full file
+    parse (fixes the reference's parse-twice lifecycle, lib.rs:251+274).
+    Column payloads before later headers are skipped bytewise (one
+    seek per String column with a marks sidecar). Transparently
+    unwraps compressed frames (compress.py)."""
     from ..filesystem import open_input
     from .compress import maybe_compressed_reader
 
@@ -1453,29 +1488,21 @@ def read_file_schema(
 
             mr = MarksReader.open(path)
             marks = mr.block_at(0) if mr is not None else None
-        hdr = read_block_header(buf)
-        if hdr is None:
-            return []
-        n_cols, n_rows = hdr
-        out: list[tuple[str, CHType]] = []
-        for _ in range(n_cols):
-            name = read_str(buf)
-            type_str = read_str(buf)
-            t = parse_type(type_str, unsupported_as_varchar=unsupported_as_varchar)
-            out.append((name, t))
-            info = marks_col_info(marks, name, type_str, n_rows)
-            if info is not None:
-                buf.seek(info[0], 1)  # marks: string skip is one seek
-            else:
-                skip_column(buf, t, n_rows)
-        return out
+        blk = read_block(
+            buf,
+            columns=set(),
+            unsupported_as_varchar=unsupported_as_varchar,
+            marks=marks,
+        )
+        return [] if blk is None else blk.header
 
 
-def scan_block_offsets(path: str) -> list[tuple[int, int]]:
-    """One sequential pass returning [(byte_offset, n_rows), ...] per
-    COMPLETE block — the planning index that lets Spark split one file
-    into parallel partitions (the reference is single-threaded,
-    README.md:51).
+def scan_blocks(path: str) -> tuple[list[tuple[int, int]], int]:
+    """One sequential header-only pass: ([(byte_offset, n_rows), ...]
+    per COMPLETE block, the byte just past the last of them) — the
+    planning index that lets Spark split one file into parallel
+    partitions (the reference is single-threaded, README.md:51), and
+    the streaming reader's consumed-bytes offset.
 
     Truncation-safe: a partial tail block (a writer mid-append, or a
     cut-off copy) is simply not counted. Note seek() happily moves
@@ -1490,21 +1517,17 @@ def scan_block_offsets(path: str) -> list[tuple[int, int]]:
         while True:
             pos = buf.tell()
             try:
-                hdr = read_block_header(buf)
-                if hdr is None:
-                    return out
-                n_cols, n_rows = hdr
-                if n_cols == 0 and n_rows == 0:
-                    return out
-                for _ in range(n_cols):
-                    read_str(buf)
-                    t = parse_type(read_str(buf))
-                    skip_column(buf, t, n_rows)
+                blk = read_block(buf, columns=set())
             except EOFError:
-                return out  # truncated tail block: not counted
-            if buf.tell() > size:
-                return out  # seek ran past EOF: payload incomplete
-            out.append((pos, n_rows))
+                blk = None  # truncated tail block: not counted
+            if blk is None or buf.tell() > size:
+                return out, pos
+            out.append((pos, blk.n_rows))
+
+
+def scan_block_offsets(path: str) -> list[tuple[int, int]]:
+    """[(byte_offset, n_rows), ...] per complete block (``scan_blocks``)."""
+    return scan_blocks(path)[0]
 
 
 # ---------------------------------------------------------------------------

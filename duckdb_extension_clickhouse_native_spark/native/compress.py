@@ -381,18 +381,42 @@ class CompressedWriter(io.RawIOBase):
         super().close()
 
 
+_SNIFF_BYTES = 1 << 10  # holds a plain stream's first column header
+
+
+def _head_is_compressed(head: bytes) -> bool:
+    """The ``compression=auto`` test on a stream's first bytes. A head
+    that parses as a plain block header whose first type ``parse_type``
+    accepts is plain, whatever its byte 16 holds (a column value can put
+    a method byte there). Otherwise the stream is compressed when byte
+    16 is a method byte (0x82/0x90/0x02) and the frame's
+    compressed_size is at least its 9 header bytes."""
+    from .codec import read_block
+
+    header: list = []
+    try:
+        read_block(io.BytesIO(head), columns=set(), header=header)
+    except (EOFError, ValueError, OverflowError):
+        pass  # the walk only has to get past the first column header
+    if header:
+        return False
+    frame = CHECKSUM_SIZE + HEADER_SIZE
+    if len(head) < frame or head[CHECKSUM_SIZE] not in (
+        METHOD_LZ4,
+        METHOD_ZSTD,
+        METHOD_NONE,
+    ):
+        return False
+    return struct.unpack("<I", head[17:21])[0] >= HEADER_SIZE
+
+
 def maybe_compressed_reader(
     buf: BinaryIO, *, compression: str = "auto", verify_checksum: bool = False
 ) -> BinaryIO:
     """Wrap ``buf`` in a CompressedReader when the stream carries
-    compressed frames.
-
-    ``auto`` detection peeks 17 bytes: a compressed stream has a method
-    byte (0x82/0x90/0x02) at offset 16, while a plain Native stream
-    starts with a small varint column count — its byte 16 lands inside
-    a column name/type string, which in practice is never one of the
-    three method bytes AND a plausible frame. Explicit
-    ``compression='none'|'lz4'|'zstd'`` skips the heuristic.
+    compressed frames. ``auto`` peeks the head and applies
+    ``_head_is_compressed``; explicit ``compression='none'|'lz4'|'zstd'``
+    skips the sniff.
     """
     if compression == "none":
         return buf
@@ -403,15 +427,8 @@ def maybe_compressed_reader(
         seekable = buf.seekable()
     except AttributeError:
         pass
-    head = buf.read(CHECKSUM_SIZE + HEADER_SIZE)
-    compressed = len(head) == CHECKSUM_SIZE + HEADER_SIZE and head[CHECKSUM_SIZE] in (
-        METHOD_LZ4,
-        METHOD_ZSTD,
-        METHOD_NONE,
-    )
-    if compressed:
-        comp_size = struct.unpack("<I", head[17:21])[0]
-        compressed = comp_size >= HEADER_SIZE
+    head = buf.read(_SNIFF_BYTES)
+    compressed = _head_is_compressed(head)
     if seekable:
         # hand back the original seekable stream for plain files — the
         # codec's vectorized string decode and byte-seek column skipping
@@ -430,14 +447,8 @@ def is_compressed_file(path: str) -> bool:
     """Cheap head-probe: does this file carry compressed frames?"""
     from ..filesystem import open_input
 
-    with open_input(path, buffer_size=1 << 10) as f:
-        head = f.read(CHECKSUM_SIZE + HEADER_SIZE)
-    if len(head) < CHECKSUM_SIZE + HEADER_SIZE:
-        return False
-    if head[CHECKSUM_SIZE] not in (METHOD_LZ4, METHOD_ZSTD, METHOD_NONE):
-        return False
-    comp_size = struct.unpack("<I", head[17:21])[0]
-    return comp_size >= HEADER_SIZE
+    with open_input(path, buffer_size=_SNIFF_BYTES) as f:
+        return _head_is_compressed(f.read(_SNIFF_BYTES))
 
 
 class _Concat(io.RawIOBase):

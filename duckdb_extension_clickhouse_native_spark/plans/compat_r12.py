@@ -438,14 +438,16 @@ _sql_pair(
 # percentile -> approx_percentile per group (same plan shape).
 #
 # Oracle form (r16): the CTE-chain spelling stays as the DuckDB
-# oracle text — byte-identical to the pre-r16 oracle — while the
-# Spark side runs the window formulation below.  Catalyst inlines
+# oracle text while the Spark side runs the window formulation below.
+# Both forms drop NULL event_type rows: the join on event_type would
+# drop them from the chain but not from the window form.  Catalyst inlines
 # every CTE reference, so this chain planned TEN parquet scans and
 # 20 exchanges of the same events relation (dev expands x+med twice,
 # the final join re-expands everything); measured 0.80 s at sf0.1.
 _MAD_ORACLE_FORM = f"""
     WITH x AS (
       SELECT event_type, {_CENTS} AS cents FROM events
+      WHERE event_type IS NOT NULL
     ),
     med AS (
       SELECT event_type, percentile(cents, 0.5) AS med
@@ -483,6 +485,7 @@ _MAD_ORACLE_FORM = f"""
 _MAD_SPARK = f"""
     WITH x AS (
       SELECT event_type, {_CENTS} AS cents FROM events
+      WHERE event_type IS NOT NULL
     ),
     w1 AS (
       SELECT event_type, cents,

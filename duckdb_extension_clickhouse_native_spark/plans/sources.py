@@ -1567,8 +1567,9 @@ REGISTRY.df_query(
 def _native_prewhere_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PREWHERE late materialization over the Native scan (ClickHouse
     reads PREWHERE predicate columns first and materializes the rest
-    only for surviving granules; here the granule is the Native block —
-    native_datasource._iter_blocks_prewhere). The string-equality
+    only for surviving granules; here the granule is the Native block:
+    codec.read_block decodes the predicate columns, and a block no row
+    survives comes back dead with its payload skipped). The string-equality
     predicate is exactly the shape planning-time min/max sidecars
     cannot prune; blocks it kills never decode the wide text payload.
     Default options: prewhere is on for every filtered native scan."""

@@ -448,20 +448,10 @@ class ClickHouseHTTPClient:
 
     def probe_schema(self, query: str):
         """(name, CHType) pairs from a zero-row execution of ``query``."""
-        from ..native.codec import read_block_header, read_str, skip_column
-        from ..native.types import parse_type
+        from ..native.codec import read_block
 
-        buf = io.BytesIO(self.execute_native(query).read())
-        hdr = read_block_header(buf)
-        out = []
-        if hdr is not None:
-            n_cols, n_rows = hdr
-            for _ in range(n_cols):
-                name = read_str(buf)
-                t = parse_type(read_str(buf))
-                skip_column(buf, t, n_rows)
-                out.append((name, t))
-        return out
+        blk = read_block(io.BytesIO(self.execute_native(query).read()), columns=set())
+        return [] if blk is None else blk.header
 
     def insert_batches(self, table: str, batches, ch_types=None) -> int:
         import io as _io

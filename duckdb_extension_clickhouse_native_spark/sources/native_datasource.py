@@ -629,8 +629,8 @@ class ClickHouseNativeReader(DataSourceReader):
             paths = _resolve_paths(self.path)
         except OSError:
             paths = []
-        self.part_keys, self._part_vals_by_path, self.part_types = (
-            _partition_spec(self.path, paths) if paths else ([], {}, {})
+        self.part_keys, self._part_vals_by_path = (
+            _partition_spec(self.path, paths)[:2] if paths else ([], {})
         )
         # plan-time listing snapshot: batch reads are snapshot-semantic
         # (see partitions()), so the recursive walk from this __init__
@@ -696,8 +696,16 @@ class ClickHouseNativeReader(DataSourceReader):
             kept.append(p)
         return kept if kept else paths[:1]
 
-    def _partition_value(self, key: str, raw: str):
-        return self.part_types[key](raw)
+    @staticmethod
+    def _partition_array(key: str, raw: str, n: int, target) -> "pa.Array":
+        """The hive-path value ``raw`` of ``key`` as an ``n``-row
+        constant column, typed like its declared column (string when
+        the projection leaves it out)."""
+        import pyarrow as pa
+
+        idx = target.get_field_index(key)
+        typ = target.field(idx).type if idx >= 0 else pa.string()
+        return pa.repeat(pa.scalar(raw).cast(typ), n)
 
     def _vals_for_path(self, p: str) -> tuple:
         """Partition values for ``p``: from the plan-time snapshot, or
@@ -719,15 +727,6 @@ class ClickHouseNativeReader(DataSourceReader):
                 return ()
             # adopt the layout; value types follow the declared schema
             self.part_keys = keys
-            self.part_types = {
-                k: (
-                    int
-                    if self.spark_schema[k].dataType.simpleString()
-                    in ("bigint", "int", "smallint", "tinyint")
-                    else str
-                )
-                for k in keys
-            }
         if [k for k, _v in comps] != self.part_keys:
             raise ValueError(
                 f"file {p!r} does not follow the partition layout "
@@ -754,20 +753,14 @@ class ClickHouseNativeReader(DataSourceReader):
         part_filters = [f for f in self.pushed if attr(f) in keyset]
         if not part_filters:
             return paths
+        target = self._arrow_schema()
         kept = []
         for p in paths:
             vals = self._part_vals_by_path.get(p, ())
-            stats = {
-                "rows": 1,
-                "columns": {
-                    k: {
-                        "min": self._partition_value(k, v),
-                        "max": self._partition_value(k, v),
-                        "nulls": 0,
-                    }
-                    for k, v in zip(self.part_keys, vals)
-                },
-            }
+            stats = {"rows": 1, "columns": {}}
+            for k, v in zip(self.part_keys, vals):
+                typed = self._partition_array(k, v, 1, target)[0].as_py()
+                stats["columns"][k] = {"min": typed, "max": typed, "nulls": 0}
             if any(_filter_excludes_file(f, stats) for f in part_filters):
                 continue
             kept.append(p)
@@ -1150,11 +1143,7 @@ class ClickHouseNativeReader(DataSourceReader):
     def _read_blocks(
         self, partition: NativeFilePartition
     ) -> Iterator["pa.RecordBatch"]:
-        import io
-
         import pyarrow as pa
-
-        from ..native.codec import iter_blocks
 
         want = self.columns
         if self.file_column and want is not None:
@@ -1170,7 +1159,7 @@ class ClickHouseNativeReader(DataSourceReader):
             for c in want:
                 extra.update(self.evolution["aliases"].get(c, ()))
             want = want | extra
-        from ..native.delmask import load_delmask, mask_bits
+        from ..native.delmask import load_delmask
 
         mask = load_delmask(partition.path)
         if mask is not None and partition.start_offset and partition.start_row < 0:
@@ -1179,7 +1168,6 @@ class ClickHouseNativeReader(DataSourceReader):
                 "partition's physical start row is unknown — cannot "
                 "apply the mask without misaligning rows"
             )
-        row_off = max(0, partition.start_row)
         target = self._arrow_schema()
         from ..native.compress import maybe_compressed_reader
 
@@ -1207,31 +1195,17 @@ class ClickHouseNativeReader(DataSourceReader):
             part_val = dict(
                 zip(partition.part_keys or self.part_keys, partition.part_vals)
             )
-            if (
-                self.prewhere
-                and self.pushed
-                and not self.file_column
-                and not self.row_index_column
-                and mask is None
-                and self.evolution is None
-            ):
-                # (file_column / row_index / delete-mask reads take the
-                # plain path: the prewhere iterator builds batches from
-                # file columns only and drops block row accounting)
-                block_iter = self._iter_blocks_prewhere(
-                    buf, want, part_val, target, marks_reader=marks
-                )
-            else:
-                block_iter = iter_blocks(
-                    buf,
-                    columns=want,
-                    scrub_strings=self.scrub_strings,
-                    lossy_uint64=self.lossy_uint64,
-                    unsupported_as_varchar=self.unsupported_as_varchar,
-                    marks_reader=marks,
-                )
+            blocks = self._iter_blocks_prewhere(
+                buf,
+                want,
+                part_val,
+                target,
+                marks_reader=marks,
+                row=max(0, partition.start_row),
+                delmask=mask,
+            )
             n = 0
-            for blk in block_iter:
+            for blk in blocks:
                 n += 1
                 stop = partition.n_blocks >= 0 and n >= partition.n_blocks
                 if blk is None:  # prewhere-dead block: payload never decoded
@@ -1253,30 +1227,11 @@ class ClickHouseNativeReader(DataSourceReader):
                             )
                         )
                         continue
-                    if fld.name == self.row_index_column:
-                        import numpy as np
-
-                        arrays.append(
-                            pa.array(
-                                np.arange(
-                                    row_off,
-                                    row_off + batch.num_rows,
-                                    dtype=np.int64,
-                                ),
-                                type=fld.type,
-                            )
-                        )
-                        continue
                     if fld.name in part_val:
-                        raw = part_val[fld.name]
-                        if pa.types.is_integer(fld.type):
-                            v = int(raw)
-                        elif pa.types.is_floating(fld.type):
-                            v = float(raw)
-                        else:
-                            v = raw
                         arrays.append(
-                            pa.array([v] * batch.num_rows, type=fld.type)
+                            self._partition_array(
+                                fld.name, part_val[fld.name], batch.num_rows, target
+                            )
                         )
                         continue
                     idx = batch.schema.get_field_index(fld.name)
@@ -1320,15 +1275,9 @@ class ClickHouseNativeReader(DataSourceReader):
                     if col.type != fld.type:
                         col = col.cast(fld.type)
                     arrays.append(col)
-                n_phys = batch.num_rows
-                batch = pa.RecordBatch.from_arrays(arrays, schema=target)
-                if mask is not None:
-                    keep = mask_bits(mask, row_off, n_phys)
-                    if not keep.all():
-                        batch = batch.filter(pa.array(keep))
-                row_off += n_phys
-                if self.pushed:
-                    batch = self._apply_filters(batch)
+                batch = self._apply_filters(
+                    pa.RecordBatch.from_arrays(arrays, schema=target)
+                )
                 if batch.num_rows:
                     yield batch
                 if stop:
@@ -1337,118 +1286,84 @@ class ClickHouseNativeReader(DataSourceReader):
     def _prewhere_attr(self, f: Filter) -> str:
         return f.child.attribute[0] if isinstance(f, Not) else f.attribute[0]
 
-    def _iter_blocks_prewhere(self, buf, want, part_val, target, marks_reader=None):
-        """PREWHERE-style late materialization, the read-time analogue
+    def _iter_blocks_prewhere(
+        self, buf, want, part_val, target, marks_reader=None, row=0, delmask=None
+    ):
+        """The reader's only block loop, over ``codec.read_block``
+        (through ``codec.iter_blocks``).
+
+        Yields ``None`` for a block PREWHERE proved dead (the caller
+        still counts it — block-range partitions index sequential block
+        positions), else the block with its delete-masked rows dropped
+        and the ``row_index_column`` appended (``n_rows`` keeps the
+        block's wire count). ``row`` is the physical ordinal of the
+        first row; dead blocks advance it too.
+
+        PREWHERE-style late materialization is the read-time analogue
         of the planning-time sidecar pruning (ClickHouse evaluates
-        PREWHERE predicates first and reads remaining columns only for
-        surviving granules — here the granule is the Native block).
+        PREWHERE predicates first and reads the remaining columns only
+        for surviving granules — here the granule is the Native block).
+        ``read_block`` decodes the predicate columns in file order and,
+        once the last of them is decoded, asks ``_block_survives``; a
+        dead block's remaining columns are skipped, not decoded. It
+        covers what planning-time stats cannot: files without sidecars,
+        string equality/IN/prefix predicates, and residual ranges
+        inside a partially-pruned file."""
+        import numpy as np
+        import pyarrow as pa
 
-        Single pass over each block in file column order: predicate
-        columns decode eagerly; once the last predicate column of the
-        block is decoded, the block-level mask is evaluated — if no row
-        survives, every remaining wanted column is byte-skipped
-        (``skip_column``: chunk-scan for strings on seekable files,
-        O(bytes) memcpy-free for fixed widths) instead of decoded.
-        Columns that precede the last predicate column decode exactly
-        as the plain path would, so this is never slower. Yields
-        ``None`` for dead blocks (the caller still counts them —
-        block-range partitions index sequential block positions).
+        from ..native.codec import BlockColumn, iter_blocks
+        from ..native.delmask import mask_bits
+        from ..native.types import CHType
 
-        Handles the cases planning-time stats cannot: files without
-        sidecars, string equality/IN/prefix predicates, and residual
-        ranges inside a partially-pruned file."""
-        from ..native.codec import (
-            Block,
-            BlockColumn,
-            _decode_marked_strings,
-            decode_column,
-            marks_col_info,
-            parse_type,
-            read_block_header,
-            read_str,
-            skip_column,
-        )
-
-        filter_attrs = {self._prewhere_attr(f) for f in self.pushed}
-        # attrs served by path-derived hive columns never appear in the
-        # file; their constant arrays join the mask batch separately
-        file_attrs = filter_attrs - set(self.part_keys)
-        while True:
-            mks = None
-            if marks_reader is not None:
-                try:
-                    mks = marks_reader.block_at(buf.tell())
-                except (OSError, AttributeError):
-                    marks_reader = None
-            hdr = read_block_header(buf)
-            if hdr is None:
-                return
-            n_cols, n_rows = hdr
-            if n_cols == 0 and n_rows == 0:
-                return
-            decoded: list = []
-            seen_attrs = 0
-            # every predicate column is a hive-partition constant: the
-            # verdict is the same for all rows of the partition, so an
-            # excluded partition skips every block without decoding
-            dead = not file_attrs and not self._block_survives(
-                [], part_val, max(n_rows, 1), target
-            )
-            for _ in range(n_cols):
-                name = read_str(buf)
-                type_str = read_str(buf)
-                t = parse_type(
-                    type_str, unsupported_as_varchar=self.unsupported_as_varchar
-                )
-                needed = (want is None or name in want) or name in file_attrs
-                minfo = marks_col_info(mks, name, type_str, n_rows)
-                if dead or not needed:
-                    if minfo is not None:
-                        # marks make the string skip a single seek —
-                        # this is the PREWHERE payoff: a dead block's
-                        # payload costs O(1), not a prefix walk
-                        buf.seek(minfo[0], 1)
-                    else:
-                        skip_column(buf, t, n_rows)
-                    continue
-                arr = None
-                if minfo is not None:
-                    arr = _decode_marked_strings(
-                        buf, n_rows, minfo, scrub=self.scrub_strings
-                    )
-                if arr is None:
-                    arr = decode_column(
-                        buf,
-                        t,
-                        n_rows,
-                        scrub_strings=self.scrub_strings,
-                        lossy_uint64=self.lossy_uint64,
-                    )
-                decoded.append(
-                    BlockColumn(name=name, type_str=type_str, ch_type=t, array=arr)
-                )
-                if name in file_attrs:
-                    seen_attrs += 1
-                    if seen_attrs == len(file_attrs) and not self._block_survives(
-                        decoded, part_val, n_rows, target
-                    ):
-                        dead = True
-                        decoded = []
-            if dead:
+        prewhere = None
+        # evolved parts map physical names to table columns through
+        # aliases and defaults; the survival test sees physical names only
+        if self.prewhere and self.pushed and self.evolution is None:
+            # hive-partition attrs never appear in the file; their
+            # constants join the survival test instead
+            names = {self._prewhere_attr(f) for f in self.pushed} - set(part_val)
+            prewhere = (names, lambda b: self._block_survives(b, part_val, target))
+        for blk in iter_blocks(
+            buf,
+            columns=want,
+            scrub_strings=self.scrub_strings,
+            lossy_uint64=self.lossy_uint64,
+            unsupported_as_varchar=self.unsupported_as_varchar,
+            marks_reader=marks_reader,
+            prewhere=prewhere,
+        ):
+            first, row = row, row + blk.n_rows
+            if blk.dead:
                 yield None
-            else:
-                yield Block(n_rows=n_rows, columns=decoded)
+                continue
+            if self.row_index_column:
+                blk.columns.append(
+                    BlockColumn(
+                        name=self.row_index_column,
+                        type_str="Int64",
+                        ch_type=CHType("Int64"),
+                        array=pa.array(np.arange(first, row, dtype=np.int64)),
+                    )
+                )
+            if delmask is not None:
+                keep = mask_bits(delmask, first, blk.n_rows)
+                if not keep.all():
+                    keep = pa.array(keep)
+                    for c in blk.columns:
+                        c.array = c.array.filter(keep)
+            yield blk
 
-    def _block_survives(self, decoded, part_val, n_rows, target) -> bool:
+    def _block_survives(self, blk, part_val, target) -> bool:
         """True iff any row of the block can pass the pushed filters,
-        judged on the predicate columns alone (plus hive-partition
-        constants). Row-level filtering still happens downstream in
+        judged on its decoded columns plus the hive-partition
+        constants. Row-level filtering still happens downstream in
         ``_apply_filters`` — this only licenses skipping dead blocks."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
         arrays, names = [], []
-        for c in decoded:
+        for c in blk.columns:
             arr = c.array
             idx = target.get_field_index(c.name)
             if idx >= 0 and arr.type != target.field(idx).type:
@@ -1456,40 +1371,25 @@ class ClickHouseNativeReader(DataSourceReader):
             arrays.append(arr)
             names.append(c.name)
         for key, raw in part_val.items():
-            if key not in {self._prewhere_attr(f) for f in self.pushed}:
-                continue
-            idx = target.get_field_index(key)
-            typ = target.field(idx).type if idx >= 0 else pa.string()
-            if pa.types.is_integer(typ):
-                v = int(raw)
-            elif pa.types.is_floating(typ):
-                v = float(raw)
-            else:
-                v = raw
-            arrays.append(pa.array([v] * n_rows, type=typ))
+            arrays.append(self._partition_array(key, raw, blk.n_rows, target))
             names.append(key)
-        batch = pa.RecordBatch.from_arrays(arrays, names=names)
-        mask = None
-        for f in self.pushed:
-            m = self._filter_mask(batch, f)
-            mask = m if mask is None else pc.and_kleene(mask, m)
-        if mask is None:
-            return True
-        alive = pc.any(pc.fill_null(mask, False)).as_py()
-        return bool(alive)
+        mask = self._filters_mask(pa.RecordBatch.from_arrays(arrays, names=names))
+        return mask is None or bool(pc.any(mask).as_py())
 
-    def _apply_filters(self, batch: "pa.RecordBatch") -> "pa.RecordBatch":
-        import pyarrow as pa
+    def _filters_mask(self, batch: "pa.RecordBatch"):
+        """The conjunction of every pushed filter over ``batch``, NULL
+        counted as false; None when nothing is pushed."""
         import pyarrow.compute as pc
 
         mask = None
         for f in self.pushed:
             m = self._filter_mask(batch, f)
             mask = m if mask is None else pc.and_kleene(mask, m)
-        if mask is None:
-            return batch
-        mask = pc.fill_null(mask, False)
-        return batch.filter(mask)
+        return None if mask is None else pc.fill_null(mask, False)
+
+    def _apply_filters(self, batch: "pa.RecordBatch") -> "pa.RecordBatch":
+        mask = self._filters_mask(batch)
+        return batch if mask is None else batch.filter(mask)
 
     def _filter_mask(self, batch: "pa.RecordBatch", f: Filter):
         import pyarrow as pa
@@ -1570,14 +1470,8 @@ class ClickHouseNativeStreamReader(DataSourceStreamReader):
             return v
         return {"n": int(v), "bytes": 0}  # legacy int offsets: re-read
 
-    def _complete_block_offsets(self, p: str) -> list:
-        # scan_block_offsets is truncation-safe: a mid-write tail block
-        # is simply not counted yet
-        from ..native.codec import scan_block_offsets
-
-        return scan_block_offsets(p)
-
     def latestOffset(self) -> dict:
+        from ..native.codec import scan_blocks
         from ..native.compress import is_compressed_file
 
         files = {}
@@ -1587,40 +1481,14 @@ class ClickHouseNativeStreamReader(DataSourceStreamReader):
                     # atomic unit: one pseudo-block for the whole file
                     files[p] = {"n": 1, "bytes": -1}
                 else:
-                    offsets = self._complete_block_offsets(p)
-                    if offsets:
-                        last_pos, _ = offsets[-1]
-                        # consumed bytes = end of the last complete block:
-                        # next block (if any) starts exactly there
-                        end_bytes = self._end_of_blocks(p, offsets)
-                    else:
-                        end_bytes = 0
+                    # truncation-safe: a mid-write tail block is not
+                    # counted yet, and the consumed bytes end where the
+                    # next block (if any) starts
+                    offsets, end_bytes = scan_blocks(p)
                     files[p] = {"n": len(offsets), "bytes": end_bytes}
             except (OSError, ValueError):
                 continue  # not readable yet; pick up next batch
         return {"files": files}
-
-    def _end_of_blocks(self, p: str, offsets: list) -> int:
-        """Byte position just past the last complete block (== the file
-        size unless a truncated tail block is mid-write)."""
-        import io as _io
-
-        from ..native.codec import read_block_header, read_str, skip_column
-        from ..native.types import parse_type
-
-        from ..filesystem import open_input
-
-        last_pos, _ = offsets[-1]
-        with open_input(p) as buf:
-            buf.seek(last_pos)
-            hdr = read_block_header(buf)
-            n_cols, n_rows = hdr
-            for _ in range(n_cols):
-                read_str(buf)
-                t = parse_type(read_str(buf))
-                skip_column(buf, t, n_rows)
-            # BufferedReader.tell() is absolute (f was seeked before wrap)
-            return buf.tell()
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         done = start.get("files", {})

@@ -631,7 +631,12 @@ class ClickHouseScanStreamReader(DataSourceStreamReader):
 
     Rows of one batch fetch through the same per-partition reader as
     the batch path (same wire formats, retry, pooling, cluster fan-out:
-    every shard is polled with the same cursor window)."""
+    every shard is polled with the same cursor window).
+
+    ``fetch_partitions`` (an integer >= 1, default 1) splits each
+    micro-batch window into that many sub-windows fetched in parallel.
+    The split applies only to integer cursors on a single endpoint;
+    timestamp cursors and ``cluster`` reads fetch one window per shard."""
 
     def __init__(self, schema: StructType, options: dict):
         self._batch = ClickHouseScanReader(schema, options)
@@ -666,6 +671,12 @@ class ClickHouseScanStreamReader(DataSourceStreamReader):
                 f"cursor_column must be integer or timestamp/date, got {t}"
             )
         self.start_cursor = options.get("start_cursor")
+        raw = str(options.get("fetch_partitions") or "1")
+        if not raw.isdigit() or int(raw) < 1:
+            raise ValueError(
+                f"fetch_partitions must be an integer >= 1, got {raw!r}"
+            )
+        self.fetch_partitions = int(raw)
 
     def _lit(self, v) -> str:
         return str(v) if self._kind == "int" else f"'{v}'"
@@ -726,7 +737,7 @@ class ClickHouseScanStreamReader(DataSourceStreamReader):
         # sub-range. A first batch with no lower bound probes
         # min(cursor) once (old rows are immutable per the cursor
         # contract, so the min is stable across retries).
-        n_fetch = int(self._batch.options.get("fetch_partitions", "1") or 1)
+        n_fetch = self.fetch_partitions
         if not shards and self._kind == "int" and n_fetch > 1:
             lo = s
             if lo is None:

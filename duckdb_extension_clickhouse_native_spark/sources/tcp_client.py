@@ -196,33 +196,14 @@ class ClickHouseTCPClient:
     def probe_schema(self, query: str) -> list[tuple[str, CHType]]:
         """Schema from the server's leading header block (0 rows) —
         the TCP twin of the HTTP zero-row probe."""
-        from ..native.codec import read_block_header, read_str, skip_column
-        from ..native.types import parse_type
-
         self._send_query(query)
         schema: list[tuple[str, CHType]] = []
-        got = False
         for _ in self._data_packets():
-            if self.revision >= proto.REV_TEMPORARY_TABLES:
-                proto.read_str(self._rfile)
-            src = self._rfile
-            if self.compression == proto.COMPRESSION_ENABLED:
-                from ..native.compress import CompressedReader
-
-                src = CompressedReader(self._rfile, verify_checksum=True)
-            proto.read_block_info(src)
-            hdr = read_block_header(src)
-            if hdr is None:
-                continue
-            n_cols, n_rows = hdr
-            for _ in range(n_cols):
-                name = read_str(src)
-                t = parse_type(read_str(src))
-                skip_column(src, t, n_rows)
-                if not got:
-                    schema.append((name, t))
-            if n_cols and not got:
-                got = True
+            blk = proto.read_data_packet(
+                self._rfile, self.revision, compression=self.compression, columns=set()
+            )
+            if blk is not None and not schema:
+                schema = blk.header
         return schema
 
     def insert_batches(self, table: str, batches, ch_types: Optional[List[CHType]] = None) -> int:

@@ -395,9 +395,12 @@ def read_data_packet(
     *,
     compression: int = COMPRESSION_DISABLED,
     lossy_uint64: bool = False,
+    columns: Optional[set] = None,
 ) -> Optional[Block]:
     """Read the payload of a Data packet (the packet-type varint has
-    already been consumed). Returns None for the empty end block."""
+    already been consumed). Returns None for the empty end block.
+    ``columns`` projects like ``codec.read_block``; ``set()`` reads
+    the header only."""
     if revision >= REV_TEMPORARY_TABLES:
         read_str(buf)  # external table name
     src: BinaryIO = buf
@@ -406,7 +409,7 @@ def read_data_packet(
 
         src = CompressedReader(buf, verify_checksum=True)
     read_block_info(src)
-    return read_block(src, lossy_uint64=lossy_uint64)
+    return read_block(src, columns=columns, lossy_uint64=lossy_uint64)
 
 
 # ---------------------------------------------------------------------------

@@ -152,6 +152,54 @@ def test_schema_scan_and_offsets(tmp_path):
     assert offsets[0][0] == 0 and all(r == 1000 for _, r in offsets)
 
 
+@pytest.mark.parametrize(
+    "compression, marks", [(None, False), (None, True), ("lz4", False), ("zstd", False)]
+)
+def test_header_only_read_block_matches_file_schema(tmp_path, compression, marks):
+    """read_block(columns=set()) walks every block's header without
+    decoding a payload; its (name, type) pairs are read_file_schema's,
+    on plain, lz4, zstd and marks-sidecar files alike."""
+    from duckdb_extension_clickhouse_native_spark.native import write_native_file
+    from duckdb_extension_clickhouse_native_spark.native.compress import (
+        maybe_compressed_reader,
+    )
+    from duckdb_extension_clickhouse_native_spark.native.marks import (
+        MarksReader,
+        marks_sidecar_path,
+    )
+
+    n = 5000
+    t = pa.table(
+        {
+            "x": pa.array(range(n), type=pa.int64()),
+            "s": pa.array([f"v{i}" for i in range(n)]),
+            "ns": pa.array([None if i % 7 == 0 else "n" * (i % 5) for i in range(n)]),
+            "f": pa.array([i / 4 for i in range(n)], type=pa.float64()),
+        }
+    )
+    p = str(tmp_path / "t.clickhouse")
+    write_native_file(p, t, block_rows=1000, compression=compression)
+    if marks:
+        assert MarksReader.open(p) is not None
+    elif os.path.exists(marks_sidecar_path(p)):
+        os.remove(marks_sidecar_path(p))
+    want = [
+        ("x", "Int64", False),
+        ("s", "String", False),
+        ("ns", "String", True),
+        ("f", "Float64", False),
+    ]
+    assert [(nm, ct.name, ct.nullable) for nm, ct in read_file_schema(p)] == want
+    with open(p, "rb") as f:
+        buf = maybe_compressed_reader(f)
+        mr = MarksReader.open(p) if buf is f else None
+        blocks = list(iter_blocks(buf, columns=set(), marks_reader=mr))
+    assert [b.n_rows for b in blocks] == [1000] * 5
+    for b in blocks:
+        assert b.columns == [] and not b.dead
+        assert [(nm, ct.name, ct.nullable) for nm, ct in b.header] == want
+
+
 def test_lossy_uint64_compat():
     t = pa.table({"number": pa.array([2**33, 5], type=pa.uint64())})
     raw = arrow_to_native_bytes(t)

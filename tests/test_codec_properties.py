@@ -135,6 +135,15 @@ def test_truncated_file_counts_only_complete_blocks(cut, block_rows):
     ent = off["files"].get(p, {"n": 0, "bytes": 0})
     assert 0 <= ent["n"] <= -(-50 // block_rows)
     assert 0 <= ent["bytes"] <= cut
+    # exact: the consumed bytes end at the last block boundary <= cut
+    ends, pos = [], 0
+    for start in range(0, 50, block_rows):
+        pos += len(arrow_to_native_bytes(tbl.slice(start, block_rows)))
+        ends.append(pos)
+    assert ends[-1] == len(blob)  # blocks are self-delimiting, no trailer
+    complete = [e for e in ends if e <= cut]
+    assert ent["n"] == len(complete)
+    assert ent["bytes"] == (complete[-1] if complete else 0)
 
 
 @settings(deadline=None, max_examples=60)

@@ -98,6 +98,37 @@ def test_plain_file_passes_auto_detection(tmp_path):
     assert rows == t.num_rows
 
 
+class _NonSeekable(io.RawIOBase):
+    def __init__(self, data: bytes):
+        self._src = io.BytesIO(data)
+
+    def readable(self) -> bool:
+        return True
+
+    def read(self, n: int = -1) -> bytes:
+        return self._src.read(n)
+
+
+def test_plain_file_with_method_byte_at_offset_16_stays_plain(tmp_path):
+    """An Int64 value 0x0010_8200_0000_0000 puts the LZ4 method byte at
+    offset 16 and a plausible compressed_size after it. The head parses
+    as a plain block header with a known type, so auto-detection must
+    keep the file plain (seekable, non-seekable and the schema probe)."""
+    values = [0x0010_8200_0000_0000, 7]
+    path = str(tmp_path / "trap.clickhouse")
+    write_native_file(path, pa.table({"id": pa.array(values, type=pa.int64())}))
+    with open(path, "rb") as f:
+        raw = f.read()
+    assert raw[16] == 0x82 and int.from_bytes(raw[17:21], "little") >= 9
+    assert not is_compressed_file(path)
+    assert [(n, t.base) for n, t in read_file_schema(path)] == [("id", "Int64")]
+    with open(path, "rb") as f:
+        blocks = list(iter_blocks(maybe_compressed_reader(io.BufferedReader(f))))
+    assert blocks[0].columns[0].array.to_pylist() == values
+    blocks = list(iter_blocks(maybe_compressed_reader(_NonSeekable(raw))))
+    assert blocks[0].columns[0].array.to_pylist() == values
+
+
 def test_spark_datasource_compressed_roundtrip(spark, tmp_path):
     src = spark.read.parquet(f"{SF_SMALL}/supplier.parquet")
     out = str(tmp_path / "supplier_lz4")

@@ -1,7 +1,10 @@
 """PREWHERE-style late materialization in the native reader: blocks
 whose predicate columns prove no row survives must never decode their
 payload columns, and results must be bit-identical with the feature on
-or off (native_datasource._iter_blocks_prewhere)."""
+or off. The reader's one block loop (native_datasource.
+_iter_blocks_prewhere) hands the predicate to codec.read_block, which
+decodes the predicate columns, asks whether any row can survive, and
+returns a dead block (row count kept, no columns) when none can."""
 
 from __future__ import annotations
 
@@ -9,7 +12,13 @@ import os
 
 import pyarrow as pa
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import EqualTo, StringStartsWith
+import pytest
+from pyspark.sql.datasource import (
+    EqualTo,
+    GreaterThanOrEqual,
+    LessThanOrEqual,
+    StringStartsWith,
+)
 
 from duckdb_extension_clickhouse_native_spark.native import codec
 from duckdb_extension_clickhouse_native_spark.native.writer import write_native_file
@@ -87,6 +96,53 @@ def test_dead_blocks_skip_payload_decode(tmp_path, monkeypatch):
     list(r.pushFilters([EqualTo(("k",), 250)]))
     assert _collect(r) == rows
     assert calls.count("String") == 4  # plain path decodes every block
+
+
+@pytest.mark.parametrize(
+    "opts, deleted",
+    [
+        ({"row_index_column": "_row"}, []),
+        ({}, [250]),
+        ({"row_index_column": "_row"}, [250]),
+        ({"row_index_column": "_row", "split_blocks": "true",
+          "target_partition_bytes": "1"}, [250]),
+        ({"file_column": "_src"}, []),
+    ],
+)
+def test_row_index_and_delete_mask_keep_prewhere(
+    tmp_path, monkeypatch, opts, deleted
+):
+    """Dead blocks keep their row count, so row_index_column, delete
+    masks and file_column no longer force the plain path: same rows and
+    physical ordinals as prewhere=false, and dead blocks decode no
+    payload."""
+    from duckdb_extension_clickhouse_native_spark.native.delmask import (
+        write_delmask,
+    )
+
+    d = str(tmp_path)
+    path = os.path.join(d, "f.clickhouse")
+    _mkfile(path)
+    if deleted:
+        write_delmask(path, deleted, 400)
+    calls = _counting(monkeypatch)
+    filters = [GreaterThanOrEqual(("k",), 249), LessThanOrEqual(("k",), 252)]
+
+    r = _reader(d, skipping="false", **opts)
+    list(r.pushFilters(filters))
+    rows = _collect(r)
+    want = [k for k in range(249, 253) if k not in deleted]
+    assert [x["k"] for x in rows] == want
+    if "row_index_column" in opts:
+        assert [x["_row"] for x in rows] == want  # physical ordinal == k
+    # 4 blocks x predicate col + 1 live block (k 200..299) x payload col
+    assert calls.count("Int64") == 4 and calls.count("String") == 1
+
+    calls.clear()
+    r = _reader(d, skipping="false", prewhere="false", **opts)
+    list(r.pushFilters(filters))
+    assert _collect(r) == rows
+    assert calls.count("String") == 4
 
 
 def test_string_predicate_prunes_at_read_time(tmp_path, monkeypatch):

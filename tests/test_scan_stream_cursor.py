@@ -12,7 +12,10 @@ import pytest
 
 @pytest.fixture()
 def growing_mock():
-    """A mutable DuckDB-backed mock whose `src` table tests append to."""
+    """A mutable DuckDB-backed mock whose `src` table tests append to.
+    Appends go through ``con.cursor()``: the server threads use ``con``
+    under their own lock while the stream polls, and one DuckDB
+    connection object must not run two statements at once."""
     import duckdb
 
     from duckdb_extension_clickhouse_native_spark.sources.mock_server import (
@@ -51,7 +54,7 @@ def test_incremental_micro_batches(spark, growing_mock):
     try:
         q.processAllAvailable()
         assert spark.table(name).count() == 40
-        growing_mock["con"].execute(
+        growing_mock["con"].cursor().execute(
             "INSERT INTO src SELECT range + 40, 'b' || range FROM range(15)"
         )
         q.processAllAvailable()
@@ -112,7 +115,7 @@ def test_fetch_partitions_splits_window_exactly(spark, growing_mock):
     try:
         q.processAllAvailable()
         assert spark.table(name).count() == 40
-        growing_mock["con"].execute(
+        growing_mock["con"].cursor().execute(
             "INSERT INTO src SELECT range + 40, 'b' || range FROM range(15)"
         )
         q.processAllAvailable()
@@ -150,6 +153,26 @@ def test_fetch_partitions_unit_ranges():
     # tiny window: falls back to one partition (span <= n)
     parts = r.partitions({"cursor": 10}, {"cursor": 12})
     assert len(parts) == 1
+
+
+@pytest.mark.parametrize("bad", ["0", "-2", "2.5", "many"])
+def test_fetch_partitions_rejected_at_construction(bad):
+    """A fetch_partitions value that is not an integer >= 1 fails when
+    the stream reader is built, naming the option — not at the first
+    micro-batch with a bare int() error."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from duckdb_extension_clickhouse_native_spark.sources.scan_datasource import (
+        ClickHouseScanStreamReader,
+    )
+
+    schema = StructType([StructField("id", LongType())])
+    with pytest.raises(ValueError, match="fetch_partitions"):
+        ClickHouseScanStreamReader(
+            schema,
+            {"query": "SELECT id FROM t", "cursor_column": "id",
+             "fetch_partitions": bad, "url": "http://unused:1"},
+        )
 
 
 def test_cluster_cursor_polls_every_shard(spark):

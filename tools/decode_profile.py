@@ -122,21 +122,8 @@ def main() -> None:
     raw = open(p_str, "rb").read()
 
     def lengths_only():
-        # count blocks by skipping the string column byte-ranges
-        buf = io.BytesIO(raw)
-        total = 0
-        while True:
-            hdr = codec.read_block_header(buf)
-            if hdr is None:
-                break
-            n_cols, n_rows = hdr
-            for _ in range(n_cols):
-                codec.read_str(buf)
-                from duckdb_extension_clickhouse_native_spark.native.types import parse_type
-                t = parse_type(codec.read_str(buf))
-                codec.skip_column(buf, t, n_rows)
-            total += n_rows
-        return total
+        # header-only walk: count rows by skipping the string column byte-ranges
+        return sum(b.n_rows for b in codec.iter_blocks(io.BytesIO(raw), columns=set()))
 
     t_skip, n_sk = _time(lengths_only)
     out.append(
