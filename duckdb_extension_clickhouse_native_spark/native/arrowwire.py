@@ -28,9 +28,6 @@ from typing import BinaryIO, Iterator, Optional
 import numpy as np
 import pyarrow as pa
 
-ARROW_FORMAT = "ArrowStream"
-PARQUET_FORMAT = "Parquet"
-
 
 class RawBatch:
     """Minimal Block-alike: what the scan read path consumes."""
@@ -198,9 +195,6 @@ def write_parquet(buf: BinaryIO, batches, ch_types=None) -> int:
     table = pa.Table.from_batches(batches)
     pq.write_table(table, buf)
     return table.num_rows
-
-
-ORC_FORMAT = "ORC"
 
 
 def iter_orc_blocks(

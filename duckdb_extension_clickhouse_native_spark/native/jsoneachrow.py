@@ -55,8 +55,6 @@ import pyarrow as pa
 from .codec import Block, BlockColumn
 from .types import FIXED_WIDTH, CHType, UnsupportedTypeError, parse_type, to_arrow
 
-JSONEACHROW_FORMAT = "JSONCompactEachRowWithNamesAndTypes"
-
 _QUOTED_INT_BASES = {"Int64", "UInt64"}
 _EPOCH_DATE = datetime.date(1970, 1, 1)
 
@@ -395,9 +393,6 @@ def write_jsoncompact(
             )
             rows += 1
     return rows
-
-
-JSONOBJECTS_FORMAT = "JSONEachRow"
 
 
 def iter_jsonobjects_blocks(

@@ -36,8 +36,6 @@ from typing import BinaryIO, Iterator, Optional
 import numpy as np
 import pyarrow as pa
 
-NPY_FORMAT = "Npy"
-
 _MAGIC = b"\x93NUMPY"
 
 

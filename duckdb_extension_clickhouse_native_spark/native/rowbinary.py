@@ -41,8 +41,6 @@ import pyarrow as pa
 from .codec import Block, BlockColumn, read_str, read_varuint, write_str, write_varuint
 from .types import FIXED_WIDTH, CHType, UnsupportedTypeError, parse_type, to_arrow
 
-ROWBINARY_FORMAT = "RowBinaryWithNamesAndTypes"
-
 _SUPPORTED_FIXED = set(FIXED_WIDTH)
 
 

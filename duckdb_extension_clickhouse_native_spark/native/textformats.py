@@ -47,9 +47,6 @@ from .codec import Block, BlockColumn
 from .jsoneachrow import _col_needs_lossy, _from_json, _lossy_fix, _to_json
 from .types import FIXED_WIDTH, CHType, UnsupportedTypeError, parse_type, to_arrow
 
-TSV_FORMAT = "TabSeparatedWithNamesAndTypes"
-CSV_FORMAT = "CSVWithNamesAndTypes"
-
 
 def _check_supported(t: CHType) -> None:
     b = t.base
@@ -467,8 +464,6 @@ def write_csv(buf: BinaryIO, batches, ch_types: Optional[List[CHType]] = None) -
 # supplies the schema from its planning probe.  ``\N`` (before
 # unescaping) is NULL; missing keys read as NULL; unknown keys are
 # ignored (input_format_skip_unknown_fields spirit).
-
-TSKV_FORMAT = "TSKV"
 
 
 def _tskv_escape_name(name: str) -> str:

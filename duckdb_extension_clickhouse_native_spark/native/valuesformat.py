@@ -45,8 +45,6 @@ from .textformats import _check_supported, _from_text, _is_stringish, _to_text
 from .textformats import _blocks_from_rows
 from .types import CHType
 
-VALUES_FORMAT = "Values"
-
 _ESCAPES = {
     "n": "\n",
     "t": "\t",

@@ -18,9 +18,8 @@ ClickHouse semantics honored:
   (native/contentcodec.py — pyarrow streaming codecs + stdlib; the
   same layer file()/url() use to read the export back).
 
-Format names accept the engine's ``wire_format`` spellings (csv, tsv,
-native, parquet, arrowstream, orc, npy, rowbinary, jsoneachrow,
-jsonobjects, values, tskv).
+Format names are the engine's ``wire_format`` names (the
+``native.wireformats`` table) plus ``avro``.
 
 Reference surface: beyond-reference (the reference has no writer at
 all — SURVEY.md §2.1 'Sinks: none').
@@ -31,41 +30,25 @@ from __future__ import annotations
 import os
 from typing import Optional
 
-_WRITERS = {
-    "native": None,  # special-cased: needs schema framing
-    "csv": ("textformats", "write_csv"),
-    "tsv": ("textformats", "write_tsv"),
-    "tskv": ("textformats", "write_tskv"),
-    "values": ("valuesformat", "write_values"),
-    "rowbinary": ("rowbinary", "write_rowbinary"),
-    "jsoneachrow": ("jsoneachrow", "write_jsoncompact"),
-    "jsonobjects": ("jsoneachrow", "write_jsonobjects"),
-    "arrowstream": ("arrowwire", "write_arrow"),
-    "parquet": ("arrowwire", "write_parquet"),
-    "orc": ("arrowwire", "write_orc"),
-    "npy": ("npyformat", "write_npy"),
-    "avro": ("avroformat", "write_avro"),
-}
+from ..native.wireformats import WIRE_FORMATS, load
 
 
 def _resolve_writer(fmt: str):
+    """Batch writer for an INTO OUTFILE format: a ``wire_format`` name,
+    or avro (a file format with no wire-format entry)."""
+    if fmt == "avro":
+        from ..native.avroformat import write_avro
+
+        return write_avro
     if fmt == "native":
+        # an export types each Native block from its own Arrow schema
+        # and nulls (codec.write_block), so ch_types is not applied
         from ..native.writer import write_native_stream
 
-        def write_native(buf, batches, ch_types=None):
-            batches = list(batches)
-            if not batches:
-                return 0
-            return write_native_stream(buf, batches, schema=batches[0].schema)
-
-        return write_native
-    mod_name, fn_name = _WRITERS[fmt]
-    import importlib
-
-    mod = importlib.import_module(
-        f"duckdb_extension_clickhouse_native_spark.native.{mod_name}"
-    )
-    return getattr(mod, fn_name)
+        return lambda buf, batches, ch_types=None: write_native_stream(
+            buf, batches
+        )
+    return load(WIRE_FORMATS[fmt].writer)
 
 
 def _open_sink(tmp_path: str, final_path: str):
@@ -96,10 +79,10 @@ def into_outfile(
     (repartition(1) + mapInArrow) — the driver only sees the 1-row
     count, never the data."""
     fmt = wire_format.lower()
-    if fmt not in _WRITERS:
+    if fmt != "avro" and fmt not in WIRE_FORMATS:
         raise ValueError(
-            f"INTO OUTFILE format must be one of {sorted(_WRITERS)}, "
-            f"got {wire_format!r}"
+            "INTO OUTFILE format must be one of "
+            f"{sorted([*WIRE_FORMATS, 'avro'])}, got {wire_format!r}"
         )
     if os.path.exists(path) and not truncate:
         raise FileExistsError(
@@ -157,7 +140,7 @@ def into_outfile(
         try:
             buf = _open_sink(tmp, path)
             try:
-                n = writer(buf, chunks, ch_types) or 0
+                n = writer(buf, chunks, ch_types=ch_types) or 0
             finally:
                 buf.close()
             os.replace(tmp, path)

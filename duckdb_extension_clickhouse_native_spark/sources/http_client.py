@@ -7,6 +7,9 @@ clickhouse_scan.rs:47-265). We use the equally-public HTTP interface
 response is parsed by the same codec as our file reader, typed
 end-to-end. This deliberately avoids the reference's
 stringify-then-reparse path (clickhouse_scan.rs:134-157,212-240).
+The other HTTP wire formats go through the two generic methods
+``execute_format`` / ``insert_format``, which look the format up in
+the ``native.wireformats`` table.
 
 Connection resolution mirrors the reference (clickhouse_scan.rs:55-71):
 explicit option > ``CLICKHOUSE_URL`` / ``CLICKHOUSE_USER`` /
@@ -23,7 +26,9 @@ import os
 import urllib.parse
 import urllib.request
 from dataclasses import dataclass
-from typing import BinaryIO, Iterator, Optional
+from typing import BinaryIO, Optional
+
+from ..native.wireformats import load, lookup
 
 DEFAULT_URL = "http://localhost:8123"
 
@@ -160,271 +165,31 @@ class ClickHouseHTTPClient:
             q = f"{q} FORMAT {fmt}"
         return q
 
-    def execute_native(self, query: str) -> BinaryIO:
-        """Run a SELECT with ``FORMAT Native``; returns the raw stream
-        (feed to ``native.codec.iter_blocks``)."""
-        return self._request(self._with_format(query, "Native"))
-
-    def execute_rowbinary_blocks(self, query: str, *, lossy_uint64: bool = False):
-        """Run a SELECT with ``FORMAT RowBinaryWithNamesAndTypes`` —
-        the second wire format (interop; Native stays the columnar
-        fast path, see native/rowbinary.py)."""
-        from ..native.rowbinary import ROWBINARY_FORMAT, iter_rowbinary_blocks
-
-        stream = self._request(self._with_format(query, ROWBINARY_FORMAT))
-        return iter_rowbinary_blocks(stream, lossy_uint64=lossy_uint64)
-
-    def execute_jsoneachrow_blocks(self, query: str, *, lossy_uint64: bool = False):
-        """Run a SELECT with ``FORMAT JSONCompactEachRowWithNamesAndTypes``
-        — the third wire format (text interop; Native stays the
-        columnar fast path, see native/jsoneachrow.py)."""
-        from ..native.jsoneachrow import JSONEACHROW_FORMAT, iter_jsoncompact_blocks
-
-        stream = self._request(self._with_format(query, JSONEACHROW_FORMAT))
-        return iter_jsoncompact_blocks(stream, lossy_uint64=lossy_uint64)
-
-    def execute_jsonobjects_blocks(
-        self, query: str, names_types, *, lossy_uint64: bool = False
+    def execute_format(
+        self, query: str, wire_format: str, names_types=None, *,
+        lossy_uint64: bool = False,
     ):
-        """Run a SELECT with plain ``FORMAT JSONEachRow`` — the eighth
-        wire format (object per line, NOT self-describing: the caller
-        supplies the schema from its planning probe)."""
-        from ..native.jsoneachrow import JSONOBJECTS_FORMAT, iter_jsonobjects_blocks
+        """Run a SELECT in ``wire_format`` (a ``native.wireformats``
+        name); returns that format's block iterator. Formats whose
+        stream lacks names or types take ``names_types`` from the
+        caller's planning probe."""
+        fmt = lookup(wire_format)
+        stream = self._request(self._with_format(query, fmt.clause))
+        read = load(fmt.reader)
+        if fmt.needs_schema:
+            return read(stream, names_types, lossy_uint64=lossy_uint64)
+        return read(stream, lossy_uint64=lossy_uint64)
 
-        stream = self._request(self._with_format(query, JSONOBJECTS_FORMAT))
-        return iter_jsonobjects_blocks(
-            stream, names_types, lossy_uint64=lossy_uint64
-        )
-
-    def execute_values_blocks(
-        self, query: str, names_types, *, lossy_uint64: bool = False
-    ):
-        """Run a SELECT with ``FORMAT Values`` — the ninth wire format
-        (INSERT-literal tuples, NOT self-describing: the caller
-        supplies the schema from its planning probe)."""
-        from ..native.valuesformat import VALUES_FORMAT, iter_values_blocks
-
-        stream = self._request(self._with_format(query, VALUES_FORMAT))
-        return iter_values_blocks(
-            stream, names_types, lossy_uint64=lossy_uint64
-        )
-
-    def execute_tskv_blocks(
-        self, query: str, names_types, *, lossy_uint64: bool = False
-    ):
-        """Run a SELECT with ``FORMAT TSKV`` — the tenth wire format
-        (name=value fields; names in-band, types from the caller's
-        planning probe)."""
-        from ..native.textformats import TSKV_FORMAT, iter_tskv_blocks
-
-        stream = self._request(self._with_format(query, TSKV_FORMAT))
-        return iter_tskv_blocks(stream, names_types, lossy_uint64=lossy_uint64)
-
-    def execute_tsv_blocks(self, query: str, *, lossy_uint64: bool = False):
-        """Run a SELECT with ``FORMAT TabSeparatedWithNamesAndTypes`` —
-        the fourth wire format (text interop; see native/textformats.py)."""
-        from ..native.textformats import TSV_FORMAT, iter_tsv_blocks
-
-        stream = self._request(self._with_format(query, TSV_FORMAT))
-        return iter_tsv_blocks(stream, lossy_uint64=lossy_uint64)
-
-    def execute_csv_blocks(self, query: str, *, lossy_uint64: bool = False):
-        """Run a SELECT with ``FORMAT CSVWithNamesAndTypes`` — the
-        fifth wire format (text interop; see native/textformats.py)."""
-        from ..native.textformats import CSV_FORMAT, iter_csv_blocks
-
-        stream = self._request(self._with_format(query, CSV_FORMAT))
-        return iter_csv_blocks(stream, lossy_uint64=lossy_uint64)
-
-    def insert_native(self, table: str, payload: bytes) -> None:
-        """INSERT via Native-format body (the write path the reference
-        lacks)."""
-        self._request(f"INSERT INTO {table} FORMAT Native", body=payload).read()
-
-    def execute_arrowstream_blocks(self, query: str, *, lossy_uint64: bool = False):
-        """Run a SELECT with ``FORMAT ArrowStream`` — the sixth wire
-        format and the fastest interop path (pyarrow IPC, zero
-        per-value Python)."""
-        from ..native.arrowwire import ARROW_FORMAT, iter_arrow_blocks
-
-        stream = self._request(self._with_format(query, ARROW_FORMAT))
-        return iter_arrow_blocks(stream, lossy_uint64=lossy_uint64)
-
-    def execute_parquet_blocks(self, query: str, *, lossy_uint64: bool = False):
-        """Run a SELECT with ``FORMAT Parquet`` — the seventh wire
-        format (file-shaped: the body is buffered before decode)."""
-        from ..native.arrowwire import PARQUET_FORMAT, iter_parquet_blocks
-
-        stream = self._request(self._with_format(query, PARQUET_FORMAT))
-        return iter_parquet_blocks(stream, lossy_uint64=lossy_uint64)
-
-    def execute_orc_blocks(self, query: str, *, lossy_uint64: bool = False):
-        """Run a SELECT with ``FORMAT ORC`` — the eleventh wire format
-        (file-shaped like Parquet: body buffered before decode)."""
-        from ..native.arrowwire import ORC_FORMAT, iter_orc_blocks
-
-        stream = self._request(self._with_format(query, ORC_FORMAT))
-        return iter_orc_blocks(stream, lossy_uint64=lossy_uint64)
-
-    def execute_npy_blocks(
-        self, query: str, names_types, *, lossy_uint64: bool = False
-    ):
-        """Run a SELECT with ``FORMAT Npy`` — the twelfth wire format
-        (one numpy array = one column; type self-describing, the NAME
-        rides in from the planning probe)."""
-        from ..native.npyformat import NPY_FORMAT, iter_npy_blocks
-
-        stream = self._request(self._with_format(query, NPY_FORMAT))
-        return iter_npy_blocks(stream, names_types, lossy_uint64=lossy_uint64)
-
-    def insert_orc_batches(self, table: str, batches, ch_types=None) -> int:
-        """INSERT via an ORC file body (eleventh wire format)."""
-        import io as _io
-
-        from ..native.arrowwire import ORC_FORMAT, write_orc
-
-        buf = _io.BytesIO()
-        rows = write_orc(buf, batches, ch_types)
+    def insert_format(
+        self, table: str, wire_format: str, batches, ch_types=None
+    ) -> int:
+        """INSERT ``batches`` as one ``wire_format`` body; returns the
+        rows written."""
+        fmt = lookup(wire_format)
+        buf = io.BytesIO()
+        rows = load(fmt.writer)(buf, batches, ch_types=ch_types)
         self._request(
-            f"INSERT INTO {table} FORMAT {ORC_FORMAT}", body=buf.getvalue()
-        ).read()
-        return rows
-
-    def insert_npy_batches(self, table: str, batches, ch_types=None) -> int:
-        """INSERT via a .npy body (twelfth wire format; exactly one
-        column, no nulls)."""
-        import io as _io
-
-        from ..native.npyformat import NPY_FORMAT, write_npy
-
-        buf = _io.BytesIO()
-        rows = write_npy(buf, batches, ch_types)
-        self._request(
-            f"INSERT INTO {table} FORMAT {NPY_FORMAT}", body=buf.getvalue()
-        ).read()
-        return rows
-
-    def insert_arrowstream_batches(self, table: str, batches, ch_types=None) -> int:
-        """INSERT via an Arrow IPC stream body (sixth wire format)."""
-        import io as _io
-
-        from ..native.arrowwire import ARROW_FORMAT, write_arrow
-
-        buf = _io.BytesIO()
-        rows = write_arrow(buf, batches, ch_types)
-        self._request(
-            f"INSERT INTO {table} FORMAT {ARROW_FORMAT}", body=buf.getvalue()
-        ).read()
-        return rows
-
-    def insert_parquet_batches(self, table: str, batches, ch_types=None) -> int:
-        """INSERT via a Parquet file body (seventh wire format)."""
-        import io as _io
-
-        from ..native.arrowwire import PARQUET_FORMAT, write_parquet
-
-        buf = _io.BytesIO()
-        rows = write_parquet(buf, batches, ch_types)
-        self._request(
-            f"INSERT INTO {table} FORMAT {PARQUET_FORMAT}", body=buf.getvalue()
-        ).read()
-        return rows
-
-    def insert_rowbinary_batches(self, table: str, batches, ch_types=None) -> int:
-        """INSERT via a RowBinaryWithNamesAndTypes body — the write
-        half of the second wire format."""
-        import io as _io
-
-        from ..native.rowbinary import ROWBINARY_FORMAT, write_rowbinary
-
-        buf = _io.BytesIO()
-        rows = write_rowbinary(buf, batches, ch_types)
-        self._request(
-            f"INSERT INTO {table} FORMAT {ROWBINARY_FORMAT}", body=buf.getvalue()
-        ).read()
-        return rows
-
-    def insert_jsoneachrow_batches(self, table: str, batches, ch_types=None) -> int:
-        """INSERT via a JSONCompactEachRowWithNamesAndTypes body — the
-        write half of the third wire format."""
-        import io as _io
-
-        from ..native.jsoneachrow import JSONEACHROW_FORMAT, write_jsoncompact
-
-        buf = _io.BytesIO()
-        rows = write_jsoncompact(buf, batches, ch_types)
-        self._request(
-            f"INSERT INTO {table} FORMAT {JSONEACHROW_FORMAT}", body=buf.getvalue()
-        ).read()
-        return rows
-
-    def insert_jsonobjects_batches(self, table: str, batches, ch_types=None) -> int:
-        """INSERT via a plain JSONEachRow body — the write half of the
-        eighth wire format."""
-        import io as _io
-
-        from ..native.jsoneachrow import JSONOBJECTS_FORMAT, write_jsonobjects
-
-        buf = _io.BytesIO()
-        rows = write_jsonobjects(buf, batches, ch_types)
-        self._request(
-            f"INSERT INTO {table} FORMAT {JSONOBJECTS_FORMAT}", body=buf.getvalue()
-        ).read()
-        return rows
-
-    def insert_values_batches(self, table: str, batches, ch_types=None) -> int:
-        """INSERT via a ``FORMAT Values`` body — the write half of the
-        ninth wire format (the INSERT-statement literal syntax)."""
-        import io as _io
-
-        from ..native.valuesformat import VALUES_FORMAT, write_values
-
-        buf = _io.BytesIO()
-        rows = write_values(buf, batches, ch_types)
-        self._request(
-            f"INSERT INTO {table} FORMAT {VALUES_FORMAT}", body=buf.getvalue()
-        ).read()
-        return rows
-
-    def insert_tskv_batches(self, table: str, batches, ch_types=None) -> int:
-        """INSERT via a ``FORMAT TSKV`` body — the write half of the
-        tenth wire format."""
-        import io as _io
-
-        from ..native.textformats import TSKV_FORMAT, write_tskv
-
-        buf = _io.BytesIO()
-        rows = write_tskv(buf, batches, ch_types)
-        self._request(
-            f"INSERT INTO {table} FORMAT {TSKV_FORMAT}", body=buf.getvalue()
-        ).read()
-        return rows
-
-    def insert_tsv_batches(self, table: str, batches, ch_types=None) -> int:
-        """INSERT via a TabSeparatedWithNamesAndTypes body — the write
-        half of the fourth wire format."""
-        import io as _io
-
-        from ..native.textformats import TSV_FORMAT, write_tsv
-
-        buf = _io.BytesIO()
-        rows = write_tsv(buf, batches, ch_types)
-        self._request(
-            f"INSERT INTO {table} FORMAT {TSV_FORMAT}", body=buf.getvalue()
-        ).read()
-        return rows
-
-    def insert_csv_batches(self, table: str, batches, ch_types=None) -> int:
-        """INSERT via a CSVWithNamesAndTypes body — the write half of
-        the fifth wire format."""
-        import io as _io
-
-        from ..native.textformats import CSV_FORMAT, write_csv
-
-        buf = _io.BytesIO()
-        rows = write_csv(buf, batches, ch_types)
-        self._request(
-            f"INSERT INTO {table} FORMAT {CSV_FORMAT}", body=buf.getvalue()
+            f"INSERT INTO {table} FORMAT {fmt.clause}", body=buf.getvalue()
         ).read()
         return rows
 
@@ -442,32 +207,20 @@ class ClickHouseHTTPClient:
         """No persistent connection — urllib opens one per request."""
 
     def execute_blocks(self, query: str, *, lossy_uint64: bool = False):
-        from ..native.codec import iter_blocks
-
-        return iter_blocks(self.execute_native(query), lossy_uint64=lossy_uint64)
+        return self.execute_format(query, "native", lossy_uint64=lossy_uint64)
 
     def probe_schema(self, query: str):
         """(name, CHType) pairs from a zero-row execution of ``query``."""
         from ..native.codec import read_block
 
-        blk = read_block(io.BytesIO(self.execute_native(query).read()), columns=set())
+        stream = self._request(self._with_format(query, lookup("native").clause))
+        blk = read_block(io.BytesIO(stream.read()), columns=set())
         return [] if blk is None else blk.header
 
     def insert_batches(self, table: str, batches, ch_types=None) -> int:
-        import io as _io
-
-        from ..native.types import from_arrow
-        from ..native.writer import write_native_stream
-
-        rows = 0
-        buf = _io.BytesIO()
-        types = ch_types
-        for batch in batches:
-            if types is None:  # derive once, from the first batch
-                types = [from_arrow(f.type) for f in batch.schema]
-            rows += write_native_stream(buf, [batch], ch_types=types)
-        self.insert_native(table, buf.getvalue())
-        return rows
+        # without ch_types, the Native writer types every block from the
+        # first batch's Arrow schema
+        return self.insert_format(table, "native", batches, ch_types)
 
 
 def probe_schema_pairs(options: dict, query: str):

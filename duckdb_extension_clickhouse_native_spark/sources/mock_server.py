@@ -30,6 +30,51 @@ _LOCK = threading.Lock()
 from ..plans.base import TABLES  # noqa: E402
 
 
+# the server side of each HTTP wire format, keyed by its ClickHouse
+# FORMAT name: (module under native/, decoder, encoder). The spellings
+# are written out here, not taken from the client's wire-format table,
+# so the mock checks the client's FORMAT clauses independently. Native
+# responses are encoded by arrow_to_native_bytes.
+_FORMATS = {
+    "Native": ("codec", "iter_blocks", None),
+    "RowBinaryWithNamesAndTypes": (
+        "rowbinary", "iter_rowbinary_blocks", "write_rowbinary"
+    ),
+    "JSONCompactEachRowWithNamesAndTypes": (
+        "jsoneachrow", "iter_jsoncompact_blocks", "write_jsoncompact"
+    ),
+    "JSONEachRow": (
+        "jsoneachrow", "iter_jsonobjects_blocks", "write_jsonobjects"
+    ),
+    "TabSeparatedWithNamesAndTypes": (
+        "textformats", "iter_tsv_blocks", "write_tsv"
+    ),
+    "CSVWithNamesAndTypes": ("textformats", "iter_csv_blocks", "write_csv"),
+    "ArrowStream": ("arrowwire", "iter_arrow_blocks", "write_arrow"),
+    "Parquet": ("arrowwire", "iter_parquet_blocks", "write_parquet"),
+    "Values": ("valuesformat", "iter_values_blocks", "write_values"),
+    "TSKV": ("textformats", "iter_tskv_blocks", "write_tskv"),
+    "ORC": ("arrowwire", "iter_orc_blocks", "write_orc"),
+    "Npy": ("npyformat", "iter_npy_blocks", "write_npy"),
+}
+
+
+def _split_format(q: str) -> tuple[str, str]:
+    """(query, format name) of a query ending in a known ``FORMAT
+    <name>`` clause; (q, "Native") without one."""
+    head, sep, name = q.rpartition("FORMAT ")
+    if sep and name in _FORMATS:
+        return head, name
+    return q, "Native"
+
+
+def _native_fn(module: str, fn: str):
+    import importlib
+
+    mod = importlib.import_module(f"..native.{module}", __package__)
+    return getattr(mod, fn)
+
+
 def build_handler(con, insert_hook=None, execute_inserts=True, query_hook=None):
     """Handler class factory over a DuckDB connection — the single
     implementation of the mock protocol (POST body ``<sql> FORMAT
@@ -37,7 +82,6 @@ def build_handler(con, insert_hook=None, execute_inserts=True, query_hook=None):
     insert). ``insert_hook(table, record_batches)`` runs after each
     INSERT (test fixtures record them); ``execute_inserts=False`` only
     records (for fixtures whose target tables aren't real)."""
-    from ..native.codec import iter_blocks
     from ..native.writer import arrow_to_native_bytes
 
     qlock = threading.Lock()
@@ -53,17 +97,9 @@ def build_handler(con, insert_hook=None, execute_inserts=True, query_hook=None):
                 if "query" in qs and qs["query"].upper().startswith("INSERT"):
                     q = qs["query"]
                     table = q.split()[2].split("(")[0]
-                    if "ROWBINARY" in q.upper():
-                        from ..native.rowbinary import iter_rowbinary_blocks as _irb
-
-                        block_iter = _irb(io.BytesIO(body))
-                    elif "JSONCOMPACTEACHROW" in q.upper():
-                        from ..native.jsoneachrow import (
-                            iter_jsoncompact_blocks as _ijb,
-                        )
-
-                        block_iter = _ijb(io.BytesIO(body))
-                    elif "JSONEACHROW" in q.upper():
+                    name = _split_format(q)[1]
+                    read = _native_fn(*_FORMATS[name][:2])
+                    if name == "JSONEachRow":
                         # plain objects: not self-describing — derive
                         # the schema from the target table, as a real
                         # server does; a recording-only sink (table
@@ -71,9 +107,6 @@ def build_handler(con, insert_hook=None, execute_inserts=True, query_hook=None):
                         # from the JSON values instead
                         import json as _json
 
-                        from ..native.jsoneachrow import (
-                            iter_jsonobjects_blocks as _ijo,
-                        )
                         from ..native.types import from_arrow as _fa, parse_type
 
                         try:
@@ -108,16 +141,13 @@ def build_handler(con, insert_hook=None, execute_inserts=True, query_hook=None):
                             nt = [
                                 (k, parse_type(t)) for k, t in seen.items()
                             ]
-                        block_iter = _ijo(io.BytesIO(body), nt)
-                    elif "FORMAT VALUES" in q.upper():
+                        block_iter = read(io.BytesIO(body), nt)
+                    elif name == "Values":
                         # Values has no header: derive the schema from
                         # the target table, as a real server does; a
                         # recording-only sink infers Nullable types
                         # from the literal shapes instead
-                        from ..native.valuesformat import (
-                            iter_values_blocks as _ivb,
-                            _parse_rows as _vpr,
-                        )
+                        from ..native.valuesformat import _parse_rows as _vpr
                         from ..native.types import from_arrow as _fa, parse_type
 
                         try:
@@ -149,8 +179,8 @@ def build_handler(con, insert_hook=None, execute_inserts=True, query_hook=None):
                                 (f"c{ci}", parse_type(t or "Nullable(String)"))
                                 for ci, t in enumerate(shapes)
                             ]
-                        block_iter = _ivb(io.BytesIO(body), nt)
-                    elif "FORMAT TSKV" in q.upper():
+                        block_iter = read(io.BytesIO(body), nt)
+                    elif name == "TSKV":
                         # names in-band, types from the target table
                         # (fallback: everything Nullable(String) is
                         # wrong for ints — infer from value shapes the
@@ -158,7 +188,6 @@ def build_handler(con, insert_hook=None, execute_inserts=True, query_hook=None):
                         # values are untyped text, so the recording
                         # sink infers Int64/Float64/Bool/String)
                         from ..native.textformats import (
-                            iter_tskv_blocks as _itk,
                             tsv_unescape as _tun,
                             _split_tsv_line as _stl,
                             _split_tskv_field as _stf,
@@ -195,31 +224,10 @@ def build_handler(con, insert_hook=None, execute_inserts=True, query_hook=None):
                             nt = [
                                 (k, parse_type(t)) for k, t in seen.items()
                             ]
-                        block_iter = _itk(io.BytesIO(body), nt)
-                    elif "TABSEPARATED" in q.upper():
-                        from ..native.textformats import iter_tsv_blocks as _itb
-
-                        block_iter = _itb(io.BytesIO(body))
-                    elif "FORMAT CSV" in q.upper():
-                        from ..native.textformats import iter_csv_blocks as _icb
-
-                        block_iter = _icb(io.BytesIO(body))
-                    elif "ARROWSTREAM" in q.upper():
-                        from ..native.arrowwire import iter_arrow_blocks as _iab
-
-                        block_iter = _iab(io.BytesIO(body))
-                    elif "FORMAT PARQUET" in q.upper():
-                        from ..native.arrowwire import iter_parquet_blocks as _ipb
-
-                        block_iter = _ipb(io.BytesIO(body))
-                    elif "FORMAT ORC" in q.upper():
-                        from ..native.arrowwire import iter_orc_blocks as _iob
-
-                        block_iter = _iob(io.BytesIO(body))
-                    elif "FORMAT NPY" in q.upper():
+                        block_iter = read(io.BytesIO(body), nt)
+                    elif name == "Npy":
                         # one nameless column: the name comes from the
                         # target table, as a real server resolves it
-                        from ..native.npyformat import iter_npy_blocks as _inb
                         from ..native.types import from_arrow as _fa
 
                         with qlock:
@@ -232,9 +240,9 @@ def build_handler(con, insert_hook=None, execute_inserts=True, query_hook=None):
                                 "single-column target table"
                             )
                         nt = [(f.name, _fa(f.type)) for f in tschema]
-                        block_iter = _inb(io.BytesIO(body), nt)
+                        block_iter = read(io.BytesIO(body), nt)
                     else:
-                        block_iter = iter_blocks(io.BytesIO(body))
+                        block_iter = read(io.BytesIO(body))
                     import pyarrow as _pa
 
                     batches = []
@@ -261,47 +269,10 @@ def build_handler(con, insert_hook=None, execute_inserts=True, query_hook=None):
                 q = body.decode().strip()
                 if query_hook is not None:
                     query_hook(q)
-                fmt = "native"
-                if q.endswith("FORMAT RowBinaryWithNamesAndTypes"):
-                    q = q[: -len("FORMAT RowBinaryWithNamesAndTypes")]
-                    fmt = "rowbinary"
-                elif q.endswith("FORMAT JSONCompactEachRowWithNamesAndTypes"):
-                    q = q[: -len("FORMAT JSONCompactEachRowWithNamesAndTypes")]
-                    fmt = "jsoneachrow"
-                elif q.endswith("FORMAT JSONEachRow"):
-                    q = q[: -len("FORMAT JSONEachRow")]
-                    fmt = "jsonobjects"
-                elif q.endswith("FORMAT TabSeparatedWithNamesAndTypes"):
-                    q = q[: -len("FORMAT TabSeparatedWithNamesAndTypes")]
-                    fmt = "tsv"
-                elif q.endswith("FORMAT CSVWithNamesAndTypes"):
-                    q = q[: -len("FORMAT CSVWithNamesAndTypes")]
-                    fmt = "csv"
-                elif q.endswith("FORMAT ArrowStream"):
-                    q = q[: -len("FORMAT ArrowStream")]
-                    fmt = "arrowstream"
-                elif q.endswith("FORMAT Parquet"):
-                    q = q[: -len("FORMAT Parquet")]
-                    fmt = "parquet"
-                elif q.endswith("FORMAT Values"):
-                    q = q[: -len("FORMAT Values")]
-                    fmt = "values"
-                elif q.endswith("FORMAT TSKV"):
-                    q = q[: -len("FORMAT TSKV")]
-                    fmt = "tskv"
-                elif q.endswith("FORMAT ORC"):
-                    q = q[: -len("FORMAT ORC")]
-                    fmt = "orc"
-                elif q.endswith("FORMAT Npy"):
-                    q = q[: -len("FORMAT Npy")]
-                    fmt = "npy"
-                elif q.endswith("FORMAT Native"):
-                    q = q[: -len("FORMAT Native")]
+                q, name = _split_format(q)
                 with qlock:
                     tbl = con.execute(q).fetch_arrow_table()
-                if fmt != "native":
-                    import io as _io
-
+                if name != "Native":
                     import pyarrow as _pa
 
                     batches = tbl.to_batches()
@@ -315,53 +286,11 @@ def build_handler(con, insert_hook=None, execute_inserts=True, query_hook=None):
                                 schema=tbl.schema,
                             )
                         ]
-                    out = _io.BytesIO()
-                    if fmt == "rowbinary":
-                        from ..native.rowbinary import write_rowbinary
-
-                        write_rowbinary(out, batches)
-                    elif fmt == "tsv":
-                        from ..native.textformats import write_tsv
-
-                        write_tsv(out, batches)
-                    elif fmt == "csv":
-                        from ..native.textformats import write_csv
-
-                        write_csv(out, batches)
-                    elif fmt == "arrowstream":
-                        from ..native.arrowwire import write_arrow
-
-                        write_arrow(out, batches)
-                    elif fmt == "parquet":
-                        from ..native.arrowwire import write_parquet
-
-                        write_parquet(out, batches)
-                    elif fmt == "jsonobjects":
-                        from ..native.jsoneachrow import write_jsonobjects
-
-                        write_jsonobjects(out, batches)
-                    elif fmt == "values":
-                        from ..native.valuesformat import write_values
-
-                        write_values(out, batches)
-                    elif fmt == "tskv":
-                        from ..native.textformats import write_tskv
-
-                        write_tskv(out, batches)
-                    elif fmt == "orc":
-                        from ..native.arrowwire import write_orc
-
-                        write_orc(out, batches)
-                    elif fmt == "npy":
-                        # real-server contract: a multi-column SELECT
-                        # under FORMAT Npy is an error, surfaced as 500
-                        from ..native.npyformat import write_npy
-
-                        write_npy(out, batches)
-                    else:
-                        from ..native.jsoneachrow import write_jsoncompact
-
-                        write_jsoncompact(out, batches)
+                    out = io.BytesIO()
+                    # a multi-column SELECT under FORMAT Npy raises
+                    # here: a real server answers it with an error too
+                    mod, _dec, enc = _FORMATS[name]
+                    _native_fn(mod, enc)(out, batches)
                     payload = out.getvalue()
                 else:
                     payload = arrow_to_native_bytes(tbl)

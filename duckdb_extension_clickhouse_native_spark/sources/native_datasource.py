@@ -118,6 +118,16 @@ if TYPE_CHECKING:
 
 FORMAT_NAME = "clickhouse_native"
 
+# coalesce decoded blocks into Arrow batches of about this size before
+# they cross the Python->JVM boundary: each yielded batch pays a fixed
+# IPC/serialization cost, so ~65k-row Native blocks (the ClickHouse
+# default) under-amortize it. 32 MiB ~= several blocks per hand-off;
+# the concat is one memcpy at memory bandwidth — orders of magnitude
+# cheaper than the per-batch overhead it removes (SCALE.md r11)
+ARROW_BATCH_BYTES = 32 * 1024 * 1024
+# partition packing's per-file open cost (Spark's openCostInBytes)
+OPEN_COST_BYTES = 4 * 1024 * 1024
+
 # process-wide parsed-sidecar cache: (path, mtime_ns, size) -> (dict|None,)
 _SIDECAR_CACHE: dict = {}
 
@@ -510,20 +520,10 @@ class ClickHouseNativeReader(DataSourceReader):
         # the fallback decode order is identical to the plain path, so
         # it is never slower than decoding everything.
         self.prewhere = str(options.get("prewhere", "true")).lower() == "true"
-        # coalesce decoded blocks into larger Arrow batches before they
-        # cross the Python->JVM boundary: each yielded batch pays a
-        # fixed IPC/serialization cost, so ~65k-row Native blocks (the
-        # ClickHouse default) under-amortize it. 32 MiB ~= several
-        # blocks per hand-off; 0 disables (yield per block). The concat
-        # is one memcpy at memory bandwidth — orders of magnitude
-        # cheaper than the per-batch overhead it removes (SCALE.md r11)
-        self.arrow_batch_bytes = int(
-            options.get("arrow_batch_bytes", 32 * 1024 * 1024)
-        )
         # Spark-file-source-style partition PACKING (DEFAULT ON since
         # r14): bin several small whole files into one input partition,
         # exactly the FilePartition model (maxPartitionBytes +
-        # openCostInBytes + a parallelism floor). A python-DataSource
+        # OPEN_COST_BYTES + a parallelism floor). A python-DataSource
         # task occupies a JVM task thread AND a python worker process,
         # so for overhead-dominated scans the measured sweet spot is
         # about HALF the cores (SCALE.md r13: 10M rows x 32 tiny files
@@ -532,15 +532,12 @@ class ClickHouseNativeReader(DataSourceReader):
         # Spark's 128 MiB maxPartitionBytes; set 0 for one partition
         # per file. Packing composes AFTER sidecar pruning (skipped
         # files never join a bin), preserves hive values per member,
-        # and the parallelism floor (min_partitions ~= cores/2) keeps
-        # small fixtures at one-file bins, so pruned-count tests and
-        # partition-count assertions see per-file behavior unless a
-        # directory has genuinely more files than the floor.
+        # and the parallelism floor (min_partitions, default cores/2)
+        # keeps a directory at one file per partition only while it
+        # has no more files than the floor — partition counts depend
+        # on the host.
         self.max_partition_bytes = int(
             options.get("max_partition_bytes", 128 * 1024 * 1024)
-        )
-        self.open_cost_bytes = int(
-            options.get("open_cost_bytes", 4 * 1024 * 1024)
         )
         _cpus = os.cpu_count() or 2
         self.min_partitions = int(
@@ -956,11 +953,11 @@ class ClickHouseNativeReader(DataSourceReader):
                 sz = file_size(p.path)
             except OSError:
                 sz = 0
-            weights.append(sz + self.open_cost_bytes)
+            weights.append(sz + OPEN_COST_BYTES)
         target = min(
             self.max_partition_bytes,
             max(
-                self.open_cost_bytes,
+                OPEN_COST_BYTES,
                 math.ceil(sum(weights) / max(1, self.min_partitions)),
             ),
         )
@@ -1095,7 +1092,7 @@ class ClickHouseNativeReader(DataSourceReader):
         if isinstance(partition, NativeFileGroupPartition):
             from itertools import chain
 
-            # one chained block stream: arrow_batch_bytes coalescing
+            # one chained block stream: ARROW_BATCH_BYTES coalescing
             # below amortizes the Python->JVM hand-off ACROSS the
             # grouped files, not just within each
             gen = chain.from_iterable(
@@ -1103,16 +1100,12 @@ class ClickHouseNativeReader(DataSourceReader):
             )
         else:
             gen = self._read_blocks(partition)
-        target = self.arrow_batch_bytes
-        if target <= 0:
-            yield from gen
-            return
         buf: list = []
         nbytes = 0
         for b in gen:
             buf.append(b)
             nbytes += b.nbytes
-            if nbytes >= target:
+            if nbytes >= ARROW_BATCH_BYTES:
                 yield self._concat_batches(pa, buf)
                 buf, nbytes = [], 0
         if buf:

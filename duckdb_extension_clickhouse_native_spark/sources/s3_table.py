@@ -60,6 +60,7 @@ from .url_table import (
     _structured_decoder_for,
     _truthy,
     format_settings,
+    insert_kind,
     structure_is_authoritative,
     expand_url_globs,
     parse_structure,
@@ -428,29 +429,6 @@ import re as _re
 _SAFE_PARTITION = _re.compile(r"^[A-Za-z0-9_\-=.]+$")
 
 
-def _resolve_insert_format(fmt: str) -> str:
-    from .url_table import (
-        _FORMAT_DECODERS,
-        _KIND_TO_WRITER,
-        _STRUCTURE_NEEDED,
-    )
-
-    key = fmt.strip().lower()
-    kind = _FORMAT_DECODERS.get(key)
-    if kind is None or key in _STRUCTURE_NEEDED:
-        hint = (
-            " (headerless plain spelling — INSERT writes the "
-            "self-describing stream; use the WithNamesAndTypes form)"
-            if key in _STRUCTURE_NEEDED
-            else ""
-        )
-        raise ValueError(
-            f"unsupported s3() INSERT format {fmt!r}{hint}; one of "
-            f"{sorted(set(_FORMAT_DECODERS))}"
-        )
-    return _KIND_TO_WRITER[kind]
-
-
 def _write_object(uri: str, fs_opts: dict, batches, writer_key: str) -> int:
     """Executor-side: encode ``batches`` with the shared wire writers
     into ONE object at ``uri`` (compression sniffed from the key
@@ -468,9 +446,9 @@ def _write_object(uri: str, fs_opts: dict, batches, writer_key: str) -> int:
     try:
         sink = wrap_compressed_write(raw, method)
         chunks, ch_types = derive_wire_types(list(batches))
-        n = _resolve_writer(writer_key)(sink, chunks, ch_types) or sum(
-            b.num_rows for b in chunks
-        )
+        n = _resolve_writer(writer_key)(
+            sink, chunks, ch_types=ch_types
+        ) or sum(b.num_rows for b in chunks)
         if sink is not raw:
             sink.close()
     finally:
@@ -513,7 +491,7 @@ def s3_insert(
     writes gzip objects s3()/file()/url() read back.  Works on any
     pyarrow.fs scheme (``file://`` in-sandbox, ``s3://`` with the same
     credential options as :func:`s3_table`).  Returns rows written."""
-    writer_key = _resolve_insert_format(fmt)
+    writer_key = insert_kind(fmt, "s3()")
     fs_opts = {
         k: v
         for k, v in {

@@ -17,6 +17,11 @@ Deliberate fixes over the reference:
   query in range predicates so N executors fetch in parallel — the
   reference is strictly single-stream.
 
+Over http(s) the ``wire_format`` option picks the data format for reads
+and writes; the accepted names, their FORMAT clauses and their codecs
+live in the ``native.wireformats`` table. Native is the default and the
+only format of the native TCP protocol.
+
 Usage::
 
     df = (spark.read.format("clickhouse_scan")
@@ -45,6 +50,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructField, StructType
 
+from ..native.wireformats import lookup
 from .http_client import (
     make_client,
     probe_schema_pairs as _probe_schema_pairs,
@@ -64,6 +70,22 @@ class ScanPartition(InputPartition):
     # cluster reads: this partition's shard endpoint (None -> the
     # session-level url option)
     url: Optional[str] = None
+
+
+def _wire_format(options: dict) -> str:
+    """The ``wire_format`` option, checked against the
+    ``native.wireformats`` table; a non-Native format needs an http(s)
+    url."""
+    name = str(options.get("wire_format", "native")).lower()
+    lookup(name)
+    if name != "native" and resolve_connection(options).transport != "http":
+        # the native TCP protocol frames result data as Native
+        # blocks — FORMAT only applies to the HTTP interface
+        raise ValueError(
+            f"wire_format={name} requires an http(s):// url; the native "
+            "TCP protocol always carries Native blocks"
+        )
+    return name
 
 
 def _split_queries(query: str, options: dict) -> list[str]:
@@ -199,28 +221,7 @@ class ClickHouseScanReader(DataSourceReader):
         if not self.query:
             raise ValueError("clickhouse_scan requires a 'query' (or 'table') option")
         self.lossy_uint64 = str(options.get("lossy_uint64", "false")).lower() == "true"
-        self.wire_format = str(options.get("wire_format", "native")).lower()
-        if self.wire_format not in (
-            "native", "rowbinary", "jsoneachrow", "jsonobjects", "tsv",
-            "csv", "arrowstream", "parquet", "values", "tskv", "orc",
-            "npy",
-        ):
-            raise ValueError(
-                f"wire_format must be 'native', 'rowbinary', "
-                f"'jsoneachrow', 'jsonobjects', 'tsv', 'csv', "
-                f"'arrowstream', 'parquet', 'values', 'tskv', 'orc' "
-                f"or 'npy', got {self.wire_format!r}"
-            )
-        if (
-            self.wire_format != "native"
-            and resolve_connection(options).transport != "http"
-        ):
-            # the native TCP protocol frames result data as Native
-            # blocks — FORMAT only applies to the HTTP interface
-            raise ValueError(
-                f"wire_format={self.wire_format} requires an http(s):// "
-                "url; the native TCP protocol always carries Native blocks"
-            )
+        self.wire_format = _wire_format(options)
 
     def pushFilters(self, filters):
         """Push simple Spark predicates INTO the remote SQL (r10): the
@@ -279,101 +280,27 @@ class ClickHouseScanReader(DataSourceReader):
         target = pa.schema(
             [pa.field(f.name, to_arrow_type(f.dataType)) for f in self.spark_schema.fields]
         )
+        names_types = None
+        if lookup(self.wire_format).needs_schema:
+            # the stream lacks names or types: they ride in from the
+            # planning probe
+            from ..native.types import from_arrow
+
+            names_types = [(f.name, from_arrow(f.type)) for f in target]
         policy = RetryPolicy.from_options(self.options)
         yielded = False
         for delay in policy.backoffs():
             client = _acquire_client(conn)
             healthy = False
             try:
-                if self.wire_format == "rowbinary":
-                    blocks = client.execute_rowbinary_blocks(
-                        partition.query, lossy_uint64=self.lossy_uint64
-                    )
-                elif self.wire_format == "jsoneachrow":
-                    blocks = client.execute_jsoneachrow_blocks(
-                        partition.query, lossy_uint64=self.lossy_uint64
-                    )
-                elif self.wire_format == "jsonobjects":
-                    # plain JSONEachRow is not self-describing: the
-                    # schema rides in from the planning probe
-                    from pyspark.sql.pandas.types import to_arrow_type as _tat
-
-                    from ..native.types import from_arrow as _fa
-
-                    blocks = client.execute_jsonobjects_blocks(
+                if self.wire_format != "native":
+                    blocks = client.execute_format(
                         partition.query,
-                        [
-                            (f.name, _fa(_tat(f.dataType)))
-                            for f in self.spark_schema.fields
-                        ],
+                        self.wire_format,
+                        names_types,
                         lossy_uint64=self.lossy_uint64,
                     )
-                elif self.wire_format == "values":
-                    # FORMAT Values has no header at all: the schema
-                    # rides in from the planning probe
-                    from pyspark.sql.pandas.types import to_arrow_type as _tat
-
-                    from ..native.types import from_arrow as _fa
-
-                    blocks = client.execute_values_blocks(
-                        partition.query,
-                        [
-                            (f.name, _fa(_tat(f.dataType)))
-                            for f in self.spark_schema.fields
-                        ],
-                        lossy_uint64=self.lossy_uint64,
-                    )
-                elif self.wire_format == "tskv":
-                    # TSKV carries names but not types: the schema
-                    # rides in from the planning probe
-                    from pyspark.sql.pandas.types import to_arrow_type as _tat
-
-                    from ..native.types import from_arrow as _fa
-
-                    blocks = client.execute_tskv_blocks(
-                        partition.query,
-                        [
-                            (f.name, _fa(_tat(f.dataType)))
-                            for f in self.spark_schema.fields
-                        ],
-                        lossy_uint64=self.lossy_uint64,
-                    )
-                elif self.wire_format == "tsv":
-                    blocks = client.execute_tsv_blocks(
-                        partition.query, lossy_uint64=self.lossy_uint64
-                    )
-                elif self.wire_format == "csv":
-                    blocks = client.execute_csv_blocks(
-                        partition.query, lossy_uint64=self.lossy_uint64
-                    )
-                elif self.wire_format == "arrowstream":
-                    blocks = client.execute_arrowstream_blocks(
-                        partition.query, lossy_uint64=self.lossy_uint64
-                    )
-                elif self.wire_format == "parquet":
-                    blocks = client.execute_parquet_blocks(
-                        partition.query, lossy_uint64=self.lossy_uint64
-                    )
-                elif self.wire_format == "orc":
-                    blocks = client.execute_orc_blocks(
-                        partition.query, lossy_uint64=self.lossy_uint64
-                    )
-                elif self.wire_format == "npy":
-                    # Npy is type-self-describing but NAME-less: the
-                    # single column's name rides in from the probe
-                    from pyspark.sql.pandas.types import to_arrow_type as _tat
-
-                    from ..native.types import from_arrow as _fa
-
-                    blocks = client.execute_npy_blocks(
-                        partition.query,
-                        [
-                            (f.name, _fa(_tat(f.dataType)))
-                            for f in self.spark_schema.fields
-                        ],
-                        lossy_uint64=self.lossy_uint64,
-                    )
-                else:
+                else:  # TCP or HTTP
                     blocks = client.execute_blocks(
                         partition.query, lossy_uint64=self.lossy_uint64
                     )
@@ -439,8 +366,8 @@ class ScanWriteCommit(WriterCommitMessage):
 
 
 class ClickHouseScanWriter(DataSourceArrowWriter):
-    """INSERT INTO <table> FORMAT Native over HTTP, batched per Spark
-    partition — a sink the reference does not have."""
+    """INSERT INTO <table> in the ``wire_format`` (Native by default),
+    batched per Spark partition — a sink the reference does not have."""
 
     def __init__(self, schema: StructType, options: dict):
         self.schema = schema
@@ -449,50 +376,14 @@ class ClickHouseScanWriter(DataSourceArrowWriter):
         if not self.table:
             raise ValueError("clickhouse_scan write requires a 'table' option")
         self.max_insert_bytes = int(options.get("max_insert_bytes", 64 * 1024 * 1024))
-        self.wire_format = str(options.get("wire_format", "native")).lower()
-        if self.wire_format not in (
-            "native", "rowbinary", "jsoneachrow", "jsonobjects", "tsv",
-            "csv", "arrowstream", "parquet", "values", "tskv", "orc",
-            "npy",
-        ):
-            raise ValueError(
-                f"wire_format must be 'native', 'rowbinary', "
-                f"'jsoneachrow', 'jsonobjects', 'tsv', 'csv', "
-                f"'arrowstream', 'parquet', 'values', 'tskv', 'orc' "
-                f"or 'npy', got {self.wire_format!r}"
-            )
-        if self.wire_format != "native" and (
-            resolve_connection(options).transport != "http"
-        ):
-            raise ValueError(
-                f"wire_format={self.wire_format} requires an http(s):// "
-                "url; the native TCP protocol always carries Native blocks"
-            )
+        self.wire_format = _wire_format(options)
 
     def _insert_fn(self, client):
-        if self.wire_format == "rowbinary":
-            return client.insert_rowbinary_batches
-        if self.wire_format == "jsoneachrow":
-            return client.insert_jsoneachrow_batches
-        if self.wire_format == "jsonobjects":
-            return client.insert_jsonobjects_batches
-        if self.wire_format == "values":
-            return client.insert_values_batches
-        if self.wire_format == "tskv":
-            return client.insert_tskv_batches
-        if self.wire_format == "tsv":
-            return client.insert_tsv_batches
-        if self.wire_format == "csv":
-            return client.insert_csv_batches
-        if self.wire_format == "arrowstream":
-            return client.insert_arrowstream_batches
-        if self.wire_format == "parquet":
-            return client.insert_parquet_batches
-        if self.wire_format == "orc":
-            return client.insert_orc_batches
-        if self.wire_format == "npy":
-            return client.insert_npy_batches
-        return client.insert_batches
+        if self.wire_format != "native":
+            return lambda table, batches, ch_types: client.insert_format(
+                table, self.wire_format, batches, ch_types
+            )
+        return client.insert_batches  # TCP or HTTP
 
     def write(self, iterator: Iterator["pa.RecordBatch"]) -> ScanWriteCommit:
         from ..native.rowbinary import derive_wire_types
@@ -736,14 +627,20 @@ class ClickHouseScanStreamReader(DataSourceStreamReader):
         # the committed range: same rows, any retry refetches the same
         # sub-range. A first batch with no lower bound probes
         # min(cursor) once (old rows are immutable per the cursor
-        # contract, so the min is stable across retries).
+        # contract, so the min is stable across retries); if that probe
+        # fails in transit, the batch fetches its window in one query.
         n_fetch = self.fetch_partitions
         if not shards and self._kind == "int" and n_fetch > 1:
             lo = s
             if lo is None:
-                lo = self._query_scalar(
-                    f"SELECT min({self.cursor}) AS mn FROM ({base}) AS __mn"
-                )
+                from .retry import RETRYABLE_EXC
+
+                try:
+                    lo = self._query_scalar(
+                        f"SELECT min({self.cursor}) AS mn FROM ({base}) AS __mn"
+                    )
+                except RETRYABLE_EXC:
+                    lo = None
                 if lo is not None:
                     lo = int(lo) - 1  # exclusive lower bound
             if lo is not None and int(e) - int(lo) > n_fetch:

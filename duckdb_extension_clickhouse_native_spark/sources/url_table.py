@@ -40,9 +40,12 @@ from typing import Iterator, Optional
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-# format alias (lowercased, ClickHouse spelling tolerated) -> iter fn
-# name. ONLY self-describing spellings belong here: the plain 'CSV' /
-# 'TSV' / 'RowBinary' / 'JSONCompactEachRow' names are HEADERLESS in
+from ..native.wireformats import WIRE_FORMATS, load
+
+# format alias (lowercased, ClickHouse spelling tolerated) -> kind: a
+# ``wire_format`` name of the native.wireformats table, or a key of
+# _FILE_DECODERS. ONLY self-describing spellings belong here: the plain
+# 'CSV' / 'TSV' / 'RowBinary' / 'JSONCompactEachRow' names are HEADERLESS in
 # ClickHouse — routing them to a WithNamesAndTypes decoder would eat
 # the first data rows as a bogus header (r13 ADVICE: url_table(url,
 # 'CSV') on headerless data failed with "unsupported ClickHouse type:
@@ -54,18 +57,26 @@ _FORMAT_DECODERS = {
     "tabseparatedwithnamesandtypes": "tsv",
     "tsvwithnamesandtypes": "tsv",
     "rowbinarywithnamesandtypes": "rowbinary",
-    "jsoncompacteachrowwithnamesandtypes": "jsoncompact",
+    "jsoncompacteachrowwithnamesandtypes": "jsoneachrow",
     "arrowstream": "arrowstream",
     "parquet": "parquet",
     "orc": "orc",
-    # the full result-object format: meta carries REAL CH type names,
-    # so it is self-describing (read-only — no INSERT writer)
     "json": "json",
-    # Avro OCF: embedded schema, read AND write (native/avroformat.py)
     "avro": "avro",
-    # parquet footer introspection, one row per file (read-only)
     "parquetmetadata": "parquetmetadata",
 }
+
+# url() kinds that are not wire formats: (module, reader) under native/
+_FILE_DECODERS = {
+    # the full result-object format: meta carries REAL CH type names,
+    # so it is self-describing (read-only — no INSERT writer)
+    "json": ("rawtext", "iter_json_blocks"),
+    # Avro OCF: embedded schema, read AND write (native/avroformat.py)
+    "avro": ("avroformat", "iter_avro_blocks"),
+    # parquet footer introspection, one row per file (read-only)
+    "parquetmetadata": ("arrowwire", "iter_parquetmetadata_blocks"),
+}
+_READ_ONLY = {"json", "parquetmetadata"}
 
 # formats whose stream carries NO names/types: ClickHouse's url()
 # takes a third ``structure`` argument ('name Type, ...') for these
@@ -347,49 +358,7 @@ def _decoder_for(fmt: str):
             f"{sorted(set(_FORMAT_DECODERS))}"
         )
 
-    if kind == "native":
-        from ..native.codec import iter_blocks
-
-        return iter_blocks
-    if kind == "csv":
-        from ..native.textformats import iter_csv_blocks
-
-        return iter_csv_blocks
-    if kind == "tsv":
-        from ..native.textformats import iter_tsv_blocks
-
-        return iter_tsv_blocks
-    if kind == "rowbinary":
-        from ..native.rowbinary import iter_rowbinary_blocks
-
-        return iter_rowbinary_blocks
-    if kind == "jsoncompact":
-        from ..native.jsoneachrow import iter_jsoncompact_blocks
-
-        return iter_jsoncompact_blocks
-    if kind == "json":
-        from ..native.rawtext import iter_json_blocks
-
-        return iter_json_blocks
-    if kind == "avro":
-        from ..native.avroformat import iter_avro_blocks
-
-        return iter_avro_blocks
-    if kind == "parquetmetadata":
-        from ..native.arrowwire import iter_parquetmetadata_blocks
-
-        return iter_parquetmetadata_blocks
-    if kind == "arrowstream":
-        from ..native.arrowwire import iter_arrow_blocks
-
-        return iter_arrow_blocks
-    if kind == "parquet":
-        from ..native.arrowwire import iter_parquet_blocks
-
-        return iter_parquet_blocks
-    from ..native.arrowwire import iter_orc_blocks
-
-    return iter_orc_blocks
+    return load(_FILE_DECODERS.get(kind) or WIRE_FORMATS[kind].reader)
 
 
 def format_settings(options: dict) -> Optional[dict]:
@@ -943,28 +912,9 @@ def format_table(
     return spark.createDataFrame(tbl)
 
 
-# writer half: INSERT INTO FUNCTION url('http://...', fmt)
-_KIND_TO_WRITER = {
-    "native": "native",
-    "csv": "csv",
-    "tsv": "tsv",
-    "rowbinary": "rowbinary",
-    "jsoncompact": "jsoneachrow",  # write_jsoncompact lives under that key
-    "arrowstream": "arrowstream",
-    "parquet": "parquet",
-    "orc": "orc",
-    "avro": "avro",
-}
-
-
-def url_insert(df, url: str, fmt: str = "CSVWithNamesAndTypes") -> int:
-    """``INSERT INTO FUNCTION url(url, fmt)``: encode ``df`` with the
-    shared wire writers and POST it as ONE request body. The encode
-    and POST run executor-side (repartition(1) + mapInArrow — the
-    into_outfile single-writer shape; the driver only sees the 1-row
-    row count). Returns the number of rows posted."""
-    from ..operators.outfile import _resolve_writer
-
+def insert_kind(fmt: str, surface: str) -> str:
+    """Writer key (an INTO OUTFILE format name) for the format spelling
+    of ``INSERT INTO FUNCTION <surface>(..., fmt)``."""
     key = fmt.strip().lower()
     kind = _FORMAT_DECODERS.get(key)
     if kind is None or key in _STRUCTURE_NEEDED:
@@ -975,15 +925,26 @@ def url_insert(df, url: str, fmt: str = "CSVWithNamesAndTypes") -> int:
             else ""
         )
         raise ValueError(
-            f"unsupported url() INSERT format {fmt!r}{hint}; one of "
+            f"unsupported {surface} INSERT format {fmt!r}{hint}; one of "
             f"{sorted(set(_FORMAT_DECODERS))}"
         )
-    writer_key = _KIND_TO_WRITER.get(kind)
-    if writer_key is None:
+    if kind in _READ_ONLY:
         raise ValueError(
-            f"format {fmt!r} is read-only for url() INSERT; one of "
-            f"{sorted(set(_KIND_TO_WRITER))}"
+            f"format {fmt!r} is read-only for {surface} INSERT; one of "
+            f"{sorted(set(_FORMAT_DECODERS.values()) - _READ_ONLY)}"
         )
+    return kind
+
+
+def url_insert(df, url: str, fmt: str = "CSVWithNamesAndTypes") -> int:
+    """``INSERT INTO FUNCTION url(url, fmt)``: encode ``df`` with the
+    shared wire writers and POST it as ONE request body. The encode
+    and POST run executor-side (repartition(1) + mapInArrow — the
+    into_outfile single-writer shape; the driver only sees the 1-row
+    row count). Returns the number of rows posted."""
+    from ..operators.outfile import _resolve_writer
+
+    writer_key = insert_kind(fmt, "url()")
     if not url.lower().startswith(("http://", "https://")):
         raise ValueError(f"url() needs an http(s):// URL, got {url!r}")
 
@@ -999,7 +960,7 @@ def url_insert(df, url: str, fmt: str = "CSVWithNamesAndTypes") -> int:
         # wire-NULL contract (r10): Nullable(...) is declared exactly
         # where nulls exist, scanning ALL batches before encoding
         chunks, ch_types = derive_wire_types(batches)
-        n = writer(buf, chunks, ch_types) or sum(
+        n = writer(buf, chunks, ch_types=ch_types) or sum(
             b.num_rows for b in chunks
         )
         # write-side extension sniffing, mirroring INTO OUTFILE: an

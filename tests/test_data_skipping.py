@@ -25,6 +25,7 @@ from duckdb_extension_clickhouse_native_spark.native.writer import (
 )
 from duckdb_extension_clickhouse_native_spark.sources.native_datasource import (
     ClickHouseNativeReader,
+    NativeFileGroupPartition,
     _filter_excludes_file,
     infer_native_schema,
 )
@@ -51,6 +52,20 @@ def _reader(d, **opts) -> ClickHouseNativeReader:
     return ClickHouseNativeReader(infer_native_schema(options), options)
 
 
+def _planned(reader, root) -> list:
+    """Root-relative paths of every file the planned partitions read,
+    packed groups expanded to their members — independent of how many
+    files the host's parallelism floor lets packing put in one bin."""
+    out = []
+    for p in reader.partitions():
+        members = p.parts if isinstance(p, NativeFileGroupPartition) else (p,)
+        out += [os.path.relpath(m.path, root) for m in members]
+    return sorted(out)
+
+
+_PARTS = [f"part-{i:03d}.clickhouse" for i in range(4)]
+
+
 def test_sidecar_written_and_listed_nowhere(range_dir):
     side = stats_sidecar_path(os.path.join(range_dir, "part-000.clickhouse"))
     st = json.load(open(side))
@@ -65,24 +80,24 @@ def test_sidecar_written_and_listed_nowhere(range_dir):
 def test_partitions_pruned_by_pushed_filters(range_dir):
     r = _reader(range_dir)
     list(r.pushFilters([LessThan(("k",), 250)]))
-    assert len(r.partitions()) == 1  # only file 0 can match
+    assert _planned(r, range_dir) == _PARTS[:1]  # only file 0 can match
     r = _reader(range_dir)
     list(r.pushFilters([GreaterThan(("k",), 499)]))
-    assert len(r.partitions()) == 2  # files 2 and 3
+    assert _planned(r, range_dir) == _PARTS[2:]
     r = _reader(range_dir)
     list(r.pushFilters([EqualTo(("k",), 600)]))
-    assert len(r.partitions()) == 1
+    assert _planned(r, range_dir) == [_PARTS[2]]
     r = _reader(range_dir)
     list(r.pushFilters([In(("k",), (10, 990))]))
-    assert len(r.partitions()) == 2  # first and last file
-    # unsatisfiable predicate keeps ONE partition (empty result, valid plan)
+    assert _planned(r, range_dir) == [_PARTS[0], _PARTS[3]]
+    # unsatisfiable predicate keeps ONE file (empty result, valid plan)
     r = _reader(range_dir)
     list(r.pushFilters([EqualTo(("k",), -5)]))
-    assert len(r.partitions()) == 1
+    assert _planned(r, range_dir) == _PARTS[:1]
     # skipping can be disabled
     r = _reader(range_dir, skipping="false")
     list(r.pushFilters([EqualTo(("k",), -5)]))
-    assert len(r.partitions()) == 4
+    assert _planned(r, range_dir) == _PARTS
 
 
 def test_results_identical_with_and_without_skipping(spark, range_dir):
@@ -131,7 +146,7 @@ def test_missing_sidecar_reads_everything(range_dir, tmp_path):
             shutil.copy(os.path.join(range_dir, f), os.path.join(d, f))
     r = _reader(d)
     list(r.pushFilters([LessThan(("k",), 250)]))
-    assert len(r.partitions()) == 4
+    assert _planned(r, d) == _PARTS
 
 
 def test_distributed_writer_emits_sidecars_and_prunes(spark, tmp_path):
@@ -231,21 +246,24 @@ def test_hive_partition_schema_and_values(spark, hive_dir):
 def test_hive_partition_pruning_at_planning(hive_dir):
     schema = infer_native_schema({"path": hive_dir})
     reader = ClickHouseNativeReader(schema, {"path": hive_dir})
-    assert len(reader.partitions()) == 8
+
+    def files(days, srcs=("a", "b")):
+        return sorted(
+            f"day={d}/src={s}/part.clickhouse" for d in days for s in srcs
+        )
+
+    assert _planned(reader, hive_dir) == files(range(1, 5))
     reader.pushed = [EqualTo(("day",), 2)]
-    parts = reader.partitions()
-    assert len(parts) == 2
-    assert all("day=2" in p.path for p in parts)
+    assert _planned(reader, hive_dir) == files([2])
     reader.pushed = [EqualTo(("day",), 2), EqualTo(("src",), "a")]
-    parts = reader.partitions()
-    assert len(parts) == 1 and "src=a" in parts[0].path
+    assert _planned(reader, hive_dir) == files([2], ["a"])
     reader.pushed = [GreaterThan(("day",), 2)]
-    assert len(reader.partitions()) == 4
+    assert _planned(reader, hive_dir) == files([3, 4])
     reader.pushed = [In(("day",), (1, 4))]
-    assert len(reader.partitions()) == 4
-    # no-match keeps one partition; its executor-side filter drops rows
+    assert _planned(reader, hive_dir) == files([1, 4])
+    # no-match keeps one file; its executor-side filter drops rows
     reader.pushed = [EqualTo(("day",), 99)]
-    assert len(reader.partitions()) == 1
+    assert _planned(reader, hive_dir) == files([1], ["a"])
 
 
 def test_hive_partition_filter_results_match(spark, hive_dir):

@@ -230,14 +230,14 @@ def test_npy_http_roundtrip(npy_mock):
     rb = pa.RecordBatch.from_arrays(
         [pa.array([10, 20, 30], type=pa.int64())], names=["v"]
     )
-    assert client.insert_npy_batches("vec", [rb]) == 3
+    assert client.insert_format("vec", "npy", [rb]) == 3
     got = list(
-        client.execute_npy_blocks("SELECT v FROM vec ORDER BY v", _nt())
+        client.execute_format("SELECT v FROM vec ORDER BY v", "npy", _nt())
     )
     assert got[0].to_record_batch().column(0).to_pylist() == [10, 20, 30]
     # a multi-column SELECT under FORMAT Npy is a server-side error
     with pytest.raises(Exception, match="one column|500"):
-        list(client.execute_npy_blocks("SELECT a, b FROM wide", _nt()))
+        list(client.execute_format("SELECT a, b FROM wide", "npy", _nt()))
 
 
 def test_orc_http_roundtrip(npy_mock):
@@ -249,9 +249,10 @@ def test_orc_http_roundtrip(npy_mock):
     url, con = npy_mock
     client = ClickHouseHTTPClient(resolve_connection({"url": url}))
     got = list(
-        client.execute_orc_blocks(
+        client.execute_format(
             "SELECT range AS r, 'v' || CAST(range AS VARCHAR) AS s "
-            "FROM range(5)"
+            "FROM range(5)",
+            "orc",
         )
     )
     rb = got[0].to_record_batch()

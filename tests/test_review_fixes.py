@@ -97,10 +97,10 @@ def test_format_heuristic_only_matches_trailing_clause():
     client = ClickHouseHTTPClient(ConnectionInfo(base_url="http://x"))
     client._request = lambda q, body=None: seen.setdefault("q", q)  # type: ignore
 
-    client.execute_native("SELECT formatDateTime(now(), '%Y') AS m FROM t")
+    client.execute_blocks("SELECT formatDateTime(now(), '%Y') AS m FROM t")
     assert seen["q"].endswith("FORMAT Native")
     seen.clear()
-    client.execute_native("SELECT 1 FORMAT Native")
+    client.execute_blocks("SELECT 1 FORMAT Native")
     assert seen["q"].count("FORMAT") == 1
 
 

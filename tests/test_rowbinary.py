@@ -316,9 +316,10 @@ def test_nested_fetch_via_mock(mock_ch_server):
         resolve_connection({"url": mock_ch_server["url"]})
     )
     blocks = list(
-        client.execute_rowbinary_blocks(
+        client.execute_format(
             "SELECT i, MAP(['a'], [i]) AS m, {'x': i, 'y': 'v'} AS t "
-            "FROM typed WHERE i < 3 ORDER BY i"
+            "FROM typed WHERE i < 3 ORDER BY i",
+            "rowbinary",
         )
     )
     rb = blocks[0].to_record_batch()

@@ -97,3 +97,131 @@ def test_scan_insert_writer(spark, mock_ch_server):
         b.num_rows for table, batches in inserted for b in batches if table == "target_table"
     )
     assert total == 100
+
+
+# ClickHouse's own spelling of each wire_format's FORMAT name
+_CLICKHOUSE_SPELLING = {
+    "native": "Native",
+    "rowbinary": "RowBinaryWithNamesAndTypes",
+    "jsoneachrow": "JSONCompactEachRowWithNamesAndTypes",
+    "jsonobjects": "JSONEachRow",
+    "tsv": "TabSeparatedWithNamesAndTypes",
+    "csv": "CSVWithNamesAndTypes",
+    "arrowstream": "ArrowStream",
+    "parquet": "Parquet",
+    "values": "Values",
+    "tskv": "TSKV",
+    "orc": "ORC",
+    "npy": "Npy",
+}
+
+
+def test_format_surfaces_accept_exactly_their_names(tmp_path):
+    """Each surface that takes a format name accepts exactly this set —
+    clickhouse_scan reads and writes, INTO OUTFILE, url() INSERT — and
+    the HTTP client sends ClickHouse's spelling of each FORMAT clause.
+    The expected sets are literals, not reads of the format table."""
+    import io
+
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from duckdb_extension_clickhouse_native_spark.native.types import parse_type
+    from duckdb_extension_clickhouse_native_spark.operators.outfile import (
+        into_outfile,
+    )
+    from duckdb_extension_clickhouse_native_spark.sources.http_client import (
+        ClickHouseHTTPClient,
+        ConnectionInfo,
+    )
+    from duckdb_extension_clickhouse_native_spark.sources.scan_datasource import (
+        ClickHouseScanReader,
+        ClickHouseScanWriter,
+    )
+    from duckdb_extension_clickhouse_native_spark.sources.url_table import (
+        url_insert,
+    )
+
+    candidates = {
+        *_CLICKHOUSE_SPELLING, "avro", "json", "parquetmetadata", "bogus",
+        "csvwithnamesandtypes", "tabseparatedwithnamesandtypes",
+        "tsvwithnamesandtypes", "rowbinarywithnamesandtypes",
+        "jsoncompacteachrowwithnamesandtypes", "tabseparated",
+        "jsoncompacteachrow", "csvwithnames", "jsonlines", "regexp",
+    }
+    scan_names = {
+        "native", "rowbinary", "jsoneachrow", "jsonobjects", "tsv", "csv",
+        "arrowstream", "parquet", "values", "tskv", "orc", "npy",
+    }
+    schema = StructType([StructField("v", LongType())])
+
+    def accepted(make) -> set:
+        names = set()
+        for n in candidates:
+            try:
+                make(n)
+            except ValueError:
+                continue
+            names.add(n)
+        return names
+
+    http = {"query": "SELECT 1", "table": "t", "url": "http://127.0.0.1:1"}
+    for source in (ClickHouseScanReader, ClickHouseScanWriter):
+        assert accepted(
+            lambda n: source(schema, {**http, "wire_format": n})
+        ) == scan_names, source
+
+    # INTO OUTFILE checks the format before the path: an existing file
+    # answers FileExistsError only for an accepted format
+    taken = tmp_path / "taken"
+    taken.write_text("")
+    outfile = set()
+    for n in candidates:
+        try:
+            into_outfile(None, str(taken), n)
+        except FileExistsError:
+            outfile.add(n)
+        except ValueError:
+            pass
+    assert outfile == scan_names | {"avro"}
+
+    # url() INSERT checks the format before the URL scheme
+    url_ok = set()
+    for n in candidates:
+        try:
+            url_insert(None, "ftp://x/y", n)
+        except ValueError as e:
+            if "needs an http(s)" in str(e):
+                url_ok.add(n)
+    assert url_ok == {
+        "native", "csvwithnamesandtypes", "tabseparatedwithnamesandtypes",
+        "tsvwithnamesandtypes", "rowbinarywithnamesandtypes",
+        "jsoncompacteachrowwithnamesandtypes", "arrowstream", "parquet",
+        "orc", "avro",
+    }
+
+    # the FORMAT clause on the wire, INSERT then SELECT; the SELECT is
+    # answered with the body the INSERT sent
+    sent, bodies = [], []
+    client = ClickHouseHTTPClient(ConnectionInfo(base_url="http://x"))
+
+    def fake_request(q, body=None):
+        sent.append(q)
+        if body is not None:
+            bodies.append(body)
+        return io.BytesIO(bodies[-1])
+
+    client._request = fake_request  # type: ignore[method-assign]
+    rb = pa.RecordBatch.from_arrays([pa.array([7], pa.int64())], names=["v"])
+    for name, clause in _CLICKHOUSE_SPELLING.items():
+        sent.clear()
+        assert client.insert_format("t", name, [rb]) == 1
+        blocks = client.execute_format(
+            "SELECT v FROM t", name, [("v", parse_type("Int64"))]
+        )
+        got = [v for b in blocks for v in b.to_record_batch().column(0).to_pylist()]
+        assert got == [7], name
+        assert sent == [
+            f"INSERT INTO t FORMAT {clause}",
+            f"SELECT v FROM t FORMAT {clause}",
+        ], name

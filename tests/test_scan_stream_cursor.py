@@ -155,6 +155,50 @@ def test_fetch_partitions_unit_ranges():
     assert len(parts) == 1
 
 
+def test_failed_min_probe_fetches_one_window():
+    """When the min(cursor) probe of an unbounded first batch fails in
+    transit, partitions() plans the whole window as one fetch instead
+    of failing the micro-batch, and that fetch returns exactly the
+    rows up to the end offset."""
+    import duckdb
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from duckdb_extension_clickhouse_native_spark.sources.mock_server import (
+        build_handler,
+        serve,
+    )
+    from duckdb_extension_clickhouse_native_spark.sources.scan_datasource import (
+        ClickHouseScanStreamReader,
+    )
+
+    seen = []
+
+    def fail_min_probe(q):
+        seen.append(q)
+        if "min(id)" in q:
+            raise RuntimeError("probe refused")  # the mock answers 500
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE src (id BIGINT, v VARCHAR)")
+    con.execute("INSERT INTO src SELECT range, 'a' || range FROM range(40)")
+    url = serve(build_handler(con, query_hook=fail_min_probe))
+    schema = StructType(
+        [StructField("id", LongType()), StructField("v", StringType())]
+    )
+    r = ClickHouseScanStreamReader(
+        schema,
+        {"table": "src", "cursor_column": "id", "fetch_partitions": "3",
+         "url": url},
+    )
+    parts = r.partitions({"cursor": None}, {"cursor": 29})
+    assert any("min(id)" in q for q in seen)
+    assert len(parts) == 1
+    rows = [row for p in parts for b in r.read(p) for row in b.to_pylist()]
+    assert sorted((d["id"], d["v"]) for d in rows) == [
+        (i, f"a{i}") for i in range(30)
+    ]
+
+
 @pytest.mark.parametrize("bad", ["0", "-2", "2.5", "many"])
 def test_fetch_partitions_rejected_at_construction(bad):
     """A fetch_partitions value that is not an integer >= 1 fails when
