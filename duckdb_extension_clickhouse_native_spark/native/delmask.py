@@ -129,10 +129,3 @@ def write_delmask(
         json.dump(payload, f)
     os.replace(tmp, p)
     return {"rows": int(rows), "deleted": deleted}
-
-
-def remove_delmask(data_path: str) -> None:
-    try:
-        os.remove(delmask_path(data_path))
-    except OSError:
-        pass

@@ -1,21 +1,33 @@
-"""ClickHouse Native file writer.
+"""ClickHouse Native part writer — the one module that knows what a
+Native part is: the data file, its ``_<name>.stats.json`` sidecar
+(min/max per file and per block, plus the skip indexes), its string
+``.marks`` and its delete mask.
 
-The reference is read-only (no writer exists in
-/root/reference — SURVEY.md §2.1 'Sinks: none'); this writer is the
-natural completion: it lets ``df.write.format("clickhouse_native")``
-produce files ``clickhouse-local`` can read back, and generates all
-of our round-trip test fixtures.
+The reference is read-only (SURVEY.md §2.1 'Sinks: none'); this
+writer is the natural completion: it lets
+``df.write.format("clickhouse_native")`` produce files
+``clickhouse-local`` can read back, and generates all of our
+round-trip test fixtures. Both entry points —
+:func:`write_native_file` and the DataSource writer — write through
+:class:`NativePartSink`; every stats-sidecar read goes through
+:func:`load_stats`.
 """
 
 from __future__ import annotations
 
 import io
+import json
 import os
-from typing import BinaryIO, Iterable, Optional
+from dataclasses import dataclass
+from typing import BinaryIO, Callable, Iterable, Optional
 
 import pyarrow as pa
 
+from .bloomindex import MAX_DISTINCT, build_bloom, string_ngrams, string_tokens, value_bytes
 from .codec import write_block
+from .delmask import delmask_path
+from .marks import MarksRecorder, marks_sidecar_path
+from .setindex import SET_MAX_DISTINCT, set_index_value
 from .types import CHType, from_arrow
 
 DEFAULT_BLOCK_ROWS = 65_409  # clickhouse's default max_block_size
@@ -59,7 +71,7 @@ def write_native_stream(
         if batch.num_rows == 0 and not wrote_any:
             if on_block is not None:
                 on_block(buf.tell(), batch)
-            _write_block_with_nullable_names(buf, batch, types)
+            write_block(buf, batch, types)
             wrote_any = True
             continue
         start = 0
@@ -67,7 +79,7 @@ def write_native_stream(
             piece = batch.slice(start, block_rows)
             if on_block is not None:
                 on_block(buf.tell(), piece)
-            _write_block_with_nullable_names(buf, piece, types)
+            write_block(buf, piece, types)
             start += piece.num_rows
             total += piece.num_rows
             wrote_any = True
@@ -78,15 +90,8 @@ def write_native_stream(
         )
         if on_block is not None:
             on_block(buf.tell(), empty)
-        _write_block_with_nullable_names(buf, empty, types)
+        write_block(buf, empty, types)
     return total
-
-
-def _write_block_with_nullable_names(
-    buf: BinaryIO, batch: pa.RecordBatch, types: list[CHType]
-) -> None:
-    # codec.write_block owns the nullable/LowCardinality naming rules
-    write_block(buf, batch, types)
 
 
 def stats_sidecar_path(data_path: str) -> str:
@@ -96,6 +101,61 @@ def stats_sidecar_path(data_path: str) -> str:
     ``_SUCCESS``."""
     d, base = os.path.split(data_path)
     return os.path.join(d, f"_{base}.stats.json")
+
+
+def part_companions(data_path: str) -> tuple:
+    """The files that travel with a part, any of which may be absent:
+    its stats sidecar, its string marks and its lightweight-delete
+    mask. Whatever links, moves, stages or removes a part must carry
+    all three — a lost stats sidecar only loses pruning, but a lost
+    delete mask silently RESURRECTS deleted rows."""
+    return (
+        stats_sidecar_path(data_path),
+        marks_sidecar_path(data_path),
+        delmask_path(data_path),
+    )
+
+
+def remove_part(data_path: str) -> None:
+    """Delete a part and its companions (absent files are skipped)."""
+    for p in (data_path, *part_companions(data_path)):
+        try:
+            os.remove(p)
+        except FileNotFoundError:
+            pass
+
+
+# process-wide parsed-sidecar cache:
+# (path, inode, mtime_ns, size) -> (dict|None,)
+_STATS_CACHE: dict = {}
+
+
+def load_stats(data_path: str) -> Optional[dict]:
+    """The part's parsed stats sidecar, or None when it is absent or
+    corrupt. Cached PROCESS-wide by the sidecar's stat — bloom/ngrambf
+    entries make sidecars ~100x bigger than bare min/max, so re-parsing
+    per query on wide directories is real planning cost; a rewrite (a
+    new inode and mtime) misses naturally. Cleared wholesale past 4096
+    entries (a few hundred MB worst case). The dict is shared between
+    callers: treat it as read-only."""
+    side_path = stats_sidecar_path(data_path)
+    try:
+        st = os.stat(side_path)
+    except OSError:
+        return None
+    key = (side_path, st.st_ino, st.st_mtime_ns, st.st_size)
+    cached = _STATS_CACHE.get(key)
+    if cached is not None:
+        return cached[0]
+    try:
+        with open(side_path) as f:
+            side = json.load(f)
+    except (OSError, ValueError):
+        side = None
+    if len(_STATS_CACHE) >= 4096:
+        _STATS_CACHE.clear()
+    _STATS_CACHE[key] = (side,)
+    return side
 
 
 _STR_STATS_MAX = 64
@@ -134,11 +194,7 @@ def _column_stats(table: pa.Table | pa.RecordBatch) -> dict:
     import pyarrow.compute as pc
 
     cols = {}
-    arrs = (
-        {f.name: table.column(i) for i, f in enumerate(table.schema)}
-        if isinstance(table, pa.Table)
-        else {f.name: table.column(i) for i, f in enumerate(table.schema)}
-    )
+    arrs = {f.name: table.column(i) for i, f in enumerate(table.schema)}
     for name, arr in arrs.items():
         t = arr.type
         if not (
@@ -170,161 +226,108 @@ def _column_stats(table: pa.Table | pa.RecordBatch) -> dict:
     return cols
 
 
-class BlockStatsRecorder:
-    """Shared per-block sidecar index builder (write_native_file and
-    the DataSource sink): records EVERY physical block — header-only
-    0-row blocks included, because the reader's ``n_blocks`` counts
-    physical blocks — and maintains the file-level merge of the
-    per-block stats. The merge is NaN-sound: a column that
-    ``_column_stats`` omitted for any non-empty block (NaN present,
-    or an unconstructible string bound) is dropped from the file
-    level too — keeping a partial min/max would let pruning drop
-    files whose unaccounted rows match."""
+@dataclass(frozen=True)
+class SkipIndex:
+    """One skip-index kind: how the writer accumulates an indexed
+    column and what the sidecar stores for it."""
 
-    def __init__(
-        self,
-        bloom_columns: tuple = (),
-        ngram_columns: tuple = (),
-        set_columns: tuple = (),
-        token_columns: tuple = (),
-    ) -> None:
+    # non-null value -> its index entries; None marks an unsupported
+    # type, which drops the column's index
+    entries: Callable
+    # past this many distinct entries the column's index is dropped
+    cap: int
+    strings_only: bool
+    # accumulated entries -> the sidecar value; None stores nothing
+    build: Callable
+
+
+def _single(entry: Callable) -> Callable:
+    """``entries`` for a kind that stores one entry per distinct value."""
+
+    def entries(v):
+        e = entry(v)
+        return None if e is None else (e,)
+
+    return entries
+
+
+# The skip indexes, keyed by kind: writer option ``index_<kind>``
+# writes sidecar key ``<kind>`` (in this order).
+#   bloom   (native/bloomindex.py): equality/IN pruning on scattered
+#           values min/max cannot prove absent;
+#   ngrambf: codepoint 3-grams — substring-predicate pruning;
+#   tokenbf: word tokens — token-delimited predicate pruning;
+#   set     (native/setindex.py): the complete distinct-value list of a
+#           low-cardinality column — evaluates ANY pushable predicate.
+SKIP_INDEXES = {
+    "bloom": SkipIndex(_single(value_bytes), MAX_DISTINCT, False, build_bloom),
+    "ngrambf": SkipIndex(string_ngrams, MAX_DISTINCT, True, build_bloom),
+    "tokenbf": SkipIndex(string_tokens, MAX_DISTINCT, True, build_bloom),
+    "set": SkipIndex(
+        _single(set_index_value), SET_MAX_DISTINCT, False, lambda v: sorted(v) or None
+    ),
+}
+
+
+def _accumulate(acc: set, arr, index: SkipIndex) -> bool:
+    """Add ``arr``'s distinct non-null values to ``acc``; False when the
+    column can no longer carry the index."""
+    import pyarrow.compute as pc
+
+    for v in pc.unique(arr).to_pylist():
+        if v is None:
+            continue
+        e = index.entries(v)
+        if e is None:
+            return False
+        acc.update(e)
+    return len(acc) <= index.cap
+
+
+class BlockStatsRecorder:
+    """Collects the stats sidecar of a :class:`NativePartSink`: records
+    EVERY physical block — header-only 0-row blocks included, because
+    the reader's ``n_blocks`` counts physical blocks — and maintains
+    the file-level merge of the per-block stats. The merge is
+    NaN-sound: a column that ``_column_stats`` omitted for any
+    non-empty block (NaN present, or an unconstructible string bound)
+    is dropped from the file level too — keeping a partial min/max
+    would let pruning drop files whose unaccounted rows match.
+
+    ``indexes`` maps a :data:`SKIP_INDEXES` kind to its columns. A
+    column missing from a block, of the wrong type, holding an
+    unsupported value or past the kind's cap loses that index
+    (conservative — no index, no pruning)."""
+
+    def __init__(self, indexes: Optional[dict] = None) -> None:
         self.blocks: list[dict] = []
         self.merged: dict = {}
         self.rows = 0
         self._dropped: set = set()
-        # set(N) skip index (native/setindex.py): the column's complete
-        # distinct-value list when it stays under the cap — evaluates
-        # ANY pushable predicate at plan time; dropped past the cap
-        # (conservative: no index, no pruning)
-        self._set_cols = tuple(set_columns)
-        self._set_vals: dict[str, set] = {c: set() for c in self._set_cols}
-        self._set_dropped: set = set()
-        # bloom skip index (native/bloomindex.py): distinct type-tagged
-        # values per indexed column, accumulated across blocks; a
-        # column hitting an unsupported type or the distinct cap drops
-        # its index (conservative — no index, no pruning)
-        self._bloom_cols = tuple(bloom_columns)
-        self._bloom_vals: dict[str, set] = {c: set() for c in self._bloom_cols}
-        self._bloom_dropped: set = set()
-        # ngrambf skip index: union of codepoint 3-grams across the
-        # column's string values — prunes substring predicates
-        self._ngram_cols = tuple(ngram_columns)
-        self._ngram_vals: dict[str, set] = {c: set() for c in self._ngram_cols}
-        self._ngram_dropped: set = set()
-        # tokenbf skip index: union of word tokens — prunes
-        # token-delimited string predicates (hasToken semantics)
-        self._token_cols = tuple(token_columns)
-        self._token_vals: dict[str, set] = {c: set() for c in self._token_cols}
-        self._token_dropped: set = set()
+        # {kind: {column: accumulated entries}}
+        self._indexes = {
+            kind: {c: set() for c in (indexes or {}).get(kind) or ()}
+            for kind in SKIP_INDEXES
+        }
 
-    def _set_on_block(self, piece: pa.RecordBatch) -> None:
-        if not self._set_cols or piece.num_rows == 0:
+    def _index_on_block(self, piece: pa.RecordBatch) -> None:
+        if piece.num_rows == 0:
             return
-        from .setindex import SET_MAX_DISTINCT, set_index_value
-
-        import pyarrow.compute as pc
-
         names = set(piece.schema.names)
-        for col in self._set_cols:
-            if col in self._set_dropped:
-                continue
-            if col not in names:
-                self._set_dropped.add(col)
-                continue
-            acc = self._set_vals[col]
-            arr = piece.column(piece.schema.get_field_index(col))
-            for v in pc.unique(arr).to_pylist():
-                if v is None:
+        for kind, index in SKIP_INDEXES.items():
+            accs = self._indexes[kind]
+            for col in list(accs):
+                if col not in names:
+                    del accs[col]
                     continue
-                sv = set_index_value(v)
-                if sv is None:  # unsupported type: drop the index
-                    self._set_dropped.add(col)
-                    break
-                acc.add(sv)
-            if len(acc) > SET_MAX_DISTINCT:
-                self._set_dropped.add(col)
-        for col in self._set_dropped:
-            self._set_vals.pop(col, None)
-
-    def _bloom_on_block(self, piece: pa.RecordBatch) -> None:
-        self._set_on_block(piece)
-        if (
-            not self._bloom_cols
-            and not self._ngram_cols
-            and not self._token_cols
-        ) or piece.num_rows == 0:
-            return
-        from .bloomindex import (
-            MAX_DISTINCT,
-            string_ngrams,
-            string_tokens,
-            value_bytes,
-        )
-
-        import pyarrow.compute as pc
-
-        names = set(piece.schema.names)
-        for col in self._bloom_cols:
-            if col in self._bloom_dropped:
-                continue
-            if col not in names:
-                self._bloom_dropped.add(col)
-                continue
-            acc = self._bloom_vals[col]
-            arr = piece.column(piece.schema.get_field_index(col))
-            for v in pc.unique(arr).to_pylist():
-                if v is None:
-                    continue
-                b = value_bytes(v)
-                if b is None:  # unsupported type: drop the index
-                    self._bloom_dropped.add(col)
-                    break
-                acc.add(b)
-            if len(acc) > MAX_DISTINCT:
-                self._bloom_dropped.add(col)
-        for col in self._bloom_dropped:
-            self._bloom_vals.pop(col, None)
-        for col in self._ngram_cols:
-            if col in self._ngram_dropped:
-                continue
-            if col not in names:
-                self._ngram_dropped.add(col)
-                continue
-            acc = self._ngram_vals[col]
-            arr = piece.column(piece.schema.get_field_index(col))
-            if not pa.types.is_string(arr.type):
-                self._ngram_dropped.add(col)  # strings only
-                continue
-            for v in pc.unique(arr).to_pylist():
-                if v is None:
-                    continue
-                acc |= string_ngrams(v)
-            if len(acc) > MAX_DISTINCT:
-                self._ngram_dropped.add(col)
-        for col in self._ngram_dropped:
-            self._ngram_vals.pop(col, None)
-        for col in self._token_cols:
-            if col in self._token_dropped:
-                continue
-            if col not in names:
-                self._token_dropped.add(col)
-                continue
-            acc = self._token_vals[col]
-            arr = piece.column(piece.schema.get_field_index(col))
-            if not pa.types.is_string(arr.type):
-                self._token_dropped.add(col)  # strings only
-                continue
-            for v in pc.unique(arr).to_pylist():
-                if v is None:
-                    continue
-                acc |= string_tokens(v)
-            if len(acc) > MAX_DISTINCT:
-                self._token_dropped.add(col)
-        for col in self._token_dropped:
-            self._token_vals.pop(col, None)
+                arr = piece.column(piece.schema.get_field_index(col))
+                if (
+                    index.strings_only and not pa.types.is_string(arr.type)
+                ) or not _accumulate(accs[col], arr, index):
+                    del accs[col]
 
     def on_block(self, offset: int, piece: pa.RecordBatch) -> None:
-        self._bloom_on_block(piece)
+        self._index_on_block(piece)
         st = _column_stats(piece)
         self.blocks.append(
             {"offset": int(offset), "rows": int(piece.num_rows), "columns": st}
@@ -357,38 +360,14 @@ class BlockStatsRecorder:
         if self.blocks:
             side["blocks"] = self.blocks
             side["file_bytes"] = os.path.getsize(path)
-        blooms = {}
-        ngrams = {}
-        tokens = {}
-        if self._bloom_vals or self._ngram_vals or self._token_vals:
-            from .bloomindex import build_bloom
-
-            for col, vals in self._bloom_vals.items():
-                bl = build_bloom(vals)
-                if bl is not None:
-                    blooms[col] = bl
-            for col, vals in self._ngram_vals.items():
-                bl = build_bloom(vals)
-                if bl is not None:
-                    ngrams[col] = bl
-            for col, vals in self._token_vals.items():
-                bl = build_bloom(vals)
-                if bl is not None:
-                    tokens[col] = bl
-        if blooms:
-            side["bloom"] = blooms
-        if ngrams:
-            side["ngrambf"] = ngrams
-        if tokens:
-            side["tokenbf"] = tokens
-        if self._set_vals:
-            setix = {
-                col: sorted(vals)
-                for col, vals in self._set_vals.items()
-                if vals
-            }
-            if setix:
-                side["set"] = setix
+        for kind, index in SKIP_INDEXES.items():
+            built = {}
+            for col, vals in self._indexes[kind].items():
+                b = index.build(vals)
+                if b is not None:
+                    built[col] = b
+            if built:
+                side[kind] = built
         return side
 
 
@@ -455,6 +434,110 @@ def _with_sample_hash(
     return table.take(pc.sort_indices(table.column(SAMPLE_HASH_COLUMN)))
 
 
+class NativePartSink:
+    """One Native part being written: the data file (plain, or wrapped
+    in compressed frames), its stats sidecar and its string marks —
+    the only file writer, behind both :func:`write_native_file` and
+    the DataSource writer (one sink per task, or per partition combo
+    per task under ``partition_by``).
+
+    The file opens on the first batch. Like one
+    :func:`write_native_stream` call over every batch, only an empty
+    FIRST batch writes a block (header-only); later empty batches are
+    skipped. ``compression`` is None (plain Native) or a frame method
+    ('lz4', 'zstd', 'none'). Inside frames block offsets mean nothing,
+    so a compressed part's sidecar keeps the file-level merge and the
+    skip indexes but no per-block index, and it gets no marks."""
+
+    def __init__(
+        self,
+        path: str,
+        *,
+        compression: Optional[str] = None,
+        block_rows: int = DEFAULT_BLOCK_ROWS,
+        ch_types: Optional[list[CHType]] = None,
+        indexes: Optional[dict] = None,
+    ) -> None:
+        self.path = path
+        self.compression = compression
+        self.block_rows = block_rows
+        self.rows = 0
+        self._ch_types = ch_types
+        self._rec = BlockStatsRecorder(indexes)
+        self._mrec = MarksRecorder()
+        self._raw = None
+        self._buf = None
+
+    def write_batch(self, batch: pa.RecordBatch) -> None:
+        if self._raw is None:
+            self._raw = io.BufferedWriter(open(self.path, "wb"), buffer_size=1 << 20)
+            self._buf = self._raw
+            if self.compression is not None:
+                from .compress import CompressedWriter
+
+                self._buf = CompressedWriter(self._raw, method=self.compression)
+            self._ch_types = _ch_types_for_schema(batch.schema, self._ch_types)
+            self._mrec.set_ch_types(batch.schema.names, self._ch_types)
+        elif batch.num_rows == 0:
+            return
+        plain = self._buf is self._raw
+        self.rows += write_native_stream(
+            self._buf,
+            [batch],
+            ch_types=self._ch_types,
+            block_rows=self.block_rows,
+            on_block=self._on_block if plain else None,
+        )
+        if not plain:
+            self._rec.on_block(-1, batch)
+            self._rec.blocks.clear()
+
+    def _on_block(self, offset: int, piece: pa.RecordBatch) -> None:
+        self._rec.on_block(offset, piece)
+        self._mrec.on_block(offset, piece)
+
+    def finish(self, empty_schema: Optional[pa.Schema] = None) -> Optional[str]:
+        """Flush the part and write its sidecars; returns the path. A
+        part without rows is deleted (returns None) unless
+        ``empty_schema`` is given: then it keeps one header-only block
+        (as ClickHouse writes for empty results) so readers recover the
+        schema."""
+        if self._raw is None and empty_schema is not None:
+            self.write_batch(pa.RecordBatch.from_pylist([], schema=empty_schema))
+        if self._raw is None:
+            return None
+        self._buf.flush()
+        self._raw.close()
+        if self.rows == 0 and empty_schema is None:
+            os.remove(self.path)
+            return None
+        tmp = stats_sidecar_path(self.path) + ".tmp"
+        with open(tmp, "w") as sf:
+            json.dump(self._rec.sidecar(self.path), sf)
+        os.replace(tmp, stats_sidecar_path(self.path))
+        # string-column marks (native/marks.py): the per-row lengths the
+        # writer just serialized, so readers skip the varint walk. When
+        # nothing was recorded (compression, no eligible column) any
+        # PRE-EXISTING marks from an earlier write of the same path
+        # must go — stale-but-size-matching marks would pass the
+        # file_bytes guard and misdirect the unwanted-column seeks.
+        if self._mrec.write(self.path) is None:
+            try:
+                os.remove(marks_sidecar_path(self.path))
+            except OSError:
+                pass
+        return self.path
+
+    def close_on_error(self) -> None:
+        """Best-effort handle close for the failure path (the caller is
+        about to re-raise)."""
+        try:
+            if self._raw is not None:
+                self._raw.close()
+        except Exception:
+            pass
+
+
 def write_native_file(
     path: str,
     table: pa.Table | pa.RecordBatch,
@@ -462,101 +545,51 @@ def write_native_file(
     ch_types: Optional[list[CHType]] = None,
     block_rows: int = DEFAULT_BLOCK_ROWS,
     compression: Optional[str] = None,
-    stats: bool = True,
     index_bloom: Optional[list] = None,
     index_ngrambf: Optional[list] = None,
     index_set: Optional[list] = None,
     index_tokenbf: Optional[list] = None,
     sample_by: Optional[str] = None,
 ) -> int:
-    """``compression``: None (plain Native), or 'lz4'/'zstd'/'none' to
+    """Write one Native part; returns the rows written.
+
+    ``compression``: None (plain Native), or 'lz4'/'zstd'/'none' to
     wrap the stream in ClickHouse compressed frames (compress.py).
-    ``stats=True`` also writes a ``_<name>.stats.json`` min/max sidecar
-    enabling file-level predicate skipping at scan planning;
-    ``index_bloom=[cols]`` adds a bloom skip index per listed column
-    (native/bloomindex.py — equality/IN pruning on scattered values
-    min/max cannot prove absent); ``sample_by='key'`` materializes a
-    sorted ``_sample_hash`` column enabling the reader's SAMPLE
-    clause with block-range pruning."""
+    Always writes a ``_<name>.stats.json`` sidecar enabling file-level
+    (and, uncompressed, block-level) predicate skipping at scan
+    planning; ``index_<kind>=[cols]`` adds a :data:`SKIP_INDEXES`
+    index per listed column (``index_bloom``: equality/IN pruning on
+    scattered values min/max cannot prove absent); ``sample_by='key'``
+    materializes a sorted ``_sample_hash`` column enabling the
+    reader's SAMPLE clause with block-range pruning. An empty table
+    still writes one header-only block."""
     if sample_by:
         table = _with_sample_hash(table, sample_by)
-    if isinstance(table, pa.RecordBatch):
-        batches: list[pa.RecordBatch] = [table]
-        schema = table.schema
-    else:
-        batches = table.to_batches(max_chunksize=block_rows)
-        schema = table.schema
-    types = _ch_types_for_schema(schema, ch_types)
-    rec = (
-        BlockStatsRecorder(
-            tuple(index_bloom or ()),
-            tuple(index_ngrambf or ()),
-            tuple(index_set or ()),
-            tuple(index_tokenbf or ()),
-        )
-        if (stats and compression is None)
-        else None
+    batches = (
+        [table]
+        if isinstance(table, pa.RecordBatch)
+        else table.to_batches(max_chunksize=block_rows)
     )
-    mrec = None
-    if rec is not None:
-        from .marks import MarksRecorder
-
-        mrec = MarksRecorder()
-        mrec.set_ch_types(schema.names, types)
-
-    def _on_block(offset: int, piece: pa.RecordBatch) -> None:
-        rec.on_block(offset, piece)
-        mrec.on_block(offset, piece)
-
-    with open(path, "wb") as f:
-        buf: BinaryIO = io.BufferedWriter(f, buffer_size=1 << 20)
-        if compression is not None:
-            from .compress import CompressedWriter
-
-            comp = CompressedWriter(buf, method=compression)
-            n = write_native_stream(
-                comp, batches, ch_types=types, block_rows=block_rows, schema=schema
-            )
-            comp.flush()
-        else:
-            n = write_native_stream(
-                buf,
-                batches,
-                ch_types=types,
-                block_rows=block_rows,
-                schema=schema,
-                on_block=_on_block if rec else None,
-            )
-        buf.flush()
-    # string-column marks (native/marks.py): the per-row lengths the
-    # writer just serialized, so readers skip the varint walk. When
-    # nothing was recorded (stats off, compression, no eligible column)
-    # any PRE-EXISTING sidecar from an earlier write of the same path
-    # must go — a stale-but-size-matching sidecar would pass the
-    # file_bytes guard and misdirect the unwanted-column seeks.
-    if mrec is None or mrec.write(path) is None:
-        from .marks import marks_sidecar_path
-
-        try:
-            os.remove(marks_sidecar_path(path))
-        except OSError:
-            pass
-    if stats:
-        import json
-
-        if rec is not None:
-            # per-block index (the parquet row-group analogue): lets
-            # the scan prune BLOCK RANGES inside one file, not just
-            # whole files; file-level stats are the recorder's merge —
-            # one stats pass over the data, not two
-            side = rec.sidecar(path)
-        else:
-            side = {"rows": int(table.num_rows), "columns": _column_stats(table)}
-        tmp = stats_sidecar_path(path) + ".tmp"
-        with open(tmp, "w") as sf:
-            json.dump(side, sf)
-        os.replace(tmp, stats_sidecar_path(path))
-    return n
+    sink = NativePartSink(
+        path,
+        compression=compression,
+        block_rows=block_rows,
+        ch_types=ch_types,
+        indexes={
+            "bloom": index_bloom,
+            "ngrambf": index_ngrambf,
+            "set": index_set,
+            "tokenbf": index_tokenbf,
+        },
+    )
+    try:
+        for batch in batches:
+            sink.write_batch(batch)
+        sink.finish(empty_schema=table.schema)
+    except BaseException:
+        sink.close_on_error()
+        raise
+    return sink.rows
 
 
 def arrow_to_native_bytes(

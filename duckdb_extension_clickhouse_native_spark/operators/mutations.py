@@ -101,59 +101,29 @@ def _alias_map(src_dir: str) -> dict:
     }
 
 
-def _adapt_aliases(st: dict, aliases: dict) -> dict:
-    """Copy an old part's stats/index entries from prior physical
-    names onto the table names (never mutates the loaded dict)."""
-    if not aliases:
-        return st
-    out = dict(st)
-    for key in ("columns", "bloom", "ngrambf", "set", "tokenbf"):
-        m = st.get(key)
-        if not isinstance(m, dict):
-            continue
-        add = {}
-        for name, olds in aliases.items():
-            if name in m:
-                continue
-            for a in olds:
-                if a in m:
-                    add[name] = m[a]
-                    break
-        if add:
-            out[key] = {**m, **add}
-    return out
-
-
 def _part_untouched(
     part_path: str,
     pred_sets: list[Sequence[Pred]],
     aliases: Optional[dict] = None,
 ) -> bool:
     """True iff the part's sidecar PROVES every mutation predicate set
-    matches zero rows in it (conservative: missing/malformed sidecar or
-    un-provable predicate means touched)."""
-    import json
+    matches zero rows in it — the reader's own pruning test
+    (conservative: missing/malformed sidecar or un-provable predicate
+    means touched)."""
+    from ..native.writer import load_stats
+    from ..sources.native_datasource import _stats_exclude
 
-    from ..native.writer import stats_sidecar_path
-    from ..sources.native_datasource import _filter_excludes_file
-
-    side = stats_sidecar_path(part_path)
-    try:
-        with open(side) as f:
-            st = json.load(f)
-    except (OSError, ValueError):
+    st = load_stats(part_path)
+    if st is None:
         return False
-    st = _adapt_aliases(st, aliases or {})
     for preds in pred_sets:
         if not preds:
             return False  # empty conjunction matches every row
         try:
-            # a conjunction matches no rows if ANY term is excluded
-            if not any(
-                _filter_excludes_file(_pred_to_filter(p), st) for p in preds
-            ):
-                return False
-        except (KeyError, TypeError, ValueError):
+            filters = [_pred_to_filter(p) for p in preds]
+        except (TypeError, ValueError):
+            return False
+        if not _stats_exclude(filters, st, aliases):
             return False
     return True
 
@@ -166,31 +136,17 @@ def _link_or_copy(src: str, dst: str) -> None:
 
 
 def _companions(p: str, base: Optional[str] = None) -> list:
-    """(src_path, dst_basename) pairs for the part's companion files —
-    stats sidecar AND lightweight-delete mask.  Every code path that
-    links/moves/stages a part untouched MUST carry both: dropping the
-    stats sidecar only loses pruning, but dropping the delete mask
-    silently RESURRECTS deleted rows.  ``base`` renames the part at
-    the destination (keep- prefixes)."""
-    from ..native.delmask import delmask_path
-    from ..native.marks import marks_sidecar_path
-    from ..native.writer import stats_sidecar_path
+    """(src_path, dst_basename) pairs for the part's existing
+    companion files (``native.writer.part_companions``). ``base``
+    renames the part at the destination (keep- prefixes)."""
+    from ..native.writer import part_companions
 
-    b = base or os.path.basename(p)
-    out = []
-    side = stats_sidecar_path(p)
-    if os.path.exists(side):
-        out.append((side, os.path.basename(stats_sidecar_path(b))))
-    dm = delmask_path(p)
-    if os.path.exists(dm):
-        out.append((dm, os.path.basename(delmask_path(b))))
-    mk = marks_sidecar_path(p)
-    if os.path.exists(mk):
-        # string-marks accel file: losing it only loses the fast path,
-        # but an untouched part should keep it (the reader's
-        # file-size staleness check still guards a content mismatch)
-        out.append((mk, os.path.basename(marks_sidecar_path(b))))
-    return out
+    dst = part_companions(base or os.path.basename(p))
+    return [
+        (src, os.path.basename(d))
+        for src, d in zip(part_companions(p), dst)
+        if os.path.exists(src)
+    ]
 
 
 def _guard_out_dir(src_dir: str, out_dir: str) -> None:
@@ -206,6 +162,16 @@ def _guard_out_dir(src_dir: str, out_dir: str) -> None:
             f"ancestor of it) — the rebuild would clear the table "
             f"before reading it; write to a separate directory"
         )
+
+
+def _clear_out_files(out_dir: str) -> None:
+    """Idempotent rebuild: create ``out_dir`` and remove every file
+    directly inside it (left by an earlier run)."""
+    os.makedirs(out_dir, exist_ok=True)
+    for f in os.listdir(out_dir):
+        p = os.path.join(out_dir, f)
+        if os.path.isfile(p):
+            os.remove(p)
 
 
 def mutate_native_dir(
@@ -247,11 +213,7 @@ def mutate_native_dir(
             "spell that out with an always-true predicate if intended"
         )
     _guard_out_dir(src_dir, out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    for f in os.listdir(out_dir):  # idempotent rebuild
-        p = os.path.join(out_dir, f)
-        if os.path.isfile(p):
-            os.remove(p)
+    _clear_out_files(out_dir)
     from ..native.tableschema import copy_table_schema
 
     # evolved tables: the metadata must follow the data — untouched
@@ -299,7 +261,6 @@ def _mutate_flat(
 ) -> dict:
     """The single-directory mutation core over an explicit part list;
     ``out_dir`` must already exist and be clear of stale files."""
-    from ..native.writer import stats_sidecar_path
 
     os.makedirs(out_dir, exist_ok=True)
     pred_sets: list[Sequence[Pred]] = []
@@ -453,7 +414,6 @@ def _mutate_hive(
     DELETE keeps rows where the predicate is FALSE *or NULL*
     (ClickHouse ALTER DELETE removes only rows where the expression is
     true). The output mirrors the source's ``key=value`` tree."""
-    from ..native.writer import stats_sidecar_path
     from ..sources.native_datasource import (
         _partition_components,
         infer_native_schema,
@@ -661,11 +621,7 @@ def apply_ttl(
     from ..sources.native_datasource import _partition_spec
 
     _guard_out_dir(src_dir, out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    for f in os.listdir(out_dir):  # idempotent rebuild
-        p = os.path.join(out_dir, f)
-        if os.path.isfile(p):
-            os.remove(p)
+    _clear_out_files(out_dir)
 
     parts = [p for p in resolve_paths(src_dir) if not p.endswith(".json")]
     part_keys, _vals, types = _partition_spec(src_dir, parts)
@@ -698,7 +654,6 @@ def apply_ttl(
 def _link_parts(dir_parts: list, dst: str) -> None:
     """Hard-link (or copy) parts + their sidecars into ``dst`` under
     collision-free keep- names."""
-    from ..native.writer import stats_sidecar_path
 
     os.makedirs(dst, exist_ok=True)
     for i, p in enumerate(dir_parts):
@@ -742,7 +697,6 @@ def _ttl_rollup_hive(
         raise ValueError(
             f"cannot SET partition column(s) {bad} in a TTL rollup"
         )
-    from ..native.writer import stats_sidecar_path
     from ..sources.native_datasource import infer_native_schema
 
     by_dir: dict[str, list] = {}
@@ -853,7 +807,6 @@ def _ttl_rollup_flat(
     (only reachable from the hive path, where the partition terms were
     proven true for the directory)."""
     from ..native.tableschema import copy_table_schema
-    from ..native.writer import stats_sidecar_path
     from ..sources.native_datasource import infer_native_schema
 
     os.makedirs(out_dir, exist_ok=True)
@@ -986,17 +939,14 @@ def lightweight_delete(
     src_abs = os.path.abspath(src_dir)
 
     def _write_masks(pdf: pd.DataFrame) -> pd.DataFrame:
-        import json
-
         from ..native.delmask import write_delmask
-        from ..native.writer import stats_sidecar_path
+        from ..native.writer import load_stats
 
         rel = pdf["__part"].iloc[0]
         real = os.path.join(src_abs, rel)
         try:
-            with open(stats_sidecar_path(real)) as f:
-                rows = int(json.load(f)["rows"])
-        except (OSError, ValueError, KeyError):
+            rows = int(load_stats(real)["rows"])
+        except (TypeError, ValueError, KeyError):
             # no sidecar: count physical rows from the block headers
             from ..native.codec import scan_block_offsets
 
@@ -1033,7 +983,6 @@ def detach_parts(src_dir: str, part_names: Sequence[str]) -> dict:
     every scan (resolve_paths only descends into ``key=value``
     subdirectories), recoverable with :func:`attach_parts`. Zero-copy:
     a rename within the filesystem."""
-    from ..native.writer import stats_sidecar_path
 
     det = os.path.join(src_dir, "detached")
     os.makedirs(det, exist_ok=True)
@@ -1066,7 +1015,6 @@ def attach_parts(
     names/types (ClickHouse checks table structure identity)."""
     from ..filesystem import resolve_paths
     from ..native.codec import read_file_schema
-    from ..native.writer import stats_sidecar_path
 
     if src is None:
         src_paths = [
@@ -1209,11 +1157,7 @@ def materialize_column(
             total["untouched_parts"] += res["untouched_parts"]
             total["rewritten_parts"] += res["rewritten_parts"]
         return {**total, "out_dir": out_dir}
-    os.makedirs(out_dir, exist_ok=True)
-    for f in os.listdir(out_dir):  # idempotent rebuild
-        p = os.path.join(out_dir, f)
-        if os.path.isfile(p):
-            os.remove(p)
+    _clear_out_files(out_dir)
     copy_table_schema(src_dir, out_dir)
     res = _materialize_flat(
         spark, src_dir, parts, out_dir, column, compression
@@ -1237,11 +1181,7 @@ def _materialize_flat(
     from ..native.codec import read_file_schema
     from ..native.tableschema import copy_table_schema
 
-    os.makedirs(out_dir, exist_ok=True)
-    for f in os.listdir(out_dir):  # idempotent rebuild
-        p = os.path.join(out_dir, f)
-        if os.path.isfile(p):
-            os.remove(p)
+    _clear_out_files(out_dir)
 
     untouched, touched = [], []
     for p in parts:

@@ -267,7 +267,7 @@ def _stage_parts(src_dir: str, paths: list, tag_seed: str) -> str:
     import hashlib
     import tempfile
 
-    from ..native.writer import stats_sidecar_path
+    from ..native.writer import part_companions
 
     tag = hashlib.md5(("|".join(paths) + tag_seed).encode()).hexdigest()[:12]
     stage = os.path.join(tempfile.gettempdir(), "chsql_proj_stage", tag)
@@ -280,21 +280,11 @@ def _stage_parts(src_dir: str, paths: list, tag_seed: str) -> str:
         dst = os.path.join(stage, os.path.relpath(p, src_dir))
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.symlink(p, dst)
-        side = stats_sidecar_path(p)
-        if os.path.exists(side):
-            os.symlink(side, stats_sidecar_path(dst))
-        from ..native.marks import marks_sidecar_path
-
-        mk = marks_sidecar_path(p)
-        if os.path.exists(mk):
-            os.symlink(mk, marks_sidecar_path(dst))
-        from ..native.delmask import delmask_path
-
-        dm = delmask_path(p)
-        if os.path.exists(dm):
-            # the staged read must see the part's deletions or the
-            # partial states would aggregate resurrected rows
-            os.symlink(dm, delmask_path(dst))
+        # the staged read must see the part's deletions or the partial
+        # states would aggregate resurrected rows
+        for src, cdst in zip(part_companions(p), part_companions(dst)):
+            if os.path.exists(src):
+                os.symlink(src, cdst)
     return stage
 
 

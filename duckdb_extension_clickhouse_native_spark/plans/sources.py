@@ -2205,11 +2205,9 @@ def _mutation_lightweight_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     masked; the part DATA FILES are untouched (asserted: every part
     still reports its full physical row count in the sidecar while
     the scan returns only surviving rows)."""
-    import json
-
     from .base import ensure_session
     from ..native.delmask import load_delmask
-    from ..native.writer import stats_sidecar_path
+    from ..native.writer import load_stats
     from ..sources.native_datasource import infer_native_schema
 
     ensure_session(spark)
@@ -2224,8 +2222,7 @@ def _mutation_lightweight_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         if m is None:
             continue
         masked += 1
-        with open(stats_sidecar_path(p)) as f:
-            side = json.load(f)
+        side = load_stats(p)
         if int(side["rows"]) != m["rows"]:
             raise AssertionError(
                 f"part {fn} was rewritten under its mask "
@@ -2804,18 +2801,14 @@ def _mutation_attach_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(a), os.makedirs(b)
         from ..filesystem import resolve_paths
-        from ..native.writer import stats_sidecar_path
-        from ..operators.mutations import _link_or_copy
+        from ..operators.mutations import _companions, _link_or_copy
 
         parts = [p for p in resolve_paths(src) if not p.endswith(".json")]
         for i, p in enumerate(sorted(parts)):
             dst_dir = a if i % 2 == 0 else b
             _link_or_copy(p, os.path.join(dst_dir, os.path.basename(p)))
-            side = stats_sidecar_path(p)
-            if os.path.exists(side):
-                _link_or_copy(
-                    side, os.path.join(dst_dir, os.path.basename(side))
-                )
+            for csrc, cdst in _companions(p):
+                _link_or_copy(csrc, os.path.join(dst_dir, cdst))
         attach_parts(a, b)
         with open(done, "w") as f:
             f.write("")
@@ -4050,21 +4043,19 @@ def _catalog_check_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning already does) broadcast-joined against the counts. The
     graded output aggregates to (n_parts, total_rows, parts_ok) so the
     oracle is the raw table plus the fixture's known part count."""
-    import json
     import os
 
     from pyspark.sql import functions as F
 
     from .base import ensure_session
-    from ..native.writer import stats_sidecar_path
+    from ..native.writer import load_stats
     from ..sources.native_datasource import _resolve_paths, infer_native_schema
 
     ensure_session(spark)
     path = native_fixture_dir(spark, sf_dir, "orders")
     expected = []
     for p in _resolve_paths(path):
-        with open(stats_sidecar_path(p)) as f:
-            expected.append((os.path.basename(p), int(json.load(f)["rows"])))
+        expected.append((os.path.basename(p), int(load_stats(p)["rows"])))
     exp_df = spark.createDataFrame(expected, "part STRING, rows_expected BIGINT")
     df = (
         spark.read.format("clickhouse_native")

@@ -52,6 +52,19 @@ Options:
                     blocks measured on the sorted-events fixture)
     target_partition_bytes  approx bytes per partition when splitting
     block_rows      writer: rows per Native block (default 65409)
+    compression     writer: 'lz4' | 'zstd' wraps each file in
+                    ClickHouse compressed frames (no per-block index
+                    or marks: frame offsets are not block offsets);
+                    absent or 'none' writes plain Native. Reader:
+                    'auto' (default) sniffs each file; 'none', 'lz4'
+                    or 'zstd' skip the sniff
+    index_bloom, index_ngrambf, index_tokenbf, index_set
+                    writer: comma-separated columns to build that skip
+                    index for, stored in each part's stats sidecar
+                    under the kind's name (native/writer.py
+                    SKIP_INDEXES): bloom prunes =/IN, ngrambf
+                    substrings, tokenbf whole-token matches, set any
+                    pushable predicate on low-cardinality columns
     partition_by    writer: comma-separated columns to fan out as
                     hive-style key=value directories (dropped from the
                     file payload; the reader restores and prunes them)
@@ -127,9 +140,6 @@ FORMAT_NAME = "clickhouse_native"
 ARROW_BATCH_BYTES = 32 * 1024 * 1024
 # partition packing's per-file open cost (Spark's openCostInBytes)
 OPEN_COST_BYTES = 4 * 1024 * 1024
-
-# process-wide parsed-sidecar cache: (path, mtime_ns, size) -> (dict|None,)
-_SIDECAR_CACHE: dict = {}
 
 
 def _resolve_paths(path: str) -> list[str]:
@@ -342,6 +352,49 @@ def _set_conjunction_excludes(filters, stats: dict) -> bool:
         if len(fs) >= 2 and set_excludes_conjunction(setix[col], fs):
             return True
     return False
+
+
+def _alias_stats(st: dict, aliases: Optional[dict]) -> dict:
+    """Alias-aware view of a (shared, read-only) sidecar dict: an old
+    part's stats live under the PRIOR physical name — copy them under
+    the table name (``aliases``: {name: [prior names]}) so predicates
+    on renamed columns still prune. Never mutates ``st``."""
+    if not aliases:
+        return st
+    from ..native.writer import SKIP_INDEXES
+
+    out = dict(st)
+    for key in ("columns", *SKIP_INDEXES):
+        m = st.get(key)
+        if not isinstance(m, dict):
+            continue
+        add = {}
+        for name, olds in aliases.items():
+            if name in m:
+                continue
+            for a in olds:
+                if a in m:
+                    add[name] = m[a]
+                    break
+        if add:
+            out[key] = {**m, **add}
+    return out
+
+
+def _stats_exclude(filters, stats: dict, aliases: Optional[dict] = None) -> bool:
+    """True iff the stats PROVE the conjunction of ``filters`` false for
+    every row — one filter alone, or several on one set-indexed column
+    together. The one pruning test of file triage (reader planning,
+    block ranges, hive directories and mutation triage alike);
+    ``aliases`` as in :func:`_alias_stats`. Malformed stats never
+    exclude."""
+    try:
+        st = _alias_stats(stats, aliases)
+        return any(
+            _filter_excludes_file(f, st) for f in filters
+        ) or _set_conjunction_excludes(filters, st)
+    except (KeyError, TypeError, ValueError):
+        return False
 
 
 def _filter_excludes_file(f: "Filter", stats: dict) -> bool:
@@ -675,23 +728,17 @@ class ClickHouseNativeReader(DataSourceReader):
         sidecar are always read; an empty result keeps one file so the
         plan retains a partition (its executor-side filter yields 0
         rows)."""
+        from ..native.writer import load_stats
+
         kept = []
         for p in paths:
-            st = self._load_sidecar(p)
-            if st is None:
+            st = load_stats(p)
+            if st is None or not _stats_exclude(self.pushed, st, self._aliases()):
                 kept.append(p)
-                continue
-            st = self._evolved_stats(st)
-            try:
-                excluded = any(
-                    _filter_excludes_file(flt, st) for flt in self.pushed
-                ) or _set_conjunction_excludes(self.pushed, st)
-            except (KeyError, TypeError, ValueError):
-                excluded = False  # malformed sidecar: never skip
-            if excluded:
-                continue
-            kept.append(p)
         return kept if kept else paths[:1]
+
+    def _aliases(self) -> Optional[dict]:
+        return self.evolution["aliases"] if self.evolution else None
 
     @staticmethod
     def _partition_array(key: str, raw: str, n: int, target) -> "pa.Array":
@@ -758,7 +805,7 @@ class ClickHouseNativeReader(DataSourceReader):
             for k, v in zip(self.part_keys, vals):
                 typed = self._partition_array(k, v, 1, target)[0].as_py()
                 stats["columns"][k] = {"min": typed, "max": typed, "nulls": 0}
-            if any(_filter_excludes_file(f, stats) for f in part_filters):
+            if _stats_exclude(part_filters, stats):
                 continue
             kept.append(p)
         return kept if kept else paths[:1]
@@ -805,9 +852,10 @@ class ClickHouseNativeReader(DataSourceReader):
             est_rows = 0
             est_bytes = 0
             from ..filesystem import file_size as _fsize
+            from ..native.writer import load_stats
 
             for p in paths:
-                st = self._load_sidecar(p)
+                st = load_stats(p)
                 if st is not None:
                     est_rows += int(st.get("rows", 0))
                 try:
@@ -863,27 +911,15 @@ class ClickHouseNativeReader(DataSourceReader):
             if not entries:
                 continue
             if self.skipping and self.pushed:
-                def _block_excluded(rows: int, st: dict) -> bool:
-                    # _sidecar_blocks validates offsets/rows but not
-                    # column-stat contents; malformed entries degrade
-                    # to "never skip" (same guard as _prune_paths)
-                    try:
-                        return any(
-                            _filter_excludes_file(
-                                f,
-                                self._evolved_stats(
-                                    {"rows": rows, "columns": st}
-                                ),
-                            )
-                            for f in self.pushed
-                        )
-                    except (KeyError, TypeError, ValueError):
-                        return False
-
                 kept = [
                     i
                     for i, (_off, rows, st) in enumerate(entries)
-                    if st is None or not _block_excluded(rows, st)
+                    if st is None
+                    or not _stats_exclude(
+                        self.pushed,
+                        {"rows": rows, "columns": st},
+                        self._aliases(),
+                    )
                 ]
             else:
                 kept = list(range(len(entries)))
@@ -996,69 +1032,15 @@ class ClickHouseNativeReader(DataSourceReader):
         )
         return packed + split
 
-    def _evolved_stats(self, st: dict) -> dict:
-        """Alias-aware view of a (cached, shared) sidecar dict: an old
-        part's stats live under the PRIOR physical name — copy them
-        under the table name so pushed filters on renamed columns
-        still prune.  Never mutates the cached dict."""
-        if not self.evolution:
-            return st
-        alias_of = self.evolution["aliases"]
-        out = dict(st)
-        for key in ("columns", "bloom", "ngrambf", "set", "tokenbf"):
-            m = st.get(key)
-            if not isinstance(m, dict):
-                continue
-            add = {}
-            for name, aliases in alias_of.items():
-                if name in m:
-                    continue
-                for a in aliases:
-                    if a in m:
-                        add[name] = m[a]
-                        break
-            if add:
-                out[key] = {**m, **add}
-        return out
-
-    def _load_sidecar(self, p: str):
-        """Parsed stats sidecar for ``p`` (None if absent/corrupt).
-        Cached PROCESS-wide keyed by (path, mtime_ns, size) — r11's
-        bloom/ngrambf entries make sidecars ~100x bigger than bare
-        min/max, so re-parsing per query on wide directories is real
-        planning cost; the stat key makes mutation rewrites (new
-        mtime) miss naturally. Bounded FIFO-ish: cleared wholesale
-        past 4096 entries (a few hundred MB worst case)."""
-        import json
-
-        from ..native.writer import stats_sidecar_path
-
-        side_path = stats_sidecar_path(p)
-        try:
-            st = os.stat(side_path)
-            key = (side_path, st.st_mtime_ns, st.st_size)
-        except OSError:
-            return None
-        cached = _SIDECAR_CACHE.get(key)
-        if cached is not None:
-            return cached[0]
-        try:
-            with open(side_path) as f:
-                side = json.load(f)
-        except (OSError, ValueError):
-            side = None
-        if len(_SIDECAR_CACHE) >= 4096:
-            _SIDECAR_CACHE.clear()
-        _SIDECAR_CACHE[key] = (side,)
-        return side
-
     def _sidecar_blocks(self, p: str, size: int):
         """Validated per-block index from the sidecar, or None.
         ``file_bytes`` must match the current size — a file that grew
         after its sidecar was written (streaming append) falls back to
         the header scan. Malformed entries (foreign writers, hand
         edits) degrade to None, never raise."""
-        side = self._load_sidecar(p)
+        from ..native.writer import load_stats
+
+        side = load_stats(p)
         if not side:
             return None
         try:
@@ -1530,126 +1512,6 @@ class NativeWriteCommit(WriterCommitMessage):
     rows: int
 
 
-class _FileSink:
-    """One Native output file: lazily opened on the first batch,
-    streaming block writes, incremental min/max/null sidecar merge —
-    the state the writer keeps per output file (one per task, or one
-    per partition combo per task under ``partition_by``)."""
-
-    def __init__(
-        self,
-        fname: str,
-        compression,
-        block_rows: int,
-        index_bloom: tuple = (),
-        index_ngrambf: tuple = (),
-        index_set: tuple = (),
-        index_tokenbf: tuple = (),
-    ):
-        from ..native.marks import MarksRecorder
-        from ..native.writer import BlockStatsRecorder
-
-        self.fname = fname
-        self.compression = compression
-        self.block_rows = block_rows
-        self.rows = 0
-        self._rec = BlockStatsRecorder(
-            index_bloom, index_ngrambf, index_set, index_tokenbf
-        )
-        self._mrec = MarksRecorder()
-        self._ch_types = None
-        self._raw = None
-        self._buf = None
-
-    def write_batch(self, batch: "pa.RecordBatch") -> None:
-        import io
-
-        from ..native.types import from_arrow
-        from ..native.writer import write_native_stream
-
-        if batch.num_rows == 0:
-            # an empty batch would emit a header-only block mid-file
-            # (write_native_stream resets wrote_any per call); skip it —
-            # an all-empty sink writes nothing and finalize() removes
-            # the file
-            return
-        if self._raw is None:
-            os.makedirs(os.path.dirname(self.fname), exist_ok=True)
-            self._raw = io.BufferedWriter(
-                open(self.fname, "wb"), buffer_size=1 << 20
-            )
-            self._buf = self._raw
-            if self.compression and self.compression != "none":
-                from ..native.compress import CompressedWriter
-
-                self._buf = CompressedWriter(self._raw, method=self.compression)
-        if self._ch_types is None:
-            self._ch_types = [from_arrow(fld.type) for fld in batch.schema]
-            self._mrec.set_ch_types(batch.schema.names, self._ch_types)
-        # the recorder both builds the per-block index and maintains
-        # the file-level merge — ONE stats pass, NaN-sound drops (a
-        # previous inline merge kept stale min/max when a later batch
-        # held NaN); block offsets are meaningless inside compressed
-        # frames, so compressed sinks skip the index but keep the merge
-        # by recording with a dummy offset
-
-        def _on_block(offset: int, piece) -> None:
-            self._rec.on_block(offset, piece)
-            self._mrec.on_block(offset, piece)
-
-        self.rows += write_native_stream(
-            self._buf,
-            [batch],
-            ch_types=self._ch_types,
-            block_rows=self.block_rows,
-            on_block=_on_block if self._buf is self._raw else None,
-        )
-        if self._buf is not self._raw:
-            self._rec.on_block(-1, batch)
-            self._rec.blocks.clear()
-
-    def finalize(self) -> Optional[str]:
-        """Flush + sidecar; returns the path, or None for an empty sink."""
-        import json
-
-        from ..native.writer import stats_sidecar_path
-
-        if self._raw is None:
-            return None
-        self._buf.flush()
-        if self._buf is not self._raw:
-            self._raw.flush()
-        self._raw.close()
-        if self.rows == 0:
-            os.remove(self.fname)
-            return None
-        side = self._rec.sidecar(self.fname)
-        side["rows"] = self.rows
-        tmp = stats_sidecar_path(self.fname) + ".tmp"
-        with open(tmp, "w") as sf:
-            json.dump(side, sf)
-        os.replace(tmp, stats_sidecar_path(self.fname))
-        if self._mrec.write(self.fname) is None:
-            # no marks recorded (compressed sink / no eligible column):
-            # drop any stale sidecar a previous same-path write left
-            from ..native.marks import marks_sidecar_path
-
-            try:
-                os.remove(marks_sidecar_path(self.fname))
-            except OSError:
-                pass
-        return self.fname
-
-    def close_on_error(self) -> None:
-        """Best-effort handle close for the failure path (the task is
-        about to re-raise; abort() removes any committed paths)."""
-        try:
-            if self._raw is not None:
-                self._raw.close()
-        except Exception:
-            pass
-
-
 class ClickHouseNativeWriter(DataSourceArrowWriter):
     """One Native file per Spark partition under the target directory —
     the writer the reference lacks (SURVEY.md §2.1 'Sinks: none').
@@ -1657,47 +1519,34 @@ class ClickHouseNativeWriter(DataSourceArrowWriter):
     hive-style ``col1=v/col2=w/`` subdirectories (partition columns
     dropped from the file payload, Spark's parquet convention) that
     the reader rediscovers and prunes — the write side of the 100 TB
-    layout."""
+    layout. Every file goes through ``native.writer.NativePartSink``."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
+        from ..native.writer import SAMPLE_HASH_COLUMN, SKIP_INDEXES
+
         self.schema = schema
         self.path = options.get("path")
         if not self.path:
             raise ValueError("clickhouse_native write requires a path")
         self.block_rows = int(options.get("block_rows", 65_409))
-        self.compression = options.get("compression")  # None | lz4 | zstd | none
-        self.partition_by: List[str] = [
-            c.strip() for c in str(options.get("partition_by", "")).split(",") if c.strip()
-        ]
-        self.sort_by: List[str] = [
-            c.strip() for c in str(options.get("sort_by", "")).split(",") if c.strip()
-        ]
-        # bloom skip index columns (native/bloomindex.py): equality/IN
-        # pruning on scattered values min/max cannot prove absent
-        self.index_bloom: tuple = tuple(
-            c.strip()
-            for c in str(options.get("index_bloom", "")).split(",")
-            if c.strip()
-        )
-        # ngrambf skip index columns: substring-predicate pruning
-        self.index_ngrambf: tuple = tuple(
-            c.strip()
-            for c in str(options.get("index_ngrambf", "")).split(",")
-            if c.strip()
-        )
-        # set skip index columns (native/setindex.py): complete
-        # distinct-value lists for low-cardinality columns
-        self.index_set: tuple = tuple(
-            c.strip()
-            for c in str(options.get("index_set", "")).split(",")
-            if c.strip()
-        )
-        # tokenbf skip index columns: word-token predicate pruning
-        self.index_tokenbf: tuple = tuple(
-            c.strip()
-            for c in str(options.get("index_tokenbf", "")).split(",")
-            if c.strip()
-        )
+        # lz4 | zstd frames; absent or 'none' writes plain Native
+        comp = options.get("compression")
+        self.compression = None if not comp or comp == "none" else comp
+        names = [f.name for f in schema.fields]
+
+        def columns(key: str) -> list:
+            cols = [
+                c.strip() for c in str(options.get(key, "")).split(",") if c.strip()
+            ]
+            missing = [c for c in cols if c not in names]
+            if missing:
+                raise ValueError(f"{key} columns not in schema: {missing}")
+            return cols
+
+        self.partition_by: List[str] = columns("partition_by")
+        self.sort_by: List[str] = columns("sort_by")
+        # skip indexes: option index_<kind> -> sidecar key <kind>
+        self.indexes = {kind: columns(f"index_{kind}") for kind in SKIP_INDEXES}
         # SAMPLE key (writer.py _with_sample_hash): materializes a
         # sorted _sample_hash column so the reader's SAMPLE clause can
         # prune block ranges. The hash sort IS the file order, so it
@@ -1705,10 +1554,7 @@ class ClickHouseNativeWriter(DataSourceArrowWriter):
         # hash sort survives the per-combo take(), so every partition
         # file stays hash-sorted).
         self.sample_by = (options.get("sample_by") or "").strip() or None
-        names = [f.name for f in schema.fields]
         if self.sample_by:
-            from ..native.writer import SAMPLE_HASH_COLUMN
-
             if self.sample_by not in names:
                 raise ValueError(
                     f"sample_by column {self.sample_by!r} not in schema"
@@ -1724,24 +1570,6 @@ class ClickHouseNativeWriter(DataSourceArrowWriter):
                 raise ValueError(
                     f"schema already has a {SAMPLE_HASH_COLUMN} column"
                 )
-        missing = [c for c in self.partition_by if c not in names]
-        if missing:
-            raise ValueError(f"partition_by columns not in schema: {missing}")
-        missing = [c for c in self.sort_by if c not in names]
-        if missing:
-            raise ValueError(f"sort_by columns not in schema: {missing}")
-        missing = [c for c in self.index_bloom if c not in names]
-        if missing:
-            raise ValueError(f"index_bloom columns not in schema: {missing}")
-        missing = [c for c in self.index_ngrambf if c not in names]
-        if missing:
-            raise ValueError(f"index_ngrambf columns not in schema: {missing}")
-        missing = [c for c in self.index_set if c not in names]
-        if missing:
-            raise ValueError(f"index_set columns not in schema: {missing}")
-        missing = [c for c in self.index_tokenbf if c not in names]
-        if missing:
-            raise ValueError(f"index_tokenbf columns not in schema: {missing}")
         if self.partition_by and len(self.partition_by) == len(names):
             raise ValueError("partition_by cannot cover every column")
         self.overwrite = overwrite
@@ -1766,57 +1594,51 @@ class ClickHouseNativeWriter(DataSourceArrowWriter):
         ]
         return os.path.join(self.path, *parts)
 
+    def _split(self, batch: "pa.RecordBatch") -> dict:
+        """{combo: row indices} of the batch's hive directories, the
+        indices None for all rows (no ``partition_by``: one combo ())."""
+        if not self.partition_by:
+            return {(): None}
+        key_cols = [
+            batch.column(batch.schema.get_field_index(k)).to_pylist()
+            for k in self.partition_by
+        ]
+        # one pass over the rows: bucket row indices per combo
+        # (O(rows), not O(rows x combos)), then one take() per
+        # combo — high-cardinality partition_by stays linear
+        buckets: dict = {}
+        for ri, combo in enumerate(zip(*key_cols)):
+            if None in combo:
+                raise ValueError(
+                    f"NULL partition value for {self.partition_by} "
+                    "(hive paths cannot encode NULL)"
+                )
+            buckets.setdefault(combo, []).append(ri)
+        return buckets
+
     def write(self, iterator: Iterator["pa.RecordBatch"]) -> NativeWriteCommit:
         import pyarrow as pa
 
+        from ..native.writer import NativePartSink, _with_sample_hash
+
         token = uuid.uuid4().hex
-        if self.sample_by:
-            from ..native.writer import _with_sample_hash
-
-            buffered = list(iterator)
-            if buffered:
-                t = _with_sample_hash(
-                    pa.Table.from_batches(buffered), self.sample_by
-                )
-                iterator = iter(t.to_batches(max_chunksize=self.block_rows))
-            else:
-                iterator = iter(())
-        if self.sort_by:
-            # cluster within the task before writing: tight per-block
+        if self.sample_by or self.sort_by:
+            # buffer the task's rows once — the standard memory trade
+            # of any sorted writer. sample_by orders by the sampling
+            # hash; sort_by clusters within the task: tight per-block
             # min/max ranges are what make the block-range index
-            # selective (6x measured, SCALE_PIPELINE.md). Buffers the
-            # task's batches once — the standard memory trade of any
-            # sorted writer; pair with a repartition/range-partition on
-            # the same keys upstream for global clustering.
-            buffered = list(iterator)
-            if buffered:
-                t = pa.Table.from_batches(buffered)
-                t = t.sort_by([(c, "ascending") for c in self.sort_by])
-                iterator = iter(t.to_batches(max_chunksize=self.block_rows))
-            else:
-                iterator = iter(())
-        if not self.partition_by:
-            sink = _FileSink(
-                os.path.join(self.path, f"part-{token}.clickhouse"),
-                self.compression,
-                self.block_rows,
-                self.index_bloom,
-                self.index_ngrambf,
-                self.index_set,
-                self.index_tokenbf,
-            )
-            os.makedirs(self.path, exist_ok=True)
-            try:
-                for batch in iterator:
-                    sink.write_batch(batch)
-                path = sink.finalize()
-            except BaseException:
-                sink.close_on_error()
-                raise
-            return NativeWriteCommit(
-                paths=(path,) if path else (), rows=sink.rows
-            )
-
+            # selective (6x measured, SCALE_PIPELINE.md) — pair with a
+            # repartition/range-partition on the same keys upstream for
+            # global clustering.
+            batches = list(iterator)
+            if batches:
+                t = pa.Table.from_batches(batches)
+                if self.sample_by:
+                    t = _with_sample_hash(t, self.sample_by)
+                else:
+                    t = t.sort_by([(c, "ascending") for c in self.sort_by])
+                batches = t.to_batches(max_chunksize=self.block_rows)
+            iterator = iter(batches)
         sinks: dict = {}
         try:
             for batch in iterator:
@@ -1825,89 +1647,54 @@ class ClickHouseNativeWriter(DataSourceArrowWriter):
                     for i, name in enumerate(batch.schema.names)
                     if name not in self.partition_by
                 ]
-                key_cols = [
-                    batch.column(batch.schema.get_field_index(k)).to_pylist()
-                    for k in self.partition_by
-                ]
-                # one pass over the rows: bucket row indices per combo
-                # (O(rows), not O(rows x combos)), then one take() per
-                # combo — high-cardinality partition_by stays linear
-                buckets: dict = {}
-                for ri, combo in enumerate(zip(*key_cols)):
-                    if None in combo:
-                        raise ValueError(
-                            f"NULL partition value for {self.partition_by} "
-                            "(hive paths cannot encode NULL)"
+                for combo, idxs in self._split(batch).items():
+                    sub = batch
+                    if idxs is not None:
+                        sub = batch.take(pa.array(idxs, type=pa.int64()))
+                        sub = pa.RecordBatch.from_arrays(
+                            [sub.column(i) for i in keep_idx],
+                            names=[sub.schema.names[i] for i in keep_idx],
                         )
-                    buckets.setdefault(combo, []).append(ri)
-                for combo, idxs in buckets.items():
-                    sub = batch.take(pa.array(idxs, type=pa.int64()))
-                    sub = pa.RecordBatch.from_arrays(
-                        [sub.column(i) for i in keep_idx],
-                        names=[sub.schema.names[i] for i in keep_idx],
-                    )
                     sink = sinks.get(combo)
                     if sink is None:
-                        sink = sinks[combo] = _FileSink(
-                            os.path.join(
-                                self._partition_dir(combo),
-                                f"part-{token}.clickhouse",
-                            ),
-                            self.compression,
-                            self.block_rows,
-                            self.index_bloom,
-                            self.index_ngrambf,
-                            self.index_set,
-                            self.index_tokenbf,
+                        d = self._partition_dir(combo)
+                        os.makedirs(d, exist_ok=True)
+                        sink = sinks[combo] = NativePartSink(
+                            os.path.join(d, f"part-{token}.clickhouse"),
+                            compression=self.compression,
+                            block_rows=self.block_rows,
+                            indexes=self.indexes,
                         )
                     sink.write_batch(sub)
-            # finalize inside the same guard: a flush/close failure on
+            # finish inside the same guard: a flush/close failure on
             # one sink must still close the remaining open handles
-            paths = []
-            rows = 0
-            for sink in sinks.values():
-                p = sink.finalize()
-                if p:
-                    paths.append(p)
-                    rows += sink.rows
+            paths = [p for p in (s.finish() for s in sinks.values()) if p]
         except BaseException:
             for sink in sinks.values():
                 sink.close_on_error()
             raise
-        return NativeWriteCommit(paths=tuple(paths), rows=rows)
+        return NativeWriteCommit(
+            paths=tuple(paths), rows=sum(s.rows for s in sinks.values())
+        )
 
     def commit(self, messages: List[Optional[NativeWriteCommit]]) -> None:
-        from ..native.delmask import remove_delmask
-        from ..native.marks import marks_sidecar_path
-        from ..native.writer import stats_sidecar_path
+        from ..native.writer import remove_part
 
         new_files = {p for m in messages if m for p in m.paths}
         for old in self._stale:
-            if old not in new_files and os.path.exists(old):
-                os.remove(old)
-                for side in (stats_sidecar_path(old), marks_sidecar_path(old)):
-                    if os.path.exists(side):
-                        os.remove(side)
-                remove_delmask(old)
+            if old not in new_files:
+                remove_part(old)
         os.makedirs(self.path, exist_ok=True)
         with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
             f.write("")
 
     def abort(self, messages: List[Optional[NativeWriteCommit]]) -> None:
-        from ..native.delmask import remove_delmask
-        from ..native.marks import marks_sidecar_path
-        from ..native.writer import stats_sidecar_path
+        from ..native.writer import remove_part
 
         for m in messages:
-            if not m:
-                continue
-            for p in m.paths:
-                if p and os.path.exists(p):
-                    os.remove(p)
-                    for side in (stats_sidecar_path(p), marks_sidecar_path(p)):
-                        if os.path.exists(side):
-                            os.remove(side)
-                    remove_delmask(p)
+            if m:
+                for p in m.paths:
+                    remove_part(p)
 
 
 def infer_native_schema(options: dict) -> StructType:
@@ -2030,11 +1817,9 @@ def _sidecar_rows_total(path: str) -> Optional[int]:
     sidecars alone (no data IO). None when any part lacks a parseable
     sidecar or carries a delete mask (masked rows are invisible to the
     sidecar count) — callers fall back to a real count."""
-    import json as _json
-
     from ..filesystem import resolve_paths
     from ..native.delmask import delmask_path
-    from ..native.writer import stats_sidecar_path
+    from ..native.writer import load_stats
 
     try:
         parts = [p for p in resolve_paths(path) if not p.endswith(".json")]
@@ -2047,8 +1832,7 @@ def _sidecar_rows_total(path: str) -> Optional[int]:
         if os.path.exists(delmask_path(p)):
             return None
         try:
-            with open(stats_sidecar_path(p)) as f:
-                total += int(_json.load(f)["rows"])
+            total += int(load_stats(p)["rows"])
         except Exception:
             return None
     return total

@@ -267,25 +267,21 @@ def make_parts_udtf():
 
     class ClickHouseNativePartsUDTF:
         def eval(self, path: str) -> Iterator[tuple]:
-            import json
             import os
 
             from ..filesystem import resolve_paths
-            from ..native.writer import stats_sidecar_path
-
             from ..native.delmask import deleted_count
+            from ..native.writer import load_stats
 
             for p in sorted(resolve_paths(path)):
-                side = stats_sidecar_path(p)
                 rows, n_blocks, n_cols = -1, -1, -1
+                st = load_stats(p)
                 try:
-                    with open(side) as f:
-                        st = json.load(f)
                     rows = int(st.get("rows", -1))
                     n_blocks = len(st.get("blocks", [])) or -1
                     n_cols = len(st.get("columns", {})) or -1
-                except (OSError, ValueError):
-                    pass
+                except (AttributeError, TypeError, ValueError):
+                    pass  # no sidecar, or a malformed one
                 try:
                     deleted = deleted_count(p)
                 except ValueError:
@@ -381,23 +377,19 @@ def trivial_count(spark: SparkSession, path: str) -> DataFrame:
     this path takes ~10 ms).  Any part missing a sidecar (or carrying
     a corrupt delete mask) falls back to the real distributed scan
     count — never a wrong answer, only a slower one."""
-    import json
-
     from pyspark.sql import functions as F
 
     from ..filesystem import resolve_paths
     from ..native.delmask import deleted_count
-    from ..native.writer import stats_sidecar_path
+    from ..native.writer import load_stats
     from .native_datasource import infer_native_schema
 
     total = 0
     ok = True
     for p in resolve_paths(path):
         try:
-            with open(stats_sidecar_path(p)) as f:
-                rows = int(json.load(f)["rows"])
-            total += rows - deleted_count(p)
-        except (OSError, ValueError, KeyError):
+            total += int(load_stats(p)["rows"]) - deleted_count(p)
+        except (TypeError, ValueError, KeyError):
             ok = False
             break
     if ok:

@@ -51,6 +51,28 @@ def test_delete_reuses_provably_untouched_parts(spark, tmp_path):
     assert got == list(range(250, 1000))
 
 
+def test_set_index_conjunction_leaves_part_untouched(spark, tmp_path):
+    # min/max 2..34 admits 5 <= g <= 10 and so does each bound alone;
+    # only the set index checked against BOTH bounds proves no row
+    # matches — the reader prunes this part, so triage must link it
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    os.makedirs(src)
+    t = pa.table(
+        {
+            "g": pa.array([2, 18, 34], pa.int64()),
+            "x": pa.array([1, 2, 3], pa.int64()),
+        }
+    )
+    write_native_file(os.path.join(src, "part-000.clickhouse"), t, index_set=["g"])
+    stats = mutate_native_dir(
+        spark, src, out, delete_where=[("g", ">=", 5), ("g", "<=", 10)]
+    )
+    assert stats["untouched_parts"] == 1
+    assert stats["rewritten_parts"] == 0
+    got = sorted((r.g, r.x) for r in _read(spark, out).collect())
+    assert got == [(2, 1), (18, 2), (34, 3)]
+
+
 def test_update_where_applies_conditionally(spark, tmp_path):
     src, out = str(tmp_path / "src"), str(tmp_path / "out")
     os.makedirs(src)

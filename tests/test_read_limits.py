@@ -16,6 +16,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from duckdb_extension_clickhouse_native_spark.native.writer import (
+    stats_sidecar_path,
     write_native_file,
 )
 
@@ -84,9 +85,9 @@ def test_sidecarless_files_count_zero_rows(spark, tmp_path):
     d = str(tmp_path / "nostats")
     os.makedirs(d)
     t = pq.read_table(SRC)
-    write_native_file(
-        os.path.join(d, "p.clickhouse"), t, stats=False
-    )
+    p = os.path.join(d, "p.clickhouse")
+    write_native_file(p, t)
+    os.remove(stats_sidecar_path(p))
     # rows unknown -> no false refusal on the row guard...
     n = (
         spark.read.format("clickhouse_native")
