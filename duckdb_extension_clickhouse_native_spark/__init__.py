@@ -15,7 +15,11 @@ Quick start::
 
 from __future__ import annotations
 
+from . import worker_imports
+
 __version__ = "0.1.0"
+
+worker_imports.install()
 
 
 def register(spark) -> None:

@@ -269,25 +269,13 @@ def end_build() -> None:
             pass
 
 
-_PLAN_SHAPE_ASSERTED: set = set()
-
-
-def assert_planned_partitions(df: DataFrame, key: str, ok, msg) -> None:
-    """Plan-shape guard, asserted ONCE per (site, fixture path) per
-    process: ``df.rdd.getNumPartitions()`` on a Python-DataSource scan
-    spawns a fresh plan worker (~0.26 s of fixed latency per call,
-    r16 §1 measurement), and the asserted property — how many
-    partitions the reader plans for a FIXED on-disk fixture under a
-    FIXED pushed filter — is deterministic, so re-probing it on every
-    timed build adds latency and no information. Only the guard's
-    pass/fail is memoized; query RESULTS are computed cold every
-    build. ``ok`` takes the planned count, ``msg`` renders the error."""
-    if key in _PLAN_SHAPE_ASSERTED:
-        return
+def assert_planned_partitions(df: DataFrame, ok, msg) -> None:
+    """Plan-shape guard: how many partitions the reader plans for an
+    on-disk fixture under a pushed filter. ``ok`` takes the planned
+    count, ``msg`` renders the error."""
     n = df.rdd.getNumPartitions()
     if not ok(n):
         raise AssertionError(msg(n))
-    _PLAN_SHAPE_ASSERTED.add(key)
 
 
 def scoped_conf(spark: SparkSession, key: str, value) -> None:

@@ -1901,7 +1901,7 @@ def _native_bloom_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("uid").isin("u42", "u301", "u17"))
     )
     assert_planned_partitions(
-        df, f"bloom:{path}", lambda n: n <= 3,
+        df, lambda n: n <= 3,
         lambda n: f"bloom pruning regressed: planned {n} partitions "
         "for a 3-value probe over 16 hash-scattered parts",
     )
@@ -1981,7 +1981,7 @@ def _native_tokenbf_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").contains(" tag_7 "))
     )
     assert_planned_partitions(
-        df, f"tokenbf:{path}", lambda n: n <= 1,
+        df, lambda n: n <= 1,
         lambda n: f"tokenbf pruning regressed: planned {n} partitions "
         "for a one-token probe over 16 parts",
     )
@@ -2138,7 +2138,7 @@ def _native_set_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("grade") >= 14) & (F.col("grade") <= 16))
     )
     assert_planned_partitions(
-        df, f"setix:{path}", lambda n: n <= 3,
+        df, lambda n: n <= 3,
         lambda n: f"set-index pruning regressed: planned {n} "
         "partitions for a 3-grade BETWEEN over 16 parts with "
         "non-contiguous grade sets",
@@ -2322,7 +2322,7 @@ def _native_projection_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(f"sort projection not selected: {used!r}")
     probe = df.filter((F.col("user_id") >= 3) & (F.col("user_id") <= 5))
     assert_planned_partitions(
-        probe, f"sortproj:{path}", lambda n: n <= 6,
+        probe, lambda n: n <= 6,
         lambda n: f"sort-projection pruning regressed: {n} partitions "
         "planned for a 3-user probe over a 16-file range-clustered "
         "projection",
@@ -3000,7 +3000,7 @@ def _sim_ann_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("bucket").isin(probes))
     )
     assert_planned_partitions(
-        df, f"annbuckets:{path}", lambda n: n <= 5,
+        df, lambda n: n <= 5,
         lambda n: f"ANN bucket pruning regressed: planned {n} "
         "partitions for nprobe=5 of 16",
     )

@@ -346,7 +346,7 @@ def _tf_url_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .base import assert_planned_partitions
 
     assert_planned_partitions(
-        df, f"urlcsv:{urls}", lambda n: n == 2,
+        df, lambda n: n == 2,
         lambda n: f"one partition per URL regressed (planned {n})",
     )
     return (

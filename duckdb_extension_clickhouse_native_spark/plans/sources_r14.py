@@ -113,7 +113,7 @@ def _tf_url_glob_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .base import assert_planned_partitions
 
     assert_planned_partitions(
-        df, f"urlglob:{spec}", lambda n: n == 4,
+        df, lambda n: n == 4,
         lambda n: "glob expansion must plan one partition per "
         f"expanded URL (planned {n})",
     )
@@ -394,7 +394,7 @@ def _tf_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .base import assert_planned_partitions
 
     assert_planned_partitions(
-        df, f"filelist:{spec}", lambda n: n == 4,
+        df, lambda n: n == 4,
         lambda n: f"file() must plan one partition per file ({n})",
     )
     return (

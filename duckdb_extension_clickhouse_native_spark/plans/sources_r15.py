@@ -271,7 +271,7 @@ def _tf_s3_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .base import assert_planned_partitions
 
     assert_planned_partitions(
-        df, f"s3list:{prefix}", lambda n: n == 4,
+        df, lambda n: n == 4,
         lambda n: f"s3() must plan one partition per object ({n})",
     )
     return (
@@ -540,7 +540,7 @@ def _tf_file_archive_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .base import assert_planned_partitions
 
     assert_planned_partitions(
-        df, f"filearchive:{path}", lambda n: n == 4,
+        df, lambda n: n == 4,
         lambda n: "file() archives must plan one partition per "
         f"matched member (planned {n})",
     )

@@ -18,9 +18,10 @@ from __future__ import annotations
 import socket
 import ssl
 import uuid
-from typing import Iterator, List, Optional
+from typing import BinaryIO, Iterator, List, Optional
 
 from ..native.codec import Block
+from ..native.compress import PushbackReader
 from ..native.types import CHType
 from . import tcp_protocol as proto
 
@@ -143,34 +144,40 @@ class ClickHouseTCPClient:
         )
         self._wfile.flush()
 
-    def _data_packets(self) -> Iterator[None]:
-        """The single server-packet state machine: yields once per
-        SERVER_DATA packet with the stream positioned at its payload
+    def _data_packets(self) -> Iterator[BinaryIO]:
+        """The single server-packet state machine: yields the response
+        stream once per SERVER_DATA packet, positioned at its payload
         (caller consumes it before advancing), silently consuming
         Totals/Extremes/Log/Progress/ProfileInfo/TableColumns, raising
         on Exception, returning on EndOfStream. Every query flow
         (execute, probe, insert) drives this one pump, so a protocol
-        addition lands in exactly one place."""
+        addition lands in exactly one place.
+
+        One response is read through one ``PushbackReader``, so plain
+        (uncompressed) String columns take the codec's chunk scan. The
+        server sends nothing after a response until the client's next
+        request, so no byte that reader buffers outlives it."""
+        rf = PushbackReader(self._rfile)
         while True:
-            code = proto.read_varuint(self._rfile)
+            code = proto.read_varuint(rf)
             if code == proto.SERVER_DATA:
-                yield
+                yield rf
             elif code in (proto.SERVER_TOTALS, proto.SERVER_EXTREMES):
                 proto.read_data_packet(
-                    self._rfile, self.revision, compression=self.compression
+                    rf, self.revision, compression=self.compression
                 )
             elif code == proto.SERVER_LOG:
                 # server logs are never compressed
-                proto.read_data_packet(self._rfile, self.revision)
+                proto.read_data_packet(rf, self.revision)
             elif code == proto.SERVER_PROGRESS:
-                proto.read_progress(self._rfile, self.revision)
+                proto.read_progress(rf, self.revision)
             elif code == proto.SERVER_PROFILE_INFO:
-                proto.read_profile_info(self._rfile)
+                proto.read_profile_info(rf)
             elif code == proto.SERVER_TABLE_COLUMNS:
-                proto.read_str(self._rfile)
-                proto.read_str(self._rfile)
+                proto.read_str(rf)
+                proto.read_str(rf)
             elif code == proto.SERVER_EXCEPTION:
-                raise proto.read_exception(self._rfile)
+                raise proto.read_exception(rf)
             elif code == proto.SERVER_END_OF_STREAM:
                 return
             else:
@@ -183,9 +190,9 @@ class ClickHouseTCPClient:
         EndOfStream. Progress/ProfileInfo/Log/Totals/Extremes packets are
         consumed and discarded."""
         self._send_query(query)
-        for _ in self._data_packets():
+        for rf in self._data_packets():
             blk = proto.read_data_packet(
-                self._rfile,
+                rf,
                 self.revision,
                 compression=self.compression,
                 lossy_uint64=lossy_uint64,
@@ -198,9 +205,9 @@ class ClickHouseTCPClient:
         the TCP twin of the HTTP zero-row probe."""
         self._send_query(query)
         schema: list[tuple[str, CHType]] = []
-        for _ in self._data_packets():
+        for rf in self._data_packets():
             blk = proto.read_data_packet(
-                self._rfile, self.revision, compression=self.compression, columns=set()
+                rf, self.revision, compression=self.compression, columns=set()
             )
             if blk is not None and not schema:
                 schema = blk.header
@@ -215,10 +222,8 @@ class ClickHouseTCPClient:
         self._send_query(f"INSERT INTO {table} VALUES")
         # wait for the server's structure block (or an exception)
         structure_seen = False
-        for _ in self._data_packets():
-            proto.read_data_packet(
-                self._rfile, self.revision, compression=self.compression
-            )
+        for rf in self._data_packets():
+            proto.read_data_packet(rf, self.revision, compression=self.compression)
             structure_seen = True
             break
         if not structure_seen:

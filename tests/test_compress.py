@@ -45,6 +45,34 @@ def test_cityhash128_deterministic_and_length_sensitive():
     assert cityhash128(bytes(a)) != h1
 
 
+# (lo, hi) of cityhash128 over bytes((i * 131 + 7) % 251 for i in range(n)),
+# pinned from the byte-at-a-time implementation; the lengths cover every
+# branch: empty, 1-3, 4-8, 9-16, the 17-127 murmur path, exactly one
+# 128-byte round, rounds plus a tail, and a multi-round tail
+CITYHASH128_GOLDEN = {
+    0: (0x3DF09DFC64C09A2B, 0x3CB540C392E51E29),
+    1: (0x8BE55B379CCE0E40, 0x05AB4744478B1CBA),
+    4: (0xCE096AA5F604755C, 0x5E5C623C1F725410),
+    8: (0xB271590FD7F3E18B, 0x2A6BDD5549BBA80C),
+    9: (0x00B4ADA22538C7CC, 0x9709E82195F3344B),
+    16: (0xFA48737E683403CC, 0x70C62FFBF6592EA2),
+    17: (0xB737C05BCA33FDA7, 0x9F8DFB9E13B6E2BD),
+    64: (0x85552978A6EFF0B9, 0xEEE1502D2FDDC1D9),
+    127: (0x72E7ACB1118699B6, 0xE2400179E145B5D2),
+    128: (0x0945539E340F5FC0, 0x020F7BE2421D906E),
+    129: (0x8F9D9E99332D3E49, 0xAFD51C362A19BB23),
+    255: (0x3BF523F774050B94, 0x5054380C07606984),
+    1000: (0xB0F747A2EC3B54F4, 0xA127239D421DC352),
+    4173: (0x1775CF029A654AC5, 0xA59F9DAC1E9B91FA),
+}
+
+
+@pytest.mark.parametrize("n", sorted(CITYHASH128_GOLDEN))
+def test_cityhash128_golden_vectors(n):
+    data = bytes((i * 131 + 7) % 251 for i in range(n))
+    assert cityhash128(data) == CITYHASH128_GOLDEN[n]
+
+
 @pytest.mark.parametrize("method", ["lz4", "zstd", "none"])
 def test_frame_stream_roundtrip(method):
     payload = os.urandom(100_000) + b"compressible " * 50_000

@@ -104,6 +104,48 @@ def test_compressed_select_and_insert(tcp_server):
     assert con.execute("SELECT v FROM sink WHERE k = 42").fetchone() == ("z",)
 
 
+def test_plain_and_lz4_string_pulls_agree_through_the_chunk_scan(tcp_server, monkeypatch):
+    """Plain responses carry String columns as raw bytes on the socket;
+    they must take the same chunk scan as lz4 frames (not the per-row
+    varint loop), return the same batches, and leave nothing behind for
+    the connection's next query."""
+    from duckdb_extension_clickhouse_native_spark.native import codec
+
+    host, port, con = tcp_server
+    con.execute(
+        "CREATE OR REPLACE TABLE strs AS SELECT i::BIGINT AS k, "
+        "'v' || i::VARCHAR AS s, "
+        "CASE WHEN i % 3 = 0 THEN NULL ELSE repeat('x', (i % 300)::INT) END AS ns "
+        "FROM range(70000) t(i)"
+    )
+    scans = []
+    orig = codec._decode_strings_seekable
+
+    def counting(buf, rows, **kw):
+        scans.append(rows)
+        return orig(buf, rows, **kw)
+
+    monkeypatch.setattr(codec, "_decode_strings_seekable", counting)
+    query = "SELECT k, s, ns FROM strs ORDER BY k"
+    pulls = {}
+    for compression in (False, "lz4"):
+        c = ClickHouseTCPClient(host, port, compression=compression, timeout=60)
+        try:
+            for _ in range(2):  # the second query reuses the connection
+                scans.clear()
+                got = pa.Table.from_batches(
+                    [b.to_record_batch() for b in c.execute_blocks(query)]
+                )
+                # two String columns per data block, all 70k rows each
+                assert sum(scans) == 2 * 70000, compression
+        finally:
+            c.close()
+        pulls[compression] = got
+    assert pulls[False].equals(pulls["lz4"])
+    assert pulls[False].num_rows == 70000
+    assert pulls[False].column("ns").null_count == 70000 // 3 + 1
+
+
 def test_block_info_roundtrip():
     buf = io.BytesIO()
     proto.write_block_info(buf)
