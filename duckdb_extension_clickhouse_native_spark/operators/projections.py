@@ -51,6 +51,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .mutations import stage_parts
+
 # mergeable state functions: state column name -> merge expression
 _STATE_FNS = {"count", "sum", "min", "max"}
 _DERIVED = {"avg"}  # avg = sum / count, never stored directly
@@ -258,36 +260,6 @@ def _part_state_dir(src_dir: str, name: str, part_relkey: str) -> str:
     )
 
 
-def _stage_parts(src_dir: str, paths: list, tag_seed: str) -> str:
-    """Symlink-stage ``paths`` MIRRORING their src-relative layout so
-    ONE DataSource read plans them together: stage-relative paths (the
-    reader's ``file_column`` values) equal the manifest's keys, and a
-    hive source's ``key=value`` components survive so its partition
-    columns restore as real columns."""
-    import hashlib
-    import tempfile
-
-    from ..native.writer import part_companions
-
-    tag = hashlib.md5(("|".join(paths) + tag_seed).encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), "chsql_proj_stage", tag)
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage)
-    from ..native.tableschema import copy_table_schema
-
-    copy_table_schema(src_dir, stage)
-    for p in paths:
-        dst = os.path.join(stage, os.path.relpath(p, src_dir))
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.symlink(p, dst)
-        # the staged read must see the part's deletions or the partial
-        # states would aggregate resurrected rows
-        for src, cdst in zip(part_companions(p), part_companions(dst)):
-            if os.path.exists(src):
-                os.symlink(src, cdst)
-    return stage
-
-
 def refresh_projection(spark: SparkSession, src_dir: str, name: str) -> dict:
     """Fold source-part churn into the projection, touching ONLY the
     affected parts (r10 verdict item 8):
@@ -333,16 +305,17 @@ def refresh_projection(spark: SparkSession, src_dir: str, name: str) -> dict:
 
     reread = [by_key[b] for b in changed] + [by_key[b] for b in new]
     if reread:
-        stage = _stage_parts(src_dir, reread, name)
-        aggs = _manifest_aggs(man)
-        df = _read_native(spark, stage, file_column=_PART_COL)
-        proj = _partial_agg(df, man["group_by"], aggs)
-        (
-            proj.write.format("clickhouse_native")
-            .mode("append")
-            .option("partition_by", _PART_COL)
-            .save(_proj_dir(src_dir, name))
-        )
+        # the staged read keeps each part's src-relative path (the
+        # file_column values ARE the manifest keys) and its delete mask
+        with stage_parts(src_dir, reread, name) as stage:
+            df = _read_native(spark, stage, file_column=_PART_COL)
+            proj = _partial_agg(df, man["group_by"], _manifest_aggs(man))
+            (
+                proj.write.format("clickhouse_native")
+                .mode("append")
+                .option("partition_by", _PART_COL)
+                .save(_proj_dir(src_dir, name))
+            )
 
     for b in removed:
         known.pop(b, None)
@@ -573,17 +546,17 @@ def refresh_sort_projection(spark: SparkSession, src_dir: str, name: str) -> dic
             spark, src_dir, name, order_by=man["order_by"]
         ) | {"mode": "rebuild"}
     by_key = {_relkey(src_dir, p): p for p in parts}
-    stage = _stage_parts(src_dir, [by_key[b] for b in new], "sort-" + name)
-    df = _read_native(spark, stage)
-    (
-        df.repartitionByRange(
-            max(1, len(new)), *[F.col(c) for c in man["order_by"]]
+    with stage_parts(src_dir, [by_key[b] for b in new], "sort-" + name) as stage:
+        (
+            _read_native(spark, stage)
+            .repartitionByRange(
+                max(1, len(new)), *[F.col(c) for c in man["order_by"]]
+            )
+            .write.format("clickhouse_native")
+            .mode("append")
+            .option("sort_by", ",".join(man["order_by"]))
+            .save(_sort_proj_dir(src_dir, name))
         )
-        .write.format("clickhouse_native")
-        .mode("append")
-        .option("sort_by", ",".join(man["order_by"]))
-        .save(_sort_proj_dir(src_dir, name))
-    )
     for b in new:
         known[b] = fp[b]
     tmp = _sort_manifest_path(src_dir, name) + ".tmp"

@@ -2801,14 +2801,12 @@ def _mutation_attach_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(a), os.makedirs(b)
         from ..filesystem import resolve_paths
-        from ..operators.mutations import _companions, _link_or_copy
+        from ..operators.mutations import place_part
 
         parts = [p for p in resolve_paths(src) if not p.endswith(".json")]
         for i, p in enumerate(sorted(parts)):
             dst_dir = a if i % 2 == 0 else b
-            _link_or_copy(p, os.path.join(dst_dir, os.path.basename(p)))
-            for csrc, cdst in _companions(p):
-                _link_or_copy(csrc, os.path.join(dst_dir, cdst))
+            place_part(p, os.path.join(dst_dir, os.path.basename(p)))
         attach_parts(a, b)
         with open(done, "w") as f:
             f.write("")

@@ -78,3 +78,31 @@ def test_unknown_column_rejected(spark, tmp_path):
         materialize_column(
             spark, src, str(tmp_path / "out"), column="nope"
         )
+
+
+def test_hive_rerun_drops_partitions_gone_from_source(spark, tmp_path):
+    import shutil
+
+    import pyarrow as pa
+
+    from duckdb_extension_clickhouse_native_spark.native.writer import (
+        write_native_file,
+    )
+
+    src, out = str(tmp_path / "t"), str(tmp_path / "out")
+    for k in range(3):
+        os.makedirs(os.path.join(src, f"k={k}"))
+        write_native_file(
+            os.path.join(src, f"k={k}", "part-0.clickhouse"),
+            pa.table({"v": pa.array(range(100), type=pa.int64())}),
+        )
+    alter_add_column(src, "score", "Int64", default=1)
+    materialize_column(spark, src, out, column="score")
+    shutil.rmtree(os.path.join(src, "k=2"))
+    materialize_column(spark, src, out, column="score")
+
+    def count(d):
+        return spark.read.format("clickhouse_native").load(d).count()
+
+    assert count(out) == count(src) == 200
+    assert sorted(d for d in os.listdir(out) if "=" in d) == ["k=0", "k=1"]

@@ -1,8 +1,8 @@
 """Hive-partitioned mutations (r10 verdict item 3): ALTER
-DELETE/UPDATE over ``key=value`` layouts, per partition directory —
-partition-key predicate terms prune whole directories to hard-links,
-residual data-column terms run as flat mutations inside each
-directory, and the output mirrors the source tree."""
+DELETE/UPDATE over ``key=value`` layouts — partition-key predicate
+terms prune whole directories to hard-links, residual data-column
+terms are proven per part, the touched parts of every directory
+rewrite in one job, and the output mirrors the source tree."""
 
 from __future__ import annotations
 
