@@ -51,6 +51,23 @@ def _resolve_writer(fmt: str):
     return load(WIRE_FORMATS[fmt].writer)
 
 
+def empty_batch(df):
+    """A 0-row Arrow batch in ``df``'s schema, built before the job runs: an
+    empty result still needs the schema to write a valid header or
+    footer (an empty ORC/Parquet body is unreadable).  Every export —
+    INTO OUTFILE and the url()/file()/s3() INSERTs — writes it when its
+    single task sees no batch."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    schema = pa.schema(
+        [pa.field(f.name, to_arrow_type(f.dataType)) for f in df.schema.fields]
+    )
+    return pa.RecordBatch.from_arrays(
+        [pa.array([], type=f.type) for f in schema], schema=schema
+    )
+
+
 def _open_sink(tmp_path: str, final_path: str):
     """Open ``tmp_path`` for writing, compressed per the FINAL
     filename's extension (the atomic-rename temp name must not defeat
@@ -94,19 +111,7 @@ def into_outfile(
     # finding: an early remove + crashed job destroyed both versions)
     path = os.path.abspath(path)
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    # the empty-result export still needs the schema to write a valid
-    # header/footer (an empty ORC/Parquet body is unreadable): build a
-    # 0-row batch from the DataFrame's own schema driver-side
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    import pyarrow as _pa
-
-    empty_schema = _pa.schema(
-        [
-            _pa.field(f.name, to_arrow_type(f.dataType))
-            for f in df.schema.fields
-        ]
-    )
+    empty = empty_batch(df)
 
     def write_single(batches):
         import uuid
@@ -124,14 +129,7 @@ def into_outfile(
                 "(ClickHouse INTO OUTFILE ... TRUNCATE)"
             )
         writer = _resolve_writer(fmt)
-        chunks = list(batches)
-        if not chunks:
-            chunks = [
-                pa.RecordBatch.from_arrays(
-                    [pa.array([], type=f.type) for f in empty_schema],
-                    schema=empty_schema,
-                )
-            ]
+        chunks = list(batches) or [empty]
         # per-attempt temp name: a speculative/retried task attempt
         # must never interleave writes with a zombie first attempt
         # (both would share a fixed '.inprogress' name); os.replace

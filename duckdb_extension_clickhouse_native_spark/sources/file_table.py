@@ -1,48 +1,29 @@
 """ClickHouse ``file()`` table function (docs: sql-reference/
 table-functions/file): read local files in a named wire format.
 
-Spark-first analogue of the url() family (url_table.py) with a
-filesystem transport: ``clickhouse_file`` DataSource + ``file_table``
-helper + the ``clickhouse_file(path, fmt[, structure])`` SQL UDTF.
-Paths take the ClickHouse spelling — comma-separated lists, ``{N..M}``
-/ ``{a,b}`` brace globs (shared with url()), plus filesystem ``*`` /
-``?`` wildcards — and every matched file becomes ONE input partition,
-so a directory of N shards reads with N-way parallelism.  Formats and
-the ``structure`` argument behave exactly as url(): self-describing
-spellings (Native / *WithNamesAndTypes / ArrowStream / Parquet / ORC)
-decode directly; headerless plain spellings need a structure.
+The ``file`` row of the shared object source (object_source.py, which
+owns the formats, the schema probe, the reader, the
+``clickhouse_file(path, fmt[, structure[, compression]])`` SQL UDTF and
+the INSERT path) behind the ``clickhouse_file`` DataSource and the
+``file_table`` helper.  What this row adds: the ClickHouse path
+spelling — comma-separated lists, ``{N..M}`` / ``{a,b}`` brace globs
+(shared with url()) plus filesystem ``*`` / ``?`` wildcards, every
+matched file ONE input partition — ``archive :: member`` reads from
+zip and tar archives, and plain local writes for ``file_insert``.
 
-The write half is ``INTO OUTFILE`` (operators/outfile.py) — ClickHouse
-splits the same way (file() reads, OUTFILE writes one local file).
+The other write half is ``INTO OUTFILE`` (operators/outfile.py) —
+ClickHouse splits the same way (file() reads, OUTFILE writes one local
+file).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from .url_table import (
-    _VIRTUAL_COLS,
-    _inference_mode,
-    merge_inferred_schemas,
-    probe_many,
-    _WITHNAMES_DECODERS,
-    _add_virtual_fields,
-    _append_virtuals,
-    _conform_batch,
-    _decode_stream,
-    _plan_arrow_types,
-    _split_top_level_commas,
-    _structured_decoder_for,
-    _truthy,
-    format_settings,
-    structure_is_authoritative,
-    expand_url_globs,
-    validate_format,
-)
-
+from .object_source import ObjectSource, Opener, insert_objects, load_objects
+from .url_table import _split_top_level_commas, expand_url_globs
 
 # archive member access — ClickHouse file('archive :: member') (docs:
 # sql-reference/table-functions/file, 'Reading from archives'): zip
@@ -131,7 +112,7 @@ def _open_archive_member(arch: str, member: str):
     return stream
 
 
-def _open_file(path: str, compression):
+def _open_file(path: str, compression, opts: dict):
     """Open + transparent decompression (extension sniff unless an
     explicit ``compression`` is given — ClickHouse file() semantics).
     ``archive :: member`` paths open the member stream; the
@@ -210,138 +191,26 @@ def expand_file_paths(spec: str) -> list:
         out.extend(_expand_plain(piece))
     return out
 
-
-def _probe_file_schema(
-    path: str,
-    fmt: str,
-    structure: Optional[str],
-    compression: Optional[str] = None,
-    settings: Optional[dict] = None,
-):
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    from ..native.contentcodec import normalize_compression
-
-    normalize_compression(compression)  # refusal BEFORE any open
-    if structure_is_authoritative(fmt, structure):
-        from pyspark.sql.types import StructField, StructType
-
-        from .native_datasource import _ch_to_spark
-        from .url_table import parse_structure
-
-        validate_format(fmt, structure, settings)
-        return StructType(
-            [
-                StructField(n, _ch_to_spark(t), True)
-                for n, t in parse_structure(structure)
-            ]
-        )
-    validate_format(fmt, structure, settings)
-    with _open_file(path, compression) as f:
-        blocks = _decode_stream(f, fmt, structure, settings)
-        try:
-            first = next(iter(blocks))
-        except StopIteration:
-            raise ValueError(
-                f"file() cannot infer a schema from a zero-block "
-                f"{fmt} file at {path!r}"
-            )
-    return from_arrow_schema(first.to_record_batch().schema)
+def _expand(spec: str, opts: dict) -> list:
+    return expand_file_paths(spec)
 
 
-class FilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+def _create(path: str, opts: dict):
+    return open(path, "wb")
 
 
-class ClickHouseFileReader(DataSourceReader):
-    def __init__(self, options: dict, plan_schema=None):
-        from ..native.contentcodec import normalize_compression
-
-        self.paths = expand_file_paths(options.get("path") or "")
-        if not self.paths:
-            raise ValueError("clickhouse_file requires a path option")
-        self.fmt = options.get("format", "CSVWithNamesAndTypes")
-        self.structure = (options.get("structure") or "").strip() or None
-        self.settings = format_settings(options)
-        validate_format(self.fmt, self.structure, self.settings)
-        self.compression = options.get("compression")
-        normalize_compression(self.compression)  # plan-time refusal
-        self.fill_missing = _inference_mode(options) == "union"
-        self.virtuals = _truthy(options.get("virtual_columns"))
-        self.plan_schema = plan_schema
-        names = list(plan_schema.fieldNames()) if plan_schema else None
-        if names is not None and self.virtuals:
-            names = [n for n in names if n not in _VIRTUAL_COLS]
-        self.field_names = names
-        self._arrow_types = None
-
-    def partitions(self):
-        return [FilePartition(p) for p in self.paths]
-
-    def read(self, partition: FilePartition) -> Iterator:
-        if self._arrow_types is None:
-            self._arrow_types = _plan_arrow_types(self.plan_schema)
-        with _open_file(partition.path, self.compression) as f:
-            for blk in _decode_stream(
-                f, self.fmt, self.structure, self.settings
-            ):
-                rb = _conform_batch(
-                    blk.to_record_batch(),
-                    self.field_names,
-                    self._arrow_types,
-                    "file()",
-                    partition.path,
-                    fill_missing=self.fill_missing,
-                )
-                if self.virtuals:
-                    rb = _append_virtuals(rb, partition.path)
-                yield rb
+FILE = Opener("file()", "path", (), _expand, _open_file, _create)
 
 
-class ClickHouseFileDataSource(DataSource):
+class ClickHouseFileDataSource(ObjectSource):
     """``spark.read.format("clickhouse_file").option("path", ...)
     .option("format", "CSVWithNamesAndTypes").load()``"""
+
+    opener = FILE
 
     @classmethod
     def name(cls) -> str:
         return "clickhouse_file"
-
-    def schema(self):
-        memo = getattr(self, "_schema_memo", None)
-        if memo is not None:
-            return memo
-        opts = dict(self.options)
-        paths = expand_file_paths(opts.get("path") or "")
-        if not paths:
-            raise ValueError("clickhouse_file requires a path option")
-        fmt = opts.get("format", "CSVWithNamesAndTypes")
-        structure = (opts.get("structure") or "").strip() or None
-        settings = format_settings(opts)
-        if (
-            _inference_mode(opts) == "union"
-            and len(paths) > 1
-            and not structure_is_authoritative(fmt, structure)
-        ):
-            schema = merge_inferred_schemas(
-                probe_many(
-                    lambda p: _probe_file_schema(
-                        p, fmt, structure, opts.get("compression"), settings
-                    ),
-                    paths,
-                )
-            )
-        else:
-            schema = _probe_file_schema(
-                paths[0], fmt, structure, opts.get("compression"), settings
-            )
-        if _truthy(opts.get("virtual_columns")):
-            schema = _add_virtual_fields(schema)
-        self._schema_memo = schema
-        return self._schema_memo
-
-    def reader(self, schema) -> ClickHouseFileReader:
-        return ClickHouseFileReader(dict(self.options), schema)
 
 
 def file_table(
@@ -360,86 +229,18 @@ def file_table(
     ``compression`` defaults to the extension sniff (gz/zst/br/lz4/
     bz2/xz — anything INTO OUTFILE writes reads back);
     ``virtual_columns`` appends ``_path``/``_file`` per file."""
-    from ..plans.base import ensure_session
-
-    ensure_session(spark)
-    r = (
-        spark.read.format("clickhouse_file")
-        .option("path", path)
-        .option("format", fmt)
+    return load_objects(
+        spark,
+        ClickHouseFileDataSource,
+        path,
+        fmt,
+        structure=structure,
+        compression=compression,
+        virtual_columns=virtual_columns,
+        schema_inference_mode=schema_inference_mode,
+        format_regexp=format_regexp,
+        format_regexp_skip_unmatched=format_regexp_skip_unmatched,
     )
-    if structure:
-        r = r.option("structure", structure)
-    if compression:
-        r = r.option("compression", compression)
-    if virtual_columns:
-        r = r.option("virtual_columns", "true")
-    if schema_inference_mode:
-        r = r.option("schema_inference_mode", schema_inference_mode)
-    if format_regexp:
-        r = r.option("format_regexp", format_regexp)
-    if format_regexp_skip_unmatched:
-        r = r.option("format_regexp_skip_unmatched", "true")
-    return r.load()
-
-
-def make_file_udtf():
-    """UDTF for ``clickhouse_file(path, fmt[, structure])`` — the
-    SQL-invocable convenience shim (rows funnel through one worker;
-    the DataSource above is the scale path)."""
-    from pyspark.sql.functions import udtf
-    from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
-
-    class ClickHouseFileUDTF:
-        @staticmethod
-        def analyze(
-            path: AnalyzeArgument,
-            fmt: Optional[AnalyzeArgument] = None,
-            structure: Optional[AnalyzeArgument] = None,
-            compression: Optional[AnalyzeArgument] = None,
-        ) -> AnalyzeResult:
-            if path.value is None:
-                raise ValueError(
-                    "clickhouse_file(path, fmt[, structure[, "
-                    "compression]]) requires a literal path"
-                )
-            f = "CSVWithNamesAndTypes" if fmt is None else str(fmt.value)
-            st = None if structure is None else str(structure.value)
-            comp = None if compression is None else str(compression.value)
-            paths = expand_file_paths(str(path.value))
-            if not paths:
-                raise FileNotFoundError(
-                    f"clickhouse_file: nothing matches {path.value!r}"
-                )
-            return AnalyzeResult(
-                schema=_probe_file_schema(paths[0], f, st, comp)
-            )
-
-        def eval(
-            self,
-            path: str,
-            fmt: Optional[str] = None,
-            structure: Optional[str] = None,
-            compression: Optional[str] = None,
-        ) -> Iterator[tuple]:
-            f = fmt or "CSVWithNamesAndTypes"
-            names = None
-            for one in expand_file_paths(path):
-                with _open_file(one, compression) as fh:
-                    for blk in _decode_stream(fh, f, structure):
-                        rb = blk.to_record_batch()
-                        if names is None:
-                            names = list(rb.schema.names)
-                        elif set(rb.schema.names) != set(names):
-                            raise ValueError(
-                                f"clickhouse_file: {one!r} columns "
-                                f"{sorted(rb.schema.names)} != "
-                                f"{sorted(names)}"
-                            )
-                        for row in rb.to_pylist():
-                            yield tuple(row[n] for n in names)
-
-    return udtf(ClickHouseFileUDTF)
 
 
 def file_cluster_table(
@@ -463,20 +264,17 @@ def file_insert(
     partition_by: Optional[str] = None,
 ) -> int:
     """``INSERT INTO FUNCTION file(path, fmt) [PARTITION BY col]`` —
-    the local-path spelling of the s3() write half (same machinery:
-    one file, or one file per partition value via the
+    the local-path spelling of the s3() write half (the same INSERT
+    path: one file, or one file per partition value via the
     ``{_partition_id}`` placeholder; compression sniffed from the
     final name).  Relative/absolute local paths accepted."""
     import os
-
-    from .s3_table import s3_insert
 
     if "://" in path:
         raise ValueError(
             f"file() INSERT takes a local path, got a URI {path!r} — "
             "use s3_insert for scheme:// destinations"
         )
-    return s3_insert(
-        df, f"file://{os.path.abspath(path)}", fmt,
-        partition_by=partition_by,
+    return insert_objects(
+        df, FILE, os.path.abspath(path), fmt, partition_by=partition_by
     )

@@ -2,11 +2,14 @@
 sql-reference/table-functions/s3): read object-store files in a named
 wire format.
 
-Spark-first analogue of the url()/file() family with a pyarrow.fs
-transport — the same FS layer Spark's own parquet reader rides, so
-``s3://`` (and ``file://``, which exercises the identical code path
-in-sandbox, the tests/test_filesystem.py precedent) resolve through
-``pyarrow.fs``.  What s3() adds over url():
+The ``s3`` row of the shared object source (object_source.py, which
+owns the formats, the schema probe, the reader, the
+``clickhouse_s3(path, fmt[, structure[, compression]])`` SQL UDTF and
+the INSERT path), over a pyarrow.fs transport — the same FS layer
+Spark's own parquet reader rides, so ``s3://`` (and ``file://``, which
+exercises the identical code path on a local disk, the
+tests/test_filesystem.py precedent) resolve through ``pyarrow.fs``.
+The row also backs gcs() / oss() / hdfs().  What it adds:
 
 * **listing** — ``*`` / ``?`` wildcards (plus the shared ``{N..M}`` /
   ``{a,b}`` brace globs) expand by LISTING the store, which url()
@@ -17,14 +20,8 @@ in-sandbox, the tests/test_filesystem.py precedent) resolve through
   ``nosign`` for anonymous public-bucket access; ``region`` /
   ``endpoint`` override the defaults.  Without any of these the
   environment/instance credentials apply, exactly as pyarrow defaults.
-* **virtual columns** — ``_path`` (full URI) and ``_file`` (object
-  basename) per ClickHouse's s3() contract, shared with url()/file().
-
-Formats, ``structure``, and ``compression`` behave exactly as
-url()/file(): self-describing spellings decode directly, headerless
-plain spellings need a structure, WithNames infers, and compression
-sniffs the object-key extension (gz/zst/br/lz4/bz2/xz) unless given
-explicitly.
+* **writes** — ``s3_insert`` streams each object through the store's
+  output stream.
 
 ``s3Cluster(cluster, ...)``: in ClickHouse the cluster argument fans
 file processing out to cluster nodes; in Spark the per-file partitions
@@ -41,31 +38,19 @@ metadata-only, no data motion.
 from __future__ import annotations
 
 import posixpath
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from .url_table import (
-    _WITHNAMES_DECODERS,
-    _inference_mode,
-    merge_inferred_schemas,
-    probe_many,
-    _add_virtual_fields,
-    _append_virtuals,
-    _conform_batch,
-    _decode_stream,
-    _plan_arrow_types,
-    _split_top_level_commas,
-    _structured_decoder_for,
+from .object_source import (
+    ObjectSource,
+    Opener,
     _truthy,
-    format_settings,
     insert_kind,
-    structure_is_authoritative,
-    expand_url_globs,
-    parse_structure,
-    validate_format,
+    insert_objects,
+    load_objects,
 )
+from .url_table import _split_top_level_commas, expand_url_globs
 
 _GLOB_CHARS = ("*", "?", "[")
 
@@ -186,14 +171,14 @@ def expand_s3_paths(spec: str, fs_opts: Optional[dict] = None) -> list:
     return out
 
 
-def _open_object(uri: str, fs_opts: dict, compression: Optional[str]):
+def _open_object(uri: str, compression: Optional[str], opts: dict):
     """Open + transparent decompression (extension sniff on the object
     key unless an explicit method is given)."""
     import io
 
     from ..native.contentcodec import open_compressed, resolve_compression
 
-    fs, p, _scheme = _s3_fs(uri, fs_opts)
+    fs, p, _scheme = _s3_fs(uri, _fs_options(opts))
     # compression=None: pyarrow's own extension auto-detect is OFF —
     # this layer owns it (explicit option override + bz2/xz coverage)
     raw = fs.open_input_stream(p, compression=None)
@@ -209,147 +194,27 @@ def _open_object(uri: str, fs_opts: dict, compression: Optional[str]):
         raise
 
 
-def _probe_s3_schema(
-    uri: str,
-    fmt: str,
-    structure: Optional[str],
-    compression: Optional[str],
-    fs_opts: dict,
-    settings: Optional[dict] = None,
-):
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    from ..native.contentcodec import normalize_compression
-
-    normalize_compression(compression)
-    if structure_is_authoritative(fmt, structure):
-        from pyspark.sql.types import StructField, StructType
-
-        from .native_datasource import _ch_to_spark
-
-        validate_format(fmt, structure, settings)
-        return StructType(
-            [
-                StructField(n, _ch_to_spark(t), True)
-                for n, t in parse_structure(structure)
-            ]
-        )
-    validate_format(fmt, structure, settings)
-    with _open_object(uri, fs_opts, compression) as f:
-        blocks = _decode_stream(f, fmt, structure, settings)
-        try:
-            first = next(iter(blocks))
-        except StopIteration:
-            raise ValueError(
-                f"s3() cannot infer a schema from a zero-block "
-                f"{fmt} object at {uri!r}"
-            )
-    return from_arrow_schema(first.to_record_batch().schema)
+def _expand(spec: str, opts: dict) -> list:
+    return expand_s3_paths(spec, _fs_options(opts))
 
 
-class S3Partition(InputPartition):
-    def __init__(self, uri: str):
-        self.uri = uri
+def _create(uri: str, opts: dict):
+    fs, p, _scheme = _s3_fs(uri, _fs_options(opts))
+    return fs.open_output_stream(p, compression=None)
 
 
-class ClickHouseS3Reader(DataSourceReader):
-    def __init__(self, options: dict, plan_schema=None):
-        from ..native.contentcodec import normalize_compression
-
-        self.fs_opts = _fs_options(options)
-        self.uris = expand_s3_paths(options.get("path") or "", self.fs_opts)
-        if not self.uris:
-            raise ValueError("clickhouse_s3 requires a path option")
-        self.fmt = options.get("format", "CSVWithNamesAndTypes")
-        self.structure = (options.get("structure") or "").strip() or None
-        self.settings = format_settings(options)
-        validate_format(self.fmt, self.structure, self.settings)
-        self.compression = options.get("compression")
-        normalize_compression(self.compression)
-        self.fill_missing = _inference_mode(options) == "union"
-        self.virtuals = _truthy(options.get("virtual_columns"))
-        self.plan_schema = plan_schema
-        names = list(plan_schema.fieldNames()) if plan_schema else None
-        if names is not None and self.virtuals:
-            names = [n for n in names if n not in ("_path", "_file")]
-        self.field_names = names
-        self._arrow_types = None
-
-    def partitions(self):
-        return [S3Partition(u) for u in self.uris]
-
-    def read(self, partition: S3Partition) -> Iterator:
-        if self._arrow_types is None:
-            self._arrow_types = _plan_arrow_types(self.plan_schema)
-        f = _open_object(partition.uri, self.fs_opts, self.compression)
-        try:
-            for blk in _decode_stream(
-                f, self.fmt, self.structure, self.settings
-            ):
-                rb = _conform_batch(
-                    blk.to_record_batch(),
-                    self.field_names,
-                    self._arrow_types,
-                    "s3()",
-                    partition.uri,
-                    fill_missing=self.fill_missing,
-                )
-                if self.virtuals:
-                    rb = _append_virtuals(rb, partition.uri)
-                yield rb
-        finally:
-            try:
-                f.close()
-            except Exception:
-                pass
+S3 = Opener("s3()", "path", _FS_OPTION_KEYS, _expand, _open_object, _create)
 
 
-class ClickHouseS3DataSource(DataSource):
+class ClickHouseS3DataSource(ObjectSource):
     """``spark.read.format("clickhouse_s3").option("path", "s3://...")
     .option("format", "CSVWithNamesAndTypes").load()``"""
+
+    opener = S3
 
     @classmethod
     def name(cls) -> str:
         return "clickhouse_s3"
-
-    def schema(self):
-        memo = getattr(self, "_schema_memo", None)
-        if memo is not None:
-            return memo
-        opts = dict(self.options)
-        fs_opts = _fs_options(opts)
-        uris = expand_s3_paths(opts.get("path") or "", fs_opts)
-        if not uris:
-            raise ValueError("clickhouse_s3 requires a path option")
-        fmt = opts.get("format", "CSVWithNamesAndTypes")
-        structure = (opts.get("structure") or "").strip() or None
-        settings = format_settings(opts)
-        if (
-            _inference_mode(opts) == "union"
-            and len(uris) > 1
-            and not structure_is_authoritative(fmt, structure)
-        ):
-            schema = merge_inferred_schemas(
-                probe_many(
-                    lambda u: _probe_s3_schema(
-                        u, fmt, structure, opts.get("compression"),
-                        fs_opts, settings,
-                    ),
-                    uris,
-                )
-            )
-        else:
-            schema = _probe_s3_schema(
-                uris[0], fmt, structure, opts.get("compression"),
-                fs_opts, settings,
-            )
-        if _truthy(opts.get("virtual_columns")):
-            schema = _add_virtual_fields(schema)
-        self._schema_memo = schema
-        return self._schema_memo
-
-    def reader(self, schema) -> ClickHouseS3Reader:
-        return ClickHouseS3Reader(dict(self.options), schema)
 
 
 def s3_table(
@@ -373,35 +238,24 @@ def s3_table(
     """The ``s3(path [,credentials] [,format] [,structure]
     [,compression])`` table function as a DataFrame — one partition per
     matched object, wildcards resolved by listing."""
-    from ..plans.base import ensure_session
-
-    ensure_session(spark)
-    r = (
-        spark.read.format("clickhouse_s3")
-        .option("path", path)
-        .option("format", fmt)
+    return load_objects(
+        spark,
+        ClickHouseS3DataSource,
+        path,
+        fmt,
+        structure=structure,
+        compression=compression,
+        format_regexp=format_regexp,
+        format_regexp_skip_unmatched=format_regexp_skip_unmatched,
+        access_key_id=access_key_id,
+        secret_access_key=secret_access_key,
+        session_token=session_token,
+        region=region,
+        endpoint=endpoint,
+        nosign=nosign,
+        virtual_columns=virtual_columns,
+        schema_inference_mode=schema_inference_mode,
     )
-    for k, v in [
-        ("structure", structure),
-        ("compression", compression),
-        ("format_regexp", format_regexp),
-        ("format_regexp_skip_unmatched",
-         "true" if format_regexp_skip_unmatched else None),
-        ("access_key_id", access_key_id),
-        ("secret_access_key", secret_access_key),
-        ("session_token", session_token),
-        ("region", region),
-        ("endpoint", endpoint),
-    ]:
-        if v:
-            r = r.option(k, v)
-    if nosign:
-        r = r.option("nosign", "true")
-    if virtual_columns:
-        r = r.option("virtual_columns", "true")
-    if schema_inference_mode:
-        r = r.option("schema_inference_mode", schema_inference_mode)
-    return r.load()
 
 
 def s3_cluster_table(
@@ -415,48 +269,6 @@ def s3_cluster_table(
     if not (cluster or "").strip():
         raise ValueError("s3Cluster() needs a non-empty cluster name")
     return s3_table(spark, path, *args, **kwargs)
-
-
-# --------------------------------------------------------------------------
-# write half: INSERT INTO FUNCTION s3(path, ..., fmt) [PARTITION BY k]
-# --------------------------------------------------------------------------
-
-# partition values become path components; anything path-shaped is a
-# named refusal (ClickHouse rejects unsafe partition keys in object
-# names the same way)
-import re as _re
-
-_SAFE_PARTITION = _re.compile(r"^[A-Za-z0-9_\-=.]+$")
-
-
-def _write_object(uri: str, fs_opts: dict, batches, writer_key: str) -> int:
-    """Executor-side: encode ``batches`` with the shared wire writers
-    into ONE object at ``uri`` (compression sniffed from the key
-    extension, streaming through the fs output)."""
-    from ..native.contentcodec import (
-        resolve_compression,
-        wrap_compressed_write,
-    )
-    from ..native.rowbinary import derive_wire_types
-    from ..operators.outfile import _resolve_writer
-
-    fs, p, _scheme = _s3_fs(uri, fs_opts)
-    method = resolve_compression(uri)
-    raw = fs.open_output_stream(p, compression=None)
-    try:
-        sink = wrap_compressed_write(raw, method)
-        chunks, ch_types = derive_wire_types(list(batches))
-        n = _resolve_writer(writer_key)(
-            sink, chunks, ch_types=ch_types
-        ) or sum(b.num_rows for b in chunks)
-        if sink is not raw:
-            sink.close()
-    finally:
-        try:
-            raw.close()
-        except Exception:
-            pass
-    return int(n)
 
 
 def s3_insert(
@@ -473,95 +285,27 @@ def s3_insert(
     endpoint: Optional[str] = None,
 ) -> int:
     """``INSERT INTO FUNCTION s3(path, fmt) [PARTITION BY key]``
-    (docs: sql-reference/table-functions/s3 — 'Inserting data' and the
-    ``{_partition_id}`` spelling).
-
-    * Without ``partition_by``: ONE object, one executor writer task
-      (the INTO OUTFILE shape) — an export, not a table store.
-    * With ``partition_by='col'``: the path must contain the literal
-      ``{_partition_id}`` placeholder; rows group by the column and
-      EVERY GROUP WRITES ITS OWN OBJECT IN ITS OWN TASK
-      (groupBy().applyInArrow — the distributed path, N partition
-      values = N concurrent writers, nothing funnels through one
-      node).  Partition values become object-key components, so
-      path-shaped values ('/', '..', empty) refuse by name.
-
-    Compression is sniffed from the key extension exactly like the
-    read half — an ``INSERT`` to ``.../part_{_partition_id}.csv.gz``
-    writes gzip objects s3()/file()/url() read back.  Works on any
-    pyarrow.fs scheme (``file://`` in-sandbox, ``s3://`` with the same
-    credential options as :func:`s3_table`).  Returns rows written."""
-    writer_key = insert_kind(fmt, "s3()")
-    fs_opts = {
-        k: v
-        for k, v in {
-            "access_key_id": access_key_id,
-            "secret_access_key": secret_access_key,
-            "session_token": session_token,
-            "nosign": "true" if nosign else None,
-            "region": region,
-            "endpoint": endpoint,
-        }.items()
-        if v
-    }
+    through the shared INSERT path (``object_source.insert_objects``):
+    ONE object from one task, or with ``partition_by`` one object per
+    value of the column, each in its own task, named through the
+    ``{_partition_id}`` placeholder.  Compression is sniffed from the
+    key extension exactly like the read half — an ``INSERT`` to
+    ``.../part_{_partition_id}.csv.gz`` writes gzip objects
+    s3()/file()/url() read back.  Works on any pyarrow.fs scheme
+    (``file://`` locally, ``s3://`` with the same credential options
+    as :func:`s3_table`).  Returns rows written."""
+    insert_kind(fmt, S3.surface)  # the format refuses before the path
     if "://" not in path:
         raise ValueError(f"s3() needs a scheme:// URI, got {path!r}")
-
-    if partition_by is None:
-        if "{_partition_id}" in path:
-            raise ValueError(
-                "s3(): path carries {_partition_id} but no PARTITION BY "
-                "column was given"
-            )
-
-        def write_single(batches):
-            import pyarrow as pa_exec
-
-            n = _write_object(path, fs_opts, batches, writer_key)
-            yield pa_exec.RecordBatch.from_arrays(
-                [pa_exec.array([n], type=pa_exec.int64())], names=["n"]
-            )
-
-        out = df.repartition(1).mapInArrow(write_single, "n bigint")
-        return int(out.collect()[0]["n"])
-
-    if "{_partition_id}" not in path:
-        raise ValueError(
-            "s3() PARTITION BY needs a {_partition_id} placeholder in "
-            "the path (ClickHouse: 'INSERT INTO FUNCTION s3(.../"
-            "file_{_partition_id}.csv) PARTITION BY ...')"
-        )
-    if partition_by not in df.columns:
-        raise ValueError(
-            f"PARTITION BY column {partition_by!r} is not in the "
-            f"DataFrame ({df.columns})"
-        )
-
-    def write_group(table):
-        import pyarrow as pa_exec
-
-        key = table.column(partition_by)[0].as_py()
-        key_s = "" if key is None else str(key)
-        if not _SAFE_PARTITION.fullmatch(key_s):
-            raise ValueError(
-                f"s3() PARTITION BY value {key_s!r} is not a safe "
-                "object-key component ([A-Za-z0-9_-=.]+ only)"
-            )
-        uri = path.replace("{_partition_id}", key_s)
-        n = _write_object(uri, fs_opts, table.to_batches(), writer_key)
-        return pa_exec.table(
-            {
-                "k": pa_exec.array([key_s], type=pa_exec.string()),
-                "n": pa_exec.array([n], type=pa_exec.int64()),
-            }
-        )
-
-    out = df.groupBy(partition_by).applyInArrow(
-        write_group, "k string, n bigint"
-    )
-    # bounded collect: one row PER PARTITION VALUE (the convergence-
-    # scalar contract — never the data)
-    return int(sum(r["n"] for r in out.collect()))
+    opts = {
+        "access_key_id": access_key_id,
+        "secret_access_key": secret_access_key,
+        "session_token": session_token,
+        "nosign": "true" if nosign else None,
+        "region": region,
+        "endpoint": endpoint,
+    }
+    return insert_objects(df, S3, path, fmt, opts, partition_by=partition_by)
 
 
 # --------------------------------------------------------------------------
@@ -609,69 +353,3 @@ def hdfs_cluster_table(
     if not (cluster or "").strip():
         raise ValueError("hdfsCluster() needs a non-empty cluster name")
     return hdfs_table(spark, path, *args, **kwargs)
-
-
-def make_s3_udtf():
-    """UDTF for ``clickhouse_s3(path, fmt[, structure[, compression]])``
-    — the SQL-invocable convenience shim (rows funnel through one
-    worker; the DataSource above is the scale path).  Credentials ride
-    the environment here — the DataSource options carry explicit ones."""
-    from pyspark.sql.functions import udtf
-    from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
-
-    class ClickHouseS3UDTF:
-        @staticmethod
-        def analyze(
-            path: AnalyzeArgument,
-            fmt: Optional[AnalyzeArgument] = None,
-            structure: Optional[AnalyzeArgument] = None,
-            compression: Optional[AnalyzeArgument] = None,
-        ) -> AnalyzeResult:
-            if path.value is None:
-                raise ValueError(
-                    "clickhouse_s3(path, fmt[, structure[, compression]]) "
-                    "requires a literal path"
-                )
-            f = "CSVWithNamesAndTypes" if fmt is None else str(fmt.value)
-            st = None if structure is None else str(structure.value)
-            comp = None if compression is None else str(compression.value)
-            uris = expand_s3_paths(str(path.value), {})
-            if not uris:
-                raise FileNotFoundError(
-                    f"clickhouse_s3: nothing matches {path.value!r}"
-                )
-            return AnalyzeResult(
-                schema=_probe_s3_schema(uris[0], f, st, comp, {})
-            )
-
-        def eval(
-            self,
-            path: str,
-            fmt: Optional[str] = None,
-            structure: Optional[str] = None,
-            compression: Optional[str] = None,
-        ) -> Iterator[tuple]:
-            f = fmt or "CSVWithNamesAndTypes"
-            names = None
-            for uri in expand_s3_paths(path, {}):
-                stream = _open_object(uri, {}, compression)
-                try:
-                    for blk in _decode_stream(stream, f, structure):
-                        rb = blk.to_record_batch()
-                        if names is None:
-                            names = list(rb.schema.names)
-                        elif set(rb.schema.names) != set(names):
-                            raise ValueError(
-                                f"clickhouse_s3: {uri!r} columns "
-                                f"{sorted(rb.schema.names)} != "
-                                f"{sorted(names)}"
-                            )
-                        for row in rb.to_pylist():
-                            yield tuple(row[n] for n in names)
-                finally:
-                    try:
-                        stream.close()
-                    except Exception:
-                        pass
-
-    return udtf(ClickHouseS3UDTF)

@@ -131,73 +131,6 @@ def make_scan_udtf():
     return udtf(ClickHouseScanUDTF)
 
 
-def make_url_udtf():
-    """UDTF class for ``clickhouse_url(url, fmt)`` — the SQL-invocable
-    form of the url() table function (docs: table-functions/url);
-    schema probed from the stream header at analyze time."""
-    from pyspark.sql.functions import udtf
-    from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
-
-    class ClickHouseURLUDTF:
-        @staticmethod
-        def analyze(
-            url: AnalyzeArgument,
-            fmt: Optional[AnalyzeArgument] = None,
-            structure: Optional[AnalyzeArgument] = None,
-        ) -> AnalyzeResult:
-            from .url_table import _probe_schema, expand_urls
-
-            if url.value is None:
-                raise ValueError(
-                    "clickhouse_url(url, fmt[, structure]) requires a "
-                    "literal URL"
-                )
-            f = "CSVWithNamesAndTypes" if fmt is None else str(fmt.value)
-            st = None if structure is None else str(structure.value)
-            urls = expand_urls(str(url.value))
-            if not urls:
-                raise ValueError("clickhouse_url requires a URL")
-            return AnalyzeResult(schema=_probe_schema(urls[0], f, st))
-
-        def eval(
-            self,
-            url: str,
-            fmt: Optional[str] = None,
-            structure: Optional[str] = None,
-        ) -> Iterator[tuple]:
-            from .url_table import _decode_stream, _open_url, expand_urls
-
-            f = fmt or "CSVWithNamesAndTypes"
-            # ONE name order for the whole result — the first stream's
-            # (analyze() probed the first URL, so this matches the
-            # declared schema). A later URL with the same columns in a
-            # different order must realign by name, not emit in its own
-            # stream order (r13 ADVICE: silent cross-column
-            # misalignment); a different column SET is a named error.
-            # _open_url (not the raw GET): the compression sniff must
-            # match analyze()'s probe — a .zst URL decoded compressed
-            # in analyze but raw here would fail mid-scan (r15).
-            names = None
-            for one in expand_urls(url):
-                with _open_url(one, None) as resp:
-                    for blk in _decode_stream(resp, f, structure):
-                        rb = blk.to_record_batch()
-                        if names is None:
-                            names = list(rb.schema.names)
-                        elif set(rb.schema.names) != set(names):
-                            raise ValueError(
-                                "clickhouse_url: URL "
-                                f"{one!r} returned columns "
-                                f"{sorted(rb.schema.names)}, expected "
-                                f"{sorted(names)} (all URLs in the "
-                                "list must serve the same column set)"
-                            )
-                        for row in rb.to_pylist():
-                            yield tuple(row[n] for n in names)
-
-    return udtf(ClickHouseURLUDTF)
-
-
 def make_format_udtf():
     """UDTF for ``clickhouse_format(fmt, data[, structure])`` — the
     SQL-invocable form of the format() table function (docs:
@@ -217,7 +150,7 @@ def make_format_udtf():
 
             from pyspark.sql.pandas.types import from_arrow_schema
 
-            from .url_table import _decode_stream
+            from .object_source import _decode_stream
 
             if fmt.value is None or data.value is None:
                 raise ValueError(
@@ -243,7 +176,7 @@ def make_format_udtf():
         ) -> Iterator[tuple]:
             import io
 
-            from .url_table import _decode_stream
+            from .object_source import _decode_stream
 
             names = None
             for blk in _decode_stream(
@@ -349,14 +282,17 @@ def register_table_functions(spark: SparkSession) -> None:
     spark.udtf.register("clickhouse_native", make_native_udtf())
     spark.udtf.register("clickhouse_scan", make_scan_udtf())
     spark.udtf.register("clickhouse_native_parts", make_parts_udtf())
-    spark.udtf.register("clickhouse_url", make_url_udtf())
     spark.udtf.register("clickhouse_format", make_format_udtf())
-    from .file_table import make_file_udtf
+    from .file_table import ClickHouseFileDataSource
+    from .object_source import make_object_udtf
+    from .s3_table import ClickHouseS3DataSource
+    from .url_table import ClickHouseURLDataSource
 
-    spark.udtf.register("clickhouse_file", make_file_udtf())
-    from .s3_table import make_s3_udtf
-
-    spark.udtf.register("clickhouse_s3", make_s3_udtf())
+    for source in (
+        ClickHouseURLDataSource, ClickHouseFileDataSource,
+        ClickHouseS3DataSource,
+    ):
+        spark.udtf.register(source.name(), make_object_udtf(source))
     spark.udtf.register("clickhouse_native_columns", make_columns_udtf())
     from .generator_tables import make_numbers_udtf
 

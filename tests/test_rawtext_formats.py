@@ -10,10 +10,12 @@ import io
 import pyarrow as pa
 import pytest
 
-from duckdb_extension_clickhouse_native_spark.sources.url_table import (
+from duckdb_extension_clickhouse_native_spark.sources.object_source import (
     _decode_stream,
-    format_table,
     structure_is_authoritative,
+)
+from duckdb_extension_clickhouse_native_spark.sources.url_table import (
+    format_table,
 )
 
 

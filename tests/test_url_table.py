@@ -203,7 +203,7 @@ def test_format_structure_values(spark):
 
 
 def test_structure_rejected_for_selfdescribing(spark):
-    from duckdb_extension_clickhouse_native_spark.sources.url_table import (
+    from duckdb_extension_clickhouse_native_spark.sources.object_source import (
         _structured_decoder_for,
     )
 

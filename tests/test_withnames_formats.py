@@ -249,7 +249,7 @@ def test_union_mode_url_and_refusals(spark, tmp_path):
 def test_union_probe_runs_threaded(spark, tmp_path):
     """probe_many: the union bind probes elements through a bounded
     pool (order preserved, first failure loud)."""
-    from duckdb_extension_clickhouse_native_spark.sources.url_table import (
+    from duckdb_extension_clickhouse_native_spark.sources.object_source import (
         probe_many,
     )
 
