@@ -17,14 +17,26 @@ double-hashing over blake2b-128 (h1 + i*h2 mod m) on a type-tagged
 byte encoding — int and string columns only (float equality pruning
 is a footgun; bool/None never index). False positives only ever KEEP
 a file — pruning stays conservative by construction.
+
+The writer works on whole arrays: :func:`value_bytes_array` tags a
+block's distinct values in Arrow, and :func:`build_bloom` hashes each
+distinct entry once (the blake2b digest is the only per-value step)
+and sets all ``k`` bit positions of all entries with numpy. The
+reader probes one value at a time through the same
+:func:`_positions`, so the two sides cannot drift apart; the wire
+format is the one above, bit for bit.
 """
 
 from __future__ import annotations
 
 import base64
-import math
+import hashlib
 import re
-from typing import Iterable, Optional
+from typing import Iterable, Iterator, Optional
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # ~1% false-positive rate at 10 bits/value with k=7 (standard curve)
 _BITS_PER_VALUE = 10
@@ -54,14 +66,37 @@ def value_bytes(v) -> Optional[bytes]:
     return None
 
 
-def _hashes(data: bytes, k: int, m: int):
-    import hashlib
+def value_bytes_array(values: pa.Array) -> Optional[list]:
+    """:func:`value_bytes` of every element of ``values`` (non-null),
+    tagged in Arrow; None when the array's type is unsupported."""
+    t = values.type
+    if pa.types.is_integer(t):
+        tag, text = "i", values.cast(pa.string())
+    elif pa.types.is_string(t) or pa.types.is_large_string(t):
+        tag, text = "s", values
+    else:
+        return None
+    tagged = pc.binary_join_element_wise(
+        pa.scalar(tag, text.type), text, pa.scalar("", text.type)
+    )
+    # to_numpy builds the bytes objects in C++ (to_pylist goes through
+    # one Arrow scalar per value)
+    return tagged.cast(pa.large_binary()).to_numpy(zero_copy_only=False).tolist()
 
-    d = hashlib.blake2b(data, digest_size=16).digest()
-    h1 = int.from_bytes(d[:8], "little")
-    h2 = int.from_bytes(d[8:], "little") | 1  # odd: full-period stride
-    for i in range(k):
-        yield (h1 + i * h2) % m
+
+def _digest(data: bytes) -> bytes:
+    return hashlib.blake2b(data, digest_size=16).digest()
+
+
+def _positions(h1, h2, k: int, m) -> Iterator:
+    """The ``k`` double-hashing bit positions ``(h1 + i*h2') mod m``,
+    ``h2' = h2 | 1`` (odd: full-period stride). Built from ``h1 mod m``
+    and ``h2' mod m``, so no intermediate exceeds ``k * m``: exact on
+    Python ints (one probe) and on uint64 numpy arrays (every entry of
+    a part at once, with ``m`` a ``np.uint64``) alike."""
+    a = h1 % m
+    b = (h2 | 1) % m
+    return ((a + i * b) % m for i in range(k))
 
 
 def build_bloom(distinct_encoded: Iterable[bytes]) -> Optional[dict]:
@@ -74,11 +109,12 @@ def build_bloom(distinct_encoded: Iterable[bytes]) -> Optional[dict]:
     m = min(_MAX_BITS, max(64, _BITS_PER_VALUE * len(vals)))
     # round up to a byte multiple so the b64 payload is clean
     m = ((m + 7) // 8) * 8
-    bits = bytearray(m // 8)
-    for b in vals:
-        for h in _hashes(b, _K, m):
-            bits[h >> 3] |= 1 << (h & 7)
-    return {"m": m, "k": _K, "b64": base64.b64encode(bytes(bits)).decode()}
+    h = np.frombuffer(b"".join(map(_digest, vals)), dtype="<u8").reshape(-1, 2)
+    bits = np.zeros(m, dtype=bool)
+    for pos in _positions(h[:, 0], h[:, 1], _K, np.uint64(m)):
+        bits[pos] = True
+    packed = np.packbits(bits, bitorder="little").tobytes()
+    return {"m": m, "k": _K, "b64": base64.b64encode(packed).decode()}
 
 
 NGRAM_N = 3  # ClickHouse ngrambf_v1's customary gram size
@@ -106,7 +142,10 @@ def bloom_maybe_contains(bloom: dict, v) -> bool:
             return True
     except (KeyError, TypeError, ValueError):
         return True
-    return all(bits[h >> 3] & (1 << (h & 7)) for h in _hashes(b, k, m))
+    d = _digest(b)
+    h1 = int.from_bytes(d[:8], "little")
+    h2 = int.from_bytes(d[8:], "little")
+    return all(bits[h >> 3] & (1 << (h & 7)) for h in _positions(h1, h2, k, m))
 
 
 # tokenbf_v1's tokenizer splits on non-alphanumeric characters; this

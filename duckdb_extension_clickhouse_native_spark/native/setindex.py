@@ -36,13 +36,18 @@ from typing import Optional
 SET_MAX_DISTINCT = 100
 
 
-def set_index_value(v) -> Optional[object]:
-    """The JSON-able stored form of ``v``; None for unsupported types
-    (callers drop the column's index — 'cannot prove absence')."""
-    if isinstance(v, bool) or v is None:
+def set_index_values(values: "pa.Array") -> Optional[list]:
+    """The JSON-able stored forms of a block's distinct non-null
+    ``values``; None for unsupported types (callers drop the column's
+    index — 'cannot prove absence') and for more values than
+    SET_MAX_DISTINCT (the index would be dropped anyway)."""
+    import pyarrow as pa
+
+    t = values.type
+    if len(values) > SET_MAX_DISTINCT:
         return None
-    if isinstance(v, int) or isinstance(v, str):
-        return v
+    if pa.types.is_integer(t) or pa.types.is_string(t) or pa.types.is_large_string(t):
+        return values.to_pylist()
     return None
 
 

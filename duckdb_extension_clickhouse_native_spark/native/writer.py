@@ -11,6 +11,14 @@ round-trip test fixtures. Both entry points —
 :func:`write_native_file` and the DataSource writer — write through
 :class:`NativePartSink`; every stats-sidecar read goes through
 :func:`load_stats`.
+
+The per-block and per-part work runs on whole arrays: each block's
+distinct values are collected once per indexed column in Arrow
+(:func:`_accumulate`), blooms are built with numpy in
+``bloomindex.build_bloom``, and the DataSource writer's hive fan-out
+is a dictionary encode plus one stable sort. None of it changes the
+wire format: the part, sidecar and marks bytes are those of the
+formats described here (tests pin the sidecar values).
 """
 
 from __future__ import annotations
@@ -23,11 +31,17 @@ from typing import BinaryIO, Callable, Iterable, Optional
 
 import pyarrow as pa
 
-from .bloomindex import MAX_DISTINCT, build_bloom, string_ngrams, string_tokens, value_bytes
+from .bloomindex import (
+    MAX_DISTINCT,
+    build_bloom,
+    string_ngrams,
+    string_tokens,
+    value_bytes_array,
+)
 from .codec import write_block
 from .delmask import delmask_path
 from .marks import MarksRecorder, marks_sidecar_path
-from .setindex import SET_MAX_DISTINCT, set_index_value
+from .setindex import SET_MAX_DISTINCT, set_index_values
 from .types import CHType, from_arrow
 
 DEFAULT_BLOCK_ROWS = 65_409  # clickhouse's default max_block_size
@@ -231,8 +245,9 @@ class SkipIndex:
     """One skip-index kind: how the writer accumulates an indexed
     column and what the sidecar stores for it."""
 
-    # non-null value -> its index entries; None marks an unsupported
-    # type, which drops the column's index
+    # a block's distinct non-null values (one Arrow array) -> their
+    # index entries; None (an unsupported type, or more values than
+    # the cap) drops the column's index
     entries: Callable
     # past this many distinct entries the column's index is dropped
     cap: int
@@ -241,12 +256,12 @@ class SkipIndex:
     build: Callable
 
 
-def _single(entry: Callable) -> Callable:
-    """``entries`` for a kind that stores one entry per distinct value."""
+def _per_string(tokenize: Callable) -> Callable:
+    """``entries`` for a kind that stores the union of a tokenizer's
+    output over the distinct strings."""
 
-    def entries(v):
-        e = entry(v)
-        return None if e is None else (e,)
+    def entries(values: pa.Array) -> set:
+        return set().union(*map(tokenize, values.to_pylist()))
 
     return entries
 
@@ -260,27 +275,34 @@ def _single(entry: Callable) -> Callable:
 #   set     (native/setindex.py): the complete distinct-value list of a
 #           low-cardinality column — evaluates ANY pushable predicate.
 SKIP_INDEXES = {
-    "bloom": SkipIndex(_single(value_bytes), MAX_DISTINCT, False, build_bloom),
-    "ngrambf": SkipIndex(string_ngrams, MAX_DISTINCT, True, build_bloom),
-    "tokenbf": SkipIndex(string_tokens, MAX_DISTINCT, True, build_bloom),
+    "bloom": SkipIndex(value_bytes_array, MAX_DISTINCT, False, build_bloom),
+    "ngrambf": SkipIndex(_per_string(string_ngrams), MAX_DISTINCT, True, build_bloom),
+    "tokenbf": SkipIndex(_per_string(string_tokens), MAX_DISTINCT, True, build_bloom),
     "set": SkipIndex(
-        _single(set_index_value), SET_MAX_DISTINCT, False, lambda v: sorted(v) or None
+        set_index_values, SET_MAX_DISTINCT, False, lambda v: sorted(v) or None
     ),
 }
 
 
 def _accumulate(acc: set, arr, index: SkipIndex) -> bool:
-    """Add ``arr``'s distinct non-null values to ``acc``; False when the
-    column can no longer carry the index."""
+    """Add the index entries of ``arr``'s distinct non-null values to
+    ``acc`` (one array call per block, no per-value Python for int and
+    string values); False when the column can no longer carry the
+    index. A block with no non-null value keeps the index whatever
+    the column's type."""
     import pyarrow.compute as pc
 
-    for v in pc.unique(arr).to_pylist():
-        if v is None:
-            continue
-        e = index.entries(v)
-        if e is None:
-            return False
-        acc.update(e)
+    values = pc.unique(arr)
+    if pa.types.is_dictionary(values.type):
+        # a dictionary may repeat a value under two indices
+        values = pc.unique(values.dictionary_decode())
+    values = values.drop_null()
+    if len(values) == 0:
+        return True
+    e = index.entries(values)
+    if e is None:
+        return False
+    acc.update(e)
     return len(acc) <= index.cap
 
 
@@ -512,8 +534,11 @@ class NativePartSink:
             os.remove(self.path)
             return None
         tmp = stats_sidecar_path(self.path) + ".tmp"
+        # json.dumps runs the C encoder; json.dump streams through the
+        # pure-Python one. Same bytes.
+        side = json.dumps(self._rec.sidecar(self.path))
         with open(tmp, "w") as sf:
-            json.dump(self._rec.sidecar(self.path), sf)
+            sf.write(side)
         os.replace(tmp, stats_sidecar_path(self.path))
         # string-column marks (native/marks.py): the per-row lengths the
         # writer just serialized, so readers skip the varint walk. When

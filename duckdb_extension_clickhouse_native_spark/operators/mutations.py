@@ -247,6 +247,26 @@ def _read_staged(spark, stage):
     )
 
 
+def _carried_indexes(src_dir: str, parts: list, columns: list) -> dict:
+    """{kind: columns} of the skip indexes the sidecars of ``parts``
+    carry, by current column name (an old part names a renamed column
+    by a prior physical name) and limited to ``columns`` — the
+    ``index_<kind>`` options that rebuild them on the rewritten parts,
+    as ClickHouse rebuilds a mutated part's skip indexes."""
+    from ..native.writer import SKIP_INDEXES, load_stats
+    from ..sources.native_datasource import _alias_stats
+
+    aliases = _alias_map(src_dir)
+    carried: dict = {}
+    for p in parts:
+        side = _alias_stats(load_stats(p) or {}, aliases)
+        for kind in SKIP_INDEXES:
+            entry = side.get(kind)
+            if isinstance(entry, dict):
+                carried.setdefault(kind, set()).update(c for c in entry if c in columns)
+    return {kind: sorted(cols) for kind, cols in carried.items() if cols}
+
+
 def rewrite_parts(
     spark: SparkSession,
     src_dir: str,
@@ -273,7 +293,9 @@ def rewrite_parts(
        columns there — into ONE append write, partitioned by the keys
        when the table has any. O(1) Spark jobs however many partition
        directories there are (a per-directory loop would be
-       O(partitions) jobs, untenable at 100k partitions).
+       O(partitions) jobs, untenable at 100k partitions). The write
+       rebuilds every skip index the rewritten parts carried
+       (:func:`_carried_indexes`), so point lookups keep pruning them.
 
     Returns {"untouched_parts": kept, "rewritten_parts": rewritten +
     dropped, "out_dir": out_dir}, plus "partition_dirs" for a hive
@@ -312,11 +334,10 @@ def rewrite_parts(
 
     if rewrite:
         with stage_parts(src_dir, rewrite, out_dir) as stage:
-            writer = (
-                transform(_read_staged(spark, stage))
-                .write.format("clickhouse_native")
-                .mode("append")
-            )
+            df = transform(_read_staged(spark, stage))
+            writer = df.write.format("clickhouse_native").mode("append")
+            for kind, cols in _carried_indexes(src_dir, rewrite, df.columns).items():
+                writer = writer.option(f"index_{kind}", ",".join(cols))
             if part_keys:
                 writer = writer.option("partition_by", ",".join(part_keys))
             if compression:

@@ -1596,25 +1596,51 @@ class ClickHouseNativeWriter(DataSourceArrowWriter):
 
     def _split(self, batch: "pa.RecordBatch") -> dict:
         """{combo: row indices} of the batch's hive directories, the
-        indices None for all rows (no ``partition_by``: one combo ())."""
+        indices None for all rows (no ``partition_by``: one combo ()).
+
+        Array-level: each key column is dictionary-encoded and the
+        running combo code re-encoded after every key, so it stays a
+        dense first-appearance rank (< rows, no overflow however many
+        keys); one stable argsort then groups the rows. Combos come
+        in first-appearance order and rows keep their order within a
+        combo; all NaN keys of a column are one combo."""
+        import numpy as np
+        import pyarrow as pa
+
         if not self.partition_by:
             return {(): None}
-        key_cols = [
-            batch.column(batch.schema.get_field_index(k)).to_pylist()
-            for k in self.partition_by
-        ]
-        # one pass over the rows: bucket row indices per combo
-        # (O(rows), not O(rows x combos)), then one take() per
-        # combo — high-cardinality partition_by stays linear
-        buckets: dict = {}
-        for ri, combo in enumerate(zip(*key_cols)):
-            if None in combo:
-                raise ValueError(
-                    f"NULL partition value for {self.partition_by} "
-                    "(hive paths cannot encode NULL)"
-                )
-            buckets.setdefault(combo, []).append(ri)
-        return buckets
+        keys = [batch.column(batch.schema.get_field_index(k)) for k in self.partition_by]
+        if any(k.null_count for k in keys):
+            raise ValueError(
+                f"NULL partition value for {self.partition_by} "
+                "(hive paths cannot encode NULL)"
+            )
+        code = None
+        for k in keys:
+            if pa.types.is_dictionary(k.type):
+                # its dictionary may be unordered or repeat values
+                k = k.dictionary_decode()
+            enc = k.dictionary_encode()
+            idx = enc.indices.to_numpy().astype(np.int64)
+            if code is not None:
+                idx = pa.array(code * len(enc.dictionary) + idx)
+                idx = idx.dictionary_encode().indices.to_numpy().astype(np.int64)
+            code = idx
+        order = np.argsort(code, kind="stable")
+        counts = np.bincount(code)
+        bounds = np.cumsum(counts)
+        starts = bounds - counts
+        first_rows = pa.array(order[starts])
+        combos = zip(*(k.take(first_rows).to_pylist() for k in keys))
+        # Arrow tells -0.0 from 0.0 but Python (the sink key and its
+        # directory) does not: equal combos share the first one's sink
+        groups: dict = {}
+        for combo, lo, hi in zip(combos, starts.tolist(), bounds.tolist()):
+            groups.setdefault(combo, []).append(order[lo:hi])
+        return {
+            combo: idx[0] if len(idx) == 1 else np.sort(np.concatenate(idx))
+            for combo, idx in groups.items()
+        }
 
     def write(self, iterator: Iterator["pa.RecordBatch"]) -> NativeWriteCommit:
         import pyarrow as pa
@@ -1650,16 +1676,19 @@ class ClickHouseNativeWriter(DataSourceArrowWriter):
                 for combo, idxs in self._split(batch).items():
                     sub = batch
                     if idxs is not None:
-                        sub = batch.take(pa.array(idxs, type=pa.int64()))
+                        sub = batch.take(pa.array(idxs))
                         sub = pa.RecordBatch.from_arrays(
                             [sub.column(i) for i in keep_idx],
                             names=[sub.schema.names[i] for i in keep_idx],
                         )
-                    sink = sinks.get(combo)
+                    # keyed by directory: a NaN key never equals itself,
+                    # so a combo key would open a second sink on the
+                    # same file for the next batch
+                    d = self._partition_dir(combo)
+                    sink = sinks.get(d)
                     if sink is None:
-                        d = self._partition_dir(combo)
                         os.makedirs(d, exist_ok=True)
-                        sink = sinks[combo] = NativePartSink(
+                        sink = sinks[d] = NativePartSink(
                             os.path.join(d, f"part-{token}.clickhouse"),
                             compression=self.compression,
                             block_rows=self.block_rows,

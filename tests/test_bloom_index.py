@@ -50,6 +50,63 @@ def test_bloom_type_tagging_and_unsupported():
     assert build_bloom(value_bytes(i) for i in range(MAX_DISTINCT + 1)) is None
 
 
+# build_bloom outputs pinned before the array-level build: the sidecar
+# wire format must not move (parts written by either build prune alike)
+GOLDEN_BLOOMS = {
+    "ints": ([0, 1, 42, 1 << 62], "RIghlRMnamA="),
+    "negative_ints": ([-1, -7, -(1 << 62)], "ckEFQ7iCIAw="),
+    "uint64_max": ([2**64 - 1], "AUgAAoAAJAA="),
+    "strings": (["a", "user-1", ""], "QKNggRaESjg="),
+    "unicode": (["héllo", "日本語", "🙂"], "EAQB+oshhEA="),
+}
+
+
+@pytest.mark.parametrize("case", sorted(GOLDEN_BLOOMS))
+def test_bloom_bitset_golden(case):
+    vals, b64 = GOLDEN_BLOOMS[case]
+    bl = build_bloom(value_bytes(v) for v in vals)
+    assert bl == {"m": 64, "k": 7, "b64": b64}
+    assert all(bloom_maybe_contains(bl, v) for v in vals)
+
+
+@pytest.mark.parametrize("case", sorted(GOLDEN_BLOOMS))
+def test_arrow_tagging_matches_value_bytes(case):
+    from duckdb_extension_clickhouse_native_spark.native.bloomindex import (
+        value_bytes_array,
+    )
+
+    vals, _ = GOLDEN_BLOOMS[case]
+    arr = pa.array(vals, pa.uint64() if case == "uint64_max" else None)
+    assert value_bytes_array(arr) == [value_bytes(v) for v in vals]
+    big = pa.array(vals, pa.large_string()) if arr.type == pa.string() else arr
+    assert value_bytes_array(big) == [value_bytes(v) for v in vals]
+
+
+@pytest.mark.parametrize(
+    "vals, m, digest",
+    [
+        # 2000 ints around zero: m = 10 bits/value
+        (
+            range(-500, 1500),
+            20000,
+            "8a71969567e589cb128887a24530208dfd6ff049c7c1bf6edea9d9636b151e0b",
+        ),
+        # past the bit cap: m = 2^21
+        (
+            (f"u{i}" for i in range(300_000)),
+            1 << 21,
+            "a1073538e2ac84828249ce2bd2a46bbbdea956307d865211ccdd5d4d04fcfc9d",
+        ),
+    ],
+)
+def test_bloom_bitset_golden_wide(vals, m, digest):
+    import hashlib
+
+    bl = build_bloom(value_bytes(v) for v in vals)
+    assert (bl["m"], bl["k"]) == (m, 7)
+    assert hashlib.sha256(bl["b64"].encode()).hexdigest() == digest
+
+
 def test_bloom_malformed_entry_never_prunes():
     assert bloom_maybe_contains({}, "x")
     assert bloom_maybe_contains({"m": -1, "k": 7, "b64": ""}, "x")
@@ -243,3 +300,60 @@ def test_mutation_part_reuse_uses_bloom(spark, tmp_path):
     assert (
         spark.read.format("clickhouse_native").load(out).count() == 8 * 200 - 1
     )
+
+
+@pytest.mark.parametrize("renamed", [False, True])
+def test_rewritten_parts_keep_skip_indexes(spark, tmp_path, renamed):
+    """A mutation rebuilds the skip indexes of the parts it rewrites
+    (as ClickHouse does): the rewritten sidecar keeps its bloom and set
+    entries, so a point lookup on the output still prunes that part —
+    also when the indexed column was renamed after the parts were
+    written (their sidecars name it by its old physical name)."""
+    import hashlib
+
+    from duckdb_extension_clickhouse_native_spark.native.tableschema import (
+        alter_rename_column,
+    )
+    from duckdb_extension_clickhouse_native_spark.operators.mutations import (
+        mutate_native_dir,
+    )
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    os.makedirs(src)
+    buckets = {b: [] for b in range(4)}
+    for i in range(800):
+        uid = f"u{i}"
+        buckets[int(hashlib.md5(uid.encode()).hexdigest(), 16) % 4].append(uid)
+    for b, uids in buckets.items():
+        t = pa.table(
+            {
+                "uid": pa.array(uids),
+                "cat": pa.array([f"c{b}{i % 2}" for i in range(len(uids))]),
+            }
+        )
+        write_native_file(
+            os.path.join(src, f"part-{b}.clickhouse"),
+            t,
+            index_bloom=["uid"],
+            index_set=["cat"],
+        )
+    uid = "user_id" if renamed else "uid"
+    if renamed:
+        alter_rename_column(src, "uid", uid)
+    victim = buckets[0][0]
+    st = mutate_native_dir(spark, src, out, delete_where=[(uid, "=", victim)])
+    assert st["untouched_parts"] == 3 and st["rewritten_parts"] == 1
+    (rewritten,) = [
+        f for f in os.listdir(out) if f.endswith(".clickhouse") and not f.startswith("keep-")
+    ]
+    side = json.load(open(stats_sidecar_path(os.path.join(out, rewritten))))
+    assert {"bloom", "set"} <= set(side)
+    assert list(side["bloom"]) == [uid] and list(side["set"]) == ["cat"]
+    assert sorted(side["set"]["cat"]) == ["c00", "c01"]
+    # a uid of another part that the rewritten part's min/max cannot
+    # rule out: only its bloom can prune the rewritten part
+    lo, hi = side["columns"][uid]["min"], side["columns"][uid]["max"]
+    probe = next(u for u in buckets[1] if lo < u < hi)
+    df = spark.read.format("clickhouse_native").load(out).filter(f"{uid} = '{probe}'")
+    assert [r[uid] for r in df.collect()] == [probe]
+    assert _planned_partitions(spark, df) == 1

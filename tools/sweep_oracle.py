@@ -5,7 +5,8 @@ scale). Exit code 1 on any mismatch.
 
 Run: python tools/sweep_oracle.py [sf_dir] [cpus] [name_substr,...]
 (optional third arg: comma-separated substrings — only queries whose
-name contains one of them are swept)
+name contains one of them are swept; exit code 2 when it matches
+none)
 """
 
 from __future__ import annotations
@@ -29,14 +30,20 @@ def main() -> int:
     from duckdb_extension_clickhouse_native_spark.plans.base import REGISTRY
     from oracle_harness import duckdb_connection, compare
 
+    selected = [
+        (name, q)
+        for name, q in sorted(REGISTRY.all().items())
+        if not name_filter or any(s in name for s in name_filter)
+    ]
+    if not selected:
+        print(f"no registry entry matches {sys.argv[3]!r}; nothing swept")
+        return 2
     spark = get_spark(app_name="oracle-sweep", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb_connection(sf_dir)
     bad = []
     t0 = time.time()
-    for name, q in sorted(REGISTRY.all().items()):
-        if name_filter and not any(s in name for s in name_filter):
-            continue
+    for name, q in selected:
         try:
             df = q.build(spark, sf_dir)
             if q.oracle is None:
@@ -52,7 +59,7 @@ def main() -> int:
             print(f"  {name}: EXC {str(ex)[:120]}")
             bad.append((name, f"EXC {ex}"[:200]))
     print(
-        f"swept {len(REGISTRY.all())} queries at {sf_dir} "
+        f"swept {len(selected)} of {len(REGISTRY.all())} queries at {sf_dir} "
         f"in {time.time() - t0:.0f}s; {len(bad)} failures"
     )
     for n, m in bad:
