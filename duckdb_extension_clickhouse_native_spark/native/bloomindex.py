@@ -22,9 +22,10 @@ The writer works on whole arrays: :func:`value_bytes_array` tags a
 block's distinct values in Arrow, and :func:`build_bloom` hashes each
 distinct entry once (the blake2b digest is the only per-value step)
 and sets all ``k`` bit positions of all entries with numpy. The
-reader probes one value at a time through the same
-:func:`_positions`, so the two sides cannot drift apart; the wire
-format is the one above, bit for bit.
+reader decodes a filter's bitset once (:func:`bloom_prober`) and
+probes one value at a time through the same :func:`_positions`, so
+the two sides cannot drift apart; the wire format is the one above,
+bit for bit.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from __future__ import annotations
 import base64
 import hashlib
 import re
-from typing import Iterable, Iterator, Optional
+from typing import Callable, Iterable, Iterator, Optional
 
 import numpy as np
 import pyarrow as pa
@@ -128,24 +129,36 @@ def string_ngrams(s: str, n: int = NGRAM_N) -> set:
     return {value_bytes(s[i : i + n]) for i in range(len(s) - n + 1)}
 
 
-def bloom_maybe_contains(bloom: dict, v) -> bool:
-    """False ONLY when the filter proves ``v`` absent. Malformed
-    entries and unsupported types answer True (never prune)."""
-    b = value_bytes(v)
-    if b is None:
-        return True
+def bloom_prober(bloom: dict) -> Callable[[object], bool]:
+    """:func:`bloom_maybe_contains` for one filter: the bitset is
+    decoded once, then each call probes one value — an ``IN`` list, or
+    the grams or tokens of a needle, cost one decode, not one per
+    value. A malformed entry answers True for every value."""
     try:
         m = int(bloom["m"])
         k = int(bloom["k"])
         bits = base64.b64decode(bloom["b64"])
         if m <= 0 or k <= 0 or len(bits) * 8 < m:
-            return True
+            return lambda v: True
     except (KeyError, TypeError, ValueError):
-        return True
-    d = _digest(b)
-    h1 = int.from_bytes(d[:8], "little")
-    h2 = int.from_bytes(d[8:], "little")
-    return all(bits[h >> 3] & (1 << (h & 7)) for h in _positions(h1, h2, k, m))
+        return lambda v: True
+
+    def contains(v) -> bool:
+        b = value_bytes(v)
+        if b is None:
+            return True
+        d = _digest(b)
+        h1 = int.from_bytes(d[:8], "little")
+        h2 = int.from_bytes(d[8:], "little")
+        return all(bits[h >> 3] & (1 << (h & 7)) for h in _positions(h1, h2, k, m))
+
+    return contains
+
+
+def bloom_maybe_contains(bloom: dict, v) -> bool:
+    """False ONLY when the filter proves ``v`` absent. Malformed
+    entries and unsupported types answer True (never prune)."""
+    return bloom_prober(bloom)(v)
 
 
 # tokenbf_v1's tokenizer splits on non-alphanumeric characters; this
@@ -181,14 +194,11 @@ def tokenbf_may_match(
     Needles with no provable token answer True (no pruning)."""
     if not isinstance(needle, str):
         return True
+    contains = bloom_prober(bloom)
     for m in _TOKEN_RE.finditer(needle):
         left_complete = m.start() > 0 or anchored_left
         right_complete = m.end() < len(needle) or anchored_right
-        if (
-            left_complete
-            and right_complete
-            and not bloom_maybe_contains(bloom, m.group(0))
-        ):
+        if left_complete and right_complete and not contains(m.group(0)):
             return False
     return True
 
@@ -200,8 +210,8 @@ def ngrambf_may_match_substring(bloom: dict, needle: str) -> bool:
     shorter than the gram size answer True (no gram to probe)."""
     if not isinstance(needle, str) or len(needle) < NGRAM_N:
         return True
+    contains = bloom_prober(bloom)
     for i in range(len(needle) - NGRAM_N + 1):
-        gram = needle[i : i + NGRAM_N]
-        if not bloom_maybe_contains(bloom, gram):
+        if not contains(needle[i : i + NGRAM_N]):
             return False
     return True

@@ -2593,7 +2593,7 @@ def _optimize_table_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     intact."""
     import hashlib
 
-    from ..sources.native_datasource import compact_native_dir
+    from ..sources.native_datasource import compact_native_dir, infer_native_schema
 
     src = native_fixture_dir(spark, sf_dir, "documents")
     base = os.path.join(
@@ -2619,7 +2619,7 @@ def _optimize_table_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = "lang,n_chars,doc_id"  # §6: prune `text` from the final agg
     opt = (
         spark.read.format("clickhouse_native")
-        .schema(infer_schema_for(dup_dir, columns=cols))
+        .schema(infer_native_schema({"path": dup_dir, "columns": cols}))
         .option("columns", cols)
         .option("min_partitions", "4")
         .load(out_dir)
@@ -2629,15 +2629,6 @@ def _optimize_table_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").alias("total_chars"),
         F.countDistinct("doc_id").alias("n_distinct"),
     )
-
-
-def infer_schema_for(path: str, columns: "str | None" = None):
-    from ..sources.native_datasource import infer_native_schema
-
-    opts = {"path": path}
-    if columns:
-        opts["columns"] = columns
-    return infer_native_schema(opts)
 
 
 REGISTRY.df_query(
@@ -2708,6 +2699,7 @@ def _mutation_ttl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     from ..operators.mutations import apply_ttl
+    from ..sources.native_datasource import infer_native_schema
 
     src = native_fixture_dir(spark, sf_dir, "events")
     out = os.path.join(
@@ -2729,7 +2721,7 @@ def _mutation_ttl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = "event_type,value,ts,event_id"  # §6: agg needs 4 of 6 cols
     df = (
         spark.read.format("clickhouse_native")
-        .schema(infer_schema_for(out, columns=cols))
+        .schema(infer_native_schema({"path": out, "columns": cols}))
         .option("columns", cols)
         .option("min_partitions", "4")
         .load(out)
@@ -2788,6 +2780,7 @@ def _mutation_attach_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..operators.mutations import attach_parts
+    from ..sources.native_datasource import infer_native_schema
 
     src = native_fixture_dir(spark, sf_dir, "documents")
     base = os.path.join(
@@ -2812,7 +2805,7 @@ def _mutation_attach_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write("")
     df = (
         spark.read.format("clickhouse_native")
-        .schema(infer_schema_for(a))
+        .schema(infer_native_schema({"path": a}))
         .load(a)
     )
     return df.groupBy("source").agg(
@@ -3834,26 +3827,19 @@ def _native_describe_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`DESCRIBE TABLE` (docs: statements/describe-table): header-only
     schema introspection of a Native table dir — ClickHouse type names
     plus the Spark mapping, one row per column, in declaration order.
-    The read touches ONE block header (codec.read_file_schema — no
-    payload decode, the fix over the reference's whole-file parse at
-    lib.rs:251); the oracle is the literal expected contract, so a
-    type-mapping regression (e.g. DateTime64(6) drifting precision)
-    fails the hash."""
+    The read touches ONE block header (``describe_native``, the
+    DataSource's own probe — no payload decode, the fix over the
+    reference's whole-file parse at lib.rs:251); the oracle is the
+    literal expected contract, so a type-mapping regression (e.g.
+    DateTime64(6) drifting precision) fails the hash."""
     from .base import ensure_session
-    from ..native.codec import read_file_schema
-    from ..sources.native_datasource import _resolve_paths, infer_native_schema
+    from ..sources.native_datasource import describe_native
 
     ensure_session(spark)
     path = native_fixture_dir(spark, sf_dir, "orders")
-    first = sorted(_resolve_paths(path))[0]
-    ch = read_file_schema(first)
-    spark_types = {
-        f.name: f.dataType.simpleString()
-        for f in infer_native_schema({"path": path}).fields
-    }
     rows = [
-        (i + 1, name, t.name, spark_types[name])
-        for i, (name, t) in enumerate(ch)
+        (i + 1, c.name, c.ch_type.name, c.spark_type.simpleString())
+        for i, c in enumerate(describe_native({"path": path}))
     ]
     return spark.createDataFrame(
         rows, "position BIGINT, col_name STRING, ch_type STRING, spark_type STRING"

@@ -1,24 +1,26 @@
 """``clickhouse_native`` Spark DataSource — ClickHouse Native file reader/writer.
 
 Spark-first re-expression of the reference's ``clickhouse_native``
-DuckDB table function (/root/reference/src/lib.rs:240-366):
+DuckDB table function (reference src/lib.rs:240-366), whose one
+bind step derives the schema (lib.rs:251) and whose one loop scans
+(lib.rs:289-361). Here too the scan is one probe and two stages, shared
+by the batch reader, the stream reader and the SQL table functions:
 
-* bind-time full parse (lib.rs:251) -> ``schema()`` parses only the
-  first block's headers;
-* init-time second full parse (lib.rs:274) -> ``partitions()`` plans
-  block ranges, no data read on the driver;
-* 1024-row chunk emit (lib.rs:289-361) -> Arrow RecordBatch per
-  block, yielded lazily per partition on executors;
-* single-threaded full scan (README.md:51) -> one Spark partition per
-  file by default (zero planning I/O — this is the 100 TB path over a
-  directory of many files), optional in-file block splitting for
-  single huge files.
+* schema probe — :func:`describe_native` parses only the first block's
+  header (or the table's ``_table_schema.json``) and adds the hive and
+  virtual columns;
+* plan stage (driver, no data read) — list once, prune every file by
+  its sidecar stats and hive values in one pass, then split files into
+  block ranges or pack whole files into partitions;
+* read stage (executors, per partition) — open, decode with PREWHERE,
+  apply the delete mask, conform to the declared schema, filter, and
+  coalesce into Arrow batches before rows cross into the JVM.
 
 Extra, beyond the reference: projection pushdown (unrequested column
 payloads are byte-skipped, never decoded), filter pushdown (pushed
-predicates are evaluated on Arrow batches inside the reader before
-rows cross into the JVM), and a writer (``df.write.format(
-"clickhouse_native")``) — the reference is read-only.
+predicates are evaluated on Arrow batches inside the reader), and a
+writer (``df.write.format("clickhouse_native")``) — the reference is
+read-only.
 
 Usage::
 
@@ -31,10 +33,9 @@ nested) are discovered automatically: partition columns are appended
 after the file columns (int when every value is an integer literal,
 else string), restored from the path at read time, and predicates on
 them prune whole directories at planning — zero tasks AND zero IO for
-excluded partitions (150 -> 22 partitions measured on the
-event_type/day conformance fixture).
+excluded partitions.
 
-Options:
+Options (reader unless marked writer):
     path            file, glob, or directory (or pass to .load())
     columns         comma-separated projection (pruned at byte level)
     lossy_uint64    'true' -> reference-compatible UInt64->Int32
@@ -44,13 +45,29 @@ Options:
                     '<unsupported:T>' varchar placeholders like
                     lib.rs:168-170 (payload bytes are NOT consumed, so
                     only safe when that column is last); default raises
+    verify_checksum 'true' -> check each compressed frame's CityHash128
+    skipping        'false' -> no sidecar pruning at planning (hive
+                    values still prune)
+    prewhere        'false' -> decode every projected column of every
+                    block (no PREWHERE late materialization)
     split_blocks    'true' -> split files into block-range partitions;
                     offsets come from the writer's per-block sidecar
                     index when present (no header scan), and pushed
                     filters prune block RANGES against the per-block
-                    min/max — the parquet row-group analogue (33 -> 4
-                    blocks measured on the sorted-events fixture)
+                    min/max — the parquet row-group analogue
     target_partition_bytes  approx bytes per partition when splitting
+    max_partition_bytes, min_partitions  whole-file packing: Spark's
+                    FilePartition target (default 128 MiB; 0 = one
+                    partition per file) and its parallelism floor
+                    (default cores/2)
+    max_rows_to_read, max_bytes_to_read  refuse at planning when the
+                    surviving files exceed these (0 = no limit)
+    file_column     add a string column holding each row's
+                    load-relative file path
+    row_index_column  add a bigint column holding each row's physical
+                    ordinal within its file
+    sample, sample_offset  SAMPLE k OFFSET m over a table written with
+                    sample_by
     block_rows      writer: rows per Native block (default 65409)
     compression     writer: 'lz4' | 'zstd' wraps each file in
                     ClickHouse compressed frames (no per-block index
@@ -72,6 +89,8 @@ Options:
                     task's rows by before writing — tight per-block
                     ranges for the block-range index (cluster globally
                     with a repartition on the same keys upstream)
+    sample_by       writer: integer column whose hash becomes the
+                    sorted ``_sample_hash`` column SAMPLE reads
     allow_missing_columns  'true' -> additive schema evolution: a file
                     written before a column existed reads it as NULLs
                     (pass an explicit schema from the NEWEST file);
@@ -84,7 +103,7 @@ import glob as globmod
 import os
 import uuid
 from dataclasses import dataclass
-from typing import TYPE_CHECKING, Iterator, List, Optional, Sequence
+from typing import TYPE_CHECKING, Iterator, List, NamedTuple, Optional, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -129,6 +148,8 @@ from pyspark.sql.types import (
 if TYPE_CHECKING:
     import pyarrow as pa
 
+    from ..native.types import CHType
+
 FORMAT_NAME = "clickhouse_native"
 
 # coalesce decoded blocks into Arrow batches of about this size before
@@ -140,6 +161,21 @@ FORMAT_NAME = "clickhouse_native"
 ARROW_BATCH_BYTES = 32 * 1024 * 1024
 # partition packing's per-file open cost (Spark's openCostInBytes)
 OPEN_COST_BYTES = 4 * 1024 * 1024
+# pushed filter -> the pyarrow.compute kernel evaluating it on a column:
+# comparisons take the value as a scalar of the column's type, the
+# string predicates as the pattern
+_COMPARE_KERNELS = {
+    EqualTo: "equal",
+    GreaterThan: "greater",
+    GreaterThanOrEqual: "greater_equal",
+    LessThan: "less",
+    LessThanOrEqual: "less_equal",
+}
+_STRING_KERNELS = {
+    StringContains: "match_substring",
+    StringStartsWith: "starts_with",
+    StringEndsWith: "ends_with",
+}
 
 
 def _resolve_paths(path: str) -> list[str]:
@@ -304,10 +340,7 @@ def _partition_spec(load_path: str, paths: list) -> tuple:
     iff every discovered value parses as an integer, else str."""
     import re
 
-    spec: dict = {}
-    seqs = {
-        p: _partition_components(load_path, p) for p in paths
-    }
+    seqs = {p: _partition_components(load_path, p) for p in paths}
     key_seqs = {tuple(k for k, _v in comps) for comps in seqs.values()}
     if () in key_seqs:
         # some files sit outside any key=value directory: the layout
@@ -320,14 +353,11 @@ def _partition_spec(load_path: str, paths: list) -> tuple:
             f"{sorted(key_seqs)}"
         )
     keys = list(key_seqs.pop())
-    for p in paths:
-        spec[p] = tuple(v for _k, v in seqs[p])
-    types = {}
-    for j, k in enumerate(keys):
-        vals = [spec[p][j] for p in paths]
-        types[k] = (
-            int if all(re.fullmatch(r"-?\d+", v) for v in vals) else str
-        )
+    spec = {p: tuple(v for _k, v in seqs[p]) for p in paths}
+    types = {
+        k: int if all(re.fullmatch(r"-?\d+", spec[p][j]) for p in paths) else str
+        for j, k in enumerate(keys)
+    }
     return keys, spec, types
 
 
@@ -412,33 +442,19 @@ def _filter_excludes_file(f: "Filter", stats: dict) -> bool:
     # non-null value, so 'definitely absent' == zero matching rows.
     blooms = stats.get("bloom") or {}
     if blooms:
-        from ..native.bloomindex import bloom_maybe_contains
+        from ..native.bloomindex import bloom_prober
 
-        if (
-            isinstance(f, (EqualTo, EqualNullSafe))
-            and f.value is not None
-            and not isinstance(f.value, bool)
-        ):
+        if isinstance(f, (EqualTo, EqualNullSafe, In)):
+            # NULL members of an IN list never match (NULL = x is NULL,
+            # not true), so all-absent non-null values prove the file
+            # matches nothing; a bool value is never indexed
+            vals = f.value if isinstance(f, In) else (f.value,)
+            vals = [v for v in vals if v is not None]
             bl = blooms.get(f.attribute[0])
-            if bl is not None and not bloom_maybe_contains(bl, f.value):
-                return True
-        if isinstance(f, In):
-            bl = blooms.get(f.attribute[0])
-            non_null = [v for v in f.value if v is not None]
-            if (
-                bl is not None
-                and non_null
-                and all(
-                    not bloom_maybe_contains(bl, v)
-                    for v in non_null
-                    if not isinstance(v, bool)
-                )
-                and not any(isinstance(v, bool) for v in non_null)
-            ):
-                # NULL members of an IN list never match (NULL = x is
-                # NULL, not true), so all-absent non-null members
-                # prove the file matches nothing
-                return True
+            if bl is not None and vals and not any(isinstance(v, bool) for v in vals):
+                contains = bloom_prober(bl)
+                if not any(contains(v) for v in vals):
+                    return True
     # set(N) skip index (ClickHouse `set(max_rows)` analogue): the
     # column's COMPLETE distinct-value list — any pushable predicate
     # no stored value satisfies is false for every row, which prunes
@@ -638,6 +654,7 @@ class ClickHouseNativeReader(DataSourceReader):
                     },
                     "known": {c["name"] for c in _meta["columns"]},
                 }
+        self._aliases = self.evolution["aliases"] if self.evolution else None
         self.pushed: List[Filter] = []
         # SAMPLE clause (ClickHouse `SAMPLE k [OFFSET m]`): the table
         # must have been written with ``sample_by`` (a sorted
@@ -672,9 +689,11 @@ class ClickHouseNativeReader(DataSourceReader):
                 )
             if hi < SAMPLE_HASH_M:
                 self.pushed.append(LessThan((SAMPLE_HASH_COLUMN,), hi))
-        # hive-style key=value layout: keys/types fixed at plan time
-        # (driver-side, survives pickling to executors); per-file
-        # values travel on each NativeFilePartition
+        # the one listing of a batch read: hive keys/types fixed here
+        # (driver-side, survives pickling to executors; per-file values
+        # travel on each NativeFilePartition) and partitions() plans
+        # from the same snapshot. pyspark builds a fresh reader for
+        # every planning, so a snapshot never outlives its query
         try:
             paths = _resolve_paths(self.path)
         except OSError:
@@ -682,10 +701,6 @@ class ClickHouseNativeReader(DataSourceReader):
         self.part_keys, self._part_vals_by_path = (
             _partition_spec(self.path, paths)[:2] if paths else ([], {})
         )
-        # plan-time listing snapshot: batch reads are snapshot-semantic
-        # (see partitions()), so the recursive walk from this __init__
-        # is reused there instead of listing the directory again — on
-        # an object store that is one LIST per query, not two
         self._plan_paths = paths
 
     def pushFilters(self, filters: List[Filter]) -> Iterator[Filter]:
@@ -699,18 +714,7 @@ class ClickHouseNativeReader(DataSourceReader):
 
     def _filter_supported(self, f: Filter) -> bool:
         simple = (
-            EqualTo,
-            EqualNullSafe,
-            GreaterThan,
-            GreaterThanOrEqual,
-            LessThan,
-            LessThanOrEqual,
-            In,
-            IsNull,
-            IsNotNull,
-            StringContains,
-            StringStartsWith,
-            StringEndsWith,
+            *_COMPARE_KERNELS, *_STRING_KERNELS, EqualNullSafe, In, IsNull, IsNotNull
         )
         if isinstance(f, Not):
             return self._filter_supported(f.child) and not isinstance(f.child, Not)
@@ -718,27 +722,6 @@ class ClickHouseNativeReader(DataSourceReader):
             return False
         attr = f.attribute
         return len(attr) == 1  # no nested columns
-
-    def _prune_paths(self, paths: list) -> list:
-        """File-level data skipping: drop files whose min/max sidecar
-        (written by our writer, ``_<name>.stats.json``) proves every
-        pushed filter false for every row — the Native-format analogue
-        of parquet footer stats + partition pruning, evaluated ONCE at
-        planning so skipped files cost zero tasks. Files without a
-        sidecar are always read; an empty result keeps one file so the
-        plan retains a partition (its executor-side filter yields 0
-        rows)."""
-        from ..native.writer import load_stats
-
-        kept = []
-        for p in paths:
-            st = load_stats(p)
-            if st is None or not _stats_exclude(self.pushed, st, self._aliases()):
-                kept.append(p)
-        return kept if kept else paths[:1]
-
-    def _aliases(self) -> Optional[dict]:
-        return self.evolution["aliases"] if self.evolution else None
 
     @staticmethod
     def _partition_array(key: str, raw: str, n: int, target) -> "pa.Array":
@@ -778,186 +761,145 @@ class ClickHouseNativeReader(DataSourceReader):
             )
         return tuple(v for _k, v in comps)
 
-    def _prune_partition_dirs(self, paths: list) -> list:
-        """Hive-partition pruning: a pushed filter on a partition
-        column is decided entirely by the path, so excluded files cost
-        zero tasks AND zero IO (no sidecar read needed). Reuses the
-        sidecar exclusion logic with a synthesized one-row stat
-        (min == max == the path value)."""
-        keyset = set(self.part_keys)
+    def _partition(
+        self, p: str, start: int = 0, n_blocks: int = -1, start_row: int = 0
+    ) -> NativeFilePartition:
+        """The one partition constructor (batch plans and stream
+        micro-batches): ``p``'s hive values travel with it, read before
+        the keys because ``_vals_for_path`` may adopt a late layout."""
+        vals = self._vals_for_path(p)
+        return NativeFilePartition(
+            p, start, n_blocks, vals, tuple(self.part_keys), start_row
+        )
 
-        def attr(f) -> Optional[str]:
-            # Not has no .attribute; its child does (conservative: a
-            # wrapped filter shape _filter_excludes_file doesn't prove
-            # simply never prunes)
-            child = f.child if isinstance(f, Not) else f
-            a = getattr(child, "attribute", None)
-            return a[0] if a else None
-
-        part_filters = [f for f in self.pushed if attr(f) in keyset]
-        if not part_filters:
-            return paths
-        target = self._arrow_schema()
-        kept = []
-        for p in paths:
-            vals = self._part_vals_by_path.get(p, ())
-            stats = {"rows": 1, "columns": {}}
-            for k, v in zip(self.part_keys, vals):
-                typed = self._partition_array(k, v, 1, target)[0].as_py()
-                stats["columns"][k] = {"min": typed, "max": typed, "nulls": 0}
-            if _stats_exclude(part_filters, stats):
-                continue
-            kept.append(p)
-        return kept if kept else paths[:1]
+    # -- plan stage: list once -> prune -> split or pack ---------------
 
     def partitions(self) -> Sequence[InputPartition]:
-        if self.part_keys:
-            # reuse the plan-time listing: re-resolving here could pair
-            # a freshly-appeared file with no snapshot values (and costs
-            # another recursive walk); batch reads are snapshot-semantic
-            paths = sorted(self._part_vals_by_path)
-            paths = self._prune_partition_dirs(paths)
-        elif self._plan_paths:
-            # same snapshot semantics for flat layouts: one listing per
-            # plan (the __init__ walk), not one per partitions() call.
-            # BUT: pyspark keeps ONE reader instance per view/relation
-            # for its whole lifetime, so a snapshot taken at CREATE
-            # VIEW time survives an INSERT OVERWRITE / compaction that
-            # deleted the listed files (SELECT via the view then reads
-            # ghosts). Probe the snapshot's endpoints — two stats —
-            # and re-list when either vanished; a fresh INSERT (append)
-            # keeps old names so the common case stays one-listing.
-            import os as _os
-
-            from ..filesystem import is_uri as _is_uri
-
-            probe = (self._plan_paths[0], self._plan_paths[-1])
-            if any(_is_uri(p) for p in probe) or all(
-                _os.path.exists(p) for p in probe
-            ):
-                # URI paths: skip the stat probe (an object-store
-                # exists() is an RPC; stale listings there surface as
-                # loud read errors, same as before this defense)
-                paths = self._plan_paths
-            else:
-                paths = _resolve_paths(self.path)
-                self._plan_paths = paths
+        paths = self._prune(self._plan_paths)
+        self._check_read_limits(paths)
+        if not self.split_blocks or len(paths) > 8:
+            parts = [self._partition(p) for p in paths]
         else:
-            # __init__ saw nothing (e.g. the directory appeared after
-            # planning started) — fall back to a fresh listing
-            paths = _resolve_paths(self.path)
-        if self.skipping and self.pushed:
-            paths = self._prune_paths(paths)
-        if self.max_rows_to_read or self.max_bytes_to_read:
-            est_rows = 0
-            est_bytes = 0
-            from ..filesystem import file_size as _fsize
-            from ..native.writer import load_stats
+            parts = [q for p in paths for q in self._split_file(p)]
+            # every pushed filter is re-applied executor-side, so an
+            # over-pruned plan only costs correctness if it is EMPTY
+            if not parts and paths:
+                parts = [self._partition(paths[0])]
+        return self._pack_partitions(parts)
 
-            for p in paths:
-                st = load_stats(p)
-                if st is not None:
-                    est_rows += int(st.get("rows", 0))
-                try:
-                    est_bytes += _fsize(p)
-                except OSError:
-                    pass
-            if self.max_rows_to_read and est_rows > self.max_rows_to_read:
-                raise ValueError(
-                    f"query would read ~{est_rows} rows from "
-                    f"{len(paths)} files, over max_rows_to_read="
-                    f"{self.max_rows_to_read} (add filters the sidecar "
-                    "index can prune on, or raise the limit)"
-                )
-            if self.max_bytes_to_read and est_bytes > self.max_bytes_to_read:
-                raise ValueError(
-                    f"query would read ~{est_bytes} bytes from "
-                    f"{len(paths)} files, over max_bytes_to_read="
-                    f"{self.max_bytes_to_read}"
-                )
+    def _prune(self, paths: list) -> list:
+        """File-level data skipping, evaluated ONCE at planning so
+        skipped files cost zero tasks: a file goes when
+        ``_stats_exclude`` proves the pushed filters false for every
+        row of :meth:`_file_stats`. An empty result keeps the first
+        file so the plan retains a partition (its executor-side filter
+        yields 0 rows)."""
+        if not self.pushed or not (self.skipping or self.part_keys):
+            return paths
+        target = self._arrow_schema()
+        kept = [
+            p
+            for p in paths
+            if not _stats_exclude(
+                self.pushed, self._file_stats(p, target), self._aliases
+            )
+        ]
+        return kept or paths[:1]
 
-        def mk(
-            p: str, start: int = 0, n_blocks: int = -1, start_row: int = 0
-        ) -> NativeFilePartition:
-            vals = self._vals_for_path(p)
-            return NativeFilePartition(
-                p, start, n_blocks, vals, tuple(self.part_keys), start_row
+    def _file_stats(self, p: str, target) -> dict:
+        """What planning knows of ``p``: its stats sidecar (while
+        ``skipping`` is on) plus its hive-path values as one-value
+        columns; without a usable sidecar, the hive values alone."""
+        from ..native.writer import load_stats
+
+        hive = {}
+        for k, v in zip(self.part_keys, self._part_vals_by_path.get(p, ())):
+            typed = self._partition_array(k, v, 1, target)[0].as_py()
+            hive[k] = {"min": typed, "max": typed, "nulls": 0}
+        st = load_stats(p) if self.skipping else None
+        try:
+            if st and int(st.get("rows", 0)) > 0:
+                return {**st, "columns": {**st.get("columns", {}), **hive}}
+        except (AttributeError, TypeError, ValueError):
+            pass
+        return {"rows": 1, "columns": hive}
+
+    def _check_read_limits(self, paths: list) -> None:
+        if not (self.max_rows_to_read or self.max_bytes_to_read):
+            return
+        from ..filesystem import file_size
+        from ..native.writer import load_stats
+
+        est_rows = est_bytes = 0
+        for p in paths:
+            st = load_stats(p)
+            if st is not None:
+                est_rows += int(st.get("rows", 0))
+            try:
+                est_bytes += file_size(p)
+            except OSError:
+                pass
+        if self.max_rows_to_read and est_rows > self.max_rows_to_read:
+            raise ValueError(
+                f"query would read ~{est_rows} rows from "
+                f"{len(paths)} files, over max_rows_to_read="
+                f"{self.max_rows_to_read} (add filters the sidecar "
+                "index can prune on, or raise the limit)"
+            )
+        if self.max_bytes_to_read and est_bytes > self.max_bytes_to_read:
+            raise ValueError(
+                f"query would read ~{est_bytes} bytes from "
+                f"{len(paths)} files, over max_bytes_to_read="
+                f"{self.max_bytes_to_read}"
             )
 
-        if not self.split_blocks or len(paths) > 8:
-            return self._pack_partitions([mk(p) for p in paths])
+    def _split_file(self, p: str) -> list:
+        """Block-range partitions of one file: runs of CONSECUTIVE
+        surviving blocks of ~target_bytes (a pruned gap ends a run,
+        since n_blocks counts sequentially from start_offset), each
+        with its first physical row (delete masks and row_index_column
+        address physical rows). Compressed frames are not
+        byte-splittable: such a file is one partition."""
+        from ..filesystem import file_size
         from ..native.codec import scan_block_offsets
         from ..native.compress import is_compressed_file
 
-        parts: list[NativeFilePartition] = []
-        for p in paths:
-            if self.compression != "none" and is_compressed_file(p):
-                # compressed frames are not byte-splittable: whole file
-                # is one partition; parallelism comes from many files
-                parts.append(mk(p))
+        if self.compression != "none" and is_compressed_file(p):
+            return [self._partition(p)]
+        size = file_size(p)
+        # the writer's per-block stats index (the parquet row-group
+        # analogue) gives offsets WITHOUT a driver header scan and lets
+        # pushed filters prune block ranges INSIDE the file
+        entries = self._sidecar_blocks(p, size)
+        if entries is None:
+            entries = [(off, rows, None) for off, rows in scan_block_offsets(p)]
+        parts: list = []
+        run = None  # [start offset, blocks, bytes, first row]
+        row = 0
+        prev = None
+        for i, (off, rows, st) in enumerate(entries):
+            first, row = row, row + rows
+            if (
+                self.skipping
+                and self.pushed
+                and st is not None
+                and _stats_exclude(
+                    self.pushed, {"rows": rows, "columns": st}, self._aliases
+                )
+            ):
                 continue
-            from ..filesystem import file_size
-
-            size = file_size(p)
-            # per-block stats index from the writer's sidecar (the
-            # parquet row-group analogue): gives offsets WITHOUT a
-            # driver header scan, and lets pushed filters prune block
-            # ranges INSIDE the file
-            entries = self._sidecar_blocks(p, size)
-            if entries is None:
-                entries = [
-                    (off, rows, None) for off, rows in scan_block_offsets(p)
-                ]
-            if not entries:
-                continue
-            if self.skipping and self.pushed:
-                kept = [
-                    i
-                    for i, (_off, rows, st) in enumerate(entries)
-                    if st is None
-                    or not _stats_exclude(
-                        self.pushed,
-                        {"rows": rows, "columns": st},
-                        self._aliases(),
-                    )
-                ]
-            else:
-                kept = list(range(len(entries)))
-            # group CONSECUTIVE surviving blocks into ~target_bytes runs
-            # (a pruned gap ends the run: n_blocks counts sequentially
-            # from start_offset)
-            # physical first-row ordinal per block (delete masks and
-            # row_index_column address physical rows)
-            row_starts = [0]
-            for _off, rows, _st in entries:
-                row_starts.append(row_starts[-1] + rows)
-            run_start = None
-            run_len = 0
-            run_bytes = 0
-            run_row = 0
-            prev_i = None
-            for i in kept:
-                off = entries[i][0]
-                end = entries[i + 1][0] if i + 1 < len(entries) else size
-                if run_start is not None and (
-                    prev_i != i - 1 or run_bytes >= self.target_bytes
-                ):
-                    parts.append(mk(p, run_start, run_len, run_row))
-                    run_start, run_len, run_bytes = None, 0, 0
-                if run_start is None:
-                    run_start = off
-                    run_row = row_starts[i]
-                run_len += 1
-                run_bytes += end - off
-                prev_i = i
-            if run_start is not None:
-                parts.append(mk(p, run_start, run_len, run_row))
-        # every pushed filter is re-applied executor-side, so an
-        # over-pruned empty plan only costs correctness if we return
-        # NOTHING — keep one whole-file partition as in _prune_paths
-        if not parts and paths:
-            parts.append(mk(paths[0]))
-        return self._pack_partitions(parts)
+            if run is not None and (prev != i - 1 or run[2] >= self.target_bytes):
+                parts.append(self._partition(p, run[0], run[1], run[3]))
+                run = None
+            if run is None:
+                run = [off, 0, 0, first]
+            end = entries[i + 1][0] if i + 1 < len(entries) else size
+            run[1] += 1
+            run[2] += end - off
+            prev = i
+        if run is not None:
+            parts.append(self._partition(p, run[0], run[1], run[3]))
+        return parts
 
     def _pack_partitions(self, parts: list) -> list:
         """Bin whole-file partitions into ~target-byte groups (Spark's
@@ -997,25 +939,18 @@ class ClickHouseNativeReader(DataSourceReader):
                 math.ceil(sum(weights) / max(1, self.min_partitions)),
             ),
         )
-        packed: list = []
-        bin_parts: list = []
+        bins: list = [[]]
         bin_w = 0
         for p, w in zip(whole, weights):
-            if bin_parts and bin_w + w > target:
-                packed.append(
-                    bin_parts[0]
-                    if len(bin_parts) == 1
-                    else NativeFileGroupPartition(tuple(bin_parts))
-                )
-                bin_parts, bin_w = [], 0
-            bin_parts.append(p)
+            if bins[-1] and bin_w + w > target:
+                bins.append([])
+                bin_w = 0
+            bins[-1].append(p)
             bin_w += w
-        if bin_parts:
-            packed.append(
-                bin_parts[0]
-                if len(bin_parts) == 1
-                else NativeFileGroupPartition(tuple(bin_parts))
-            )
+        packed = [
+            b[0] if len(b) == 1 else NativeFileGroupPartition(tuple(b))
+            for b in bins
+        ]
         # the chosen bin count depends on the host (min_partitions
         # defaults to cores/2), so make the plan shape visible instead
         # of silently host-dependent (r14 ADVICE): one log line per
@@ -1054,7 +989,8 @@ class ClickHouseNativeReader(DataSourceReader):
         except (KeyError, TypeError, ValueError):
             return None
 
-    # -- executor side ------------------------------------------------
+    # -- read stage: open -> decode with PREWHERE -> delete-mask ->
+    #    conform -> filter -> coalesce ----------------------------------
 
     def _arrow_schema(self) -> "pa.Schema":
         import pyarrow as pa
@@ -1069,27 +1005,21 @@ class ClickHouseNativeReader(DataSourceReader):
         return pa.schema(fields)
 
     def read(self, partition: NativeFilePartition) -> Iterator["pa.RecordBatch"]:
+        """Every member of the partition (a packed group has several)
+        as one block stream, coalesced to ~ARROW_BATCH_BYTES batches so
+        the Python->JVM hand-off is amortized ACROSS grouped files, not
+        just within each."""
         import pyarrow as pa
 
-        if isinstance(partition, NativeFileGroupPartition):
-            from itertools import chain
-
-            # one chained block stream: ARROW_BATCH_BYTES coalescing
-            # below amortizes the Python->JVM hand-off ACROSS the
-            # grouped files, not just within each
-            gen = chain.from_iterable(
-                self._read_blocks(sp) for sp in partition.parts
-            )
-        else:
-            gen = self._read_blocks(partition)
         buf: list = []
         nbytes = 0
-        for b in gen:
-            buf.append(b)
-            nbytes += b.nbytes
-            if nbytes >= ARROW_BATCH_BYTES:
-                yield self._concat_batches(pa, buf)
-                buf, nbytes = [], 0
+        for member in getattr(partition, "parts", None) or (partition,):
+            for b in self._read_blocks(member):
+                buf.append(b)
+                nbytes += b.nbytes
+                if nbytes >= ARROW_BATCH_BYTES:
+                    yield self._concat_batches(pa, buf)
+                    buf, nbytes = [], 0
         if buf:
             yield self._concat_batches(pa, buf)
 
@@ -1098,10 +1028,7 @@ class ClickHouseNativeReader(DataSourceReader):
         flat layouts, ``key=value/.../name`` on hive trees) — a unique
         per-file id across partition directories, which per-part
         projections need for attribution."""
-        try:
-            rel = os.path.relpath(file_path, self.path)
-        except ValueError:
-            return os.path.basename(file_path)
+        rel = os.path.relpath(file_path, self.path)
         if rel.startswith(".."):
             return os.path.basename(file_path)
         return rel.replace(os.sep, "/")
@@ -1115,26 +1042,28 @@ class ClickHouseNativeReader(DataSourceReader):
         assert len(out) == 1
         return out[0]
 
+    def _want(self, part_val: dict) -> Optional[set]:
+        """The file columns to decode: the projection minus the path-
+        and row-derived columns, plus the prior physical names of
+        evolved columns (a file carries at most one epoch's name);
+        None (everything) when nothing of the file is projected."""
+        if self.columns is None:
+            return None
+        want = self.columns - {self.file_column, self.row_index_column, *part_val}
+        if self.evolution and want:
+            for c in list(want):
+                want.update(self.evolution["aliases"].get(c, ()))
+        return want or None
+
     def _read_blocks(
         self, partition: NativeFilePartition
     ) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
+        from itertools import islice
 
-        want = self.columns
-        if self.file_column and want is not None:
-            # path-derived, never in the file blocks
-            want = {c for c in want if c != self.file_column} or None
-        if self.row_index_column and want is not None:
-            want = {c for c in want if c != self.row_index_column} or None
-        if self.evolution and want is not None:
-            # old parts hold a wanted column under its prior physical
-            # name — decode whichever epoch's name the file has (a
-            # file carries at most one of them)
-            extra = set()
-            for c in want:
-                extra.update(self.evolution["aliases"].get(c, ()))
-            want = want | extra
+        from ..filesystem import open_input
+        from ..native.compress import maybe_compressed_reader
         from ..native.delmask import load_delmask
+        from ..native.marks import MarksReader
 
         mask = load_delmask(partition.path)
         if mask is not None and partition.start_offset and partition.start_row < 0:
@@ -1144,10 +1073,10 @@ class ClickHouseNativeReader(DataSourceReader):
                 "apply the mask without misaligning rows"
             )
         target = self._arrow_schema()
-        from ..native.compress import maybe_compressed_reader
-
-        from ..filesystem import open_input
-
+        # keys from the partition itself — see NativeFilePartition
+        part_val = dict(
+            zip(partition.part_keys or self.part_keys, partition.part_vals)
+        )
         with open_input(partition.path) as f:
             if partition.start_offset:
                 # block-split partitions only exist for uncompressed files
@@ -1159,137 +1088,107 @@ class ClickHouseNativeReader(DataSourceReader):
                     compression=self.compression,
                     verify_checksum=self.verify_checksum,
                 )
-            marks = None
-            if buf is f:
-                # raw uncompressed stream: block byte offsets are
-                # meaningful, so the string-marks sidecar (if present
-                # and not stale) can skip the per-row varint walks
-                from ..native.marks import MarksReader
-
-                marks = MarksReader.open(partition.path)
-            part_val = dict(
-                zip(partition.part_keys or self.part_keys, partition.part_vals)
-            )
+            # raw uncompressed stream: block byte offsets are
+            # meaningful, so the string-marks sidecar (if present and
+            # not stale) can skip the per-row varint walks
+            marks = MarksReader.open(partition.path) if buf is f else None
             blocks = self._iter_blocks_prewhere(
                 buf,
-                want,
+                self._want(part_val),
                 part_val,
                 target,
                 marks_reader=marks,
                 row=max(0, partition.start_row),
                 delmask=mask,
             )
-            n = 0
-            for blk in blocks:
-                n += 1
-                stop = partition.n_blocks >= 0 and n >= partition.n_blocks
-                if blk is None:  # prewhere-dead block: payload never decoded
-                    if stop:
-                        break
+            n = partition.n_blocks if partition.n_blocks >= 0 else None
+            # a PREWHERE-dead block (None) still counts toward n_blocks
+            for blk in islice(blocks, n):
+                if blk is None:
                     continue
-                batch = blk.to_record_batch()
-                # align column order + types with the declared schema;
-                # hive-partition columns are path-derived constants
-                # (keys from the partition itself — see NativeFilePartition)
-                arrays = []
-                for fld in target:
-                    if fld.name == self.file_column:
-                        arrays.append(
-                            pa.array(
-                                [self._file_column_value(partition.path)]
-                                * batch.num_rows,
-                                type=fld.type,
-                            )
-                        )
-                        continue
-                    if fld.name in part_val:
-                        arrays.append(
-                            self._partition_array(
-                                fld.name, part_val[fld.name], batch.num_rows, target
-                            )
-                        )
-                        continue
-                    idx = batch.schema.get_field_index(fld.name)
-                    if idx < 0 and self.evolution is not None and (
-                        fld.name in self.evolution["known"]
-                    ):
-                        # evolved resolution: prior physical name first
-                        # (RENAME), then the ADD default, else NULLs
-                        for alias in self.evolution["aliases"].get(
-                            fld.name, ()
-                        ):
-                            idx = batch.schema.get_field_index(alias)
-                            if idx >= 0:
-                                break
-                        if idx < 0:
-                            dv = self.evolution["defaults"].get(fld.name)
-                            if dv is None:
-                                arrays.append(
-                                    pa.nulls(batch.num_rows, fld.type)
-                                )
-                            else:
-                                arrays.append(
-                                    pa.array(
-                                        [dv] * batch.num_rows, type=fld.type
-                                    )
-                                )
-                            continue
-                    if idx < 0:
-                        if self.allow_missing_columns:
-                            # additive schema evolution: files written
-                            # before a column existed read it as NULLs
-                            arrays.append(pa.nulls(batch.num_rows, fld.type))
-                            continue
-                        raise ValueError(
-                            f"column {fld.name!r} missing from block in "
-                            f"{partition.path!r} (file schema drift? schema() "
-                            f"inspects only the first file — pass "
-                            f"allow_missing_columns=true for additive evolution)"
-                        )
-                    col = batch.column(idx)
-                    if col.type != fld.type:
-                        col = col.cast(fld.type)
-                    arrays.append(col)
-                batch = self._apply_filters(
-                    pa.RecordBatch.from_arrays(arrays, schema=target)
-                )
+                batch = self._conform(blk, part_val, target, partition.path)
+                keep = self._filters_mask(batch)
+                if keep is not None:
+                    batch = batch.filter(keep)
                 if batch.num_rows:
                     yield batch
-                if stop:
-                    break
 
-    def _prewhere_attr(self, f: Filter) -> str:
-        return f.child.attribute[0] if isinstance(f, Not) else f.attribute[0]
+    def _conform(self, blk, part_val: dict, target, path=None) -> "pa.RecordBatch":
+        """The one conform step: the block's decoded columns aligned
+        with the declared schema — cast to its types, hive-partition
+        columns and ``file_column`` as path constants, evolved columns
+        through their prior physical name (RENAME), then their ADD
+        default, else NULLs; a column missing otherwise reads NULL
+        under ``allow_missing_columns`` and raises without it.
+
+        ``path=None`` is the PREWHERE survival test on a block read so
+        far: only the columns it already has, plus the hive constants."""
+        import pyarrow as pa
+
+        cols = {c.name: c.array for c in blk.columns}
+        # rows after the delete mask (the survival test runs before it)
+        n = len(blk.columns[0].array) if blk.columns else blk.n_rows
+        fields, arrays = [], []
+        for fld in target:
+            name = fld.name
+            arr = cols.get(name)
+            if path is None and arr is None and name not in part_val:
+                continue
+            if name == self.file_column:
+                arr = pa.array([self._file_column_value(path)] * n, type=fld.type)
+            elif name in part_val:
+                arr = self._partition_array(name, part_val[name], n, target)
+            elif arr is None and self.evolution and name in self.evolution["known"]:
+                for alias in self.evolution["aliases"].get(name, ()):
+                    arr = cols.get(alias)
+                    if arr is not None:
+                        break
+                else:
+                    dv = self.evolution["defaults"].get(name)
+                    arr = pa.nulls(n, fld.type) if dv is None else pa.array(
+                        [dv] * n, type=fld.type
+                    )
+            elif arr is None:
+                if not self.allow_missing_columns:
+                    raise ValueError(
+                        f"column {name!r} missing from block in {path!r} "
+                        "(file schema drift? schema() inspects only the "
+                        "first file — pass allow_missing_columns=true for "
+                        "additive evolution)"
+                    )
+                arr = pa.nulls(n, fld.type)
+            fields.append(fld)
+            arrays.append(arr if arr.type == fld.type else arr.cast(fld.type))
+        return pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
 
     def _iter_blocks_prewhere(
         self, buf, want, part_val, target, marks_reader=None, row=0, delmask=None
     ):
-        """The reader's only block loop, over ``codec.read_block``
-        (through ``codec.iter_blocks``).
+        """The reader's only block loop, over ``codec.read_block``.
 
         Yields ``None`` for a block PREWHERE proved dead (the caller
-        still counts it — block-range partitions index sequential block
-        positions), else the block with its delete-masked rows dropped
-        and the ``row_index_column`` appended (``n_rows`` keeps the
-        block's wire count). ``row`` is the physical ordinal of the
-        first row; dead blocks advance it too.
+        still counts it: block-range partitions index sequential
+        blocks), else the block with its delete-masked rows dropped and
+        the ``row_index_column`` appended (``n_rows`` keeps the wire
+        count). ``row`` is the physical ordinal of the first row.
 
-        PREWHERE-style late materialization is the read-time analogue
-        of the planning-time sidecar pruning (ClickHouse evaluates
-        PREWHERE predicates first and reads the remaining columns only
-        for surviving granules — here the granule is the Native block).
-        ``read_block`` decodes the predicate columns in file order and,
-        once the last of them is decoded, asks ``_block_survives``; a
-        dead block's remaining columns are skipped, not decoded. It
-        covers what planning-time stats cannot: files without sidecars,
-        string equality/IN/prefix predicates, and residual ranges
-        inside a partially-pruned file."""
+        PREWHERE is the read-time analogue of sidecar pruning: once the
+        predicate columns are decoded, the block read so far (conformed,
+        with the hive constants) must have a row passing the pushed
+        filters, or its remaining columns are skipped, not decoded —
+        covering files without sidecars, string predicates and residual
+        ranges inside a partially-pruned file."""
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         from ..native.codec import BlockColumn, iter_blocks
         from ..native.delmask import mask_bits
         from ..native.types import CHType
+
+        def survives(blk) -> bool:
+            mask = self._filters_mask(self._conform(blk, part_val, target))
+            return mask is None or bool(pc.any(mask).as_py())
 
         prewhere = None
         # evolved parts map physical names to table columns through
@@ -1297,8 +1196,11 @@ class ClickHouseNativeReader(DataSourceReader):
         if self.prewhere and self.pushed and self.evolution is None:
             # hive-partition attrs never appear in the file; their
             # constants join the survival test instead
-            names = {self._prewhere_attr(f) for f in self.pushed} - set(part_val)
-            prewhere = (names, lambda b: self._block_survives(b, part_val, target))
+            names = {
+                (f.child if isinstance(f, Not) else f).attribute[0]
+                for f in self.pushed
+            } - set(part_val)
+            prewhere = (names, survives)
         for blk in iter_blocks(
             buf,
             columns=want,
@@ -1329,28 +1231,6 @@ class ClickHouseNativeReader(DataSourceReader):
                         c.array = c.array.filter(keep)
             yield blk
 
-    def _block_survives(self, blk, part_val, target) -> bool:
-        """True iff any row of the block can pass the pushed filters,
-        judged on its decoded columns plus the hive-partition
-        constants. Row-level filtering still happens downstream in
-        ``_apply_filters`` — this only licenses skipping dead blocks."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        arrays, names = [], []
-        for c in blk.columns:
-            arr = c.array
-            idx = target.get_field_index(c.name)
-            if idx >= 0 and arr.type != target.field(idx).type:
-                arr = arr.cast(target.field(idx).type)
-            arrays.append(arr)
-            names.append(c.name)
-        for key, raw in part_val.items():
-            arrays.append(self._partition_array(key, raw, blk.n_rows, target))
-            names.append(key)
-        mask = self._filters_mask(pa.RecordBatch.from_arrays(arrays, names=names))
-        return mask is None or bool(pc.any(mask).as_py())
-
     def _filters_mask(self, batch: "pa.RecordBatch"):
         """The conjunction of every pushed filter over ``batch``, NULL
         counted as false; None when nothing is pushed."""
@@ -1361,10 +1241,6 @@ class ClickHouseNativeReader(DataSourceReader):
             m = self._filter_mask(batch, f)
             mask = m if mask is None else pc.and_kleene(mask, m)
         return None if mask is None else pc.fill_null(mask, False)
-
-    def _apply_filters(self, batch: "pa.RecordBatch") -> "pa.RecordBatch":
-        mask = self._filters_mask(batch)
-        return batch if mask is None else batch.filter(mask)
 
     def _filter_mask(self, batch: "pa.RecordBatch", f: Filter):
         import pyarrow as pa
@@ -1379,33 +1255,19 @@ class ClickHouseNativeReader(DataSourceReader):
                 "from the decoded batch (add it to the 'columns' option)"
             )
         col = batch.column(fidx)
-        if isinstance(f, IsNull):
+        if isinstance(f, IsNull) or (isinstance(f, EqualNullSafe) and f.value is None):
             return pc.is_null(col)
         if isinstance(f, IsNotNull):
             return pc.is_valid(col)
         if isinstance(f, In):
             return pc.is_in(col, value_set=pa.array(list(f.value), type=col.type))
-        if isinstance(f, StringContains):
-            return pc.match_substring(col, f.value)
-        if isinstance(f, StringStartsWith):
-            return pc.starts_with(col, f.value)
-        if isinstance(f, StringEndsWith):
-            return pc.ends_with(col, f.value)
+        if type(f) in _STRING_KERNELS:
+            return getattr(pc, _STRING_KERNELS[type(f)])(col, f.value)
         val = pa.scalar(f.value, type=col.type) if f.value is not None else None
-        if isinstance(f, EqualTo):
-            return pc.equal(col, val)
         if isinstance(f, EqualNullSafe):
-            if f.value is None:
-                return pc.is_null(col)
             return pc.and_kleene(pc.is_valid(col), pc.fill_null(pc.equal(col, val), False))
-        if isinstance(f, GreaterThan):
-            return pc.greater(col, val)
-        if isinstance(f, GreaterThanOrEqual):
-            return pc.greater_equal(col, val)
-        if isinstance(f, LessThan):
-            return pc.less(col, val)
-        if isinstance(f, LessThanOrEqual):
-            return pc.less_equal(col, val)
+        if type(f) in _COMPARE_KERNELS:
+            return getattr(pc, _COMPARE_KERNELS[type(f)])(col, val)
         raise ValueError(f"unsupported pushed filter {f}")
 
 
@@ -1421,10 +1283,11 @@ class ClickHouseNativeStreamReader(DataSourceStreamReader):
     yet) and new files may appear at any time.
 
     Scale note: offset discovery is a header-skip scan (no payload
-    decode) on the driver; block decoding happens executor-side via
-    the same partition reader as the batch path. Compressed files are
-    treated as single atomic units (frames are not block-indexable) —
-    they must be fully written when first discovered.
+    decode) on the driver; partitions come from the batch reader's
+    constructor and are read by its read stage, executor-side.
+    Compressed files are treated as single atomic units (frames are
+    not block-indexable) — they must be fully written when first
+    discovered.
     """
 
     def __init__(self, schema: StructType, options: dict):
@@ -1473,29 +1336,18 @@ class ClickHouseNativeStreamReader(DataSourceStreamReader):
             s = self._entry(done[p]) if p in done else {"n": 0, "bytes": 0}
             if e["n"] <= s["n"]:
                 continue
-            # hive partition values travel with every stream partition
-            # too (files typically appear AFTER the reader was planned,
-            # so they are re-derived from the path; _vals_for_path may
-            # also ADOPT a late-discovered layout, so read keys after)
-            vals = self._batch._vals_for_path(p)
-            keys = tuple(self._batch.part_keys)
-            if e["bytes"] == -1:
-                # compressed whole file
-                parts.append(
-                    NativeFilePartition(p, part_vals=vals, part_keys=keys)
-                )
+            # the seek position comes from the CHECKPOINTED start
+            # offset, so recovery after restart replays exactly the
+            # committed range; the physical start row is unknown (-1)
+            if e["bytes"] == -1:  # compressed whole file
+                parts.append(self._batch._partition(p, start_row=-1))
             else:
-                # seek position comes from the CHECKPOINTED start offset,
-                # so recovery after restart replays exactly the committed
-                # range — no driver-memory state involved
                 parts.append(
-                    NativeFilePartition(p, s["bytes"], e["n"] - s["n"], vals, keys)
+                    self._batch._partition(p, s["bytes"], e["n"] - s["n"], -1)
                 )
         # Spark requires >=1 partition per micro-batch; emit an empty
         # no-op range when nothing is new
-        if not parts:
-            parts.append(NativeFilePartition("", 0, 0))
-        return parts
+        return parts or [NativeFilePartition("", 0, 0)]
 
     def read(self, partition: NativeFilePartition) -> Iterator["pa.RecordBatch"]:
         if not partition.path:
@@ -1726,43 +1578,50 @@ class ClickHouseNativeWriter(DataSourceArrowWriter):
                     remove_part(p)
 
 
-def infer_native_schema(options: dict) -> StructType:
-    """Header-only schema discovery for a Native path (first file's
-    block header; reference lib.rs:251 parses the whole file instead).
+class NativeColumn(NamedTuple):
+    """One column as the Native probe describes it: the ClickHouse type
+    (file header, table metadata, or the type a path-derived column
+    stands for), the Spark type it reads as, and the Spark field's
+    nullability (path-derived columns are never NULL)."""
 
-    Module-level so the DRIVER can call it in-process and pass the
-    result to ``spark.read.schema(...)`` — with an explicit schema
-    Spark skips the separate Python-worker schema() roundtrip, which
-    is ~0.3 s of fixed per-query planning latency."""
+    name: str
+    ch_type: "CHType"
+    spark_type: DataType
+    nullable: bool
+
+
+def describe_native(options: dict) -> list:
+    """The one Native schema probe (the DataSource's schema(), the
+    ``clickhouse_native`` / ``clickhouse_native_columns`` SQL functions,
+    DESCRIBE TABLE): file columns from the table root's
+    ``_table_schema.json`` when present (native/tableschema.py), else
+    from the first file's first block header (reference lib.rs:251
+    parses the whole file); then the hive ``key=value`` columns (int iff
+    every value is an integer literal), ``file_column`` and
+    ``row_index_column``. ``columns`` projects."""
+    from ..filesystem import is_uri
     from ..native.codec import read_file_schema
+    from ..native.types import CHType, parse_type
 
     path = options.get("path")
     if not path:
         raise ValueError("clickhouse_native requires a path")
     paths = _resolve_paths(path)
-    from ..filesystem import is_uri
-
     if not paths or (not is_uri(paths[0]) and not os.path.exists(paths[0])):
         raise FileNotFoundError(
             f"no ClickHouse Native files found at {path!r} — schema "
             "discovery needs at least one existing file (write a seed "
             "part or pass an explicit .schema(...))"
         )
-    # metadata-only schema evolution: when the table root carries a
-    # _table_schema.json, ITS column list (order included) is the
-    # table schema — parts of any epoch resolve against it at read
-    # time (native/tableschema.py)
     meta = None
     if os.path.isdir(path):
         from ..native.tableschema import load_table_schema
 
         meta = load_table_schema(path)
     if meta is not None:
-        from ..native.types import parse_type
-
-        cols = [(c["name"], parse_type(c["type"])) for c in meta["columns"]]
+        header = [(c["name"], parse_type(c["type"])) for c in meta["columns"]]
     else:
-        cols = read_file_schema(
+        header = read_file_schema(
             paths[0],
             compression=str(options.get("compression", "auto")).lower(),
             unsupported_as_varchar=(
@@ -1773,52 +1632,56 @@ def infer_native_schema(options: dict) -> StructType:
     want = None
     if options.get("columns"):
         want = {c.strip() for c in options["columns"].split(",")}
-    fields = []
-    for name, t in cols:
-        if want is not None and name not in want:
-            continue
-        if lossy and t.base in ("UInt64", "UInt8"):
-            dt: DataType = IntegerType()
-        else:
-            dt = _ch_to_spark(t)
-        fields.append(StructField(name, dt, nullable=True))
-    # hive-style key=value layout: partition columns appended after the
-    # file columns (Spark's parquet convention), typed int iff every
-    # discovered value is an integer literal
-    keys, _vals, types = _partition_spec(path, paths)
-    file_cols = {f.name for f in fields}
-    for k in keys:
-        if k in file_cols:
-            raise ValueError(
-                f"partition column {k!r} collides with a file column"
-            )
-        if want is not None and k not in want:
-            continue
-        fields.append(
-            StructField(
-                k,
-                LongType() if types[k] is int else StringType(),
-                nullable=False,
-            )
+    out = [
+        NativeColumn(
+            name,
+            t,
+            IntegerType() if lossy and t.base in ("UInt64", "UInt8") else _ch_to_spark(t),
+            True,
         )
-    # file_column: the source-file basename as a string column (the
-    # parquet _metadata.file_name analogue the Python DataSource API
-    # lacks) — per-part attribution for projections/maintenance
-    fc = (options.get("file_column") or "").strip()
-    if fc:
-        if fc in {f.name for f in fields}:
-            raise ValueError(
-                f"file_column {fc!r} collides with an existing column"
+        for name, t in header
+        if want is None or name in want
+    ]
+    keys, _vals, types = _partition_spec(path, paths)
+    for k in keys:
+        if k in {c.name for c in out}:
+            raise ValueError(f"partition column {k!r} collides with a file column")
+        if want is None or k in want:
+            out.append(
+                NativeColumn(k, CHType("Int64"), LongType(), False)
+                if types[k] is int
+                else NativeColumn(k, CHType("String"), StringType(), False)
             )
-        fields.append(StructField(fc, StringType(), nullable=False))
-    ric = (options.get("row_index_column") or "").strip()
-    if ric:
-        if ric in {f.name for f in fields}:
-            raise ValueError(
-                f"row_index_column {ric!r} collides with an existing column"
-            )
-        fields.append(StructField(ric, LongType(), nullable=False))
-    return StructType(fields)
+    # file_column: the source file's load-relative path (the parquet
+    # _metadata.file_name analogue the Python DataSource API lacks);
+    # row_index_column: the physical per-file row ordinal
+    for key, col in (
+        ("file_column", NativeColumn("", CHType("String"), StringType(), False)),
+        ("row_index_column", NativeColumn("", CHType("Int64"), LongType(), False)),
+    ):
+        name = (options.get(key) or "").strip()
+        if name:
+            if name in {c.name for c in out}:
+                raise ValueError(
+                    f"{key} {name!r} collides with an existing column"
+                )
+            out.append(col._replace(name=name))
+    return out
+
+
+def infer_native_schema(options: dict) -> StructType:
+    """The Spark schema of :func:`describe_native`.
+
+    Module-level so the DRIVER can call it in-process and pass the
+    result to ``spark.read.schema(...)`` — with an explicit schema
+    Spark skips the separate Python-worker schema() roundtrip, which
+    is ~0.3 s of fixed per-query planning latency."""
+    return StructType(
+        [
+            StructField(c.name, c.spark_type, nullable=c.nullable)
+            for c in describe_native(options)
+        ]
+    )
 
 
 class ClickHouseNativeDataSource(DataSource):
@@ -1841,29 +1704,20 @@ class ClickHouseNativeDataSource(DataSource):
         return ClickHouseNativeWriter(schema, dict(self.options), overwrite)
 
 
-def _sidecar_rows_total(path: str) -> Optional[int]:
-    """Exact row count of a Native directory from its parts' stats
-    sidecars alone (no data IO). None when any part lacks a parseable
-    sidecar or carries a delete mask (masked rows are invisible to the
-    sidecar count) — callers fall back to a real count."""
-    from ..filesystem import resolve_paths
-    from ..native.delmask import delmask_path
+def sidecar_rows(path: str) -> Optional[int]:
+    """Row count of a Native table from part metadata alone: each
+    part's stats-sidecar rows minus its lightweight-deleted rows. None
+    when a part has no parseable sidecar or a corrupt delete mask —
+    callers then count by scanning."""
+    from ..native.delmask import deleted_count
     from ..native.writer import load_stats
 
-    try:
-        parts = [p for p in resolve_paths(path) if not p.endswith(".json")]
-    except Exception:
-        return None
-    if not parts:
-        return None
     total = 0
-    for p in parts:
-        if os.path.exists(delmask_path(p)):
-            return None
-        try:
-            total += int(load_stats(p)["rows"])
-        except Exception:
-            return None
+    try:
+        for p in _resolve_paths(path):
+            total += int(load_stats(p)["rows"]) - deleted_count(p)
+    except (OSError, KeyError, TypeError, ValueError):
+        return None
     return total
 
 
@@ -1949,7 +1803,7 @@ def compact_native_dir(
     # dedup/cluster plan a SECOND time before the write re-evaluated it
     # (one wasted full pass per OPTIMIZE; guide §1.2 "don't compute
     # things you throw away")
-    n = _sidecar_rows_total(dst)
+    n = sidecar_rows(dst)
     if n is None:  # a part without a sidecar: count the OUTPUT, not df
         n = (
             spark.read.format(FORMAT_NAME)

@@ -661,6 +661,15 @@ def load_objects(spark, source, path: str, fmt: str, **options):
     return r.load()
 
 
+def reader_rows(reader) -> Iterator[tuple]:
+    """Every row a DataSource reader yields over all its planned
+    partitions, as tuples — the ``eval`` of the SQL UDTFs that wrap a
+    DataSource (rows arrive in the types the reader conforms to)."""
+    for part in reader.partitions():
+        for rb in reader.read(part):
+            yield from zip(*(c.to_pylist() for c in rb.columns))
+
+
 def make_object_udtf(source):
     """UDTF for ``<source name>(path, fmt[, structure[, compression]])``:
     ``analyze`` runs the source's schema probe, ``eval`` its reader over
@@ -699,10 +708,7 @@ def make_object_udtf(source):
             return AnalyzeResult(schema=source(opts).schema())
 
         def eval(self, *args, **kwargs) -> Iterator[tuple]:
-            reader = source(options(args, kwargs)).reader(self.schema)
-            for part in reader.partitions():
-                for rb in reader.read(part):
-                    yield from zip(*(c.to_pylist() for c in rb.columns))
+            yield from reader_rows(source(options(args, kwargs)).reader(self.schema))
 
     ObjectSourceUDTF.analyze.__signature__ = sig
     ObjectSourceUDTF.eval.__signature__ = sig.replace(

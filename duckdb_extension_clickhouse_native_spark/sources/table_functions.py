@@ -23,62 +23,34 @@ from typing import Iterator, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _native_schema(path: str):
-    from pyspark.sql.types import StructField, StructType
-
-    from ..filesystem import resolve_paths
-    from ..native.codec import read_file_schema
-    from .native_datasource import _ch_to_spark
-
-    paths = resolve_paths(path)
-    if not paths:
-        raise FileNotFoundError(f"no ClickHouse Native files found at {path!r}")
-    return StructType(
-        [
-            StructField(name, _ch_to_spark(t), True)
-            for name, t in read_file_schema(paths[0])
-        ]
-    )
-
-
 def make_native_udtf():
-    """UDTF class for ``clickhouse_native(path)`` — schema resolved
-    from the file header at analyze time."""
+    """UDTF for ``clickhouse_native(path)``: ``analyze`` runs the
+    DataSource's schema probe, ``eval`` its reader over every planned
+    partition — the same columns (hive keys, evolved names) and rows
+    (delete masks applied) as ``spark.read.format("clickhouse_native")``,
+    funnelled through one worker."""
     from pyspark.sql.functions import udtf
     from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
 
+    from .native_datasource import ClickHouseNativeDataSource
+    from .object_source import reader_rows
+
     class ClickHouseNativeUDTF:
+        def __init__(self, analyze_result):
+            self.schema = analyze_result.schema
+
         @staticmethod
         def analyze(path: AnalyzeArgument) -> AnalyzeResult:
             if path.value is None:
                 raise ValueError(
                     "clickhouse_native(path) requires a literal path string"
                 )
-            return AnalyzeResult(schema=_native_schema(str(path.value)))
+            source = ClickHouseNativeDataSource({"path": str(path.value)})
+            return AnalyzeResult(schema=source.schema())
 
         def eval(self, path: str) -> Iterator[tuple]:
-            from ..filesystem import open_input, resolve_paths
-            from ..native.codec import iter_blocks, read_file_schema
-            from ..native.compress import maybe_compressed_reader
-
-            paths = resolve_paths(path)
-            if not paths:
-                raise FileNotFoundError(
-                    f"no ClickHouse Native files found at {path!r}"
-                )
-            # emit every row in the ANALYZE-TIME column order (derived
-            # the same way analyze() derives it — from the first file's
-            # header): files in a directory may store columns in
-            # different orders, and dict-order emission would silently
-            # misassign values (row[name] raises on a missing column,
-            # which beats a silent null)
-            names = [n for n, _ in read_file_schema(paths[0])]
-            for p in paths:
-                with open_input(p) as f:
-                    buf = maybe_compressed_reader(f)
-                    for blk in iter_blocks(buf):
-                        for row in blk.to_record_batch().to_pylist():
-                            yield tuple(row[n] for n in names)
+            source = ClickHouseNativeDataSource({"path": path})
+            yield from reader_rows(source.reader(self.schema))
 
     return udtf(ClickHouseNativeUDTF)
 
@@ -239,33 +211,20 @@ def make_parts_udtf():
 
 def make_columns_udtf():
     """UDTF for ``clickhouse_native_columns(path)`` — the
-    system.columns / DESCRIBE TABLE analogue: one row per column with
-    the ClickHouse type (rendered as the header spells it), the Spark
-    type it maps to, and its position, from a header-only parse of the
-    first part (the same single-file schema contract the DataSource's
-    schema() uses). Zero data decode."""
+    system.columns / DESCRIBE TABLE analogue: one row per column of
+    the Native probe (``describe_native``: file columns, hive keys)
+    with the ClickHouse type (rendered as the header spells it), the
+    Spark type it maps to, and its position. Zero data decode."""
     from pyspark.sql.functions import udtf
 
     class ClickHouseNativeColumnsUDTF:
         def eval(self, path: str) -> Iterator[tuple]:
-            from ..filesystem import resolve_paths
-            from ..native.codec import read_file_schema
-            from .native_datasource import _ch_to_spark
+            from .native_datasource import describe_native
 
-            paths = resolve_paths(path)
-            if not paths:
-                raise FileNotFoundError(
-                    f"no ClickHouse Native files found at {path!r}"
-                )
-            for pos, (name, t) in enumerate(read_file_schema(paths[0]), 1):
+            for pos, c in enumerate(describe_native({"path": path}), 1):
+                t = c.ch_type
                 ch = f"Nullable({t.name})" if t.nullable else t.name
-                yield (
-                    name,
-                    pos,
-                    ch,
-                    _ch_to_spark(t).simpleString(),
-                    bool(t.nullable),
-                )
+                yield (c.name, pos, ch, c.spark_type.simpleString(), t.nullable)
 
     return udtf(
         ClickHouseNativeColumnsUDTF,
@@ -315,21 +274,11 @@ def trivial_count(spark: SparkSession, path: str) -> DataFrame:
     count — never a wrong answer, only a slower one."""
     from pyspark.sql import functions as F
 
-    from ..filesystem import resolve_paths
-    from ..native.delmask import deleted_count
-    from ..native.writer import load_stats
-    from .native_datasource import infer_native_schema
+    from .native_datasource import infer_native_schema, sidecar_rows
 
-    total = 0
-    ok = True
-    for p in resolve_paths(path):
-        try:
-            total += int(load_stats(p)["rows"]) - deleted_count(p)
-        except (TypeError, ValueError, KeyError):
-            ok = False
-            break
-    if ok:
-        return spark.createDataFrame([(int(total),)], "n_rows bigint")
+    total = sidecar_rows(path)
+    if total is not None:
+        return spark.createDataFrame([(total,)], "n_rows bigint")
     df = (
         spark.read.format("clickhouse_native")
         .schema(infer_native_schema({"path": path}))

@@ -117,6 +117,39 @@ def test_bloom_malformed_entry_never_prunes():
     assert bloom_maybe_contains({"m": 64, "k": 2, "b64": "AA=="}, 5) is True
 
 
+def test_in_list_decodes_the_bitset_once(tmp_path, monkeypatch):
+    """Planning an ``IN`` of 100 values against one bloom-indexed part
+    base64-decodes its bitset once, not once per probed value."""
+    import base64
+
+    from pyspark.sql.datasource import In
+
+    from duckdb_extension_clickhouse_native_spark.native import bloomindex
+    from duckdb_extension_clickhouse_native_spark.native.writer import load_stats
+    from duckdb_extension_clickhouse_native_spark.sources.native_datasource import (
+        _stats_exclude,
+    )
+
+    p = str(tmp_path / "b.clickhouse")
+    t = pa.table({"u": pa.array([f"in-once-{i * 3}" for i in range(2000)])})
+    write_native_file(p, t, index_bloom=["u"])
+    # 100 in-range values the filter proves absent (skipping its false
+    # positives), so every one of them is probed
+    bloom = load_stats(p)["bloom"]["u"]
+    absent = [
+        v for v in (f"in-once-{i * 3 + 1}" for i in range(500))
+        if not bloom_maybe_contains(bloom, v)
+    ][:100]
+    assert len(absent) == 100
+    calls = []
+    real = base64.b64decode
+    monkeypatch.setattr(
+        bloomindex.base64, "b64decode", lambda s: calls.append(1) or real(s)
+    )
+    assert _stats_exclude([In(("u",), tuple(absent))], load_stats(p))
+    assert len(calls) == 1
+
+
 # ---- writer sidecar --------------------------------------------------------
 
 
