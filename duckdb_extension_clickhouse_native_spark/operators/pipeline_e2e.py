@@ -17,10 +17,10 @@ re-derivation of the upstream CTEs on the join's second branch.
 
 The ``clean`` relation feeds two consumers (the tiny per-source
 aggregate and the ranking window). Catalyst inlines CTEs per
-reference, so the Spark path PERSISTS ``clean`` (MEMORY_AND_DISK)
-before fanning out — the expensive text-feature map stage
-(split/array_distinct/regexp per doc) runs once, not once per
-consumer. That is the production posture at 100 TB too: cut the
+reference, so the Spark path checkpoints ``clean``
+(``localCheckpoint(eager=False)``) before fanning out — the expensive
+text-feature map stage (split/array_distinct/regexp per doc) runs
+once, not once per consumer. That is the production posture at 100 TB too: cut the
 pipeline at the cleaned corpus, which is orders of magnitude smaller
 than the raw input (three scalar columns, post-filter, post-dedup).
 The DuckDB oracle remains the single WITH-chain SQL — same rows.
@@ -229,7 +229,7 @@ def pipeline_tail_spark_sql(
 
 
 def pipeline_e2e_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark production path: persist the cleaned corpus before the
+    """Spark production path: checkpoint the cleaned corpus before the
     fan-out so the text-feature extraction runs once, and size the
     query's reducer count from the INPUT BYTES (a stat() on the
     source, no job): Spark reads shuffle.partitions at execution time
@@ -239,24 +239,10 @@ def pipeline_e2e_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     of input, floored at 4 and capped at cluster parallelism — at
     100 TB the same expression sizes UP to the cap, so nothing about
     the plan shape is conformance-scale-specific."""
-    import os
-
-    from ..plans.base import load_tables, scoped_conf, track_persist
+    from ..plans.base import load_tables, scoped_conf, table_bytes
 
     load_tables(spark, sf_dir, ["documents"])
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        in_bytes = (
-            os.path.getsize(src)
-            if os.path.isfile(src)
-            else sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _d, fs in os.walk(src)
-                for f in fs
-            )
-        )
-    except OSError:
-        in_bytes = 0
+    in_bytes = table_bytes(sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     if in_bytes:
         scoped_conf(
@@ -265,6 +251,5 @@ def pipeline_e2e_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             max(4, min(par, -(-in_bytes // (8 << 20)))),
         )
     clean = spark.sql(clean_corpus_sql("spark"))
-    track_persist(clean)
-    clean.createOrReplaceTempView("pipeline_clean_corpus")
+    clean.localCheckpoint(eager=False).createOrReplaceTempView("pipeline_clean_corpus")
     return spark.sql(pipeline_tail_spark_sql("pipeline_clean_corpus"))

@@ -50,8 +50,9 @@ def _default_cache_dir() -> str:
 def plan_cache_key(df: DataFrame) -> str:
     """md5 of the canonicalized OPTIMIZED plan + the output column
     names (canonicalization erases aliases, and two plans differing
-    only in output names must not share a served result — the
-    track_persist precedent, plans/base.py)."""
+    only in output names must not share a served result: an as-of
+    join's forward right side ``next_order_ts`` and backward
+    ``last_order_ts`` canonicalize identically)."""
     # optimizedPlan, not analyzed: Catalyst normalizes filter/project
     # order there, so `filter().select()` and `select().filter()` key
     # identically (the analyzed plan still tells them apart)

@@ -288,11 +288,11 @@ def pq_topk_sql(
 
     ``sub_rel`` / ``enc_rel`` / ``codes_rel``: names of pre-materialized
     relations for the exploded fixed-point dims, the (vec, m, code)
-    distance grid and the argmin codes. The Spark path persists all
-    three (``pq_topk_query``) because Catalyst inlines CTEs per
-    consumer — sub feeds codebook + enc_dist, enc_dist feeds codes +
-    qtab, codes feeds packed + adc, so the inlined plan re-runs the
-    explode ~6x (6 Generate/6 Window nodes in the r6 executed plan).
+    distance grid and the argmin codes. A Spark caller passing them
+    materializes all three (``localCheckpoint``), because Catalyst
+    inlines CTEs per consumer — sub feeds codebook + enc_dist, enc_dist
+    feeds codes + qtab, codes feeds packed + adc, so the inlined plan
+    re-runs the explode ~6x (6 Generate/6 Window nodes in the r6 executed plan).
     """
     import math
 

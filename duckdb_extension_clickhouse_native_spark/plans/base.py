@@ -161,9 +161,9 @@ def load_tables(spark: SparkSession, sf_dir: str, names: Optional[list[str]] = N
         # drop any entry for an older content stamp of the same table
         stale = [k for k in _TABLE_CACHE if k[:3] == base_key]
         if stale:
-            # a rewritten table also poisons condemned persists built on
-            # the old plan: their canonicalized form can still compare
-            # equal (same path), so ban reprieves from before this point
+            # a rewritten table invalidates plan-keyed decisions made
+            # on its old content (asof._AUTO_DECISIONS): the canonical
+            # plan still compares equal (same path), the epoch does not
             global _TABLE_EPOCH
             _TABLE_EPOCH += 1
             for k in stale:
@@ -195,41 +195,24 @@ def _load_one_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Persisted intermediates tracked for release. Several query builders
-# persist multi-consumer relations (dedup shingles, kmeans dims, PQ
-# codes, the pipeline clean stage); without release, a 50-query grading
-# run plus bench reruns accumulates dead cached/spilled blocks until
-# context shutdown. Builds run sequentially (driver, bench, tests), so
-# the moment query B starts building, query A's result has been
-# consumed and its caches are dead weight — Registry wraps every build
-# to call release_persists() first.
-_LIVE_PERSISTS: list = []
+# Session confs set by the CURRENT build (scoped_conf), as (spark, key,
+# prior value). Builds run sequentially (oracle sweeps, bench.py,
+# tests); the Registry wraps every build to restore them first.
 _SCOPED_CONFS: list = []
-# Persists from the PREVIOUS build, not yet unpersisted: a rebuild of
-# the same query (the bench's best-of-2, a retried grading row) gets to
-# reuse the already-materialized blocks instead of recomputing them —
-# that is the steady-state a production deployment runs in, where the
-# shingle/code relations are materialized checkpoints, not per-query
-# scratch. Anything still condemned when the build finishes is freed.
-_CONDEMNED: list = []
-# bumped whenever load_tables invalidates a stale table plan (parquet
-# rewritten in place); a condemned persist from an older epoch may
-# reference the rewritten file's old blocks, so it is never reprieved
+# Bumped whenever load_tables invalidates a stale table plan (parquet
+# rewritten in place). It is part of the key of asof._AUTO_DECISIONS:
+# a decision probed on the old content must not serve the new one.
 _TABLE_EPOCH: int = 0
 
+# data_sized_shuffle's estimate: on-disk bytes x SHUFFLE_EXPANSION
+# (decompression + shingle explosion), one reducer per
+# SHUFFLE_BYTES_PER_PARTITION.
+SHUFFLE_EXPANSION = 16.0
+SHUFFLE_BYTES_PER_PARTITION = 64 << 20
 
-def release_persists() -> None:
-    """Unpersist every tracked intermediate from prior builds and
-    restore any scoped session confs they set."""
-    for bucket in (_LIVE_PERSISTS, _CONDEMNED):
-        while bucket:
-            df = bucket.pop()
-            if isinstance(df, tuple):
-                df = df[0]
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass  # session already stopped — nothing to release
+
+def restore_scoped_confs() -> None:
+    """Restore every session conf the previous build scoped."""
     while _SCOPED_CONFS:
         spark, key, old = _SCOPED_CONFS.pop()
         try:
@@ -238,35 +221,7 @@ def release_persists() -> None:
             else:
                 spark.conf.set(key, old)
         except Exception:
-            pass
-
-
-def begin_build() -> None:
-    """Start of a registry build: condemn the previous build's persists
-    (they are reprieved if this build re-creates the identical plan,
-    freed at end_build otherwise) and restore scoped confs."""
-    while _LIVE_PERSISTS:
-        _CONDEMNED.append((_LIVE_PERSISTS.pop(), _TABLE_EPOCH))
-    while _SCOPED_CONFS:
-        spark, key, old = _SCOPED_CONFS.pop()
-        try:
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
-        except Exception:
-            pass
-
-
-def end_build() -> None:
-    """End of a registry build: free every condemned persist that this
-    build did not reprieve."""
-    while _CONDEMNED:
-        df, _epoch = _CONDEMNED.pop()
-        try:
-            df.unpersist(blocking=False)
-        except Exception:
-            pass
+            pass  # session already stopped — nothing to restore
 
 
 def assert_planned_partitions(df: DataFrame, ok, msg) -> None:
@@ -280,7 +235,7 @@ def assert_planned_partitions(df: DataFrame, ok, msg) -> None:
 
 def scoped_conf(spark: SparkSession, key: str, value) -> None:
     """Set a session conf for the lifetime of the CURRENT query build
-    (builds run sequentially; the next build's release_persists()
+    (builds run sequentially; the next build's restore_scoped_confs()
     restores the prior value). Used for data-derived partition sizing:
     Spark reads ``spark.sql.shuffle.partitions`` at execution time and
     its AQE coalesce floor (``parallelismFirst``) refuses to go below
@@ -295,90 +250,58 @@ def scoped_conf(spark: SparkSession, key: str, value) -> None:
     spark.conf.set(key, str(value))
 
 
-def data_sized_shuffle(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: list[str],
-    *,
-    expansion: float = 16.0,
-    bytes_per_partition: int = 64 << 20,
-    floor: Optional[int] = None,
-) -> None:
+def table_bytes(sf_dir: str, name: str) -> int:
+    """On-disk bytes of ``<sf_dir>/<name>.parquet``: the file's size, or
+    the total of every file under it when the table is a directory of
+    part files. 0 when it does not exist."""
+    import os
+
+    src = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        if os.path.isfile(src):
+            return os.path.getsize(src)
+        return sum(
+            os.path.getsize(os.path.join(r, f))
+            for r, _d, fs in os.walk(src)
+            for f in fs
+        )
+    except OSError:
+        return 0
+
+
+def data_sized_shuffle(spark: SparkSession, sf_dir: str, tables: list[str]) -> None:
     """Scope ``spark.sql.shuffle.partitions`` for the CURRENT build to
     the INPUT data size instead of the cluster core count (guide §2.2:
     size shuffles to data, not cores) — the batch analogue of
     ``stream_shuffle_sizing``. The dedup/text family shuffles a few MB
     of postings at bench scale yet paid 32 reducers per exchange
-    (window sorts, cached-plan materializations — cached/checkpointed
+    (window sorts, checkpointed-plan materializations — checkpointed
     subplans never AQE-coalesce, so the session default is the REAL
     partition count there); the driver's r15 scaling block measured
     dedup_ngram_jaccard 3x SLOWER at 32 cores than 8. Estimate =
-    on-disk parquet bytes x ``expansion`` (decompression + shingle
-    explosion), one partition per ``bytes_per_partition``: sf0.1
-    documents (~0.6 MB) sizes to the floor; a 100 TB corpus sizes to
-    ~25k partitions — the same arithmetic a production job runs, no
-    local-core constant anywhere. Override with
-    ``spark.chsql.batch.shufflePartitions``. Restored at the next
-    build (scoped_conf); never changes results — partition count only
-    moves where rows aggregate."""
+    ``table_bytes`` (a file or a directory of part files) x
+    ``SHUFFLE_EXPANSION``, one partition per
+    ``SHUFFLE_BYTES_PER_PARTITION``: sf0.1 documents (~0.6 MB) sizes
+    to the floor; a 100 GB corpus sizes to ~24k partitions — the same
+    arithmetic a production job runs, no local-core constant anywhere.
+    Override with ``spark.chsql.batch.shufflePartitions``. Restored at
+    the next build (scoped_conf); never changes results — partition
+    count only moves where rows aggregate."""
     import math
-    import os
 
     try:
         n = int(spark.conf.get("spark.chsql.batch.shufflePartitions"))
     except Exception:
-        if floor is None:
-            # parallelism-relative floor, the stream_shuffle_sizing
-            # precedent: tiny corpora still engage a quarter of the
-            # cluster (measured: ngram_jaccard 2.23 s at 2 reducers vs
-            # 1.67 s at 8 on local[32]; a 128-core cluster floors at
-            # 32), while the data term takes over the moment the
-            # corpus is big enough to matter.
-            floor = max(2, spark.sparkContext.defaultParallelism // 4)
-        total = 0
-        for t in tables:
-            try:
-                total += os.path.getsize(os.path.join(sf_dir, f"{t}.parquet"))
-            except OSError:
-                pass
-        n = max(floor, math.ceil(total * expansion / bytes_per_partition))
+        # parallelism-relative floor, the stream_shuffle_sizing
+        # precedent: tiny corpora still engage a quarter of the
+        # cluster (measured: ngram_jaccard 2.23 s at 2 reducers vs
+        # 1.67 s at 8 on local[32]; a 128-core cluster floors at
+        # 32), while the data term takes over the moment the
+        # corpus is big enough to matter.
+        floor = max(2, spark.sparkContext.defaultParallelism // 4)
+        total = sum(table_bytes(sf_dir, t) for t in tables)
+        n = max(floor, math.ceil(total * SHUFFLE_EXPANSION / SHUFFLE_BYTES_PER_PARTITION))
     scoped_conf(spark, "spark.sql.shuffle.partitions", n)
-
-
-def track_persist(df: DataFrame) -> DataFrame:
-    """Persist a multi-consumer intermediate (MEMORY_AND_DISK) and
-    track it so a later different build frees it. If the previous
-    build persisted the SAME logical plan (same query re-run — the
-    bench's best-of-2, a grading retry), its still-materialized
-    relation is reprieved and returned instead: steady-state latency
-    without the unbounded accumulation the release mechanism exists to
-    stop. Reuse is refused across a table-plan invalidation (parquet
-    rewritten in place) — those blocks may hold the old file's data."""
-    from pyspark import StorageLevel
-
-    for i, (cdf, epoch) in enumerate(_CONDEMNED):
-        if epoch != _TABLE_EPOCH:
-            continue
-        try:
-            # analyzed, not logical: sameResult throws on unresolved
-            # plans, and analyzed canonicalization handles exprIds.
-            # Canonicalization ALSO erases alias names, so two plans
-            # that differ only in output column names compare equal —
-            # require matching names too, or the reprieved relation's
-            # columns would not resolve in the caller's plan (r9: asof
-            # forward right `next_order_ts` vs backward `last_order_ts`)
-            same = cdf._jdf.queryExecution().analyzed().sameResult(
-                df._jdf.queryExecution().analyzed()
-            ) and cdf.columns == df.columns
-        except Exception:
-            same = False
-        if same:
-            _CONDEMNED.pop(i)
-            _LIVE_PERSISTS.append(cdf)
-            return cdf
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PERSISTS.append(df)
-    return df
 
 
 @dataclass
@@ -498,61 +421,6 @@ class Query:
 #     tier), then as many of the r6-green cohort (43 rows,
 #     alphabetical) as fit the remaining slots; the r6 remainder and
 #     the r7 cohort rotate into round 10.
-# ROUND-9 WINDOW (graded, all green — kept for the ledger): 48
-# never-graded r9 additions + q22/q4 from the r5 cohort.
-_ROUND9_WINDOW = [
-    "dedup_substring_spans_twophase",  # NEVER GRADED
-    "asof_join_nearest_tolerance",  # NEVER GRADED
-    "events_summing_merge",  # NEVER GRADED
-    "events_sequence_count",  # NEVER GRADED
-    "events_histogram",  # NEVER GRADED
-    "join_time_window_binned",  # NEVER GRADED
-    "events_uniq_upto",  # NEVER GRADED
-    "events_delta_sum",  # NEVER GRADED
-    "group_with_totals",  # NEVER GRADED
-    "multimodal_real_decode",  # NEVER GRADED
-    "events_heavy_hitters",  # NEVER GRADED
-    "events_heavy_hitters_weighted",  # NEVER GRADED
-    "text_ngram_vocab",  # NEVER GRADED
-    "sample_domain_cap",  # NEVER GRADED
-    "sim_int8_recall",  # NEVER GRADED
-    "sim_topk_int8",  # NEVER GRADED
-    "stream_heavy_hitters",  # NEVER GRADED
-    "stream_replacing_merge",  # NEVER GRADED
-    "text_bpe_merge_stats",  # NEVER GRADED
-    "multimodal_audio_decode",  # NEVER GRADED
-    "scan_remote_rowbinary",  # NEVER GRADED
-    "scan_remote_jsoneachrow",  # NEVER GRADED
-    "events_topk_values",  # NEVER GRADED
-    "events_minmax_map",  # NEVER GRADED
-    "events_running_difference",  # NEVER GRADED
-    "events_limit_by",  # NEVER GRADED
-    "docs_left_array_join",  # NEVER GRADED
-    "dict_get_region",  # NEVER GRADED
-    "events_sum_map",  # NEVER GRADED
-    "agg_sum_array_combinator",  # NEVER GRADED
-    "multimodal_audio_features",  # NEVER GRADED
-    "join_paste_leaderboards",  # NEVER GRADED
-    "events_bounding_ratio",  # NEVER GRADED
-    "agg_avg_weighted",  # NEVER GRADED
-    "scan_remote_tsv",  # NEVER GRADED
-    "scan_remote_csv",  # NEVER GRADED
-    "events_max_intersections",  # NEVER GRADED
-    "events_interval_length_sum",  # NEVER GRADED
-    "events_moving_sum",  # NEVER GRADED
-    "events_exp_moving_avg",  # NEVER GRADED
-    "events_lttb_downsample",  # NEVER GRADED
-    "events_sequence_next_node",  # NEVER GRADED
-    "events_max_intersections_twophase",  # NEVER GRADED
-    "stream_interval_union",  # NEVER GRADED
-    "group_order_by_all",  # NEVER GRADED
-    "window_qualify_topn",  # NEVER GRADED
-    "scan_remote_rowbinary_nested",  # NEVER GRADED
-    "stream_exp_moving_avg",  # NEVER GRADED
-    "q22_sales_opportunity",  # green r5
-    "q4_order_priority",  # green r5
-]
-
 # ROUND-10 WINDOW (summary; full text in git history at bf1fc92):
 # 48 never-graded r10-tranche rows + q1_pricing_summary +
 # scan_remote_rowbinary — graded 50/50 green in CORRECTNESS_r10.json.
@@ -707,81 +575,6 @@ GRADING_WINDOW = [
     "sim_ann_recall",  # green r7
 ]
 
-# (r13 window text retired to git history — see the commit referenced
-# above; the names below this line were the r13 list. The per-line
-# comments are the status AS OF r13 OPEN and are kept only as ledger:
-# every entry below has since been driver-graded green (r13 window
-# 50/50 + the r14 judge 372/372 sweep) — do NOT read "NEVER GRADED"
-# here as current when planning a rotation; run tools/window_plan.py,
-# whose histogram is authoritative. r15 histogram: r7:35 r8:48 r9:49
-# r10:45 r11:49 r12:49 r13:47 r14:50, never-graded 0.)
-_GRADING_WINDOW_R13 = [
-    # never driver-graded (r12c tranche)
-    "scalar_string_pad_split",  # NEVER GRADED (r12c)
-    "agg_group_uniq_array",  # NEVER GRADED (r12c)
-    "stats_mean_ztest",  # graded green r13 (was never-graded at r13 open)
-    "quantile_timing_grid",  # NEVER GRADED (r12c)
-    "agg_categorical_iv",  # NEVER GRADED (r12c)
-    "tf_numbers_lcg",  # NEVER GRADED (r12c)
-    "scan_remote_orc",  # NEVER GRADED (r12c: 11th wire format)
-    "scan_remote_npy",  # NEVER GRADED (r12c: 12th wire format)
-    "native_sample_clause",  # NEVER GRADED (r12c)
-    # never driver-graded (r12d tranche)
-    "dict_complex_key_lookup",  # NEVER GRADED (r12d)
-    "agg_group_array_insert_at",  # NEVER GRADED (r12d)
-    "agg_summap_filtered",  # NEVER GRADED (r12d)
-    "quantile_deterministic",  # NEVER GRADED (r12d)
-    "scan_cluster_global_in",  # NEVER GRADED (r12d)
-    "stream_quantile_timing",  # NEVER GRADED (r12d: stream twin)
-    # never driver-graded (r12e tranche)
-    "topk_with_ties",  # NEVER GRADED (r12e)
-    "events_running_concurrency",  # NEVER GRADED (r12e)
-    "array_rotate_shingles",  # NEVER GRADED (r12e)
-    "scalar_time_slots",  # NEVER GRADED (r12e)
-    "native_into_outfile",  # NEVER GRADED (r12e)
-    # never driver-graded (r12f tranche)
-    "window_lag_in_frame",  # NEVER GRADED (r12f)
-    "scalar_json_extract_family",  # NEVER GRADED (r12f)
-    "array_join_multi",  # NEVER GRADED (r12f)
-    "catalog_row_policy",  # NEVER GRADED (r12f)
-    "native_describe_table",  # NEVER GRADED (r12f)
-    "optimize_compact_hive",  # NEVER GRADED (r12f)
-    "mutation_freeze_partition",  # NEVER GRADED (r12f)
-    "catalog_check_table",  # NEVER GRADED (r12f)
-    "stream_time_slots",  # NEVER GRADED (r12f: stream twin)
-    "dedup_url_canonical",  # NEVER GRADED (r12f)
-    # never driver-graded: r13 parity forms left by the fast-default
-    # promotions (same oracles as their family names)
-    "cte_recursive_calendar_sql",  # NEVER GRADED (r13: WITH RECURSIVE parity)
-    "text_ngram_distance_sql",  # graded green r13 (parity form; was never-graded at r13 open)
-    # never driver-graded: r13 type long tail (VERDICT r12 item 4)
-    "native_nested_scan",  # NEVER GRADED (r13: Nested named fields)
-    "native_int128_scan",  # NEVER GRADED (r13: Int128/UInt128 decode)
-    "native_json_scan",  # NEVER GRADED (r13: JSON String carrier)
-    # never driver-graded: r13 cross-revision TCP (VERDICT r12 item 6)
-    "scan_tcp_downgrade",  # NEVER GRADED (r13: rev-54058 server)
-    # never driver-graded: r13 recall graders (VERDICT r12 item 8)
-    "sim_matryoshka_recall",  # NEVER GRADED (r13)
-    "sim_cascade_recall",  # NEVER GRADED (r13)
-    # never driver-graded: r13 url()/format() table functions
-    "tf_url_csv_scan",  # NEVER GRADED (r13: per-URL fan-out)
-    "tf_format_inline",  # NEVER GRADED (r13: inline literal decode)
-    "tf_url_insert_roundtrip",  # NEVER GRADED (r13: POST write half)
-    "tf_url_structure_scan",  # NEVER GRADED (r13: 3-arg url())
-    # changed-path re-proofs: r13 fast-twin promotions execute the new
-    # plan under the already-graded name (precedent: r11 kmeans/PQ)
-    "cte_recursive_calendar",  # green r12; r13 sequence() spine default
-    "text_ngram_distance",  # green r10; r13 posting-list default
-    # oldest-evidence cohort (newest green r6), alphabetical
-    "dedup_fingerprint",  # green r6
-    "distinct_segments",  # green r6
-    "events_sessionize",  # green r6
-    "explode_token_freq",  # green r6
-    "join_full_outer",  # green r6
-    "join_left_outer",  # green r6
-]
-
-
 class Registry:
     def __init__(self) -> None:
         self._queries: dict[str, Query] = {}
@@ -792,14 +585,10 @@ class Registry:
         inner = q.build
 
         def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # builds run sequentially; caches persisted by the previous
-            # build are condemned now (reprieved only if this build
-            # re-creates the identical plan) and freed at end_build
-            begin_build()
-            try:
-                return inner(spark, sf_dir)
-            finally:
-                end_build()
+            # builds run sequentially: the previous build's scoped
+            # confs end where this one starts
+            restore_scoped_confs()
+            return inner(spark, sf_dir)
 
         q.build = build
         self._queries[q.name] = q

@@ -131,7 +131,7 @@ _sql_pair(
     "normalized-text md5 fingerprint dedup",
 )
 
-# Spark sides persist the shingled/band-row relations consumed by both
+# Spark sides checkpoint the shingled/band-row relations consumed by both
 # sides of the candidate self-joins (see the *_query docstrings); the
 # oracles stay single SQL strings.
 REGISTRY.df_query(
@@ -150,7 +150,7 @@ REGISTRY.df_query(
     description="32-bit SimHash byte-band candidates within hamming<=6",
 )
 
-# Spark side persists the df-filtered inverted index before its three
+# Spark side checkpoints the df-filtered inverted index before its three
 # consumers (see ngram_jaccard_query); the oracle stays one SQL string.
 REGISTRY.df_query(
     "dedup_ngram_jaccard",
@@ -568,7 +568,7 @@ _sql_pair(
     "GROUPING() flag (totals row ordered last)",
 )
 
-# Spark side persists the capped edge relation once and broadcast-joins
+# Spark side checkpoints the capped edge relation once and broadcast-joins
 # the node-sized rank relation per iteration (see pagerank_query); the
 # oracle stays the unrolled-CTE SQL — identical integer fixed point.
 REGISTRY.df_query(
@@ -788,7 +788,7 @@ _sql_pair(
     "T=0.5 temperature mixture quotas per source (exact-integer quota math)",
 )
 
-# Spark side persists the cleaned corpus before the two-consumer
+# Spark side checkpoints the cleaned corpus before the two-consumer
 # fan-out (see operators/pipeline_e2e.py); the oracle stays the single
 # WITH-chain SQL — identical rows.
 REGISTRY.df_query(
@@ -838,7 +838,7 @@ REGISTRY.df_query(
     ),
 )
 
-# Spark side persists the exploded fixed-point dims once (6 consumers
+# Spark side checkpoints the exploded fixed-point dims once (6 consumers
 # across the Lloyd iterations); the oracle stays one SQL string. Kept
 # as the SQL conformance twin of the numpy path above.
 REGISTRY.df_query(

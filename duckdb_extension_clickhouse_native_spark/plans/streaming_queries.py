@@ -685,7 +685,7 @@ def _stream_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_verify_pairs_sql,
     )
     from ..streaming.events_stream import read_documents_stream
-    from .base import load_tables, track_persist
+    from .base import load_tables
 
     docs = read_documents_stream(spark, sf_dir)
     s1, s2, s3 = minhash_row_band_exprs()
@@ -727,8 +727,8 @@ def _stream_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch post-pass: dedup multi-band pairs, then the SAME verify tail
     # as the batch path (shared minhash_verify_pairs_sql + shared
     # threshold default — one Jaccard formula, no drift). The shingled
-    # relation feeds both join sides, so persist it exactly as
-    # minhash_lsh_query persists mh_shingled (Catalyst inlines CTEs —
+    # relation feeds both join sides, so checkpoint it exactly as
+    # minhash_lsh_query checkpoints mh_shingled (Catalyst inlines CTEs —
     # without this the corpus tokenize+distinct runs twice).
     load_tables(spark, sf_dir, ["documents"])
     drained.createOrReplaceTempView("stream_mh_cands")
@@ -737,8 +737,7 @@ def _stream_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT doc_id, {d['distinct'].format(arr=d['tokens'].format(col='text'))} AS toks_d "
         "FROM documents"
     )
-    track_persist(shingled)
-    shingled.createOrReplaceTempView("stream_mh_shingled")
+    shingled.localCheckpoint(eager=False).createOrReplaceTempView("stream_mh_shingled")
     return spark.sql(
         "WITH candidates AS (SELECT DISTINCT doc_a, doc_b FROM stream_mh_cands),"
         + minhash_verify_pairs_sql(

@@ -1,13 +1,12 @@
-"""As-of auto-strategy probe caching (VERDICT r8 #2) and the
-track_persist name-collision fix it exposed.
+"""As-of auto-strategy probe caching (VERDICT r8 #2).
 
 The ``auto`` strategy counts the pre-aggregated right side once to
 choose broadcast vs bucket. Re-building the same query (bench
 best-of-N, grading retries) must reuse that decision instead of
-launching a probe job per build; and track_persist's reprieve must not
-hand back a same-result relation whose OUTPUT NAMES differ (canonical
-plans erase alias names, so sameResult alone cannot tell
-``last_order_ts`` from ``next_order_ts``).
+launching a probe job per build. The decision key erases alias names
+(canonical plans do), so a right side whose OUTPUT NAMES differ
+(``last_order_ts`` vs ``next_order_ts``) shares the decision but must
+still join through its own columns.
 """
 
 from __future__ import annotations
@@ -15,7 +14,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from duckdb_extension_clickhouse_native_spark.operators import asof
-from duckdb_extension_clickhouse_native_spark.plans import base
 
 
 def _right(spark, alias_ts: str, alias_val: str):
@@ -38,25 +36,20 @@ def test_auto_decision_cached_per_plan(spark):
     n_after_first = len(asof._AUTO_DECISIONS)
     assert s1 == "broadcast" and n_after_first == 1
     # same logical plan again: cached decision, no new cache entry,
-    # and the persisted relation is handed back for reuse
+    # and the right side handed back keeps the same columns
     s2, p2 = asof._auto_strategy(_right(spark, "rts", "v"))
     assert s2 == s1
     assert len(asof._AUTO_DECISIONS) == n_after_first
     assert p2.columns == p1.columns
 
 
-def test_reprieve_refuses_name_mismatch(spark):
-    """Same canonical result, different output names -> no reuse."""
+def test_asof_right_renamed_columns_resolve(spark):
+    """Same canonical result, different output names: the second right
+    side reuses the probed decision and joins through its own names."""
     asof._AUTO_DECISIONS.clear()
-    base.release_persists()  # start clean
-    r1 = _right(spark, "last_ts", "last_v")
-    _, p1 = asof._auto_strategy(r1)
-    # condemn the persisted relation the way a new build does
-    base.begin_build()
+    _, p1 = asof._auto_strategy(_right(spark, "last_ts", "last_v"))
+    assert p1.columns == ["k", "last_ts", "last_v"]
     r2 = _right(spark, "next_ts", "next_v")
-    p2 = base.track_persist(r2)
-    assert p2.columns == ["k", "next_ts", "next_v"]
-    # and the full asof join with the differently-named right resolves
     left = spark.range(0, 50).select(
         (F.col("id") % 10).alias("k"),
         F.timestamp_seconds(F.col("id") * 90 + 30).alias("lts"),
@@ -72,4 +65,3 @@ def test_reprieve_refuses_name_mismatch(spark):
         direction="forward",
     )
     assert out.count() == 50
-    base.release_persists()

@@ -1,6 +1,8 @@
 #!/usr/bin/env python
-"""Session A/B timing harness: time named registry queries with the
-bench's exact methodology (noop sink, full warm-up, median-of-N).
+"""Session A/B timing harness: time named registry queries the way
+bench.py does (noop sink, one untimed full warm-up, median of N runs).
+Builds materialize intermediates only through localCheckpoint, whose
+blocks no later build can reuse, so every timed run is cold.
 
 Run: python tools/time_queries.py name1,name2,... [runs]
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
