@@ -705,15 +705,16 @@ def _spread_for_python_kernels(df: DataFrame) -> DataFrame:
     """Widen a too-narrow input before a CPU-bound Python kernel chain
     (guide §2.5 input skew: the sf-scale documents parquet is one
     row-group -> ONE scan task serializes the whole render/decode).
-    Target max(2, defaultParallelism // 4): chained mapInPandas stages
-    already pipeline across two workers per task, and r15 measured the
-    full-width repartition (32 tasks at 5k rows) strictly WORSE —
-    per-task python fan-out cost more than the split saved; r16
-    interleaved A/B at repartition(8): png 1.7 -> 1.0 s, identical
-    rows. No-op when the input is already at least that wide — a real
-    corpus arrives pre-partitioned and must not be reshuffled."""
-    spark = df.sparkSession
-    n = max(2, spark.sparkContext.defaultParallelism // 4)
+    Target ``shuffle_width(spark)``, the floor of the one sizing rule:
+    chained mapInPandas stages already pipeline across two workers per
+    task, and r15 measured the full-width repartition (32 tasks at 5k
+    rows) strictly WORSE; r16 interleaved A/B at repartition(8): png
+    1.7 -> 1.0 s, identical rows. No-op when the input is already at
+    least that wide — a real corpus arrives pre-partitioned and must
+    not be reshuffled."""
+    from ..plans.base import shuffle_width
+
+    n = shuffle_width(df.sparkSession)
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)

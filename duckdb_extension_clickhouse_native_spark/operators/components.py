@@ -210,14 +210,12 @@ def connected_components(
     graph and is_kept marks the canonical survivor."""
     from ..plans.base import data_sized_shuffle, load_tables
 
-    # r16: resized to the DATA after all — r15 measured a fixed
-    # scoped_conf(8) as neutral on a 32-core session, but the driver's
-    # r15 scaling block (and this round's 8-vs-32 A/B: 4.6 s at 32
-    # cores vs 1.4 s at 8 on the same host) showed the per-round
-    # checkpoints materialize at session shuffle.partitions
-    # (checkpointed plans never AQE-coalesce), so every propagation
-    # round paid 32 reducers + 32 checkpoint blocks for node-sized
-    # relations. data_sized_shuffle sizes the rounds to the corpus.
+    # the per-round checkpoints materialize at session
+    # shuffle.partitions (checkpointed plans never AQE-coalesce): at
+    # the session default every propagation round paid 32 reducers and
+    # 32 checkpoint blocks for node-sized relations (4.6 s at 32 cores
+    # vs 1.4 s at 8, r16). data_sized_shuffle sizes the rounds to the
+    # corpus, capped at the deployment's width.
     load_tables(spark, sf_dir, ["documents"])
     data_sized_shuffle(spark, sf_dir, ["documents"])
     # Build the star relation ONCE and derive both edges and seeds
@@ -419,13 +417,12 @@ def pagerank_query(
     node-sized — broadcastable far beyond this corpus (beyond that,
     it degrades gracefully to a shuffle join on src).
     """
-    from ..plans.base import load_tables, scoped_conf
+    from ..plans.base import data_sized_shuffle, load_tables
 
     # the rank/sum relations are node-sized and the edge relation is
-    # cap-bounded — 8 reducers beat the cluster-wide default for the
-    # 20 tiny shuffles this loop schedules (see scoped_conf: the same
-    # sizing a 100 TB deployment applies in the other direction)
-    scoped_conf(spark, "spark.sql.shuffle.partitions", 8)
+    # cap-bounded: the 20 shuffles this loop schedules are sized to
+    # the events input, not to the cluster-wide default
+    data_sized_shuffle(spark, sf_dir, ["events"])
     t = load_tables(spark, sf_dir, ["events"])
     edges = spark.sql(
         f"""

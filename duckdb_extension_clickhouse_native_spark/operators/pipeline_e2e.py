@@ -231,25 +231,16 @@ def pipeline_tail_spark_sql(
 def pipeline_e2e_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark production path: checkpoint the cleaned corpus before the
     fan-out so the text-feature extraction runs once, and size the
-    query's reducer count from the INPUT BYTES (a stat() on the
-    source, no job): Spark reads shuffle.partitions at execution time
-    and AQE's parallelism floor never coalesces below core count, so a
-    pipeline whose working set is kilobytes would otherwise pay ~10
-    core-wide stages of pure task scheduling. One reducer per ~8 MiB
-    of input, floored at 4 and capped at cluster parallelism — at
-    100 TB the same expression sizes UP to the cap, so nothing about
-    the plan shape is conformance-scale-specific."""
-    from ..plans.base import load_tables, scoped_conf, table_bytes
+    query's reducers to the input bytes (``data_sized_shuffle``, a
+    stat() on the source, no job): AQE never coalesces below core
+    count, so a pipeline whose working set is kilobytes would
+    otherwise pay ~10 core-wide stages of pure task scheduling. At
+    100 TB the same rule sizes up to the deployment's
+    ``spark.sql.shuffle.partitions`` and stops there."""
+    from ..plans.base import data_sized_shuffle, load_tables
 
     load_tables(spark, sf_dir, ["documents"])
-    in_bytes = table_bytes(sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    if in_bytes:
-        scoped_conf(
-            spark,
-            "spark.sql.shuffle.partitions",
-            max(4, min(par, -(-in_bytes // (8 << 20)))),
-        )
+    data_sized_shuffle(spark, sf_dir, ["documents"])
     clean = spark.sql(clean_corpus_sql("spark"))
     clean.localCheckpoint(eager=False).createOrReplaceTempView("pipeline_clean_corpus")
     return spark.sql(pipeline_tail_spark_sql("pipeline_clean_corpus"))

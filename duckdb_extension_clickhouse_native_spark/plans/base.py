@@ -204,7 +204,8 @@ _SCOPED_CONFS: list = []
 # a decision probed on the old content must not serve the new one.
 _TABLE_EPOCH: int = 0
 
-# data_sized_shuffle's estimate: on-disk bytes x SHUFFLE_EXPANSION
+SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+# shuffle_width's estimate: on-disk bytes x SHUFFLE_EXPANSION
 # (decompression + shingle explosion), one reducer per
 # SHUFFLE_BYTES_PER_PARTITION.
 SHUFFLE_EXPANSION = 16.0
@@ -236,12 +237,11 @@ def assert_planned_partitions(df: DataFrame, ok, msg) -> None:
 def scoped_conf(spark: SparkSession, key: str, value) -> None:
     """Set a session conf for the lifetime of the CURRENT query build
     (builds run sequentially; the next build's restore_scoped_confs()
-    restores the prior value). Used for data-derived partition sizing:
-    Spark reads ``spark.sql.shuffle.partitions`` at execution time and
-    its AQE coalesce floor (``parallelismFirst``) refuses to go below
-    cluster parallelism, so a query whose post-filter working set is
-    tiny must set its own reducer count — the same sizing a 100 TB
-    deployment does in the other direction."""
+    restores the prior value). Its one use is the shuffle width from
+    ``shuffle_width``: Spark reads ``spark.sql.shuffle.partitions`` at
+    execution time, and neither checkpointed plans nor a stream's
+    state store are coalesced by AQE, so a build whose input is small
+    narrows its own reducer count."""
     try:
         old = spark.conf.get(key)
     except Exception:
@@ -269,39 +269,38 @@ def table_bytes(sf_dir: str, name: str) -> int:
         return 0
 
 
-def data_sized_shuffle(spark: SparkSession, sf_dir: str, tables: list[str]) -> None:
-    """Scope ``spark.sql.shuffle.partitions`` for the CURRENT build to
-    the INPUT data size instead of the cluster core count (guide §2.2:
-    size shuffles to data, not cores) — the batch analogue of
-    ``stream_shuffle_sizing``. The dedup/text family shuffles a few MB
-    of postings at bench scale yet paid 32 reducers per exchange
-    (window sorts, checkpointed-plan materializations — checkpointed
-    subplans never AQE-coalesce, so the session default is the REAL
-    partition count there); the driver's r15 scaling block measured
-    dedup_ngram_jaccard 3x SLOWER at 32 cores than 8. Estimate =
-    ``table_bytes`` (a file or a directory of part files) x
-    ``SHUFFLE_EXPANSION``, one partition per
-    ``SHUFFLE_BYTES_PER_PARTITION``: sf0.1 documents (~0.6 MB) sizes
-    to the floor; a 100 GB corpus sizes to ~24k partitions — the same
-    arithmetic a production job runs, no local-core constant anywhere.
-    Override with ``spark.chsql.batch.shufflePartitions``. Restored at
-    the next build (scoped_conf); never changes results — partition
-    count only moves where rows aggregate."""
+def shuffle_width(spark: SparkSession, in_bytes: int = 0) -> int:
+    """The one sizing rule for every shuffle the package narrows:
+    ``in_bytes x SHUFFLE_EXPANSION`` at one reducer per
+    ``SHUFFLE_BYTES_PER_PARTITION``, floored at a quarter of the
+    cluster (at least 2) and capped at the deployment's own
+    ``spark.sql.shuffle.partitions`` as it stood before the current
+    build scoped it. Small inputs get the floor; at 100 TB the
+    deployment's width is the ceiling, never exceeded. ``in_bytes=0``
+    (a stream, whose size is unknown when Spark freezes its partition
+    count into the checkpoint) gives the floor."""
     import math
 
-    try:
-        n = int(spark.conf.get("spark.chsql.batch.shufflePartitions"))
-    except Exception:
-        # parallelism-relative floor, the stream_shuffle_sizing
-        # precedent: tiny corpora still engage a quarter of the
-        # cluster (measured: ngram_jaccard 2.23 s at 2 reducers vs
-        # 1.67 s at 8 on local[32]; a 128-core cluster floors at
-        # 32), while the data term takes over the moment the
-        # corpus is big enough to matter.
-        floor = max(2, spark.sparkContext.defaultParallelism // 4)
-        total = sum(table_bytes(sf_dir, t) for t in tables)
-        n = max(floor, math.ceil(total * SHUFFLE_EXPANSION / SHUFFLE_BYTES_PER_PARTITION))
-    scoped_conf(spark, "spark.sql.shuffle.partitions", n)
+    cap = next(
+        (old for s, k, old in _SCOPED_CONFS if s is spark and k == SHUFFLE_KEY),
+        None,
+    ) or spark.conf.get(SHUFFLE_KEY)
+    floor = max(2, spark.sparkContext.defaultParallelism // 4)
+    want = math.ceil(in_bytes * SHUFFLE_EXPANSION / SHUFFLE_BYTES_PER_PARTITION)
+    return min(int(cap), max(floor, want))
+
+
+def data_sized_shuffle(spark: SparkSession, sf_dir: str, tables: list[str]) -> None:
+    """Scope ``spark.sql.shuffle.partitions`` for the CURRENT build to
+    ``shuffle_width`` of the tables' bytes on disk (``table_bytes``: a
+    file or a directory of part files). Checkpointed subplans never
+    AQE-coalesce, so the session default is their real reducer count:
+    the dedup/text family shuffled a few MB of postings through 32
+    reducers, 3x slower at 32 cores than at 8 (r15 scaling block).
+    Restored at the next build; the partition count only moves where
+    rows aggregate, never what they are."""
+    in_bytes = sum(table_bytes(sf_dir, t) for t in tables)
+    scoped_conf(spark, SHUFFLE_KEY, shuffle_width(spark, in_bytes))
 
 
 @dataclass

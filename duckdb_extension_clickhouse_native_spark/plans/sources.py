@@ -1142,8 +1142,6 @@ def _native_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Structured Streaming over the Native file source: the fixture dir
     # is consumed as micro-batches (one file per trigger), drained to
     # completion; final state must equal the batch aggregate exactly.
-    import uuid as _uuid
-
     from .base import ensure_session
 
     ensure_session(spark)
@@ -1160,21 +1158,9 @@ def _native_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total"),
         )
     )
-    name = f"native_stream_{_uuid.uuid4().hex[:12]}"
-    from .streaming_queries import stream_shuffle_sizing
+    from .streaming_queries import _drain
 
-    with stream_shuffle_sizing(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return _drain(stream, "complete")
 
 
 REGISTRY.df_query(

@@ -13,11 +13,10 @@ from __future__ import annotations
 
 import threading
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .base import REGISTRY
+from .base import REGISTRY, SHUFFLE_KEY, scoped_conf, shuffle_width
 
 _SINK_LOCK = threading.Lock()
 
@@ -132,51 +131,26 @@ def _prune_stale_sink_dirs(parent: str, keep: str) -> None:
         shutil.rmtree(full, ignore_errors=True)
 
 
-@contextmanager
-def stream_shuffle_sizing(spark: SparkSession):
-    """Size the stateful-stream shuffle for ONE conformance stream
-    (r15 optimization round, guide §2.2): Structured Streaming creates
-    and checkpoint-commits one state store per shuffle partition per
-    stateful operator per micro-batch — a fixed cost independent of
-    data volume — and the partition count is frozen into the
-    checkpoint at first start. These twins drain a single-file source,
-    so the cluster-wide default (= cores) paid 32 state-store
-    setups/commits for a few thousand rows; measured interleaved at
-    sf0.1/local[32]: 1.2-1.6 s -> 0.7-0.9 s per twin at 4 partitions
-    across four stateful twins. Default max(2, defaultParallelism//8)
-    keeps it scale-adaptive (a 128-core cluster gets 16); override
-    with spark.chsql.stream.shufflePartitions — a production stream
-    sizes UP the same way by state volume/throughput. Restored
-    immediately after the query drains (never leaks past the stream),
-    and never changes results — partition count only moves WHERE state
-    lives."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    try:
-        n = int(spark.conf.get("spark.chsql.stream.shufflePartitions"))
-    except Exception:
-        n = max(2, spark.sparkContext.defaultParallelism // 8)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 def _drain(stream_df: DataFrame, output_mode: str) -> DataFrame:
+    """Run a stream to completion into a memory sink and return the
+    sink's table. Its shuffle width is ``shuffle_width(spark)`` (the
+    floor) for the rest of the build: Spark freezes a stateful
+    stream's partition count into its checkpoint at first start, one
+    state store per partition per operator per micro-batch, before
+    any input size is known."""
     spark = stream_df.sparkSession
+    scoped_conf(spark, SHUFFLE_KEY, shuffle_width(spark))
     name = f"stream_conf_{uuid.uuid4().hex[:12]}"
-    with stream_shuffle_sizing(spark):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     return spark.table(name)
 
 

@@ -284,6 +284,7 @@ def test_random_table_roundtrip(kinds, n_rows, block_rows, int_seed, text_seed):
     inputs), null masks and multi-block splits must all survive
     byte-exact — the whole-table property on top of the per-column
     ones above."""
+    import os
     import tempfile
 
     from duckdb_extension_clickhouse_native_spark.native.writer import (
@@ -303,9 +304,10 @@ def test_random_table_roundtrip(kinds, n_rows, block_rows, int_seed, text_seed):
         arrays.append(pa.array(vals, type=at))
         ch.append(parse_type(ct))
     tbl = pa.table(dict(zip(cols, arrays)))
-    with tempfile.NamedTemporaryFile(suffix=".clickhouse") as f:
-        write_native_file(f.name, tbl, ch_types=ch, block_rows=block_rows)
-        with open(f.name, "rb") as rf:
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "t.clickhouse")
+        write_native_file(path, tbl, ch_types=ch, block_rows=block_rows)
+        with open(path, "rb") as rf:
             got = [blk.to_record_batch() for blk in iter_blocks(rf)]
     if n_rows == 0:
         assert sum(b.num_rows for b in got) == 0

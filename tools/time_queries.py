@@ -53,10 +53,13 @@ def main() -> int:
             t0 = time.perf_counter()
             mat(q.build(spark, sf_dir))
             ts.append(time.perf_counter() - t0)
+        # the width this entry's build scoped (or the session's); the
+        # next build restores it
+        width = spark.conf.get("spark.sql.shuffle.partitions")
         ts.sort()
         med = ts[len(ts) // 2]
         print(
-            f"{name}: median {med:.3f}s min {ts[0]:.3f} "
+            f"{name}: median {med:.3f}s min {ts[0]:.3f} width {width} "
             f"all={[round(t, 3) for t in ts]}",
             flush=True,
         )
