@@ -294,7 +294,9 @@ def iter_jsoncompact_blocks(
 
     ``schema`` switches to HEADERLESS ``FORMAT JSONCompactEachRow``
     (plain spelling: no names/types rows; structure arrives out of
-    band, url()'s third argument)."""
+    band, url()'s third argument). A header with no rows yields one
+    0-row block carrying the header's names and types."""
+    empty_ok = schema is None
     if schema is None:
         schema = read_jsoncompact_header(buf)
     else:
@@ -324,8 +326,9 @@ def iter_jsoncompact_blocks(
                     v = _lossy_fix(v, t)
                 cols_vals[i].append(v)
             n += 1
-        if n == 0:
+        if n == 0 and not empty_ok:
             return
+        empty_ok = False
         cols = [
             BlockColumn(
                 name,

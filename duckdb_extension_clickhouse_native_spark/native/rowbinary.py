@@ -428,7 +428,9 @@ def iter_rowbinary_blocks(
 
     ``schema`` switches to HEADERLESS ``FORMAT RowBinary`` (ClickHouse's
     plain spelling carries no names/types rows — the structure arrives
-    out of band, url()'s third argument)."""
+    out of band, url()'s third argument). A header with no rows yields
+    one 0-row block carrying the header's names and types."""
+    empty_ok = schema is None
     if schema is None:
         schema = read_rowbinary_header(buf)
     else:
@@ -438,8 +440,9 @@ def iter_rowbinary_blocks(
     if rec is not None:
         while True:
             raw = buf.read(rec.itemsize * block_rows)
-            if not raw:
+            if not raw and not empty_ok:
                 return
+            empty_ok = False
             if len(raw) % rec.itemsize:
                 raise EOFError("truncated RowBinary row")
             mat = np.frombuffer(raw, dtype=rec)
@@ -453,6 +456,8 @@ def iter_rowbinary_blocks(
                 for i, (name, t) in enumerate(schema)
             ]
             yield Block(n_rows=len(mat), columns=cols)
+            if not raw:
+                return
     # general path
     while True:
         rows_vals: list[list] = [[] for _ in schema]
@@ -470,8 +475,9 @@ def iter_rowbinary_blocks(
                     val = _read_value(buf, t)
                 rows_vals[i].append(val)
             n += 1
-        if n == 0:
+        if n == 0 and not empty_ok:
             return
+        empty_ok = False
         cols = [
             BlockColumn(
                 name,

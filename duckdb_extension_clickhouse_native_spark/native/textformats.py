@@ -292,8 +292,13 @@ def _blocks_from_rows(
     *,
     lossy_uint64: bool,
     block_rows: int,
+    typed_header: bool = False,
 ) -> Iterator[Block]:
+    """Blocks of ``block_rows`` rows. With ``typed_header`` (the stream's
+    header named every column and its type) a stream with no rows
+    yields one 0-row block, so the schema survives an empty body."""
     lossy_cols = [lossy_uint64 and _col_needs_lossy(t) for _n, t in schema]
+    empty_ok = typed_header
     while True:
         cols_vals: list[list] = [[] for _ in schema]
         n = 0
@@ -312,8 +317,9 @@ def _blocks_from_rows(
                     v = _lossy_fix(v, t)
                 cols_vals[i].append(v)
             n += 1
-        if n == 0:
+        if n == 0 and not empty_ok:
             return
+        empty_ok = False
         cols = [
             BlockColumn(
                 name,
@@ -356,7 +362,11 @@ def iter_tsv_blocks(
             yield out
 
     return _blocks_from_rows(
-        schema, rows(), lossy_uint64=lossy_uint64, block_rows=block_rows
+        schema,
+        rows(),
+        lossy_uint64=lossy_uint64,
+        block_rows=block_rows,
+        typed_header=True,
     )
 
 
@@ -390,7 +400,11 @@ def iter_csv_blocks(
             yield out
 
     return _blocks_from_rows(
-        schema, rows(), lossy_uint64=lossy_uint64, block_rows=block_rows
+        schema,
+        rows(),
+        lossy_uint64=lossy_uint64,
+        block_rows=block_rows,
+        typed_header=True,
     )
 
 

@@ -44,6 +44,8 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.native_datasource import read_native
+
 Pred = tuple  # (column, op, literal)
 
 _COMPARE = {
@@ -223,30 +225,6 @@ def stage_parts(src_dir: str, parts: list, seed: str):
         shutil.rmtree(stage, ignore_errors=True)
 
 
-# staged mutation trees are collections of SMALL parts (only touched
-# parts are staged); read them with partition PACKING (the r13
-# max_partition_bytes lever) so the job runs ~cores/2 tasks instead of
-# one task per tiny part — measured 2.9 s -> 2.0 s on the sf0.1 hive
-# TTL rollup, identical results (packing composes after pruning and
-# preserves per-file hive values)
-_PACK_BYTES = str(128 * 1024 * 1024)
-
-
-def _read_staged(spark, stage):
-    # in-process header probe + explicit schema (r16): without it
-    # every staged read pays a python-worker schema() planning
-    # round-trip (~0.3 s fixed latency per mutation job); the probe
-    # itself is ~1 ms on marked parts
-    from ..sources.native_datasource import infer_native_schema
-
-    return (
-        spark.read.format("clickhouse_native")
-        .option("max_partition_bytes", _PACK_BYTES)
-        .schema(infer_native_schema({"path": stage}))
-        .load(stage)
-    )
-
-
 def _carried_indexes(src_dir: str, parts: list, columns: list) -> dict:
     """{kind: columns} of the skip indexes the sidecars of ``parts``
     carry, by current column name (an old part names a renamed column
@@ -334,7 +312,10 @@ def rewrite_parts(
 
     if rewrite:
         with stage_parts(src_dir, rewrite, out_dir) as stage:
-            df = transform(_read_staged(spark, stage))
+            # a staged tree is many small parts (only touched ones):
+            # the reader's default max_partition_bytes packs them into
+            # ~cores/2 tasks instead of one task per tiny part
+            df = transform(read_native(spark, stage))
             writer = df.write.format("clickhouse_native").mode("append")
             for kind, cols in _carried_indexes(src_dir, rewrite, df.columns).items():
                 writer = writer.option(f"index_{kind}", ",".join(cols))
@@ -641,24 +622,9 @@ def lightweight_delete(
     driver is one row per touched part (metadata scale)."""
     import pandas as pd
 
-    from ..sources.native_datasource import infer_native_schema
-
     if not where:
         raise ValueError("lightweight_delete requires a predicate")
-    schema = infer_native_schema(
-        {
-            "path": src_dir,
-            "file_column": "__part",
-            "row_index_column": "__ridx",
-        }
-    )
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(schema)
-        .option("file_column", "__part")
-        .option("row_index_column", "__ridx")
-        .load(src_dir)
-    )
+    df = read_native(spark, src_dir, file_column="__part", row_index_column="__ridx")
     cond = _conj(where)
     hits = df.filter(cond).select("__part", "__ridx")
 

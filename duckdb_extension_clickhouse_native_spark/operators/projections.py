@@ -51,6 +51,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.native_datasource import read_native
 from .mutations import stage_parts
 
 # mergeable state functions: state column name -> merge expression
@@ -184,17 +185,6 @@ def _partial_agg(df: DataFrame, group_by: list, aggs: dict) -> DataFrame:
     return df.groupBy(*keys).agg(*states.values())
 
 
-def _read_native(spark: SparkSession, path: str, **options) -> DataFrame:
-    from ..sources.native_datasource import infer_native_schema
-
-    reader = spark.read.format("clickhouse_native")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.schema(
-        infer_native_schema({**options, "path": path})
-    ).load(path)
-
-
 def add_projection(
     spark: SparkSession,
     src_dir: str,
@@ -221,7 +211,7 @@ def add_projection(
     ):
         return {"name": name, "built": False, "parts": len(fp)}
     drop_projection(src_dir, name)
-    df = _read_native(spark, src_dir, file_column=_PART_COL)
+    df = read_native(spark, src_dir, file_column=_PART_COL)
     proj = _partial_agg(df, group_by, aggs)
     pdir = _proj_dir(src_dir, name)
     (
@@ -308,7 +298,7 @@ def refresh_projection(spark: SparkSession, src_dir: str, name: str) -> dict:
         # the staged read keeps each part's src-relative path (the
         # file_column values ARE the manifest keys) and its delete mask
         with stage_parts(src_dir, reread, name) as stage:
-            df = _read_native(spark, stage, file_column=_PART_COL)
+            df = read_native(spark, stage, file_column=_PART_COL)
             proj = _partial_agg(df, man["group_by"], _manifest_aggs(man))
             (
                 proj.write.format("clickhouse_native")
@@ -422,7 +412,7 @@ def query_projection_aware(
     aggs = {k: (fn.lower(), col) for k, (fn, col) in aggs.items()}
     man = _covering_projection(src_dir, group_by, aggs)
     if man is None:
-        df = _read_native(spark, src_dir)
+        df = read_native(spark, src_dir)
         exprs = []
         for out, (fn, col) in aggs.items():
             if fn == "count":
@@ -431,7 +421,7 @@ def query_projection_aware(
                 exprs.append(getattr(F, fn)(col).alias(out))
         return df.groupBy(*group_by).agg(*exprs), None
 
-    proj = _read_native(spark, _proj_dir(src_dir, man["name"]))
+    proj = read_native(spark, _proj_dir(src_dir, man["name"]))
     exprs = []
     for out, (fn, col) in aggs.items():
         if fn == "count":
@@ -503,7 +493,7 @@ def add_sort_projection(
     if man is not None and man["order_by"] == order_by and man["parts"] == fp:
         return {"name": name, "built": False, "parts": len(fp)}
     drop_sort_projection(src_dir, name)
-    df = _read_native(spark, src_dir)
+    df = read_native(spark, src_dir)
     missing = [c for c in order_by if c not in df.columns]
     if missing:
         raise ValueError(f"order_by columns not in table: {missing}")
@@ -548,7 +538,7 @@ def refresh_sort_projection(spark: SparkSession, src_dir: str, name: str) -> dic
     by_key = {_relkey(src_dir, p): p for p in parts}
     with stage_parts(src_dir, [by_key[b] for b in new], "sort-" + name) as stage:
         (
-            _read_native(spark, stage)
+            read_native(spark, stage)
             .repartitionByRange(
                 max(1, len(new)), *[F.col(c) for c in man["order_by"]]
             )
@@ -595,11 +585,11 @@ def sort_projection_scan(
             current = _fingerprint(src_dir, _data_parts(src_dir))
         if man["parts"] != current:
             continue  # stale: a part changed under the projection
-        df = _read_native(
+        df = read_native(
             spark,
             _sort_proj_dir(src_dir, man["name"]),
             split_blocks="true",
             **reader_opts,
         )
         return df, man["name"]
-    return _read_native(spark, src_dir, **reader_opts), None
+    return read_native(spark, src_dir, **reader_opts), None

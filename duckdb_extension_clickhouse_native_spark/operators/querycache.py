@@ -40,6 +40,8 @@ from typing import Callable, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.native_datasource import read_native
+
 DEFAULT_TTL = 60.0  # seconds — ClickHouse query_cache_ttl default
 
 
@@ -121,13 +123,7 @@ def cached_query(
 
 
 def _serve(spark: SparkSession, data_dir: str, df: DataFrame) -> DataFrame:
-    from ..sources.native_datasource import infer_native_schema
-
-    out = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": data_dir}))
-        .load(data_dir)
-    )
+    out = read_native(spark, data_dir)
     # Native files carry nullable columns; re-assert the original
     # column ORDER (the writer preserves it, select is a no-op guard)
     return out.select(*df.columns)

@@ -20,6 +20,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.native_datasource import read_native
 from .base import REGISTRY, assert_planned_partitions, load_tables
 
 _LOCK = threading.Lock()
@@ -101,44 +102,17 @@ def native_fixture_dir(spark: SparkSession, sf_dir: str, table: str, n_files: in
 
 
 
-def _load_native(spark: SparkSession, path: str, **options) -> DataFrame:
-    """clickhouse_native load over an EXISTING path with the schema
-    probed in-process (r16): an un-schema'd .load() pays a
-    python-worker schema() planning round-trip (~0.3 s fixed latency
-    per query job); the driver-side header probe is ~1 ms on marked
-    parts. Same probe the worker would run — identical schema."""
-    from ..sources.native_datasource import infer_native_schema
-
-    reader = spark.read.format("clickhouse_native")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.schema(
-        infer_native_schema({**options, "path": path})
-    ).load(path)
-
-
-def _native_df(spark: SparkSession, sf_dir: str, table: str, **options) -> DataFrame:
-    from .base import ensure_session
-    from ..sources.native_datasource import infer_native_schema
-
-    ensure_session(spark)
-    path = native_fixture_dir(spark, sf_dir, table)
-    reader = spark.read.format("clickhouse_native")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    # driver-side header read + explicit schema: skips the Python-worker
-    # schema() planning roundtrip (~0.3 s fixed latency per query)
-    reader = reader.schema(infer_native_schema({**options, "path": path}))
-    return reader.load(path)
-
-
 def _native_count_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the reference's own golden assertions: count(*) + max over the scan
     # (test/sql/chsql_native.test:17-20, README.md:63-69).
     # Spark's Python DataSource API has no automatic column pruning, so
     # the projection rides the 'columns' option: the other 14 lineitem
     # columns are byte-skipped, never decoded (2x on this query).
-    df = _native_df(spark, sf_dir, "lineitem", columns="l_orderkey,l_shipdate")
+    from .base import ensure_session
+
+    ensure_session(spark)
+    path = native_fixture_dir(spark, sf_dir, "lineitem")
+    df = read_native(spark, path, columns="l_orderkey,l_shipdate")
     return df.agg(
         F.count("*").alias("n_rows"),
         F.max("l_orderkey").alias("max_orderkey"),
@@ -163,7 +137,11 @@ def _native_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter + projection above the scan (README.md:72's WHERE/LIMIT shape,
     # made deterministic); predicate is absorbed by pushFilters and
     # evaluated on Arrow batches inside the reader
-    df = _native_df(spark, sf_dir, "orders", columns="o_orderkey,o_orderstatus,o_totalprice")
+    from .base import ensure_session
+
+    ensure_session(spark)
+    path = native_fixture_dir(spark, sf_dir, "orders")
+    df = read_native(spark, path, columns="o_orderkey,o_orderstatus,o_totalprice")
     return (
         df.filter((F.col("o_orderstatus") != "O") & (F.col("o_totalprice") > 200000))
         .select("o_orderkey", "o_totalprice")
@@ -190,7 +168,11 @@ REGISTRY.df_query(
 def _native_join_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Native scan joined against a parquet table — mixed-source plan
     # (projection pruned at the byte level via the columns option)
-    li = _native_df(spark, sf_dir, "lineitem", columns="l_partkey,l_quantity")
+    from .base import ensure_session
+
+    ensure_session(spark)
+    path = native_fixture_dir(spark, sf_dir, "lineitem")
+    li = read_native(spark, path, columns="l_partkey,l_quantity")
     t = load_tables(spark, sf_dir, ["part"])
     return (
         li.join(F.broadcast(t["part"]), li.l_partkey == t["part"].p_partkey)
@@ -220,7 +202,10 @@ REGISTRY.df_query(
 
 def _native_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # string-heavy table through the Native writer/reader
-    df = _native_df(spark, sf_dir, "documents")
+    from .base import ensure_session
+
+    ensure_session(spark)
+    df = read_native(spark, native_fixture_dir(spark, sf_dir, "documents"))
     return df.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
@@ -264,7 +249,7 @@ def _native_compressed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     out_dir = _materialize_fixture(sf_dir, "events", "events-lz4", write)
-    df = _load_native(spark, out_dir, columns="event_type,value,user_id")
+    df = read_native(spark, out_dir, columns="event_type,value,user_id")
     return df.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,6)"))
@@ -320,7 +305,7 @@ def _native_enum_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session(spark)
     path = _enum_fixture(spark, sf_dir)
-    df = _load_native(spark, path)
+    df = read_native(spark, path)
     return df.groupBy("event_type").agg(
         F.count("*").alias("n"), F.max("event_id").alias("max_id")
     )
@@ -345,7 +330,7 @@ def _native_lossy_uint64(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session(spark)
     path = _enum_fixture(spark, sf_dir)
-    df = _load_native(spark, path, columns="event_id", lossy_uint64="false")
+    df = read_native(spark, path, columns="event_id", lossy_uint64="false")
     # the fixture stores event_id as Int64; emulate the reference's cast
     # chain u64 -> i32 on the Spark side with the SAME arithmetic as the
     # DuckDB oracle so the compat semantics themselves are what is tested
@@ -384,7 +369,7 @@ def _native_split_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session(spark)
     path = native_fixture_dir(spark, sf_dir, "lineitem", n_files=1)
-    df = _load_native(
+    df = read_native(
         spark,
         path,
         split_blocks="true",
@@ -478,7 +463,7 @@ def _native_type_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session(spark)
     path = _type_matrix_fixture(spark, sf_dir)
-    df = _load_native(spark, path)
+    df = read_native(spark, path)
     return df.select(
         "o_orderkey",
         "order_uuid",
@@ -538,7 +523,10 @@ def _native_embeddings_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # differently in the last digit, so the checksum uses exact integer
     # math: floor(x * 1e6) summed as BIGINT (floor of a double is
     # bit-deterministic everywhere)
-    df = _native_df(spark, sf_dir, "embeddings")
+    from .base import ensure_session
+
+    ensure_session(spark)
+    df = read_native(spark, native_fixture_dir(spark, sf_dir, "embeddings"))
     return df.select(
         "vec_id",
         "label",
@@ -1234,15 +1222,10 @@ def _native_zorder_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes the same box on the raw events table, so the hash
     proves pruning drops no rows."""
     from .base import ensure_session
-    from ..sources.native_datasource import infer_native_schema
 
     ensure_session(spark)
     path = _zorder_events_fixture(spark, sf_dir)
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path}))
-        .load(path)
-    )
+    df = read_native(spark, path)
     return (
         df.filter((F.col("uk") <= 31) & (F.col("mk") >= 64) & (F.col("mk") <= 127))
         .groupBy("event_type")
@@ -1321,15 +1304,10 @@ def _native_hive_partition_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the raw events table, so the hash proves the path round-trip
     (values -> directories -> restored columns) is lossless."""
     from .base import ensure_session
-    from ..sources.native_datasource import infer_native_schema
 
     ensure_session(spark)
     path = _hive_events_fixture(spark, sf_dir)
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path}))
-        .load(path)
-    )
+    df = read_native(spark, path)
     return (
         df.filter((F.col("event_type").isin("click", "purchase")) & (F.col("day") <= 19733))
         .groupBy("event_type", "day")
@@ -1394,20 +1372,18 @@ def _native_block_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks); the oracle computes the same slice on the raw table, so
     the hash proves block pruning drops no rows."""
     from .base import ensure_session
-    from ..sources.native_datasource import infer_native_schema
 
     ensure_session(spark)
     path = _block_sorted_events_fixture(spark, sf_dir)
     # byte-skip the unreferenced columns (event_id/props/ts): block
     # pruning composes with column pruning in the reader
     cols = "user_id,event_type,value"
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path, "columns": cols}))
-        .option("columns", cols)
-        .option("split_blocks", "true")
-        .option("target_partition_bytes", str(64 * 1024))
-        .load(path)
+    df = read_native(
+        spark,
+        path,
+        columns=cols,
+        split_blocks="true",
+        target_partition_bytes=str(64 * 1024),
     )
     return (
         df.filter((F.col("user_id") >= 10) & (F.col("user_id") <= 24))
@@ -1559,7 +1535,11 @@ def _native_prewhere_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate is exactly the shape planning-time min/max sidecars
     cannot prune; blocks it kills never decode the wide text payload.
     Default options: prewhere is on for every filtered native scan."""
-    df = _native_df(spark, sf_dir, "documents", columns="doc_id,source,lang,text")
+    from .base import ensure_session
+
+    ensure_session(spark)
+    path = native_fixture_dir(spark, sf_dir, "documents")
+    df = read_native(spark, path, columns="doc_id,source,lang,text")
     return (
         df.filter((F.col("source") == "src7") & (F.col("doc_id") < 300))
         .select("doc_id", "lang", F.length("text").alias("n_chars_text"))
@@ -1611,7 +1591,7 @@ def _mutation_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final agg touches 3 of 5 columns: prune `text` (the corpus body,
     # ~95% of the bytes) out of the scan (§6 column pruning; the
     # Python DataSource API prunes via the `columns` option only)
-    df = _load_native(
+    df = read_native(
         spark, out, columns="lang,n_chars,doc_id", min_partitions="4"
     )
     return df.groupBy("lang").agg(
@@ -1657,7 +1637,6 @@ def _mutation_delete_update_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.mutations import mutate_native_dir
-    from ..sources.native_datasource import infer_native_schema
 
     src = _hive_events_fixture(spark, sf_dir)
     out = os.path.join(
@@ -1679,16 +1658,10 @@ def _mutation_delete_update_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
             "predicate pruning regressed"
         )
     cols = "event_type,value,user_id"  # §6: agg needs 3 of 5 columns
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": out, "columns": cols}))
-        .option("columns", cols)
-        # the mutated tree is many small parts: read packed (r13),
-        # parallelism floor sized to the data, not the cores (r16 §2)
-        .option("max_partition_bytes", str(128 * 1024 * 1024))
-        .option("min_partitions", "4")
-        .load(out)
-    )
+    # the mutated tree is many small parts, packed by the reader's
+    # default max_partition_bytes; the parallelism floor is sized to
+    # the data, not the cores (r16 §2)
+    df = read_native(spark, out, columns=cols, min_partitions="4")
     return (
         df.groupBy("event_type")
         .agg(
@@ -1739,7 +1712,6 @@ def _mutation_ttl_rollup_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.mutations import apply_ttl
-    from ..sources.native_datasource import infer_native_schema
 
     src = _hive_events_fixture(spark, sf_dir)
     out = os.path.join(
@@ -1764,16 +1736,10 @@ def _mutation_ttl_rollup_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
             "regressed"
         )
     cols = "event_type,value,event_id"  # §6: agg needs 3 of 5 columns
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": out, "columns": cols}))
-        .option("columns", cols)
-        # the mutated tree is many small parts: read packed (r13),
-        # parallelism floor sized to the data, not the cores (r16 §2)
-        .option("max_partition_bytes", str(128 * 1024 * 1024))
-        .option("min_partitions", "4")
-        .load(out)
-    )
+    # the mutated tree is many small parts, packed by the reader's
+    # default max_partition_bytes; the parallelism floor is sized to
+    # the data, not the cores (r16 §2)
+    df = read_native(spark, out, columns=cols, min_partitions="4")
     return (
         df.groupBy("event_type")
         .agg(
@@ -1872,7 +1838,6 @@ def _native_bloom_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot prune anything here (every part spans the key range). The
     entry asserts the pruning actually fired."""
     from .base import ensure_session
-    from ..sources.native_datasource import infer_native_schema
 
     ensure_session(spark)
     path = _bloom_scatter_fixture(spark, sf_dir)
@@ -1880,10 +1845,7 @@ def _native_bloom_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # must reach the source) — text is never referenced by this entry
     cols = "doc_id,uid,n_chars,lang"
     df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path, "columns": cols}))
-        .option("columns", cols)
-        .load(path)
+        read_native(spark, path, columns=cols)
         .filter(F.col("uid").isin("u42", "u301", "u17"))
     )
     assert_planned_partitions(
@@ -1956,14 +1918,11 @@ def _native_tokenbf_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     even a substring ngram index are not written here, so the planned
     single partition proves the TOKEN index fired."""
     from .base import ensure_session
-    from ..sources.native_datasource import infer_native_schema
 
     ensure_session(spark)
     path = _tokenbf_fixture(spark, sf_dir)
     df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path}))
-        .load(path)
+        read_native(spark, path)
         .filter(F.col("text").contains(" tag_7 "))
     )
     assert_planned_partitions(
@@ -2108,7 +2067,6 @@ def _native_set_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     part's complete distinct-value list can.  The entry asserts the
     pruning fired."""
     from .base import ensure_session
-    from ..sources.native_datasource import infer_native_schema
 
     ensure_session(spark)
     path = _set_index_fixture(spark, sf_dir)
@@ -2117,10 +2075,7 @@ def _native_set_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so byte-skip them instead of decoding ~300 chars/row for nothing
     cols = "doc_id,grade,n_chars,lang"
     df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path, "columns": cols}))
-        .option("columns", cols)
-        .load(path)
+        read_native(spark, path, columns=cols)
         .filter((F.col("grade") >= 14) & (F.col("grade") <= 16))
     )
     assert_planned_partitions(
@@ -2194,7 +2149,6 @@ def _mutation_lightweight_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .base import ensure_session
     from ..native.delmask import load_delmask
     from ..native.writer import load_stats
-    from ..sources.native_datasource import infer_native_schema
 
     ensure_session(spark)
     path = _lwdel_fixture(spark, sf_dir)
@@ -2216,11 +2170,7 @@ def _mutation_lightweight_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     if masked == 0:
         raise AssertionError("no delete masks found — delete did not run")
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path}))
-        .load(path)
-    )
+    df = read_native(spark, path)
     return (
         df.groupBy("o_orderpriority")
         .agg(
@@ -2405,7 +2355,6 @@ def _mutation_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pre-rename physical schema)."""
     from .base import ensure_session
     from ..native.codec import read_file_schema
-    from ..sources.native_datasource import infer_native_schema
 
     ensure_session(spark)
     path = _evolution_fixture(spark, sf_dir)
@@ -2415,11 +2364,7 @@ def _mutation_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(
             f"metadata-only ALTER rewrote an old part: {physical}"
         )
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path}))
-        .load(path)
-    )
+    df = read_native(spark, path)
     if "o_custkey" in df.columns or "o_totalprice" in df.columns:
         raise AssertionError(f"evolved schema leaked: {df.columns}")
     return (
@@ -2579,8 +2524,10 @@ def _optimize_table_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     intact."""
     import hashlib
 
-    from ..sources.native_datasource import compact_native_dir, infer_native_schema
+    from ..sources.native_datasource import compact_native_dir
+    from .base import ensure_session
 
+    ensure_session(spark)
     src = native_fixture_dir(spark, sf_dir, "documents")
     base = os.path.join(
         tempfile.gettempdir(),
@@ -2592,7 +2539,7 @@ def _optimize_table_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     done = os.path.join(dup_dir, "_DONE")
     if not os.path.exists(done):
         os.makedirs(dup_dir, exist_ok=True)
-        df = _native_df(spark, sf_dir, "documents")
+        df = read_native(spark, src)
         df.write.format("clickhouse_native").mode("overwrite").save(dup_dir)
         df.filter(F.col("doc_id") % 3 == 0).write.format(
             "clickhouse_native"
@@ -2603,13 +2550,7 @@ def _optimize_table_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, dup_dir, out_dir, target_files=4, deduplicate=True
     )
     cols = "lang,n_chars,doc_id"  # §6: prune `text` from the final agg
-    opt = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": dup_dir, "columns": cols}))
-        .option("columns", cols)
-        .option("min_partitions", "4")
-        .load(out_dir)
-    )
+    opt = read_native(spark, out_dir, columns=cols, min_partitions="4")
     return opt.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
@@ -2685,7 +2626,6 @@ def _mutation_ttl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     from ..operators.mutations import apply_ttl
-    from ..sources.native_datasource import infer_native_schema
 
     src = native_fixture_dir(spark, sf_dir, "events")
     out = os.path.join(
@@ -2705,13 +2645,7 @@ def _mutation_ttl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     )
     cols = "event_type,value,ts,event_id"  # §6: agg needs 4 of 6 cols
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": out, "columns": cols}))
-        .option("columns", cols)
-        .option("min_partitions", "4")
-        .load(out)
-    )
+    df = read_native(spark, out, columns=cols, min_partitions="4")
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("value").cast("decimal(18,4)"))
@@ -2766,7 +2700,6 @@ def _mutation_attach_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..operators.mutations import attach_parts
-    from ..sources.native_datasource import infer_native_schema
 
     src = native_fixture_dir(spark, sf_dir, "documents")
     base = os.path.join(
@@ -2789,11 +2722,7 @@ def _mutation_attach_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         attach_parts(a, b)
         with open(done, "w") as f:
             f.write("")
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": a}))
-        .load(a)
-    )
+    df = read_native(spark, a)
     return df.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
@@ -2963,7 +2892,6 @@ def _sim_ann_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cosine re-ranks the candidates.  The candidate-set rule is
     engine-deterministic, so the oracle reproduces it bit-for-bit."""
     from .base import ensure_session, load_tables
-    from ..sources.native_datasource import infer_native_schema
 
     ensure_session(spark)
     load_tables(spark, sf_dir, ["embeddings"])  # the probe vector view
@@ -2971,9 +2899,7 @@ def _sim_ann_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = _query_bucket(sf_dir)
     probes = [b, b ^ 1, b ^ 2, b ^ 4, b ^ 8]
     df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path}))
-        .load(path)
+        read_native(spark, path)
         .filter(F.col("bucket").isin(probes))
     )
     assert_planned_partitions(
@@ -3085,7 +3011,7 @@ def _mutation_column_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         ttl_where=[("ts", "<", dt.datetime(2024, 7, 1))],
     )
     # §6: the agg touches 2 of 6 columns — skip ts/props/ids bytes
-    df = _load_native(
+    df = read_native(
         spark, out, columns="event_type,value", min_partitions="4"
     )
     return (
@@ -3158,7 +3084,7 @@ def _mutation_materialize_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one post-evolution part: reader materializes the default, the
     # writer bakes it physically
     post = (
-        _load_native(spark, evolved)
+        read_native(spark, evolved)
         .filter(F.col("event_id") < 100)
         .withColumn("event_id", F.col("event_id") + F.lit(1000000))
     )
@@ -3174,7 +3100,7 @@ def _mutation_materialize_column(spark: SparkSession, sf_dir: str) -> DataFrame:
             ">=1 untouched physical-column part)"
         )
     # §6: the agg touches 2 of 7 columns — skip ts/props/value bytes
-    df = _load_native(
+    df = read_native(
         spark, out, columns="event_id,bonus_cents", min_partitions="4"
     )
     return df.agg(
@@ -3320,7 +3246,7 @@ def _optimize_dedupe_by(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedupe_by=["user_id", "event_type"],
     )
     # §6: output needs 4 of 6 columns — skip ts/props bytes
-    df = _load_native(
+    df = read_native(
         spark, dst, columns="user_id,event_type,event_id,value",
         min_partitions="4",
     )
@@ -3395,10 +3321,10 @@ def _backup_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     restore_table(bdir, restored)
 
     # §6: the guard count reads one column, the agg two of six
-    live = _load_native(spark, work, columns="event_type", min_partitions="4")
+    live = read_native(spark, work, columns="event_type", min_partitions="4")
     if live.filter(F.col("event_type") == "purchase").count() != 0:
         raise AssertionError("post-backup delete did not apply to source")
-    df = _load_native(
+    df = read_native(
         spark, restored, columns="event_type,value", min_partitions="4"
     )
     return (
@@ -3459,7 +3385,7 @@ def _catalog_exchange_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exchange_tables(live, staging)
     # §6: the agg touches 2 of 6 columns
-    df = _load_native(
+    df = read_native(
         spark, live, columns="event_type,value", min_partitions="4"
     )
     return (
@@ -3531,18 +3457,16 @@ def _native_sample_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset is a superset) — the oracle recomputes the identical hash
     in SQL over the raw table."""
     from .base import ensure_session
-    from ..sources.native_datasource import infer_native_schema
 
     ensure_session(spark)
     path = _sample_by_orders_fixture(spark, sf_dir)
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path}))
-        .option("split_blocks", "true")
-        .option("target_partition_bytes", str(64 * 1024))
-        .option("sample", "0.125")
-        .option("sample_offset", "0.25")
-        .load(path)
+    df = read_native(
+        spark,
+        path,
+        split_blocks="true",
+        target_partition_bytes=str(64 * 1024),
+        sample="0.125",
+        sample_offset="0.25",
     )
     return (
         df.groupBy("o_orderstatus")
@@ -3701,7 +3625,7 @@ def _native_into_outfile(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.filter("o_orderkey % 3 = 0"), out, "native", truncate=True
     )
     # §6: the agg touches 2 of 6 columns
-    back = _load_native(
+    back = read_native(
         spark, out, columns="o_orderstatus,o_totalprice",
         min_partitions="4",
     )
@@ -3752,7 +3676,6 @@ def _catalog_row_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .base import ensure_session
     from ..operators.rowpolicy import apply_row_policies, create_row_policy
-    from ..sources.native_datasource import infer_native_schema
 
     ensure_session(spark)
     path = native_fixture_dir(spark, sf_dir, "events")
@@ -3768,11 +3691,7 @@ def _catalog_row_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     create_row_policy(
         path, "signups_public", "event_type = 'signup'", replace=True
     )
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path}))
-        .load(path)
-    )
+    df = read_native(spark, path)
     return (
         apply_row_policies(df, path, "analyst")
         .groupBy("event_type")
@@ -3894,7 +3813,7 @@ def _optimize_compact_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         raise AssertionError("compaction flattened the hive layout")
     # §6: the agg touches 3 columns (o_orderstatus is the hive key)
-    back = _load_native(
+    back = read_native(
         spark, dst, columns="o_orderstatus,o_totalprice,o_orderkey",
         min_partitions="4",
     )
@@ -3970,7 +3889,7 @@ def _mutation_freeze_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(os.path.join(live, "o_orderstatus=F"))
     frozen = os.path.join(snap["shadow_dir"], "o_orderstatus=F")
     # §6: the agg touches 2 of the shadow partition's payload columns
-    df = _load_native(
+    df = read_native(
         spark, frozen, columns="o_totalprice,o_orderkey",
         min_partitions="4",
     )
@@ -4019,7 +3938,7 @@ def _catalog_check_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .base import ensure_session
     from ..native.writer import load_stats
-    from ..sources.native_datasource import _resolve_paths, infer_native_schema
+    from ..sources.native_datasource import _resolve_paths
 
     ensure_session(spark)
     path = native_fixture_dir(spark, sf_dir, "orders")
@@ -4027,12 +3946,7 @@ def _catalog_check_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in _resolve_paths(path):
         expected.append((os.path.basename(p), int(load_stats(p)["rows"])))
     exp_df = spark.createDataFrame(expected, "part STRING, rows_expected BIGINT")
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path, "file_column": "_part"}))
-        .option("file_column", "_part")
-        .load(path)
-    )
+    df = read_native(spark, path, file_column="_part")
     counted = df.groupBy(F.col("_part").alias("part")).agg(
         F.count("*").alias("rows_actual")
     )

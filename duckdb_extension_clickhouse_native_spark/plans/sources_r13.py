@@ -36,6 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.native_datasource import read_native
 from .base import REGISTRY
 from .sources import _materialize_fixture, _write_parts
 
@@ -78,7 +79,7 @@ def _native_nested_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session(spark)
     path = _nested_fixture(spark, sf_dir)
-    df = spark.read.format("clickhouse_native").load(path)
+    df = read_native(spark, path)
     return (
         df.select(
             "o_orderstatus",
@@ -162,7 +163,7 @@ def _native_int128_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session(spark)
     path = _bigint_fixture(spark, sf_dir)
-    df = spark.read.format("clickhouse_native").load(path)
+    df = read_native(spark, path)
     return (
         df.groupBy(F.col("o_orderstatus").alias("status"))
         .agg(
@@ -223,7 +224,7 @@ def _native_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session(spark)
     path = _json_fixture(spark, sf_dir)
-    df = spark.read.format("clickhouse_native").load(path)
+    df = read_native(spark, path)
     return (
         df.select(
             F.get_json_object("j", "$.s").alias("status"),

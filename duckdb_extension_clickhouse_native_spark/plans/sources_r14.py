@@ -29,6 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.native_datasource import read_native
 from .base import REGISTRY
 
 _GLOB_SERVERS: dict = {}
@@ -189,7 +190,7 @@ def _native_geo_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session(spark)
     path = _geo_fixture(spark, sf_dir)
-    df = spark.read.format("clickhouse_native").load(path)
+    df = read_native(spark, path)
     lng = lambda c: c.cast("long")  # noqa: E731 — integral doubles
     return (
         df.select(
@@ -288,7 +289,7 @@ def _native_variant_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session(spark)
     path = _variant_fixture(spark, sf_dir)
-    df = spark.read.format("clickhouse_native").load(path)
+    df = read_native(spark, path)
     # `v.String` / `v.UInt64` — the ClickHouse variant-subcolumn
     # access shape, carried as struct fields
     return (

@@ -41,6 +41,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.native_datasource import read_native
 from .base import REGISTRY
 
 _GZ_FIXTURES: dict = {}
@@ -336,7 +337,7 @@ def _native_dynamic_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session(spark)
     path = _dynamic_fixture(spark, sf_dir)
-    df = spark.read.format("clickhouse_native").load(path)
+    df = read_native(spark, path)
     return (
         df.groupBy(F.col("o_orderstatus").alias("status"))
         .agg(

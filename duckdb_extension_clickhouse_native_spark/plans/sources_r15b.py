@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.native_datasource import read_native
 from .base import REGISTRY
 
 
@@ -111,7 +112,7 @@ def _native_aggstate_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session(spark)
     path = _aggstate_fixture(spark, sf_dir)
-    df = spark.read.format("clickhouse_native").load(path)
+    df = read_native(spark, path)
     merged = df.groupBy("flag").agg(
         merge_agg_state("count", F.col("cnt_state")).alias("cnt"),
         merge_agg_state("sum, Int64", F.col("sum_qty_state")).alias("sq"),

@@ -16,6 +16,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.native_datasource import read_native
 from .base import REGISTRY, SHUFFLE_KEY, scoped_conf, shuffle_width
 
 _SINK_LOCK = threading.Lock()
@@ -470,7 +471,7 @@ def _stream_native_sink_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                         q.stop()
                     with open(done, "w") as f:
                         f.write("")
-    back = spark.read.format("clickhouse_native").load(os.path.join(out, "batch-*"))
+    back = read_native(spark, os.path.join(out, "batch-*"))
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("total_value"),
@@ -541,8 +542,6 @@ def _stream_partitioned_sink_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                         q.stop()
                     with open(done, "w") as f:
                         f.write("")
-    from ..sources.native_datasource import infer_native_schema
-
     batch_dirs = sorted(globmod.glob(os.path.join(out, "batch-*")))
     if not batch_dirs:
         # a stale _DONE marker with pruned output (or an empty source)
@@ -552,12 +551,7 @@ def _stream_partitioned_sink_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"stream sink at {out} committed zero batch directories; "
             "remove the _DONE marker to re-run the stream"
         )
-    parts = [
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": d}))
-        .load(d)
-        for d in batch_dirs
-    ]
+    parts = [read_native(spark, d) for d in batch_dirs]
     back = reduce(lambda a, b: a.unionByName(b), parts)
     return (
         back.filter(F.col("event_type").isin("click", "purchase", "signup"))
@@ -1227,9 +1221,7 @@ def _stream_projection_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
                         q.stop()
                     with open(done, "w") as f:
                         f.write("")
-    mv = spark.read.format("clickhouse_native").load(
-        os.path.join(out, "batch-*")
-    )
+    mv = read_native(spark, os.path.join(out, "batch-*"))
     return mv.groupBy("event_type").agg(
         F.sum("cnt__rows").alias("n"),
         F.sum("sum__value").cast("double").alias("total_value"),

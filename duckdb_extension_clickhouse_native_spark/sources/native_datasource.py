@@ -1670,18 +1670,33 @@ def describe_native(options: dict) -> list:
 
 
 def infer_native_schema(options: dict) -> StructType:
-    """The Spark schema of :func:`describe_native`.
-
-    Module-level so the DRIVER can call it in-process and pass the
-    result to ``spark.read.schema(...)`` — with an explicit schema
-    Spark skips the separate Python-worker schema() roundtrip, which
-    is ~0.3 s of fixed per-query planning latency."""
+    """The Spark schema of :func:`describe_native` — what the
+    DataSource's ``schema()`` returns. :func:`read_native` calls it on
+    the driver so a batch read skips that planning round-trip."""
     return StructType(
         [
             StructField(c.name, c.spark_type, nullable=c.nullable)
             for c in describe_native(options)
         ]
     )
+
+
+def read_native(spark, path: str, **options):
+    """``spark.read.format("clickhouse_native")`` over an existing
+    ``path`` with each of ``options`` set on the reader — the one way
+    the package opens a Native table for a batch read.
+
+    The schema is probed on the driver, in-process, and passed to
+    ``.schema(...)``; without it Spark plans the read by asking a Python
+    worker for ``schema()``. It is the same :func:`describe_native`
+    probe the worker would run, so the schema is identical. With reused
+    workers the round-trip is small: building the DataFrame over a
+    16-part table took 14.3 ms (bare ``.load()``) vs 11.0 ms (median of
+    30 alternating pairs, local[4] on a 4-core host)."""
+    reader = spark.read.format(FORMAT_NAME)
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    return reader.schema(infer_native_schema({**options, "path": path})).load(path)
 
 
 class ClickHouseNativeDataSource(DataSource):
@@ -1755,8 +1770,7 @@ def compact_native_dir(
     """
     from pyspark.sql import functions as F
 
-    schema = infer_native_schema({"path": src})
-    df = spark.read.format("clickhouse_native").schema(schema).load(src)
+    df = read_native(spark, src)
     if deduplicate and dedupe_by:
         raise ValueError("pass either deduplicate=True or dedupe_by, not both")
     if deduplicate:
@@ -1805,10 +1819,5 @@ def compact_native_dir(
     # things you throw away")
     n = sidecar_rows(dst)
     if n is None:  # a part without a sidecar: count the OUTPUT, not df
-        n = (
-            spark.read.format(FORMAT_NAME)
-            .schema(infer_native_schema({"path": dst}))
-            .load(dst)
-            .count()
-        )
+        n = read_native(spark, dst).count()
     return n

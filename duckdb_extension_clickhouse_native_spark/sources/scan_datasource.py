@@ -386,14 +386,30 @@ class ClickHouseScanWriter(DataSourceArrowWriter):
         return client.insert_batches  # TCP or HTTP
 
     def write(self, iterator: Iterator["pa.RecordBatch"]) -> ScanWriteCommit:
+        """Buffer the task's batches per destination and INSERT a
+        buffer each time it reaches ``max_insert_bytes``. A plain write
+        has one destination; a ``cluster`` write is the Distributed-engine
+        INSERT: rows route to the shard ``sharding_key % n_shards`` (an
+        integer column, the ClickHouse Distributed sharding-expression
+        contract — rand() routing is refused because this engine's
+        writes must be deterministic and batch-id idempotent)."""
         from ..native.rowbinary import derive_wire_types
 
         shards = _cluster_urls(self.options)
-        if shards:
-            return self._write_sharded(iterator, shards)
-        client = make_client(resolve_connection(self.options))
-        insert = self._insert_fn(client)
-        def flush(chunk: list) -> int:
+        key = self.options.get("sharding_key") if shards else None
+        if shards and not key:
+            raise ValueError(
+                "cluster INSERT requires a 'sharding_key' option (an "
+                "integer column; rows route to shard = key % n_shards)"
+            )
+        clients = [
+            make_client(resolve_connection({**self.options, "url": u}))
+            for u in shards
+        ] or [make_client(resolve_connection(self.options))]
+        inserts = [self._insert_fn(c) for c in clients]
+        n = len(clients)
+
+        def flush(si: int, chunk: list) -> int:
             # DECLARED types derived per INSERT chunk from ACTUAL null
             # counts across the whole chunk (each INSERT carries its
             # own header, so nullability may differ between chunks) —
@@ -403,59 +419,6 @@ class ClickHouseScanWriter(DataSourceArrowWriter):
             # rejects Nullable(Array/Tuple), which a real server
             # cannot hold.
             chunk, ch_types = derive_wire_types(chunk, None, server_types=True)
-            return insert(self.table, chunk, ch_types)
-
-        try:
-            rows = 0
-            pending: list = []
-            pending_bytes = 0
-            for batch in iterator:
-                pending.append(batch)
-                pending_bytes += batch.nbytes
-                if pending_bytes >= self.max_insert_bytes:
-                    rows += flush(pending)
-                    pending, pending_bytes = [], 0
-            if pending:
-                rows += flush(pending)
-            return ScanWriteCommit(rows=rows)
-        finally:
-            client.close()
-
-    def commit(self, messages) -> None:
-        return None
-
-    def abort(self, messages) -> None:  # inserts are not transactional
-        return None
-
-    def _write_sharded(
-        self, iterator: Iterator["pa.RecordBatch"], shards: list
-    ) -> ScanWriteCommit:
-        """Distributed-engine INSERT: rows route to the shard selected
-        by ``sharding_key % n_shards`` (an integer column, the
-        ClickHouse Distributed sharding-expression contract — rand()
-        routing is refused because this engine's writes must be
-        deterministic and batch-id idempotent). Per-shard buffers
-        flush independently at max_insert_bytes."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ..native.rowbinary import derive_wire_types
-
-        key = self.options.get("sharding_key")
-        if not key:
-            raise ValueError(
-                "cluster INSERT requires a 'sharding_key' option (an "
-                "integer column; rows route to shard = key % n_shards)"
-            )
-        n = len(shards)
-        clients = [
-            make_client(resolve_connection({**self.options, "url": u}))
-            for u in shards
-        ]
-        inserts = [self._insert_fn(c) for c in clients]
-
-        def flush(si: int, chunk: list) -> int:
-            chunk, ch_types = derive_wire_types(chunk, None, server_types=True)
             return inserts[si](self.table, chunk, ch_types)
 
         try:
@@ -463,31 +426,7 @@ class ClickHouseScanWriter(DataSourceArrowWriter):
             pending: list[list] = [[] for _ in range(n)]
             pending_bytes = [0] * n
             for batch in iterator:
-                col = batch.schema.get_field_index(key)
-                if col < 0:
-                    raise ValueError(
-                        f"sharding_key column {key!r} not in the "
-                        "written schema"
-                    )
-                if not pa.types.is_integer(batch.schema.field(col).type):
-                    raise ValueError(
-                        f"sharding_key {key!r} must be an integer "
-                        f"column, got {batch.schema.field(col).type}"
-                    )
-                if batch.column(col).null_count:
-                    raise ValueError(
-                        f"sharding_key {key!r} contains NULLs — no "
-                        "shard is defined for them"
-                    )
-                # (k % n + n) % n via numpy (pyarrow has no mod
-                # kernel); Python/numpy % is already non-negative for
-                # positive n, signed keys included
-                keys = batch.column(col).to_numpy(zero_copy_only=False)
-                shard = pa.array(keys % n, type=pa.int64())
-                for si in range(n):
-                    sub = batch.filter(pc.equal(shard, si))
-                    if sub.num_rows == 0:
-                        continue
+                for si, sub in _route(batch, key, n):
                     pending[si].append(sub)
                     pending_bytes[si] += sub.nbytes
                     if pending_bytes[si] >= self.max_insert_bytes:
@@ -500,6 +439,45 @@ class ClickHouseScanWriter(DataSourceArrowWriter):
         finally:
             for c in clients:
                 c.close()
+
+    def commit(self, messages) -> None:
+        return None
+
+    def abort(self, messages) -> None:  # inserts are not transactional
+        return None
+
+
+def _route(batch: "pa.RecordBatch", key: Optional[str], n: int) -> list:
+    """(shard index, rows) pairs for one batch: the whole batch to the
+    one destination without a ``key``, else the non-empty slice of
+    each shard ``key % n``."""
+    if key is None:
+        return [(0, batch)]
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    col = batch.schema.get_field_index(key)
+    if col < 0:
+        raise ValueError(
+            f"sharding_key column {key!r} not in the written schema"
+        )
+    if not pa.types.is_integer(batch.schema.field(col).type):
+        raise ValueError(
+            f"sharding_key {key!r} must be an integer "
+            f"column, got {batch.schema.field(col).type}"
+        )
+    if batch.column(col).null_count:
+        raise ValueError(
+            f"sharding_key {key!r} contains NULLs — no "
+            "shard is defined for them"
+        )
+    # (k % n + n) % n via numpy (pyarrow has no mod kernel);
+    # Python/numpy % is already non-negative for positive n, signed
+    # keys included
+    keys = batch.column(col).to_numpy(zero_copy_only=False)
+    shard = pa.array(keys % n, type=pa.int64())
+    subs = [(si, batch.filter(pc.equal(shard, si))) for si in range(n)]
+    return [(si, sub) for si, sub in subs if sub.num_rows]
 
 
 class ClickHouseScanStreamReader(DataSourceStreamReader):

@@ -274,17 +274,12 @@ def trivial_count(spark: SparkSession, path: str) -> DataFrame:
     count — never a wrong answer, only a slower one."""
     from pyspark.sql import functions as F
 
-    from .native_datasource import infer_native_schema, sidecar_rows
+    from .native_datasource import read_native, sidecar_rows
 
     total = sidecar_rows(path)
     if total is not None:
         return spark.createDataFrame([(total,)], "n_rows bigint")
-    df = (
-        spark.read.format("clickhouse_native")
-        .schema(infer_native_schema({"path": path}))
-        .load(path)
-    )
-    return df.agg(F.count("*").alias("n_rows"))
+    return read_native(spark, path).agg(F.count("*").alias("n_rows"))
 
 
 def merge_native_tables(
@@ -310,7 +305,7 @@ def merge_native_tables(
 
     from pyspark.sql import functions as F
 
-    from .native_datasource import infer_native_schema
+    from .native_datasource import read_native
 
     pat = re.compile(name_regex)
     names = sorted(
@@ -325,13 +320,8 @@ def merge_native_tables(
         )
     parts = []
     for name in names:
-        path = os.path.join(base_dir, name)
-        r = spark.read.format("clickhouse_native").schema(
-            infer_native_schema({"path": path, **options})
-        )
-        for k, v in options.items():
-            r = r.option(k, v)
-        parts.append(r.load(path).withColumn(table_column, F.lit(name)))
+        df = read_native(spark, os.path.join(base_dir, name), **options)
+        parts.append(df.withColumn(table_column, F.lit(name)))
     out = parts[0]
     for df in parts[1:]:
         out = out.unionByName(df, allowMissingColumns=True)
@@ -405,10 +395,9 @@ def clickhouse_native_view(
 ) -> DataFrame:
     """Temp view over the real DataSource (scale path): one call, then
     plain SQL. Returns the backing DataFrame."""
-    reader = spark.read.format("clickhouse_native")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    df = reader.load(path)
+    from .native_datasource import read_native
+
+    df = read_native(spark, path, **options)
     df.createOrReplaceTempView(view_name)
     return df
 

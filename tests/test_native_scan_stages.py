@@ -9,11 +9,15 @@
   columns, lz4 frames), and ``clickhouse_native_columns`` describes the
   same columns.
 * Option keys: the probe and the readers read the same option keys.
+* One constructor: ``read_native`` returns what a bare ``.load()``
+  returns, and it is the package's only batch Native read.
 """
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
 
 import pyarrow as pa
 import pytest
@@ -263,3 +267,62 @@ def test_native_udtf_returns_the_datasource_rows(spark, tmp_path):
             ("label", "String", "string", False),
         ],
     }
+
+
+def _read_native_cases(root) -> dict:
+    glob_root = str(root / "stream")
+    for b in range(3):
+        _flat(os.path.join(glob_root, f"batch-{b:04d}"), n_files=2, rows=20)
+    return {
+        "hive_columns": (_hive(str(root / "hive")), {"columns": "k,day"}),
+        "file_and_row_index": (
+            _flat(str(root / "flat"), n_files=3),
+            {"file_column": "_src", "row_index_column": "_row"},
+        ),
+        "batch_glob": (os.path.join(glob_root, "batch-*"), {}),
+    }
+
+
+def test_read_native_matches_a_bare_load(spark, tmp_path):
+    for name, (path, opts) in _read_native_cases(tmp_path).items():
+        ours = nds.read_native(spark, path, **opts)
+        bare = spark.read.format("clickhouse_native").options(**opts).load(path)
+        assert ours.schema == bare.schema, name
+        assert sorted(ours.collect()) == sorted(bare.collect()), name
+        assert ours.count() > 0, name
+
+
+def _batch_native_reads(tree: ast.AST):
+    """(call, enclosing function name) for every
+    ``<x>.read.format("clickhouse_native" | FORMAT_NAME)`` call."""
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            name = child.name if isinstance(child, ast.FunctionDef) else fn
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "format"
+                and isinstance(child.func.value, ast.Attribute)
+                and child.func.value.attr == "read"
+                and child.args
+                and (
+                    (isinstance(child.args[0], ast.Constant)
+                     and child.args[0].value == "clickhouse_native")
+                    or (isinstance(child.args[0], ast.Name)
+                        and child.args[0].id == "FORMAT_NAME")
+                )
+            ):
+                yield child, fn
+            yield from walk(child, name)
+
+    return walk(tree, None)
+
+
+def test_read_native_is_the_only_batch_native_read():
+    pkg = pathlib.Path(nds.__file__).parent.parent
+    sites = [
+        (str(f.relative_to(pkg)), fn)
+        for f in sorted(pkg.rglob("*.py"))
+        for _call, fn in _batch_native_reads(ast.parse(f.read_text()))
+    ]
+    assert sites == [("sources/native_datasource.py", "read_native")]

@@ -82,6 +82,35 @@ def test_empty_insert_writes_schema(spark, tmp_path, surface, fmt):
         assert body.startswith(b'"id","s"\n"Int64","String"\n')
 
 
+@pytest.mark.parametrize(
+    "fmt",
+    [
+        "CSVWithNamesAndTypes",
+        "TSVWithNamesAndTypes",
+        "JSONCompactEachRowWithNamesAndTypes",
+        "RowBinaryWithNamesAndTypes",
+    ],
+)
+def test_empty_insert_reads_back(spark, tmp_path, fmt):
+    """The header of a WithNamesAndTypes object names every column and
+    its type, so the object an empty INSERT writes reads back as 0 rows
+    with the written schema."""
+    df = spark.createDataFrame([], "id bigint, s string")
+    path = f"{tmp_path}/out.bin"
+    assert file_table.file_insert(df, path, fmt) == 0
+    back = file_table.file_table(spark, path, fmt)
+    assert back.schema.simpleString() == "struct<id:bigint,s:string>"
+    assert back.count() == 0
+
+
+def test_names_only_header_cannot_be_read(spark, tmp_path):
+    """CSVWithNames carries no types row: a header-only object has
+    nothing to infer types from and keeps its refusal."""
+    (tmp_path / "names.csv").write_bytes(b"id,s\n")
+    with pytest.raises(Exception, match="zero-block"):
+        file_table.file_table(spark, f"{tmp_path}/names.csv", "CSVWithNames")
+
+
 class _Recorder(dict):
     """Options mapping that records every key read through ``get`` or
     ``[]``."""

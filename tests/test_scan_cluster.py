@@ -155,3 +155,47 @@ def test_cluster_write_rejects_non_integer_key(spark, two_shards):
             .mode("append")
             .save()
         )
+
+
+@pytest.mark.parametrize("cluster", [False, True])
+def test_write_flushes_every_batch_at_max_insert_bytes(spark, two_shards, cluster):
+    """max_insert_bytes=1 flushes after every Arrow batch: a plain write
+    (one destination) and a cluster write (one per shard) run the same
+    buffer-and-flush loop, and every row arrives exactly once."""
+    state = two_shards["state"]
+    before = [len(state["inserted"][i]) for i in range(2)]
+    df = spark.range(0, 2000).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+    w = (
+        df.coalesce(1)
+        .write.format("clickhouse_scan")
+        .option("table", "flushed")
+        .option("max_insert_bytes", "1")
+        .mode("append")
+    )
+    if cluster:
+        w = w.option("cluster", ",".join(two_shards["urls"]))
+        w = w.option("sharding_key", "k")
+    else:
+        w = w.option("url", two_shards["urls"][0])
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "500")
+    try:
+        w.save()
+    finally:
+        spark.conf.set(key, old)
+    landed = [[], []]
+    inserts = [0, 0]
+    for shard in range(2):
+        for _t, batches in state["inserted"][shard][before[shard]:]:
+            inserts[shard] += 1
+            for rb in batches:
+                landed[shard].extend(rb.column("k").to_pylist())
+    if cluster:
+        assert sorted(landed[0]) == list(range(0, 2000, 2))
+        assert sorted(landed[1]) == list(range(1, 2000, 2))
+        assert min(inserts) >= 4  # one INSERT per batch and shard
+    else:
+        assert sorted(landed[0]) == list(range(2000))
+        assert landed[1] == []
+        assert inserts[0] >= 4

@@ -4,6 +4,13 @@ bench.py does (noop sink, one untimed full warm-up, median of N runs).
 Builds materialize intermediates only through localCheckpoint, whose
 blocks no later build can reuse, so every timed run is cold.
 
+Each entry prints its times in run order, with the median and the IQR.
+One warm-up does not finish warming a session: an entry can keep
+speeding up for ~8 more builds, so the run-order list shows a
+downward drift that a sorted list would hide. An A/B comparison of two
+trees therefore needs >= 10 alternating invocations (A, B, A, B, ...),
+each a fresh process, compared by the median over invocations.
+
 Run: python tools/time_queries.py name1,name2,... [runs]
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
 """
@@ -11,6 +18,7 @@ Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 import time
 
@@ -56,11 +64,10 @@ def main() -> int:
         # the width this entry's build scoped (or the session's); the
         # next build restores it
         width = spark.conf.get("spark.sql.shuffle.partitions")
-        ts.sort()
-        med = ts[len(ts) // 2]
+        q1, med, q3 = statistics.quantiles(ts, n=4) if len(ts) > 1 else ts * 3
         print(
-            f"{name}: median {med:.3f}s min {ts[0]:.3f} width {width} "
-            f"all={[round(t, 3) for t in ts]}",
+            f"{name}: median {med:.3f}s iqr {q3 - q1:.3f} min {min(ts):.3f} "
+            f"width {width} runs={[round(t, 3) for t in ts]}",
             flush=True,
         )
         spark.sparkContext.setJobDescription(None)
