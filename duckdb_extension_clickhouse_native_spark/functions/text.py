@@ -565,7 +565,6 @@ def unicode_normalize_dedup_query(spark, sf_dir: str):
     ``nfc_normalize``. raw_distinct counts byte-distinct variants (2
     wherever the text contains an 'e'), norm_distinct must always
     collapse to 1 — per doc, both engines, hash-compared."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     docs = (

@@ -26,7 +26,6 @@ strings via a single-pass offset scan into Arrow buffers.
 from __future__ import annotations
 
 import io
-import os
 import struct
 from dataclasses import dataclass, field
 from typing import BinaryIO, Callable, Iterator, Optional

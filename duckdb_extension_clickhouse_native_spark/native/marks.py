@@ -45,7 +45,7 @@ from __future__ import annotations
 import json
 import os
 import struct
-from typing import BinaryIO, Optional
+from typing import Optional
 
 import numpy as np
 

@@ -29,9 +29,8 @@ Reference surface: the reference reads FORMAT Native only
 from __future__ import annotations
 
 import ast
-import io
 import struct
-from typing import BinaryIO, Iterator, Optional
+from typing import BinaryIO, Iterator
 
 import numpy as np
 import pyarrow as pa

@@ -22,7 +22,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from typing import Callable, Optional
+from typing import Callable
 
 TRASH = ".trash"
 

@@ -833,8 +833,6 @@ def _estimate_max_gram_occ(spark, sf_dir: str, w: int, sample_docs: int = 4096) 
     corpus and >100x below the regime where the window plan breaks.
     Cost: one bounded job over ~``sample_docs`` docs + a 1-row
     collect."""
-    from pyspark.sql import functions as F
-
     from ..plans.base import load_tables
 
     t = load_tables(spark, sf_dir, ["documents"])

@@ -44,7 +44,7 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.native_datasource import read_native
+from ..sources.native_datasource import NativeTable, read_native
 
 Pred = tuple  # (column, op, literal)
 
@@ -94,25 +94,6 @@ def _conj(preds: Sequence[Pred]):
         c = _COMPARE[op](F.col(col), F.lit(val))
         cond = c if cond is None else cond & c
     return cond
-
-
-def _alias_map(src_dir: str) -> dict:
-    """Schema-evolution alias map {table_name: [prior physical names]}
-    for the directory (empty when unevolved) — lets the sidecar triage
-    prove predicates on RENAMED columns against old parts' stats."""
-    from ..native.tableschema import load_table_schema
-
-    try:
-        meta = load_table_schema(src_dir)
-    except ValueError:
-        return {}
-    if not meta:
-        return {}
-    return {
-        c["name"]: list(c.get("aliases", []))
-        for c in meta["columns"]
-        if c.get("aliases")
-    }
 
 
 def _part_untouched(
@@ -225,7 +206,7 @@ def stage_parts(src_dir: str, parts: list, seed: str):
         shutil.rmtree(stage, ignore_errors=True)
 
 
-def _carried_indexes(src_dir: str, parts: list, columns: list) -> dict:
+def _carried_indexes(table: NativeTable, parts: list, columns: list) -> dict:
     """{kind: columns} of the skip indexes the sidecars of ``parts``
     carry, by current column name (an old part names a renamed column
     by a prior physical name) and limited to ``columns`` — the
@@ -234,10 +215,9 @@ def _carried_indexes(src_dir: str, parts: list, columns: list) -> dict:
     from ..native.writer import SKIP_INDEXES, load_stats
     from ..sources.native_datasource import _alias_stats
 
-    aliases = _alias_map(src_dir)
     carried: dict = {}
     for p in parts:
-        side = _alias_stats(load_stats(p) or {}, aliases)
+        side = _alias_stats(load_stats(p) or {}, table.aliases)
         for kind in SKIP_INDEXES:
             entry = side.get(kind)
             if isinstance(entry, dict):
@@ -247,22 +227,24 @@ def _carried_indexes(src_dir: str, parts: list, columns: list) -> dict:
 
 def rewrite_parts(
     spark: SparkSession,
-    src_dir: str,
+    table: NativeTable,
     out_dir: str,
     *,
     triage: Callable[[str, dict], str],
     transform: Callable[[DataFrame], DataFrame],
     compression: Optional[str] = None,
 ) -> dict:
-    """Materialize ``out_dir`` as ``src_dir`` rewritten part by part —
+    """Materialize ``out_dir`` as ``table`` rewritten part by part —
     the one path every operation of this module takes:
 
     1. driver-side triage: ``triage(part, pk_vals)`` returns ``keep``,
-       ``rewrite`` or ``drop`` for every part (``pk_vals`` maps the
+       ``rewrite`` or ``drop`` for every part of the
+       :class:`NativeTable` the operation opened (``pk_vals`` maps the
        part's partition keys to their directory values, int or str as
-       the partition spec infers; empty for a flat directory). It runs
-       before ``out_dir`` is touched, so a triage that refuses the
-       operation leaves it as it was;
+       the table's key types say; empty for a flat directory). The
+       table is opened and triaged before ``out_dir`` is touched, so
+       corrupt metadata or a triage that refuses the operation leaves
+       it as it was;
     2. ``out_dir`` is cleared idempotently and gets the table schema;
     3. kept parts hard-link under ``keep-NNNN-`` names into their
        mirrored directory;
@@ -278,17 +260,17 @@ def rewrite_parts(
     Returns {"untouched_parts": kept, "rewritten_parts": rewritten +
     dropped, "out_dir": out_dir}, plus "partition_dirs" for a hive
     layout."""
-    from ..filesystem import resolve_paths
     from ..native.tableschema import copy_table_schema
-    from ..sources.native_datasource import _partition_spec
 
+    src_dir, parts, part_keys = table.path, table.paths, table.keys
     _guard_out_dir(src_dir, out_dir)
-    parts = [p for p in resolve_paths(src_dir) if not p.endswith(".json")]
-    part_keys, spec, types = _partition_spec(src_dir, parts)
     verdicts = {
         p: triage(
             p,
-            {k: types[k](v) for k, v in zip(part_keys, spec.get(p, ()))},
+            {
+                k: table.key_types[k](v)
+                for k, v in zip(part_keys, table.part_vals.get(p, ()))
+            },
         )
         for p in parts
     }
@@ -317,7 +299,7 @@ def rewrite_parts(
             # ~cores/2 tasks instead of one task per tiny part
             df = transform(read_native(spark, stage))
             writer = df.write.format("clickhouse_native").mode("append")
-            for kind, cols in _carried_indexes(src_dir, rewrite, df.columns).items():
+            for kind, cols in _carried_indexes(table, rewrite, df.columns).items():
                 writer = writer.option(f"index_{kind}", ",".join(cols))
             if part_keys:
                 writer = writer.option("partition_by", ",".join(part_keys))
@@ -370,7 +352,7 @@ def _residual(preds: Sequence[Pred], pk_vals: dict) -> Optional[tuple]:
 
 
 def _mutation_triage(
-    src_dir: str,
+    table: NativeTable,
     *,
     delete_where: Optional[Sequence[Pred]] = None,
     change_where: Optional[Sequence[Pred]] = None,
@@ -385,7 +367,6 @@ def _mutation_triage(
     unread. ``set_cols`` (columns the operation assigns) must not be
     partition keys: changing a partition value moves rows between
     directories (ClickHouse likewise forbids it)."""
-    aliases = _alias_map(src_dir)
 
     def triage(part: str, pk_vals: dict) -> str:
         bad = sorted(set(set_cols) & set(pk_vals))
@@ -400,7 +381,7 @@ def _mutation_triage(
             return DROP
         c = None if change_where is None else _residual(change_where, pk_vals)
         live = [r for r in (d, c) if r is not None]
-        if not live or _part_untouched(part, live, aliases):
+        if not live or _part_untouched(part, live, table.aliases):
             return KEEP
         return REWRITE
 
@@ -462,8 +443,9 @@ def mutate_native_dir(
             )
         return df
 
+    table = NativeTable.open(src_dir)
     triage = _mutation_triage(
-        src_dir,
+        table,
         delete_where=None if delete_where is None else tuple(delete_where),
         # UPDATE with no WHERE touches every part: an empty conjunction
         change_where=None if update_set is None else tuple(update_where or ()),
@@ -471,7 +453,7 @@ def mutate_native_dir(
     )
     return rewrite_parts(
         spark,
-        src_dir,
+        table,
         out_dir,
         triage=triage,
         transform=transform,
@@ -531,8 +513,9 @@ def apply_ttl(
 
     ttl_where, group_by = tuple(ttl_where), list(group_by)
     set_exprs = dict(set_exprs or {})
+    table = NativeTable.open(src_dir)
     prove = _mutation_triage(
-        src_dir, change_where=ttl_where, set_cols=tuple(set_exprs)
+        table, change_where=ttl_where, set_cols=tuple(set_exprs)
     )
 
     def triage(part: str, pk_vals: dict) -> str:
@@ -574,7 +557,7 @@ def apply_ttl(
 
     return rewrite_parts(
         spark,
-        src_dir,
+        table,
         out_dir,
         triage=triage,
         transform=rollup,
@@ -714,8 +697,6 @@ def attach_parts(
     else:
         src_paths = []
         for p in resolve_paths(src):
-            if p.endswith(".json"):
-                continue
             rel = os.path.relpath(p, src)
             if "=" in os.path.dirname(rel):
                 # hive partition values are PATH-derived; linking the
@@ -727,7 +708,7 @@ def attach_parts(
                 )
             src_paths.append(p)
 
-    existing = [p for p in resolve_paths(dst_dir) if not p.endswith(".json")]
+    existing = resolve_paths(dst_dir)
     want = None
     if existing:
         want = [(n, t.name, t.nullable) for n, t in read_file_schema(existing[0])]
@@ -792,10 +773,9 @@ def materialize_column(
     native column — the reason ClickHouse users run it. Hive
     ``key=value`` layouts mirror their tree in the same single job."""
     from ..native.codec import read_file_schema
-    from ..native.tableschema import load_table_schema
 
-    meta = load_table_schema(src_dir)
-    if not meta or column not in {c["name"] for c in meta["columns"]}:
+    table = NativeTable.open(src_dir)
+    if column not in table.known:
         raise ValueError(
             f"column {column!r} is not in the table schema — "
             "MATERIALIZE COLUMN follows ALTER ADD COLUMN"
@@ -807,7 +787,7 @@ def materialize_column(
 
     res = rewrite_parts(
         spark,
-        src_dir,
+        table,
         out_dir,
         triage=triage,
         transform=lambda df: df,

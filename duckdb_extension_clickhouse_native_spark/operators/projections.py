@@ -90,7 +90,7 @@ def _data_parts(src_dir: str) -> list[str]:
 
     out = []
     for p in resolve_paths(src_dir):
-        if p.endswith(".json") or os.path.basename(p).startswith("_"):
+        if os.path.basename(p).startswith("_"):
             continue
         out.append(p)
     return out

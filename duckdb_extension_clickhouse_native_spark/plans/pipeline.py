@@ -9,8 +9,6 @@ construction; see operators/dedup.py for the determinism rules.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 from ..functions.multimodal import (
     MEDIA_AUDIO_DECODE_ORACLE_SQL,
     MEDIA_AUDIO_FEATURES_ORACLE_SQL,
@@ -101,7 +99,7 @@ from ..operators.similarity import (
     pq_topk_sql,
     signlsh_pairs_sql,
 )
-from .base import REGISTRY, load_tables
+from .base import REGISTRY
 
 
 def _sql_pair(name: str, spark_sql: str, duck_sql: str, tables: list[str], tags: list[str], description: str = "") -> None:

@@ -2715,8 +2715,7 @@ def _mutation_attach_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..filesystem import resolve_paths
         from ..operators.mutations import place_part
 
-        parts = [p for p in resolve_paths(src) if not p.endswith(".json")]
-        for i, p in enumerate(sorted(parts)):
+        for i, p in enumerate(resolve_paths(src)):
             dst_dir = a if i % 2 == 0 else b
             place_part(p, os.path.join(dst_dir, os.path.basename(p)))
         attach_parts(a, b)
@@ -2846,7 +2845,6 @@ def _ann_bucket_fixture(spark: SparkSession, sf_dir: str) -> str:
     directories, so cluster-pruned search is ordinary partition
     pruning."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from ..native.writer import write_native_file
 

@@ -291,8 +291,6 @@ def _orders_csv_urls(sf_dir: str) -> str:
     from ..native.textformats import write_csv
     from ..native.types import from_arrow
 
-    import numpy as np
-
     t = pq.read_table(
         os.path.join(sf_dir, "orders.parquet"),
         columns=["o_orderkey", "o_orderstatus", "o_totalprice"],

@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import json
 import os
-import posixpath
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession

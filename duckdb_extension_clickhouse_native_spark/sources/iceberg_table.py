@@ -34,7 +34,6 @@ Scale shape: metadata JSON + a few Avro manifests replay driver-side
 
 from __future__ import annotations
 
-import io
 import json
 import os
 import posixpath

@@ -21,7 +21,6 @@ import io
 import threading
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Optional
 
 _SERVERS: dict[str, str] = {}
 _LOCK = threading.Lock()

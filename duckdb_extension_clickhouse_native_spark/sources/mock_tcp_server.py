@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import socketserver
 import threading
-from typing import Optional
 
 from ..native.types import from_arrow
 from . import tcp_protocol as proto

@@ -9,8 +9,10 @@ by the batch reader, the stream reader and the SQL table functions:
 * schema probe — :func:`describe_native` parses only the first block's
   header (or the table's ``_table_schema.json``) and adds the hive and
   virtual columns;
-* plan stage (driver, no data read) — list once, prune every file by
-  its sidecar stats and hive values in one pass, then split files into
+* plan stage (driver, no data read) — one :class:`NativeTable` lists
+  the parts, derives their hive layout and loads the table schema (the
+  probe and every mutation open one too); prune every part by its
+  sidecar stats and hive values in one pass, then split files into
   block ranges or pack whole files into partitions;
 * read stage (executors, per partition) — open, decode with PREWHERE,
   apply the delete mask, conform to the declared schema, filter, and
@@ -99,7 +101,6 @@ Options (reader unless marked writer):
 
 from __future__ import annotations
 
-import glob as globmod
 import os
 import uuid
 from dataclasses import dataclass
@@ -359,6 +360,59 @@ def _partition_spec(load_path: str, paths: list) -> tuple:
         for j, k in enumerate(keys)
     }
     return keys, spec, types
+
+
+@dataclass(frozen=True)
+class NativeTable:
+    """What a Native table is, worked out once (the reference's bind
+    step, lib.rs:251): its parts as the reader lists them, the hive
+    layout over them and the ``_table_schema.json`` of a local table
+    root. The schema probe, the reader and every mutation open one, and
+    nothing keeps one past its query: a new DataFrame lists again (a
+    repeated action on the same DataFrame reuses the read Spark planned
+    for it)."""
+
+    path: str
+    paths: list
+    # hive keys, each part's raw value strings, and each key's type
+    # (int iff every value is an integer literal) — empty when flat
+    keys: list
+    part_vals: dict
+    key_types: dict
+    # _table_schema.json (native/tableschema.py) or None; from it the
+    # prior physical names {name: [aliases]}, the ADD defaults and the
+    # known column names — all empty when there is no metadata
+    meta: Optional[dict]
+    aliases: dict
+    defaults: dict
+    known: frozenset
+
+    @classmethod
+    def open(cls, path: str) -> "NativeTable":
+        """List ``path`` (an ``OSError`` lists nothing), derive its hive
+        layout and load its metadata; malformed metadata raises."""
+        try:
+            paths = _resolve_paths(path)
+        except OSError:
+            paths = []
+        keys, vals, types = _partition_spec(path, paths) if paths else ([], {}, {})
+        meta = None
+        if os.path.isdir(path):
+            from ..native.tableschema import load_table_schema
+
+            meta = load_table_schema(path)
+        cols = meta["columns"] if meta else []
+        return cls(
+            path,
+            paths,
+            keys,
+            vals,
+            types,
+            meta,
+            {c["name"]: list(c.get("aliases", [])) for c in cols},
+            {c["name"]: c["default"] for c in cols if "default" in c},
+            frozenset(c["name"] for c in cols),
+        )
 
 
 def _set_conjunction_excludes(filters, stats: dict) -> bool:
@@ -633,28 +687,6 @@ class ClickHouseNativeReader(DataSourceReader):
         self.row_index_column = (
             options.get("row_index_column") or ""
         ).strip() or None
-        # schema evolution metadata, loaded ONCE at plan time and
-        # pickled to executors with the reader: {name: aliases},
-        # {name: default literal}, and the known evolved-column set
-        self.evolution = None
-        if os.path.isdir(self.path):
-            from ..native.tableschema import load_table_schema
-
-            _meta = load_table_schema(self.path)
-            if _meta is not None:
-                self.evolution = {
-                    "aliases": {
-                        c["name"]: list(c.get("aliases", []))
-                        for c in _meta["columns"]
-                    },
-                    "defaults": {
-                        c["name"]: c["default"]
-                        for c in _meta["columns"]
-                        if "default" in c
-                    },
-                    "known": {c["name"] for c in _meta["columns"]},
-                }
-        self._aliases = self.evolution["aliases"] if self.evolution else None
         self.pushed: List[Filter] = []
         # SAMPLE clause (ClickHouse `SAMPLE k [OFFSET m]`): the table
         # must have been written with ``sample_by`` (a sorted
@@ -689,19 +721,15 @@ class ClickHouseNativeReader(DataSourceReader):
                 )
             if hi < SAMPLE_HASH_M:
                 self.pushed.append(LessThan((SAMPLE_HASH_COLUMN,), hi))
-        # the one listing of a batch read: hive keys/types fixed here
-        # (driver-side, survives pickling to executors; per-file values
-        # travel on each NativeFilePartition) and partitions() plans
-        # from the same snapshot. pyspark builds a fresh reader for
-        # every planning, so a snapshot never outlives its query
-        try:
-            paths = _resolve_paths(self.path)
-        except OSError:
-            paths = []
-        self.part_keys, self._part_vals_by_path = (
-            _partition_spec(self.path, paths)[:2] if paths else ([], {})
-        )
-        self._plan_paths = paths
+        # the one listing of a batch read, with its hive layout and
+        # table metadata (driver-side, pickled to executors with the
+        # reader; per-file values travel on each NativeFilePartition).
+        # partitions() plans from it; pyspark builds a fresh reader for
+        # every planning, so a snapshot never outlives its query.
+        # part_keys is the reader's own: a stream may adopt a layout
+        # first seen after __init__ (_vals_for_path)
+        self.table = NativeTable.open(self.path)
+        self.part_keys = list(self.table.keys)
 
     def pushFilters(self, filters: List[Filter]) -> Iterator[Filter]:
         """Absorb simple predicates; they are evaluated on Arrow batches
@@ -743,7 +771,7 @@ class ClickHouseNativeReader(DataSourceReader):
         schema). A late file whose directory layout does not match the
         established keys is a hard error — silently reading it would
         mislabel its rows."""
-        vals = self._part_vals_by_path.get(p)
+        vals = self.table.part_vals.get(p)
         if vals is not None:
             return vals
         comps = _partition_components(self.path, p)
@@ -775,7 +803,7 @@ class ClickHouseNativeReader(DataSourceReader):
     # -- plan stage: list once -> prune -> split or pack ---------------
 
     def partitions(self) -> Sequence[InputPartition]:
-        paths = self._prune(self._plan_paths)
+        paths = self._prune(self.table.paths)
         self._check_read_limits(paths)
         if not self.split_blocks or len(paths) > 8:
             parts = [self._partition(p) for p in paths]
@@ -801,7 +829,7 @@ class ClickHouseNativeReader(DataSourceReader):
             p
             for p in paths
             if not _stats_exclude(
-                self.pushed, self._file_stats(p, target), self._aliases
+                self.pushed, self._file_stats(p, target), self.table.aliases
             )
         ]
         return kept or paths[:1]
@@ -813,7 +841,7 @@ class ClickHouseNativeReader(DataSourceReader):
         from ..native.writer import load_stats
 
         hive = {}
-        for k, v in zip(self.part_keys, self._part_vals_by_path.get(p, ())):
+        for k, v in zip(self.part_keys, self.table.part_vals.get(p, ())):
             typed = self._partition_array(k, v, 1, target)[0].as_py()
             hive[k] = {"min": typed, "max": typed, "nulls": 0}
         st = load_stats(p) if self.skipping else None
@@ -884,7 +912,7 @@ class ClickHouseNativeReader(DataSourceReader):
                 and self.pushed
                 and st is not None
                 and _stats_exclude(
-                    self.pushed, {"rows": rows, "columns": st}, self._aliases
+                    self.pushed, {"rows": rows, "columns": st}, self.table.aliases
                 )
             ):
                 continue
@@ -1050,9 +1078,8 @@ class ClickHouseNativeReader(DataSourceReader):
         if self.columns is None:
             return None
         want = self.columns - {self.file_column, self.row_index_column, *part_val}
-        if self.evolution and want:
-            for c in list(want):
-                want.update(self.evolution["aliases"].get(c, ()))
+        for c in list(want):
+            want.update(self.table.aliases.get(c, ()))
         return want or None
 
     def _read_blocks(
@@ -1138,13 +1165,13 @@ class ClickHouseNativeReader(DataSourceReader):
                 arr = pa.array([self._file_column_value(path)] * n, type=fld.type)
             elif name in part_val:
                 arr = self._partition_array(name, part_val[name], n, target)
-            elif arr is None and self.evolution and name in self.evolution["known"]:
-                for alias in self.evolution["aliases"].get(name, ()):
+            elif arr is None and name in self.table.known:
+                for alias in self.table.aliases[name]:
                     arr = cols.get(alias)
                     if arr is not None:
                         break
                 else:
-                    dv = self.evolution["defaults"].get(name)
+                    dv = self.table.defaults.get(name)
                     arr = pa.nulls(n, fld.type) if dv is None else pa.array(
                         [dv] * n, type=fld.type
                     )
@@ -1193,7 +1220,7 @@ class ClickHouseNativeReader(DataSourceReader):
         prewhere = None
         # evolved parts map physical names to table columns through
         # aliases and defaults; the survival test sees physical names only
-        if self.prewhere and self.pushed and self.evolution is None:
+        if self.prewhere and self.pushed and self.table.meta is None:
             # hive-partition attrs never appear in the file; their
             # constants join the survival test instead
             names = {
@@ -1606,20 +1633,16 @@ def describe_native(options: dict) -> list:
     path = options.get("path")
     if not path:
         raise ValueError("clickhouse_native requires a path")
-    paths = _resolve_paths(path)
+    table = NativeTable.open(path)
+    paths = table.paths
     if not paths or (not is_uri(paths[0]) and not os.path.exists(paths[0])):
         raise FileNotFoundError(
             f"no ClickHouse Native files found at {path!r} — schema "
             "discovery needs at least one existing file (write a seed "
             "part or pass an explicit .schema(...))"
         )
-    meta = None
-    if os.path.isdir(path):
-        from ..native.tableschema import load_table_schema
-
-        meta = load_table_schema(path)
-    if meta is not None:
-        header = [(c["name"], parse_type(c["type"])) for c in meta["columns"]]
+    if table.meta is not None:
+        header = [(c["name"], parse_type(c["type"])) for c in table.meta["columns"]]
     else:
         header = read_file_schema(
             paths[0],
@@ -1642,14 +1665,13 @@ def describe_native(options: dict) -> list:
         for name, t in header
         if want is None or name in want
     ]
-    keys, _vals, types = _partition_spec(path, paths)
-    for k in keys:
+    for k in table.keys:
         if k in {c.name for c in out}:
             raise ValueError(f"partition column {k!r} collides with a file column")
         if want is None or k in want:
             out.append(
                 NativeColumn(k, CHType("Int64"), LongType(), False)
-                if types[k] is int
+                if table.key_types[k] is int
                 else NativeColumn(k, CHType("String"), StringType(), False)
             )
     # file_column: the source file's load-relative path (the parquet

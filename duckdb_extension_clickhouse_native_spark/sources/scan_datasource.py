@@ -38,7 +38,7 @@ CLICKHOUSE_USER, CLICKHOUSE_PASSWORD.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import TYPE_CHECKING, Iterator, List, Optional, Sequence
+from typing import TYPE_CHECKING, Iterator, Optional, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,

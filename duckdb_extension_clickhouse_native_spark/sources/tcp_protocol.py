@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import struct
 from dataclasses import dataclass
-from typing import BinaryIO, Iterator, List, Optional, Tuple
+from typing import BinaryIO, List, Optional, Tuple
 
 from ..native.codec import (
     Block,
