@@ -94,7 +94,7 @@ def _ship_package(spark: SparkSession) -> None:
     stamp = 0
     for root, _dirs, files in os.walk(pkg_dir):
         for f in files:
-            if f.endswith(".py"):
+            if f.endswith((".py", ".c")):
                 stamp = max(stamp, int(os.path.getmtime(os.path.join(root, f))))
     zip_path = os.path.join(
         tempfile.gettempdir(), f"chsql_native_spark_pkg_{stamp}.zip"
@@ -104,7 +104,7 @@ def _ship_package(spark: SparkSession) -> None:
         with zipfile.ZipFile(tmp, "w") as z:
             for root, _dirs, files in os.walk(pkg_dir):
                 for f in files:
-                    if f.endswith(".py"):
+                    if f.endswith((".py", ".c")):
                         full = os.path.join(root, f)
                         rel = os.path.join(
                             os.path.basename(pkg_dir), os.path.relpath(full, pkg_dir)

@@ -14,9 +14,12 @@ requested compression (LZ4 frames with CityHash128 checksums).
 
 from __future__ import annotations
 
+import io
 import socketserver
+import struct
 import threading
 
+from ..native.compress import CHECKSUM_SIZE, HEADER_SIZE
 from ..native.types import from_arrow
 from . import tcp_protocol as proto
 
@@ -41,6 +44,7 @@ def _empty_batch(schema):
 def build_tcp_handler(
     con, insert_hook=None, execute_inserts=True, codec="lz4", interleave=False,
     query_hook=None, server_revision=None, fail_after_blocks=None,
+    corrupt_frame=None,
 ):
     """Handler factory over a DuckDB connection (mirrors
     ``mock_server.build_handler``). ``codec`` picks the frame method
@@ -59,7 +63,10 @@ def build_tcp_handler(
     ``fail_after_blocks=N`` makes the SELECT path throw a mid-stream
     server Exception packet after N data blocks — the
     partial-data-then-error shape a real server produces on
-    MEMORY_LIMIT_EXCEEDED."""
+    MEMORY_LIMIT_EXCEEDED. ``corrupt_frame=N`` flips one payload byte
+    of the N-th (1-based) compressed frame the server sends in each
+    response and keeps its stored CityHash128 — a frame damaged on
+    the wire."""
     qlock = threading.Lock()
     srv_revision = SERVER_REVISION if server_revision is None else server_revision
 
@@ -105,7 +112,33 @@ def build_tcp_handler(
                 if blk.n_rows:
                     batches.append(blk.to_record_batch())
 
+        def _send(self, batch, ch_types, revision, compression, packet_type):
+            """Write one server Data/Totals/Extremes packet."""
+            damage = (
+                corrupt_frame is not None
+                and compression == proto.COMPRESSION_ENABLED
+            )
+            out = io.BytesIO() if damage else self.wfile
+            proto.write_data_packet(
+                out, batch, ch_types, revision,
+                compression=compression, method=codec, packet_type=packet_type,
+            )
+            if not damage:
+                return
+            packet = bytearray(out.getvalue())
+            # frames follow the packet type (one varint byte) and, from
+            # REV_TEMPORARY_TABLES on, the empty table name (one byte)
+            pos = 1 + (revision >= proto.REV_TEMPORARY_TABLES)
+            while pos < len(packet):
+                self._frames_sent += 1
+                if self._frames_sent == corrupt_frame:
+                    packet[pos + CHECKSUM_SIZE + HEADER_SIZE] ^= 0xFF
+                size_at = pos + CHECKSUM_SIZE + 1  # after the method byte
+                pos += CHECKSUM_SIZE + struct.unpack_from("<I", packet, size_at)[0]
+            self.wfile.write(packet)
+
         def _handle_query(self, revision: int) -> None:
+            self._frames_sent = 0  # corrupt_frame counts per response
             try:
                 _qid, query, compression = proto.read_query_packet(self.rfile, revision)
             except Exception as e:
@@ -125,14 +158,12 @@ def build_tcp_handler(
                         probe = con.execute(
                             f"SELECT * FROM {table} WHERE 1=0"
                         ).fetch_arrow_table()
-                    proto.write_data_packet(
-                        self.wfile,
+                    self._send(
                         _empty_batch(probe.schema),
                         [from_arrow(f.type) for f in probe.schema],
                         revision,
-                        compression=compression,
-                        method=codec,
-                        packet_type=proto.SERVER_DATA,
+                        compression,
+                        proto.SERVER_DATA,
                     )
                     self.wfile.flush()
                     batches = self._read_client_blocks(revision, compression)
@@ -162,14 +193,12 @@ def build_tcp_handler(
                     tbl = con.execute(q).fetch_arrow_table()
                 ch_types = [from_arrow(f.type) for f in tbl.schema]
                 # leading header block: schema, zero rows (real-server shape)
-                proto.write_data_packet(
-                    self.wfile,
+                self._send(
                     _empty_batch(tbl.schema) if tbl.schema.names else None,
                     ch_types if tbl.schema.names else None,
                     revision,
-                    compression=compression,
-                    method=codec,
-                    packet_type=proto.SERVER_DATA,
+                    compression,
+                    proto.SERVER_DATA,
                 )
                 def aux_packets():
                     """The mid-stream packets a real server interleaves."""
@@ -197,24 +226,12 @@ def build_tcp_handler(
                     # carried with the connection's compression setting
                     if tbl.num_rows and tbl.schema.names:
                         one = tbl.slice(0, 1).to_batches()[0]
-                        proto.write_data_packet(
-                            self.wfile,
-                            one,
-                            ch_types,
-                            revision,
-                            compression=compression,
-                            method=codec,
-                            packet_type=proto.SERVER_TOTALS,
+                        self._send(
+                            one, ch_types, revision, compression, proto.SERVER_TOTALS
                         )
                         two = tbl.slice(0, min(2, tbl.num_rows)).to_batches()[0]
-                        proto.write_data_packet(
-                            self.wfile,
-                            two,
-                            ch_types,
-                            revision,
-                            compression=compression,
-                            method=codec,
-                            packet_type=proto.SERVER_EXTREMES,
+                        self._send(
+                            two, ch_types, revision, compression, proto.SERVER_EXTREMES
                         )
                     proto.write_progress(self.wfile, revision, 0, 0)
 
@@ -240,14 +257,8 @@ def build_tcp_handler(
                         )
                         self.wfile.flush()
                         return
-                    proto.write_data_packet(
-                        self.wfile,
-                        rb,
-                        ch_types,
-                        revision,
-                        compression=compression,
-                        method=codec,
-                        packet_type=proto.SERVER_DATA,
+                    self._send(
+                        rb, ch_types, revision, compression, proto.SERVER_DATA
                     )
                     total += rb.num_rows
                     n_blocks += 1

@@ -48,6 +48,9 @@ Options (reader unless marked writer):
                     lib.rs:168-170 (payload bytes are NOT consumed, so
                     only safe when that column is last); default raises
     verify_checksum 'true' -> check each compressed frame's CityHash128
+                    (the compiled kernel where `cc` can build it,
+                    else pure Python); default off: structural
+                    checks only
     skipping        'false' -> no sidecar pruning at planning (hive
                     values still prune)
     prewhere        'false' -> decode every projected column of every

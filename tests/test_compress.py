@@ -10,6 +10,11 @@ from __future__ import annotations
 
 import io
 import os
+import random
+import shutil
+import subprocess
+import sys
+import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -20,10 +25,12 @@ from duckdb_extension_clickhouse_native_spark.native.codec import (
     iter_blocks,
     read_file_schema,
 )
+from duckdb_extension_clickhouse_native_spark.native import compress
 from duckdb_extension_clickhouse_native_spark.native.compress import (
     ChecksumError,
     CompressedReader,
     CompressedWriter,
+    _cityhash128_py,
     cityhash128,
     is_compressed_file,
     maybe_compressed_reader,
@@ -67,10 +74,165 @@ CITYHASH128_GOLDEN = {
 }
 
 
+def _golden_input(n: int) -> bytes:
+    return bytes((i * 131 + 7) % 251 for i in range(n))
+
+
 @pytest.mark.parametrize("n", sorted(CITYHASH128_GOLDEN))
 def test_cityhash128_golden_vectors(n):
-    data = bytes((i * 131 + 7) % 251 for i in range(n))
-    assert cityhash128(data) == CITYHASH128_GOLDEN[n]
+    assert cityhash128(_golden_input(n)) == CITYHASH128_GOLDEN[n]
+
+
+@pytest.mark.parametrize("n", sorted(CITYHASH128_GOLDEN))
+def test_cityhash128_py_golden_vectors(n):
+    assert _cityhash128_py(_golden_input(n)) == CITYHASH128_GOLDEN[n]
+
+
+# ---------------------------------------------------------------------------
+# the compiled kernel (cityhash.c) and its pure-Python fallback
+# ---------------------------------------------------------------------------
+
+needs_cc = pytest.mark.skipif(shutil.which("cc") is None, reason="no C compiler")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.fixture
+def kernel_cache(monkeypatch, tmp_path):
+    """An empty cache home for the compiled kernel; the process forgets
+    its loaded kernel before and after the test."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    compress._kernel.cache_clear()
+    yield tmp_path / "cache" / "duckdb_extension_clickhouse_native_spark"
+    compress._kernel.cache_clear()
+
+
+@needs_cc
+def test_compiled_kernel_is_in_use(monkeypatch):
+    """With a compiler on the host, frames are hashed by the compiled
+    kernel: a broken build must fail here, not quietly fall back."""
+    assert compress._kernel() is not None
+
+    def refuse(_s):
+        raise AssertionError("pure-Python CityHash128 ran")
+
+    monkeypatch.setattr(compress, "_cityhash128_py", refuse)
+    assert cityhash128(_golden_input(4173)) == CITYHASH128_GOLDEN[4173]
+
+
+@needs_cc
+def test_compiled_matches_python():
+    assert compress._kernel() is not None
+    rng = random.Random(15)
+    for n in range(601):
+        data = rng.randbytes(n)
+        assert cityhash128(data) == _cityhash128_py(data), n
+    # >= 1 MiB: exact multiples of 128 (a tail of 16 and of 0 bytes after
+    # the 16 seed bytes) and a ragged length
+    for n in (1 << 20, (1 << 20) + 16, (1 << 20) + 77, 128 * 8200):
+        data = rng.randbytes(n)
+        assert cityhash128(data) == _cityhash128_py(data), n
+
+
+@pytest.mark.parametrize("fault", ["missing_compiler", "unwritable_cache"])
+def test_failed_build_falls_back_to_python(kernel_cache, monkeypatch, tmp_path, fault):
+    if fault == "missing_compiler":
+        monkeypatch.setattr(compress, "_CC", str(tmp_path / "no-such-cc"))
+    else:  # neither the cache home nor the temp dir can hold a directory
+        blocker = tmp_path / "a-file"
+        blocker.write_bytes(b"")
+        monkeypatch.setenv("XDG_CACHE_HOME", str(blocker))
+        monkeypatch.setattr(tempfile, "tempdir", str(blocker))
+    for n, want in CITYHASH128_GOLDEN.items():
+        assert cityhash128(_golden_input(n)) == want
+    assert compress._kernel() is None
+    if fault == "missing_compiler":
+        assert os.listdir(kernel_cache) == []  # the build's temp file is gone
+
+
+@needs_cc
+def test_shared_cache_dir_falls_back_to_user_temp_dir(
+    kernel_cache, monkeypatch, tmp_path
+):
+    """A cache directory others can enter is not used: the library is
+    built under a per-user directory in the temp dir instead."""
+    kernel_cache.mkdir(parents=True)
+    kernel_cache.chmod(0o755)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert compress._kernel() is not None
+    assert os.listdir(kernel_cache) == []
+    user_dir = tmp_path / f"duckdb_extension_clickhouse_native_spark-{os.getuid()}"
+    assert len(os.listdir(user_dir)) == 1
+    assert user_dir.stat().st_mode & 0o777 == 0o700
+
+
+@needs_cc
+@pytest.mark.parametrize("corruption", ["not_a_library", "wrong_hash"])
+def test_corrupt_cached_library_is_rejected(kernel_cache, tmp_path, corruption):
+    assert compress._kernel() is not None
+    (name,) = os.listdir(kernel_cache)
+    path = kernel_cache / name
+    bad = tmp_path / "bad.so"
+    if corruption == "not_a_library":
+        bad.write_bytes(b"not a shared object")
+    else:  # loads fine, exports the symbol, hashes wrong
+        src = tmp_path / "bad.c"
+        src.write_text(
+            "#include <stddef.h>\n#include <stdint.h>\n"
+            "void cityhash128(const unsigned char *s, size_t n, uint64_t out[2])"
+            " { out[0] = n; out[1] = 0; }\n"
+        )
+        subprocess.run(
+            ["cc", "-O2", "-shared", "-fPIC", "-o", str(bad), str(src)],
+            check=True, timeout=120,
+        )
+    bad_bytes = bad.read_bytes()
+    # a new inode: this process still has the good library mapped
+    os.replace(bad, path)
+    compress._kernel.cache_clear()
+    assert compress._kernel() is not None  # rejected, then rebuilt
+    for n, want in CITYHASH128_GOLDEN.items():
+        assert cityhash128(_golden_input(n)) == want
+    assert os.listdir(kernel_cache) == [name]
+    assert path.read_bytes() != bad_bytes
+
+
+_BUILDER = """
+import os, sys, time
+from duckdb_extension_clickhouse_native_spark.native import compress
+print("ready", flush=True)
+while not os.path.exists(sys.argv[1]):
+    time.sleep(0.005)
+assert compress._kernel() is not None
+print(compress.cityhash128(bytes(range(256)) * 4096))
+"""
+
+
+@needs_cc
+def test_concurrent_builds_into_one_empty_cache_agree(kernel_cache, tmp_path):
+    """Four processes (no more) build into one empty cache directory at
+    the same moment: each loads a checked library, all agree, and one
+    library is left behind."""
+    go = tmp_path / "go"
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _BUILDER, str(go)],
+            cwd=REPO, stdout=subprocess.PIPE, text=True,
+        )
+        for _ in range(4)
+    ]
+    try:
+        for p in procs:
+            assert p.stdout.readline().strip() == "ready"
+        go.write_bytes(b"")
+        outs = [p.communicate(timeout=120)[0] for p in procs]
+    finally:
+        for p in procs:
+            p.kill()
+            p.wait(timeout=30)
+    assert [p.returncode for p in procs] == [0] * 4
+    want = str(_cityhash128_py(bytes(range(256)) * 4096))
+    assert [o.strip() for o in outs] == [want] * 4
+    assert len(os.listdir(kernel_cache)) == 1  # no temp file left over
 
 
 @pytest.mark.parametrize("method", ["lz4", "zstd", "none"])

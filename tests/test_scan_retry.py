@@ -125,6 +125,52 @@ def test_no_retry_after_partial_yield(monkeypatch):
     assert calls["n"] == 1  # exactly one execution — no replay
 
 
+@pytest.mark.parametrize("frame", [1, 2])
+def test_bad_frame_checksum_fails_fast_and_closes(frame):
+    """A compressed frame damaged on the wire (frame 1 carries the header
+    block, frame 2 the first data block): the read fails within a
+    bounded time with ChecksumError (computed vs stored), yields no
+    rows, is not retried (a ValueError) and its connection is closed,
+    not pooled."""
+    import threading
+
+    from duckdb_extension_clickhouse_native_spark.native.compress import (
+        ChecksumError,
+    )
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t AS SELECT range AS x FROM range(1000)")
+    state = {"connections": 0}
+    Inner = build_tcp_handler(con, corrupt_frame=frame)
+
+    class Counting(Inner):
+        def handle(self):
+            state["connections"] += 1
+            super().handle()
+
+    host, port = serve_tcp(Counting)
+    tcp_client.clear_pool()
+    reader = _reader(f"tcp://{host}:{port}", compression="lz4")
+    rows, errors = [], []
+
+    def read():
+        try:
+            for rb in reader.read(ScanPartition(reader.query)):
+                rows.extend(rb.column(0).to_pylist())
+        except Exception as e:  # handed to the test thread below
+            errors.append(e)
+
+    t = threading.Thread(target=read, daemon=True)
+    t.start()
+    t.join(timeout=30)
+    assert not t.is_alive()
+    assert len(errors) == 1 and isinstance(errors[0], ChecksumError)
+    assert "computed" in str(errors[0]) and "stored" in str(errors[0])
+    assert rows == []
+    assert state["connections"] == 1
+    assert sum(len(b) for b in tcp_client._POOL.values()) == 0
+
+
 def test_retry_policy_backoffs_bounded():
     p = RetryPolicy(attempts=4, base_delay=0.1, max_delay=0.25)
     delays = list(p.backoffs())
