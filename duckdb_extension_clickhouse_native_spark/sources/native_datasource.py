@@ -755,15 +755,14 @@ class ClickHouseNativeReader(DataSourceReader):
         return len(attr) == 1  # no nested columns
 
     @staticmethod
-    def _partition_array(key: str, raw: str, n: int, target) -> "pa.Array":
-        """The hive-path value ``raw`` of ``key`` as an ``n``-row
-        constant column, typed like its declared column (string when
-        the projection leaves it out)."""
+    def _hive_scalar(key: str, raw: str, target) -> "pa.Scalar":
+        """The hive-path value ``raw`` of ``key`` typed like its
+        declared column (string when the projection leaves it out)."""
         import pyarrow as pa
 
         idx = target.get_field_index(key)
         typ = target.field(idx).type if idx >= 0 else pa.string()
-        return pa.repeat(pa.scalar(raw).cast(typ), n)
+        return pa.scalar(raw).cast(typ)
 
     def _vals_for_path(self, p: str) -> tuple:
         """Partition values for ``p``: from the plan-time snapshot, or
@@ -828,25 +827,28 @@ class ClickHouseNativeReader(DataSourceReader):
         if not self.pushed or not (self.skipping or self.part_keys):
             return paths
         target = self._arrow_schema()
+        typed = {}  # (key, raw) -> hive value, typed once per reader
         kept = [
             p
             for p in paths
             if not _stats_exclude(
-                self.pushed, self._file_stats(p, target), self.table.aliases
+                self.pushed, self._file_stats(p, target, typed), self.table.aliases
             )
         ]
         return kept or paths[:1]
 
-    def _file_stats(self, p: str, target) -> dict:
+    def _file_stats(self, p: str, target, typed: dict) -> dict:
         """What planning knows of ``p``: its stats sidecar (while
         ``skipping`` is on) plus its hive-path values as one-value
-        columns; without a usable sidecar, the hive values alone."""
+        columns; without a usable sidecar, the hive values alone.
+        ``typed`` memoizes each (key, raw value) pair's typed value."""
         from ..native.writer import load_stats
 
         hive = {}
-        for k, v in zip(self.part_keys, self.table.part_vals.get(p, ())):
-            typed = self._partition_array(k, v, 1, target)[0].as_py()
-            hive[k] = {"min": typed, "max": typed, "nulls": 0}
+        for kv in zip(self.part_keys, self.table.part_vals.get(p, ())):
+            if kv not in typed:
+                typed[kv] = self._hive_scalar(*kv, target).as_py()
+            hive[kv[0]] = {"min": typed[kv], "max": typed[kv], "nulls": 0}
         st = load_stats(p) if self.skipping else None
         try:
             if st and int(st.get("rows", 0)) > 0:
@@ -1103,10 +1105,12 @@ class ClickHouseNativeReader(DataSourceReader):
                 "apply the mask without misaligning rows"
             )
         target = self._arrow_schema()
-        # keys from the partition itself — see NativeFilePartition
-        part_val = dict(
-            zip(partition.part_keys or self.part_keys, partition.part_vals)
-        )
+        # keys from the partition itself — see NativeFilePartition; each
+        # value typed once per file, then repeated per block
+        part_val = {
+            k: self._hive_scalar(k, v, target)
+            for k, v in zip(partition.part_keys or self.part_keys, partition.part_vals)
+        }
         with open_input(partition.path) as f:
             if partition.start_offset:
                 # block-split partitions only exist for uncompressed files
@@ -1151,6 +1155,7 @@ class ClickHouseNativeReader(DataSourceReader):
         default, else NULLs; a column missing otherwise reads NULL
         under ``allow_missing_columns`` and raises without it.
 
+        ``part_val`` maps each hive key to its typed value (a scalar).
         ``path=None`` is the PREWHERE survival test on a block read so
         far: only the columns it already has, plus the hive constants."""
         import pyarrow as pa
@@ -1167,7 +1172,7 @@ class ClickHouseNativeReader(DataSourceReader):
             if name == self.file_column:
                 arr = pa.array([self._file_column_value(path)] * n, type=fld.type)
             elif name in part_val:
-                arr = self._partition_array(name, part_val[name], n, target)
+                arr = pa.repeat(part_val[name], n)
             elif arr is None and name in self.table.known:
                 for alias in self.table.aliases[name]:
                     arr = cols.get(alias)

@@ -1,9 +1,10 @@
-"""The zip-directory cache for Spark Python workers (worker_imports.py).
+"""The per-call hooks of Spark Python workers (worker_imports.py): the
+zip-directory cache and the heap freeze at the start of each call.
 
-The zip tests run in a fresh interpreter, because installing the
-wrapper patches ``zipimport`` for the whole process; the Spark test
-checks real task workers of the session after a ``clickhouse_native``
-read.
+The probe tests run in a fresh interpreter, because installing the
+hooks patches ``zipimport``, ``importlib`` and the collector for the
+whole process; the Spark test checks real task workers of the session
+after a ``clickhouse_native`` read.
 """
 
 from __future__ import annotations
@@ -19,11 +20,14 @@ import pyarrow as pa
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Puts a zip holding module ``zmod`` on sys.path, imports it, marks the
-# process as a Spark worker (or not), imports the package and counts
+# process as a Spark worker (or not) and imports the package. Then it
+# simulates 20 worker calls (the call-start hook, a reference cycle made
+# and dropped, the daemon's collection after the call), recording the
+# freeze count and what each collection found, and counts
 # zipimport._read_directory calls per phase.
 _PROBE = textwrap.dedent(
     """
-    import importlib, json, os, sys, zipfile, zipimport
+    import gc, importlib, json, os, sys, weakref, zipfile, zipimport
 
     worker, zpath = sys.argv[1] == "worker", sys.argv[2]
 
@@ -41,6 +45,21 @@ _PROBE = textwrap.dedent(
     SparkFiles._is_running_on_worker = worker
     import duckdb_extension_clickhouse_native_spark  # noqa: F401
 
+    class Node:
+        pass
+
+    frozen, found, freed = [], [], []
+    for _ in range(20):
+        importlib.invalidate_caches()  # what setup_spark_files() calls
+        frozen.append(gc.get_freeze_count())
+        a, b = Node(), Node()
+        a.peer, b.peer = b, a
+        ref = weakref.ref(a)
+        del a, b
+        found.append(gc.collect())
+        freed.append(ref() is None)
+        del ref
+
     reads = []
     orig_read = zipimport._read_directory
 
@@ -49,7 +68,10 @@ _PROBE = textwrap.dedent(
         return orig_read(path)
 
     zipimport._read_directory = counting
-    out = {"stdlib": zipimport.zipimporter.invalidate_caches is stdlib_method}
+    out = {
+        "stdlib": zipimport.zipimporter.invalidate_caches is stdlib_method,
+        "frozen": frozen, "found": found, "freed": freed,
+    }
     importlib.invalidate_caches()  # an importer's first call stamps it
     del reads[:]
     for _ in range(5):
@@ -90,9 +112,21 @@ def test_worker_skips_rereading_an_unchanged_zip(tmp_path):
     assert got["value"] == "rewritten"
 
 
+def test_worker_freezes_only_what_outlived_the_last_call(tmp_path):
+    got = _probe(tmp_path, worker=True)
+    frozen = got["frozen"]
+    assert frozen[0] > 0
+    # from the second call on nothing new is frozen: no call's garbage
+    assert max(frozen[1:]) == frozen[1]
+    # and every collection after a call still frees that call's cycle
+    assert all(n >= 2 for n in got["found"])
+    assert all(got["freed"])
+
+
 def test_driver_keeps_the_stdlib_method(tmp_path):
     got = _probe(tmp_path, worker=False)
     assert got["stdlib"]
+    assert set(got["frozen"]) == {0}
     if sys.version_info < (3, 13):  # 3.13's method only drops the cache
         assert got["repeated"] == 5
     assert got["value"] == "rewritten"
@@ -109,6 +143,7 @@ def test_task_worker_that_read_native_has_the_wrapper(spark, tmp_path):
 
     def report(batches):
         # imports nothing of the package: only a worker that ran the read has it
+        import gc
         import os
         import sys
         import time
@@ -123,14 +158,17 @@ def test_task_worker_that_read_native_has_the_wrapper(spark, tmp_path):
             "pid": os.getpid(),
             "has_package": "duckdb_extension_clickhouse_native_spark" in sys.modules,
             "module": zipimport.zipimporter.invalidate_caches.__module__,
+            "frozen": gc.get_freeze_count(),
         }])
 
     n = spark.sparkContext.defaultParallelism
     seen = spark.range(n, numPartitions=n).mapInArrow(
-        report, "pid long, has_package boolean, module string"
+        report, "pid long, has_package boolean, module string, frozen long"
     ).collect()
-    readers = {r.pid: r.module for r in seen if r.has_package}
+    readers = {r.pid: r for r in seen if r.has_package}
     assert readers, f"no probed worker had run the read: {seen}"
-    assert set(readers.values()) == {
+    assert {r.module for r in readers.values()} == {
         "duckdb_extension_clickhouse_native_spark.worker_imports"
     }
+    # this call started by freezing what the earlier calls left alive
+    assert all(r.frozen > 0 for r in readers.values()), seen
