@@ -33,6 +33,8 @@ from typing import BinaryIO, Callable, Iterator, Optional
 import numpy as np
 import pyarrow as pa
 
+from . import kernels
+from .compress import PushbackReader
 from .types import (
     BIG_INT_WIDTH,
     CHType,
@@ -146,22 +148,33 @@ class Block:
 _EPOCH_US = 1_000_000
 
 
-def _strings_from_parts(parts: list[bytes], offsets: np.ndarray, rows: int, scrub: bool) -> pa.Array:
-    payload = b"".join(parts)
-    if scrub and (b"\x00" in payload or b"\xef\xbf\xbd" in payload):
-        # slow path only when scrubbing actually fires (lib.rs:68-76)
-        vals = [
-            payload[offsets[i] : offsets[i + 1]]
-            .decode("utf-8", "replace")
-            .replace("\x00", "")
-            .replace("�", "")
-            for i in range(rows)
-        ]
-        return pa.array(vals, type=pa.string())
+_INT32_MAX = (1 << 31) - 1
+
+
+def _string_array(offsets: np.ndarray, payload, rows: int, scrub: bool) -> pa.Array:
+    """The Arrow string array of ``rows`` values over int64 ``offsets``
+    (rows + 1 running byte totals) and ``payload`` (any bytes-like).
+    While the payload fits int32 offsets it is built as ``pa.string()``
+    directly, so no cast copies it."""
+    if scrub:
+        pb = bytes(memoryview(payload))
+        if b"\x00" in pb or b"\xef\xbf\xbd" in pb:
+            # slow path only when scrubbing actually fires (lib.rs:68-76)
+            vals = [
+                pb[offsets[i] : offsets[i + 1]]
+                .decode("utf-8", "replace")
+                .replace("\x00", "")
+                .replace("�", "")
+                for i in range(rows)
+            ]
+            return pa.array(vals, type=pa.string())
+    data = pa.py_buffer(payload)
+    if offsets[-1] <= _INT32_MAX:
+        return pa.Array.from_buffers(
+            pa.string(), rows, [None, pa.py_buffer(offsets.astype(np.int32)), data]
+        )
     arr = pa.Array.from_buffers(
-        pa.large_string(),
-        rows,
-        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(payload)],
+        pa.large_string(), rows, [None, pa.py_buffer(offsets), data]
     )
     return arr.cast(pa.string())
 
@@ -218,32 +231,95 @@ def _refill(buf: BinaryIO, chunk: int) -> bytes:
 
 
 # Raw-buffer residency bound for the chunked string scan: once this
-# many consumed bytes accumulate, their payload is flushed into the
-# (amortized) output accumulator and the raw prefix is dropped — so a
+# many consumed bytes accumulate, their payload is copied into an
+# exactly sized output piece and the raw prefix is dropped — so a
 # multi-GB string block costs ~1x payload + this window, not 2x the
 # whole column (raw bytes AND payload copy resident at once).
 _SCAN_WINDOW = 8 << 20
+# refill sizes of the chunk scans: the first read is small (a column of
+# a small block costs no 4 MiB read and seek-back), later ones double
+_SCAN_FIRST = 64 << 10
+_SCAN_CHUNK = 4 << 20
 # test hook: peak bytes resident in the raw scan buffer (see
 # tests/test_codec_properties.py bounded-residency property)
 _SCAN_STATS = {"peak_buffer": 0}
 
 
+def _note_resident(n: int) -> None:
+    if n > _SCAN_STATS["peak_buffer"]:
+        _SCAN_STATS["peak_buffer"] = n
+
+
 def _decode_strings_seekable(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Array:
-    """Fast path for seekable/pushback sources: bulk-read, scan length
-    prefixes in a tight integer loop (no per-row I/O or slicing), then
-    extract payload spans with numpy masked copies. Surplus bytes are
-    returned to the stream. ~3-5x the per-row read() loop.
+    """Fast path for seekable/pushback sources: bulk-read, walk the
+    buffered window with the compiled kernel (``kernels.c``
+    ``ch_strings_decode``), return the surplus to the stream. The walk
+    stops exactly at the window's edge, so a refill is requested only
+    when a value truly continues past it (an interactive source is
+    never asked for bytes that are not guaranteed to follow).
+
+    Each window is walked twice: once for the offsets, then, when
+    ``_SCAN_WINDOW`` consumed bytes have accumulated or the column
+    ends, once more to copy the payload into a piece sized exactly from
+    those offsets. Without the kernel, ``_decode_strings_scan_py``
+    answers."""
+    k = kernels.load()
+    if k is None:
+        return _decode_strings_scan_py(buf, rows, scrub=scrub)
+    offsets = np.empty(rows + 1, dtype=np.int64)
+    offsets[0] = 0
+    pieces = []
+    chunk = _SCAN_FIRST
+    data = _refill(buf, chunk)
+    _note_resident(len(data))
+    pos = 0  # bytes of data walked
+    i = 0  # rows walked
+    w0 = 0  # first row whose payload is not copied out yet
+
+    def copy_out() -> None:
+        piece = np.empty(int(offsets[i] - offsets[w0]), dtype=np.uint8)
+        k.strings_decode(data, 0, pos, i - w0, offsets, w0, piece)
+        pieces.append(piece)
+
+    while True:
+        n, used = k.strings_decode(data, pos, len(data), rows - i, offsets, i)
+        i += n
+        pos += used
+        if i == rows:
+            break
+        if not isinstance(data, bytearray):
+            data = bytearray(data)  # the window grows in place from here
+        if pos >= _SCAN_WINDOW:
+            copy_out()
+            del data[:pos]
+            pos, w0 = 0, i
+        chunk = min(chunk * 2, _SCAN_CHUNK)
+        more = _refill(buf, chunk)
+        if not more:
+            raise EOFError("EOF inside string column")
+        data += more
+        _note_resident(len(data))
+    copy_out()
+    _restore_surplus(buf, memoryview(data)[pos:])
+    payload = pieces[0] if len(pieces) == 1 else np.concatenate(pieces)
+    return _string_array(offsets, payload, rows, scrub)
+
+
+def _decode_strings_scan_py(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Array:
+    """``_decode_strings_seekable`` in pure Python (no compiled kernel):
+    scan length prefixes in a tight integer loop (no per-row I/O or
+    slicing), then extract payload spans with numpy masked copies.
+    ~3-5x the per-row read() loop.
 
     Residency: the raw buffer is trimmed every ``_SCAN_WINDOW``
     consumed bytes (the masked payload copy moves into one amortized
     accumulator), so peak memory is ~payload + window regardless of
     the block's string-column size."""
-    CHUNK = 4 << 20
+    chunk = _SCAN_FIRST
     # bytearray: refills grow in place (amortized), instead of
-    # re-copying the whole accumulated column per 4 MiB chunk
-    data = bytearray(_refill(buf, CHUNK))
-    if len(data) > _SCAN_STATS["peak_buffer"]:
-        _SCAN_STATS["peak_buffer"] = len(data)
+    # re-copying the whole accumulated column per refill
+    data = bytearray(_refill(buf, chunk))
+    _note_resident(len(data))
     pos = 0
     # ONE list append per row in the hot loop (r10 decode profile: the
     # previous 3 preallocated-numpy scalar writes per row cost ~3x a
@@ -298,8 +374,6 @@ def _decode_strings_seekable(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Arr
         dlen = len(data)
         # scan as far as this buffer allows — bounds-EXACT, so a refill
         # is requested only when a string truly overruns the buffer
-        # (an interactive source is never asked for bytes that are not
-        # guaranteed to follow)
         while i < rows:
             if pos >= dlen:
                 break
@@ -325,6 +399,8 @@ def _decode_strings_seekable(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Arr
                 n |= (byte & 0x7F) << shift
                 if not (byte & 0x80):
                     break
+                if adv == MAX_VARINT_BYTES:
+                    raise ValueError("varint too long")
                 shift += 7
             if truncated or pos + adv + n > dlen:
                 break
@@ -336,12 +412,12 @@ def _decode_strings_seekable(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Arr
             if pos >= _SCAN_WINDOW:
                 # trim consumed bytes before growing further
                 flush()
-            more = _refill(buf, CHUNK)
+            chunk = min(chunk * 2, _SCAN_CHUNK)
+            more = _refill(buf, chunk)
             if not more:
                 raise EOFError("EOF inside string column")
             data += more
-            if len(data) > _SCAN_STATS["peak_buffer"]:
-                _SCAN_STATS["peak_buffer"] = len(data)
+            _note_resident(len(data))
         else:
             break
     flush()  # trims all consumed bytes; what remains IS the surplus
@@ -357,23 +433,9 @@ def _decode_strings_seekable(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Arr
     else:
         all_lengths = np.empty(0, dtype=np.int64)
     np.cumsum(all_lengths, out=offsets[1:])
-    if scrub and (b"\x00" in payload or b"\xef\xbf\xbd" in payload):
-        vals = [
-            bytes(payload[offsets[r] : offsets[r + 1]])
-            .decode("utf-8", "replace")
-            .replace("\x00", "")
-            .replace("�", "")
-            for r in range(rows)
-        ]
-        return pa.array(vals, type=pa.string())
-    arr = pa.Array.from_buffers(
-        pa.large_string(),
-        rows,
-        # memoryview: zero-copy hand-off of the accumulator (it is
-        # never resized after this point)
-        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(memoryview(payload))],
-    )
-    return arr.cast(pa.string())
+    # memoryview: zero-copy hand-off of the accumulator (it is never
+    # resized after this point)
+    return _string_array(offsets, memoryview(payload), rows, scrub)
 
 
 def _decode_strings(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Array:
@@ -396,24 +458,7 @@ def _decode_strings(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Array:
         chunks.append(data)
         total += n
         offsets[i + 1] = total
-    return _strings_from_parts(chunks, offsets, rows, scrub)
-
-
-def _read_exact(buf: BinaryIO, n: int) -> bytes:
-    """Read exactly n bytes (looping over short reads); EOFError if the
-    stream ends first."""
-    data = buf.read(n)
-    if len(data) == n:
-        return data
-    parts = [data]
-    got = len(data)
-    while got < n:
-        more = buf.read(n - got)
-        if not more:
-            raise EOFError("EOF inside string column")
-        parts.append(more)
-        got += len(more)
-    return b"".join(parts)
+    return _string_array(offsets, b"".join(chunks), rows, scrub)
 
 
 def _decode_strings_from_lengths(
@@ -421,7 +466,9 @@ def _decode_strings_from_lengths(
 ) -> Optional[pa.Array]:
     """Marks-sidecar fast path: with per-row value byte lengths known
     up front (native/marks.py — the ClickHouse ``.mrk`` analogue), the
-    sequential varuint prefix walk disappears — prefix positions are a
+    marked byte total is read in one call. The compiled kernel then
+    walks those bytes into an exactly sized payload and its lengths are
+    compared with the marks; without the kernel, prefix positions are a
     cumsum, the payload extraction one masked copy, and EVERY prefix
     byte is verified against the reconstruction (vectorized for the
     common 1-byte prefixes). On any mismatch (stale sidecar) the
@@ -451,6 +498,18 @@ def _decode_strings_from_lengths(
     if got != total:
         _restore_surplus(buf, data)
         return None
+    offsets = np.empty(rows + 1, dtype=np.int64)
+    offsets[0] = 0
+    k = kernels.load()
+    if k is not None:
+        payload = np.empty(int(lens.sum()), dtype=np.uint8)
+        n, used = k.strings_decode(data, 0, total, rows, offsets, 0, payload)
+        if n != rows or used != total or not np.array_equal(
+            np.diff(offsets), lens
+        ):
+            _restore_surplus(buf, data)
+            return None
+        return _string_array(offsets, payload, rows, scrub)
     view = np.frombuffer(data, dtype=np.uint8)
     prefix_at = starts[:-1]
     one = widths == 1
@@ -500,20 +559,8 @@ def _decode_strings_from_lengths(
     for i in rest:
         s = int(prefix_at[i])
         mask[s : s + int(widths[i])] = False
-    payload = view[mask]
-    offsets = np.empty(rows + 1, dtype=np.int64)
-    offsets[0] = 0
     np.cumsum(lens, out=offsets[1:])
-    if scrub:
-        pb = payload.tobytes()
-        if b"\x00" in pb or b"\xef\xbf\xbd" in pb:
-            return _strings_from_parts([pb], offsets, rows, scrub)
-    arr = pa.Array.from_buffers(
-        pa.large_string(),
-        rows,
-        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(payload)],
-    )
-    return arr.cast(pa.string())
+    return _string_array(offsets, view[mask], rows, scrub)
 
 
 def marks_col_info(marks, name: str, type_str: str, n_rows: int):
@@ -629,59 +676,74 @@ def _skip_fixed(buf: BinaryIO, t: CHType, rows: int) -> None:
 
 def _skip_strings_seekable(buf: BinaryIO, rows: int) -> None:
     """Skip ``rows`` varuint-prefixed strings on a seekable/pushback
-    source by bulk-reading and scanning prefixes in a tight in-memory
-    loop, then returning the surplus — the skip twin of
-    ``_decode_strings_seekable``. The per-row ``read_varuint(buf)``
-    loop costs two buffered-IO calls per string; projections over
-    string-heavy tables (e.g. two columns out of lineitem) spend more
-    time skipping than decoding without this. Unlike the decode twin,
-    no history is needed, so the consumed prefix is dropped on every
-    refill (keeping it would copy the whole accumulated column per
-    4 MiB chunk — O(n^2))."""
-    CHUNK = 4 << 20
-    data = _refill(buf, CHUNK)
+    source by bulk-reading and walking prefixes in memory (the compiled
+    ``ch_strings_skip``, else ``_skip_scan_py``), then returning the
+    surplus — the skip twin of ``_decode_strings_seekable``. The
+    per-row ``read_varuint(buf)`` loop costs two buffered-IO calls per
+    string; projections over string-heavy tables (e.g. two columns out
+    of lineitem) spend more time skipping than decoding without this.
+    Unlike the decode twin, no history is needed, so the consumed
+    prefix is dropped on every refill (keeping it would copy the whole
+    accumulated column per refill — O(n^2))."""
+    k = kernels.load()
+    scan = _skip_scan_py if k is None else k.strings_skip
+    chunk = _SCAN_FIRST
+    data = _refill(buf, chunk)
     pos = 0
     i = 0
-    while i < rows:
-        dlen = len(data)
-        # bounds-exact scan; see _decode_strings_seekable for why
-        while i < rows:
-            if pos >= dlen:
-                break
-            b0 = data[pos]
-            if b0 < 0x80:
-                n = b0
-                adv = 1
-            else:
-                n = b0 & 0x7F
-                shift = 7
-                adv = 1
-                truncated = False
-                while True:
-                    if pos + adv >= dlen:
-                        truncated = True
-                        break
-                    byte = data[pos + adv]
-                    adv += 1
-                    n |= (byte & 0x7F) << shift
-                    if not (byte & 0x80):
-                        break
-                    shift += 7
-                if truncated:
-                    break
-            if pos + adv + n > dlen:
-                break
-            pos += adv + n
-            i += 1
-        if i < rows:
-            more = _refill(buf, CHUNK)
-            if not more:
-                raise EOFError("EOF inside string column")
-            data = data[pos:] + more
-            pos = 0
-        else:
+    while True:
+        # bounds-exact walk; see _decode_strings_seekable for why
+        n, used = scan(data, pos, rows - i)
+        i += n
+        pos += used
+        if i == rows:
             break
+        chunk = min(chunk * 2, _SCAN_CHUNK)
+        more = _refill(buf, chunk)
+        if not more:
+            raise EOFError("EOF inside string column")
+        data = data[pos:] + more
+        pos = 0
     _restore_surplus(buf, memoryview(data)[pos:])
+
+
+def _skip_scan_py(data: bytes, pos: int, rows: int) -> tuple[int, int]:
+    """Walk up to ``rows`` values of ``data[pos:]`` that end inside it:
+    (values walked, bytes walked). The pure-Python ``ch_strings_skip``."""
+    dlen = len(data)
+    start = pos
+    i = 0
+    while i < rows:
+        if pos >= dlen:
+            break
+        b0 = data[pos]
+        if b0 < 0x80:
+            n = b0
+            adv = 1
+        else:
+            n = b0 & 0x7F
+            shift = 7
+            adv = 1
+            truncated = False
+            while True:
+                if pos + adv >= dlen:
+                    truncated = True
+                    break
+                byte = data[pos + adv]
+                adv += 1
+                n |= (byte & 0x7F) << shift
+                if not (byte & 0x80):
+                    break
+                if adv == MAX_VARINT_BYTES:
+                    raise ValueError("varint too long")
+                shift += 7
+            if truncated:
+                break
+        if pos + adv + n > dlen:
+            break
+        pos += adv + n
+        i += 1
+    return i, pos - start
 
 
 # Dynamic (docs: sql-reference/data-types/dynamic) — the any-type
@@ -1446,7 +1508,14 @@ def iter_blocks(
     (native.marks.MarksReader) engages the per-block string marks by
     the block's byte offset (``buf.tell()`` before each header), so it
     is only passed for raw uncompressed file streams. ``prewhere``
-    passes through to ``read_block``."""
+    passes through to ``read_block``.
+
+    A stream that can neither seek nor push back but has ``read1``
+    (an HTTP response body) is read through one ``PushbackReader``, so
+    its String columns take the chunk scan too; the blocks then own
+    the stream to its end."""
+    if not _supports_chunk_scan(buf) and hasattr(buf, "read1"):
+        buf = PushbackReader(buf)
     while True:
         marks = None
         if marks_reader is not None:

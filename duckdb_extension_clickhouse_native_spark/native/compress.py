@@ -21,14 +21,11 @@ Native block stream. LZ4 payloads use the raw block format (pyarrow's
 ``lz4_raw``), ZSTD the standard zstd frame (pyarrow ``zstd``).
 
 CityHash128 is the *1.0.2* algorithm (the version ClickHouse pins,
-because later CityHash releases changed output). ``cityhash128`` runs a
-compiled kernel, ``cityhash.c`` beside this module: the first call in a
-process builds it with ``cc`` into a private per-user cache directory
-(once per user and machine; later processes load the cached library)
-and checks it against a pinned vector. Without a compiler, a private cache
-directory, a build that finishes, or a library that passes the check,
-the clean-room pure-Python implementation (``_cityhash128_py``, ~30-60
-ms/MiB on a 4-core Xeon VM) runs instead for the rest of the process.
+because later CityHash releases changed output). ``cityhash128`` runs
+the compiled kernel in ``kernels.c`` (built and checked by
+``kernels.load``). Where it cannot be built, the clean-room
+pure-Python implementation (``_cityhash128_py``, ~30-60 ms/MiB on a
+4-core Xeon VM) runs instead for the rest of the process.
 Native-TCP frames are always verified; on the file scan path
 verification stays optional (``verify_checksum``, default off:
 structural validation only).
@@ -41,21 +38,13 @@ files, which is how ClickHouse itself shards Native exports.
 
 from __future__ import annotations
 
-import ctypes
-import functools
-import hashlib
 import io
-import logging
-import os
-import stat
 import struct
-import subprocess
-import sysconfig
-import tempfile
-from importlib import resources
 from typing import BinaryIO, Optional
 
 import pyarrow as pa
+
+from . import kernels
 
 METHOD_NONE = 0x02
 METHOD_LZ4 = 0x82
@@ -240,121 +229,14 @@ def _cityhash128_py(s: bytes) -> tuple[int, int]:
     return _city_hash_128_with_seed(s, 0, n, _K0, _K1)
 
 
-# ---------------------------------------------------------------------------
-# compiled kernel: cityhash.c, built once per machine and loaded by ctypes
-# ---------------------------------------------------------------------------
-
-_CC = "cc"
-_BUILD_TIMEOUT_S = 120
-_U64x2 = ctypes.c_uint64 * 2
-# cityhash128(bytes((i * 131 + 7) % 251 for i in range(4173))): 32 rounds
-# and a 61-byte tail; a library that disagrees is never used
-_CHECK_LEN = 4173
-_CHECK_HASH = (0x1775CF029A654AC5, 0xA59F9DAC1E9B91FA)
-
-
-def _private_dir(path: str) -> bool:
-    """Create ``path`` (mode 0700) if missing; True when it is a real
-    directory that the current uid owns, can write and no one else can
-    enter — nobody else may swap the library a process loads."""
-    try:
-        os.makedirs(path, mode=0o700, exist_ok=True)
-        st = os.lstat(path)
-    except OSError:
-        return False
-    return (
-        stat.S_ISDIR(st.st_mode)
-        and st.st_uid == os.getuid()
-        and stat.S_IMODE(st.st_mode) & 0o077 == 0
-        and os.access(path, os.W_OK)
-    )
-
-
-def _build_dir() -> Optional[str]:
-    """``$XDG_CACHE_HOME`` (or ``~/.cache``)/<package>, else a per-user
-    directory under the temp dir; None when neither is private."""
-    pkg = __package__.split(".")[0]
-    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
-        os.path.expanduser("~"), ".cache"
-    )
-    for d in (
-        os.path.join(base, pkg),
-        os.path.join(tempfile.gettempdir(), f"{pkg}-{os.getuid()}"),
-    ):
-        if _private_dir(d):
-            return d
-    return None
-
-
-def _checked(path: str):
-    """The library's ``cityhash128`` when it hashes the check vector
-    right, else None."""
-    fn = ctypes.CDLL(path).cityhash128
-    fn.argtypes = (ctypes.c_char_p, ctypes.c_size_t, _U64x2)
-    fn.restype = None
-    data = bytes((i * 131 + 7) % 251 for i in range(_CHECK_LEN))
-    out = _U64x2()
-    fn(data, len(data), out)
-    return fn if tuple(out) == _CHECK_HASH else None
-
-
-@functools.lru_cache(maxsize=None)
-def _kernel():
-    """The compiled CityHash128, or None: the pure-Python code then
-    stays in use for the rest of the process (no compiler, no private
-    cache directory, a failed or timed-out build, a failed check).
-
-    The library's name hashes the source, the compile command and the
-    platform, so a changed source or toolchain target builds afresh. A
-    build writes a unique temp name, passes the check there and is then
-    renamed into place, so concurrent workers never load a half-written
-    file; a cached file that fails to load or check is rebuilt."""
-    try:
-        src = resources.files(__package__).joinpath("cityhash.c").read_bytes()
-        cmd = [_CC, "-O2", "-shared", "-fPIC", "-x", "c", "-", "-o"]
-        stamp = [src, " ".join(cmd).encode(), sysconfig.get_platform().encode()]
-        key = hashlib.sha256(b"\0".join(stamp)).hexdigest()[:32]
-        d = _build_dir()
-        if d is None:
-            return None
-        path = os.path.join(d, f"cityhash128-{key}.so")
-        try:
-            fn = _checked(path)
-        except (OSError, AttributeError):
-            fn = None  # not built yet, unloadable, or no such symbol
-        if fn is not None:
-            return fn
-        fd, tmp = tempfile.mkstemp(prefix=".build-", suffix=".so", dir=d)
-        os.close(fd)
-        try:
-            subprocess.run(
-                [*cmd, tmp], input=src, capture_output=True, check=True,
-                timeout=_BUILD_TIMEOUT_S,
-            )
-            fn = _checked(tmp)
-            if fn is not None:
-                os.replace(tmp, path)
-            return fn
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-    except (OSError, AttributeError, subprocess.SubprocessError):
-        logging.getLogger(__name__).info(
-            "compiled CityHash128 unavailable; using pure Python", exc_info=True
-        )
-        return None
-
-
 def cityhash128(s: bytes) -> tuple[int, int]:
     """CityHash128 v1.0.2 (lo, hi) — the variant ClickHouse pins for
     its frame checksums. Runs the compiled kernel when it built,
     ``_cityhash128_py`` otherwise."""
-    fn = _kernel()
-    if fn is None:
+    k = kernels.load()
+    if k is None:
         return _cityhash128_py(s)
-    out = _U64x2()
-    fn(s, len(s), out)
-    return out[0], out[1]
+    return k.cityhash128(s)
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,19 @@
-/* CityHash128 v1.0.2 — the variant ClickHouse pins for its compressed-frame
- * checksums. A plain C port of the pure-Python implementation in
- * compress.py (same branches, same constants); compress.py compiles it
- * on first use and calls it through ctypes. No Python API: one exported
- * function, cityhash128(data, len, out) -> out[0] = lo, out[1] = hi. */
+/* The package's compiled kernels; kernels.py builds this file with cc on
+ * first use and calls it through ctypes. No Python API, three exported
+ * functions:
+ *
+ *   cityhash128         CityHash128 v1.0.2, the variant ClickHouse pins for
+ *                       its compressed-frame checksums: a plain C port of
+ *                       the pure-Python implementation in compress.py (same
+ *                       branches, same constants).
+ *   ch_strings_decode   one pass over a buffered window of a Native String
+ *                       column (VarUInt length + bytes per value): offsets,
+ *                       and optionally the payload bytes.
+ *   ch_strings_skip     the same walk, keeping nothing.
+ *
+ * Both string walks stop exactly at the window's edge (never before a value
+ * that ends inside it), so the caller asks its stream for more bytes only
+ * when the column really continues. */
 
 #include <stddef.h>
 #include <stdint.h>
@@ -165,4 +176,98 @@ void cityhash128(const unsigned char *s, size_t n, uint64_t out[2]) {
                                 out);
     else
         city_hash_128_with_seed(s, n, k0, k1, out);
+}
+
+
+/* ---------------------------------------------------------------------
+ * Native String columns
+ * ------------------------------------------------------------------- */
+
+#define MAX_VARINT_BYTES 10 /* codec.MAX_VARINT_BYTES */
+#define PREFIX_TOO_LONG (-1)
+
+/* The VarUInt at s[p..len): its byte count, with the value in *v; 0 when
+ * the window ends inside it; PREFIX_TOO_LONG when its 10th byte still
+ * continues. A value past 64 bits saturates to UINT64_MAX, a length no
+ * window holds. */
+static int read_prefix(const unsigned char *s, size_t len, size_t p,
+                       uint64_t *v) {
+    uint64_t r = 0;
+    for (int k = 0; k < MAX_VARINT_BYTES; k++) {
+        if (p + k >= len)
+            return 0;
+        unsigned b = s[p + k];
+        if (k == MAX_VARINT_BYTES - 1 && (b & 0x7f) > 1)
+            r = UINT64_MAX;
+        else
+            r |= (uint64_t)(b & 0x7f) << (7 * k);
+        if (!(b & 0x80)) {
+            *v = r;
+            return k + 1;
+        }
+    }
+    return PREFIX_TOO_LONG;
+}
+
+/* Decode up to `rows` values from src[0..len). offsets[k + 1] becomes
+ * offsets[k] plus the k-th value's length (the caller sets offsets[0]);
+ * when dst is not NULL the payloads are also copied to dst back to back,
+ * never past dst_cap bytes. Stops before the first value that does not
+ * end inside src (or fit in dst). Returns the values decoded and sets
+ * *used to the bytes they span, or returns PREFIX_TOO_LONG with *used at
+ * that prefix. */
+int64_t ch_strings_decode(const unsigned char *src, size_t len, int64_t rows,
+                          int64_t *offsets, unsigned char *dst,
+                          size_t dst_cap, size_t *used) {
+    size_t p = 0, d = 0;
+    int64_t i = 0, off = offsets[0];
+    for (; i < rows; i++) {
+        uint64_t n;
+        int w;
+        if (p < len && src[p] < 0x80) {
+            n = src[p];
+            w = 1;
+        } else {
+            w = read_prefix(src, len, p, &n);
+            if (w == PREFIX_TOO_LONG) {
+                *used = p;
+                return PREFIX_TOO_LONG;
+            }
+            if (w == 0)
+                break;
+        }
+        if (n > len - p - (size_t)w)
+            break;
+        if (dst) {
+            if (n > dst_cap - d)
+                break;
+            memcpy(dst + d, src + p + w, n);
+            d += n;
+        }
+        p += (size_t)w + n;
+        off += (int64_t)n;
+        offsets[i + 1] = off;
+    }
+    *used = p;
+    return i;
+}
+
+/* ch_strings_decode without outputs: the values skipped and *used. */
+int64_t ch_strings_skip(const unsigned char *src, size_t len, int64_t rows,
+                        size_t *used) {
+    size_t p = 0;
+    int64_t i = 0;
+    for (; i < rows; i++) {
+        uint64_t n;
+        int w = read_prefix(src, len, p, &n);
+        if (w == PREFIX_TOO_LONG) {
+            *used = p;
+            return PREFIX_TOO_LONG;
+        }
+        if (w == 0 || n > len - p - (size_t)w)
+            break;
+        p += (size_t)w + n;
+    }
+    *used = p;
+    return i;
 }

@@ -16,6 +16,7 @@ import subprocess
 import sys
 import tempfile
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -25,7 +26,7 @@ from duckdb_extension_clickhouse_native_spark.native.codec import (
     iter_blocks,
     read_file_schema,
 )
-from duckdb_extension_clickhouse_native_spark.native import compress
+from duckdb_extension_clickhouse_native_spark.native import compress, kernels
 from duckdb_extension_clickhouse_native_spark.native.compress import (
     ChecksumError,
     CompressedReader,
@@ -89,11 +90,14 @@ def test_cityhash128_py_golden_vectors(n):
 
 
 # ---------------------------------------------------------------------------
-# the compiled kernel (cityhash.c) and its pure-Python fallback
+# the compiled kernels (kernels.c) and their pure-Python fallbacks
 # ---------------------------------------------------------------------------
 
 needs_cc = pytest.mark.skipif(shutil.which("cc") is None, reason="no C compiler")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+KERNEL_SRC = os.path.join(
+    REPO, "duckdb_extension_clickhouse_native_spark", "native", "kernels.c"
+)
 
 
 @pytest.fixture
@@ -101,27 +105,56 @@ def kernel_cache(monkeypatch, tmp_path):
     """An empty cache home for the compiled kernel; the process forgets
     its loaded kernel before and after the test."""
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
-    compress._kernel.cache_clear()
+    kernels.load.cache_clear()
     yield tmp_path / "cache" / "duckdb_extension_clickhouse_native_spark"
-    compress._kernel.cache_clear()
+    kernels.load.cache_clear()
 
 
 @needs_cc
 def test_compiled_kernel_is_in_use(monkeypatch):
-    """With a compiler on the host, frames are hashed by the compiled
-    kernel: a broken build must fail here, not quietly fall back."""
-    assert compress._kernel() is not None
+    """With a compiler on the host, frames are hashed and String
+    columns walked by the compiled kernels: a broken build must fail
+    here, not quietly fall back."""
+    from duckdb_extension_clickhouse_native_spark.native import codec
+    from duckdb_extension_clickhouse_native_spark.native.types import parse_type
 
-    def refuse(_s):
-        raise AssertionError("pure-Python CityHash128 ran")
+    k = kernels.load()
+    assert k is not None
+
+    def refuse(*_a, **_kw):
+        raise AssertionError("a pure-Python fallback ran")
 
     monkeypatch.setattr(compress, "_cityhash128_py", refuse)
+    monkeypatch.setattr(codec, "_decode_strings_scan_py", refuse)
+    monkeypatch.setattr(codec, "_skip_scan_py", refuse)
     assert cityhash128(_golden_input(4173)) == CITYHASH128_GOLDEN[4173]
+
+    calls = []
+    for name in ("strings_decode", "strings_skip"):
+        def spy(*a, _f=getattr(k, name), _name=name, **kw):
+            calls.append(_name)
+            return _f(*a, **kw)
+        monkeypatch.setattr(k, name, spy)
+    t = parse_type("String")
+    vals = ["", "a" * 127, "b" * 128, "c" * 16384] * 50
+    col = io.BytesIO()
+    codec.encode_column(col, t, pa.array(vals))
+    raw = col.getvalue()
+    assert codec.decode_column(io.BytesIO(raw), t, len(vals)).to_pylist() == vals
+    assert calls.count("strings_decode") >= 2  # offsets, then payload
+    calls.clear()
+    codec.skip_column(io.BytesIO(raw), t, len(vals))
+    assert calls and set(calls) == {"strings_skip"}
+    calls.clear()
+    lens = np.array([len(v) for v in vals], dtype=np.int64)
+    got = codec._decode_strings_from_lengths(io.BytesIO(raw), len(vals), lens, scrub=False)
+    assert got.to_pylist() == vals
+    assert calls == ["strings_decode"]
 
 
 @needs_cc
 def test_compiled_matches_python():
-    assert compress._kernel() is not None
+    assert kernels.load() is not None
     rng = random.Random(15)
     for n in range(601):
         data = rng.randbytes(n)
@@ -136,7 +169,7 @@ def test_compiled_matches_python():
 @pytest.mark.parametrize("fault", ["missing_compiler", "unwritable_cache"])
 def test_failed_build_falls_back_to_python(kernel_cache, monkeypatch, tmp_path, fault):
     if fault == "missing_compiler":
-        monkeypatch.setattr(compress, "_CC", str(tmp_path / "no-such-cc"))
+        monkeypatch.setattr(kernels, "_CC", str(tmp_path / "no-such-cc"))
     else:  # neither the cache home nor the temp dir can hold a directory
         blocker = tmp_path / "a-file"
         blocker.write_bytes(b"")
@@ -144,7 +177,7 @@ def test_failed_build_falls_back_to_python(kernel_cache, monkeypatch, tmp_path, 
         monkeypatch.setattr(tempfile, "tempdir", str(blocker))
     for n, want in CITYHASH128_GOLDEN.items():
         assert cityhash128(_golden_input(n)) == want
-    assert compress._kernel() is None
+    assert kernels.load() is None
     if fault == "missing_compiler":
         assert os.listdir(kernel_cache) == []  # the build's temp file is gone
 
@@ -158,7 +191,7 @@ def test_shared_cache_dir_falls_back_to_user_temp_dir(
     kernel_cache.mkdir(parents=True)
     kernel_cache.chmod(0o755)
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    assert compress._kernel() is not None
+    assert kernels.load() is not None
     assert os.listdir(kernel_cache) == []
     user_dir = tmp_path / f"duckdb_extension_clickhouse_native_spark-{os.getuid()}"
     assert len(os.listdir(user_dir)) == 1
@@ -166,20 +199,32 @@ def test_shared_cache_dir_falls_back_to_user_temp_dir(
 
 
 @needs_cc
-@pytest.mark.parametrize("corruption", ["not_a_library", "wrong_hash"])
+@pytest.mark.parametrize(
+    "corruption", ["not_a_library", "wrong_hash", "wrong_string_skip"]
+)
 def test_corrupt_cached_library_is_rejected(kernel_cache, tmp_path, corruption):
-    assert compress._kernel() is not None
+    assert kernels.load() is not None
     (name,) = os.listdir(kernel_cache)
     path = kernel_cache / name
     bad = tmp_path / "bad.so"
     if corruption == "not_a_library":
         bad.write_bytes(b"not a shared object")
-    else:  # loads fine, exports the symbol, hashes wrong
+    else:  # loads fine, exports every symbol, one of them is wrong
+        entry = {"wrong_hash": "cityhash128", "wrong_string_skip": "ch_strings_skip"}[
+            corruption
+        ]
+        wrong = {
+            "cityhash128": "void cityhash128(const unsigned char *s, size_t n,"
+            " uint64_t out[2]) { (void)s; out[0] = n; out[1] = 0; }",
+            "ch_strings_skip": "int64_t ch_strings_skip(const unsigned char *s,"
+            " size_t n, int64_t rows, size_t *used)"
+            " { (void)s; (void)rows; *used = n; return 0; }",
+        }[entry]
         src = tmp_path / "bad.c"
         src.write_text(
-            "#include <stddef.h>\n#include <stdint.h>\n"
-            "void cityhash128(const unsigned char *s, size_t n, uint64_t out[2])"
-            " { out[0] = n; out[1] = 0; }\n"
+            f"#define {entry} {entry}_good\n"
+            f'#include "{KERNEL_SRC}"\n'
+            f"#undef {entry}\n{wrong}\n"
         )
         subprocess.run(
             ["cc", "-O2", "-shared", "-fPIC", "-o", str(bad), str(src)],
@@ -188,8 +233,8 @@ def test_corrupt_cached_library_is_rejected(kernel_cache, tmp_path, corruption):
     bad_bytes = bad.read_bytes()
     # a new inode: this process still has the good library mapped
     os.replace(bad, path)
-    compress._kernel.cache_clear()
-    assert compress._kernel() is not None  # rejected, then rebuilt
+    kernels.load.cache_clear()
+    assert kernels.load() is not None  # rejected, then rebuilt
     for n, want in CITYHASH128_GOLDEN.items():
         assert cityhash128(_golden_input(n)) == want
     assert os.listdir(kernel_cache) == [name]
@@ -198,11 +243,11 @@ def test_corrupt_cached_library_is_rejected(kernel_cache, tmp_path, corruption):
 
 _BUILDER = """
 import os, sys, time
-from duckdb_extension_clickhouse_native_spark.native import compress
+from duckdb_extension_clickhouse_native_spark.native import compress, kernels
 print("ready", flush=True)
 while not os.path.exists(sys.argv[1]):
     time.sleep(0.005)
-assert compress._kernel() is not None
+assert kernels.load() is not None
 print(compress.cityhash128(bytes(range(256)) * 4096))
 """
 

@@ -8,11 +8,15 @@ The scan headline (10M rows / 32 files, ~20 M rows/s) is the number
 the 100 TB story rests on; this probe names the next 2x if one exists.
 
 Run: python tools/decode_profile.py   (appends a section to SCALE.md
-when run with --write; prints to stdout otherwise)
+when run with --write; prints to stdout otherwise).
+``python tools/decode_profile.py --marks`` prints only the marks-sidecar
+decision table: compiled vs pure-Python String walks on a marked and a
+mark-less copy of the layerbench ``native_files`` scan table.
 """
 
 from __future__ import annotations
 
+import contextlib
 import io
 import os
 import sys
@@ -71,16 +75,121 @@ def profile_file(path: str, label: str) -> list[str]:
     return lines
 
 
+@contextlib.contextmanager
+def _fallback():
+    """Run the pure-Python String walks (as on a host without ``cc``)."""
+    from duckdb_extension_clickhouse_native_spark.native import kernels
+
+    load = kernels.load
+    kernels.load = lambda: None
+    try:
+        yield
+    finally:
+        kernels.load = load
+
+
+def marks_decision(base: str, rows: int = 100_000) -> list[str]:
+    """Do the ``.marks`` sidecars still pay? One part of the layerbench
+    ``native_files`` scan table (seed 1; Int64, Int32, Float64 and three
+    String columns, one Nullable), written with its marks and copied
+    without them, read by ``iter_blocks`` with the compiled String walk
+    and with the pure-Python fallback: every column decoded, and only
+    ``id`` decoded (the String columns skipped: a seek per column with
+    marks, a prefix walk without). The writer's cost is the same write
+    with the marks recorder switched off."""
+    import shutil
+
+    from duckdb_extension_clickhouse_native_spark.native import kernels
+    from duckdb_extension_clickhouse_native_spark.native.codec import iter_blocks
+    from duckdb_extension_clickhouse_native_spark.native.marks import (
+        MarksReader,
+        MarksRecorder,
+        marks_sidecar_path,
+    )
+    from duckdb_extension_clickhouse_native_spark.native.writer import (
+        write_native_file,
+    )
+    from layerbench import datagen
+
+    table = datagen.scan_table(1, rows)
+    marked = os.path.join(base, "scan_marked.clickhouse")
+    bare = os.path.join(base, "scan_markless.clickhouse")
+    t_w1, _ = _time(lambda: write_native_file(marked, table), reps=3)
+    shutil.copyfile(marked, bare)
+    assert MarksReader.open(bare) is None
+    on_block, write = MarksRecorder.on_block, MarksRecorder.write
+    MarksRecorder.on_block = lambda self, offset, piece: None
+    MarksRecorder.write = lambda self, path: None
+    try:
+        scratch = os.path.join(base, "scan_nomarks_write.clickhouse")
+        t_w0, _ = _time(lambda: write_native_file(scratch, table), reps=3)
+    finally:
+        MarksRecorder.on_block, MarksRecorder.write = on_block, write
+    size = os.path.getsize(marked)
+    side = os.path.getsize(marks_sidecar_path(marked))
+
+    def scan(path, columns=None):
+        marks = MarksReader.open(path)
+        with open(path, "rb") as f:
+            return sum(
+                b.n_rows for b in iter_blocks(f, columns=columns, marks_reader=marks)
+            )
+
+    t = {}
+    for impl in ("kernel", "python"):
+        if impl == "kernel" and kernels.load() is None:
+            continue
+        with contextlib.ExitStack() as stack:
+            if impl == "python":
+                stack.enter_context(_fallback())
+            for label, path in (("marked", marked), ("mark-less", bare)):
+                for op, cols in (("decode", None), ("skip", {"id"})):
+                    t[impl, label, op], n = _time(lambda: scan(path, cols))
+                    assert n == rows
+    lines = [
+        "",
+        f"### Marks sidecar decision ({rows:,} rows of the native_files scan "
+        f"table, {size / 1e6:.1f} MB, marks {side / 1e3:.0f} kB)",
+        "",
+        "| walk | marked decode | mark-less decode | marked skip | mark-less skip |",
+        "|---|---|---|---|---|",
+    ]
+    for impl in ("kernel", "python"):
+        if (impl, "marked", "decode") in t:
+            lines.append(
+                f"| {impl} | "
+                + " | ".join(
+                    f"{t[impl, label, op] * 1e3:.1f} ms"
+                    for op in ("decode", "skip")
+                    for label in ("marked", "mark-less")
+                )
+                + " |"
+            )
+    if ("kernel", "marked", "decode") in t:
+        lines.append(
+            f"- mark-less decode, kernel vs fallback: "
+            f"{t['python', 'mark-less', 'decode'] / t['kernel', 'mark-less', 'decode']:.1f}x"
+        )
+    lines.append(
+        f"- writer: {t_w1 * 1e3:.1f} ms with marks, {t_w0 * 1e3:.1f} ms without "
+        f"(+{(t_w1 / t_w0 - 1) * 100:.0f}%), sidecar {side / size * 100:.1f}% of the part"
+    )
+    return lines
+
+
 def main() -> None:
     import numpy as np
     import pyarrow as pa
 
+    base = os.path.join(tempfile.gettempdir(), "chsql_decode_profile")
+    os.makedirs(base, exist_ok=True)
+    if "--marks" in sys.argv:
+        print("\n".join(marks_decision(base)))
+        return
+
     from duckdb_extension_clickhouse_native_spark.native.writer import (
         write_native_file,
     )
-
-    base = os.path.join(tempfile.gettempdir(), "chsql_decode_profile")
-    os.makedirs(base, exist_ok=True)
 
     n = 1_000_000
     p_num = os.path.join(base, "numbers.clickhouse")
@@ -255,6 +364,7 @@ def main() -> None:
         f"vectorized {t_encl * 1e3:.1f} ms / {n_long:,} values "
         f"({n_long / t_encl / 1e6:.1f} M rows/s)"
     )
+    out += marks_decision(base)
     text = "\n".join(out) + "\n"
     print(text)
     if "--write" in sys.argv:
