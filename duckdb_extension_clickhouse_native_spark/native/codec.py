@@ -35,6 +35,7 @@ import pyarrow as pa
 
 from . import kernels
 from .compress import PushbackReader
+from .marks import MARKED_TYPES, MarksReader
 from .types import (
     BIG_INT_WIDTH,
     CHType,
@@ -250,7 +251,9 @@ def _note_resident(n: int) -> None:
         _SCAN_STATS["peak_buffer"] = n
 
 
-def _decode_strings_seekable(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Array:
+def _decode_strings_seekable(
+    buf: BinaryIO, rows: int, *, scrub: bool, first: Optional[int] = None
+) -> pa.Array:
     """Fast path for seekable/pushback sources: bulk-read, walk the
     buffered window with the compiled kernel (``kernels.c``
     ``ch_strings_decode``), return the surplus to the stream. The walk
@@ -265,11 +268,11 @@ def _decode_strings_seekable(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Arr
     answers."""
     k = kernels.load()
     if k is None:
-        return _decode_strings_scan_py(buf, rows, scrub=scrub)
+        return _decode_strings_scan_py(buf, rows, scrub=scrub, first=first)
     offsets = np.empty(rows + 1, dtype=np.int64)
     offsets[0] = 0
     pieces = []
-    chunk = _SCAN_FIRST
+    chunk = first or _SCAN_FIRST
     data = _refill(buf, chunk)
     _note_resident(len(data))
     pos = 0  # bytes of data walked
@@ -305,7 +308,9 @@ def _decode_strings_seekable(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Arr
     return _string_array(offsets, payload, rows, scrub)
 
 
-def _decode_strings_scan_py(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Array:
+def _decode_strings_scan_py(
+    buf: BinaryIO, rows: int, *, scrub: bool, first: Optional[int] = None
+) -> pa.Array:
     """``_decode_strings_seekable`` in pure Python (no compiled kernel):
     scan length prefixes in a tight integer loop (no per-row I/O or
     slicing), then extract payload spans with numpy masked copies.
@@ -315,7 +320,7 @@ def _decode_strings_scan_py(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Arra
     consumed bytes (the masked payload copy moves into one amortized
     accumulator), so peak memory is ~payload + window regardless of
     the block's string-column size."""
-    chunk = _SCAN_FIRST
+    chunk = first or _SCAN_FIRST
     # bytearray: refills grow in place (amortized), instead of
     # re-copying the whole accumulated column per refill
     data = bytearray(_refill(buf, chunk))
@@ -438,14 +443,17 @@ def _decode_strings_scan_py(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Arra
     return _string_array(offsets, memoryview(payload), rows, scrub)
 
 
-def _decode_strings(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Array:
+def _decode_strings(
+    buf: BinaryIO, rows: int, *, scrub: bool, first: Optional[int] = None
+) -> pa.Array:
     """Decode ``rows`` varuint-length-prefixed strings into an Arrow
     string array via one contiguous data buffer + offsets (no per-row
-    Python string objects)."""
+    Python string objects). ``first`` sizes the chunk scan's first
+    read (a caller that knows the column's size reads it at once)."""
     if rows == 0:
         return pa.array([], type=pa.string())
     if _supports_chunk_scan(buf):
-        return _decode_strings_seekable(buf, rows, scrub=scrub)
+        return _decode_strings_seekable(buf, rows, scrub=scrub, first=first)
     offsets = np.empty(rows + 1, dtype=np.int64)
     offsets[0] = 0
     chunks: list[bytes] = []
@@ -461,143 +469,67 @@ def _decode_strings(buf: BinaryIO, rows: int, *, scrub: bool) -> pa.Array:
     return _string_array(offsets, b"".join(chunks), rows, scrub)
 
 
-def _decode_strings_from_lengths(
-    buf: BinaryIO, rows: int, lengths: np.ndarray, *, scrub: bool
-) -> Optional[pa.Array]:
-    """Marks-sidecar fast path: with per-row value byte lengths known
-    up front (native/marks.py — the ClickHouse ``.mrk`` analogue), the
-    marked byte total is read in one call. The compiled kernel then
-    walks those bytes into an exactly sized payload and its lengths are
-    compared with the marks; without the kernel, prefix positions are a
-    cumsum, the payload extraction one masked copy, and EVERY prefix
-    byte is verified against the reconstruction (vectorized for the
-    common 1-byte prefixes). On any mismatch (stale sidecar) the
-    consumed bytes are pushed back and None returned so the caller
-    falls back to the streaming scan decode. Only called on
-    seekable/pushback sources."""
-    if rows == 0:
-        return pa.array([], type=pa.string())
-    lens = lengths.astype(np.int64)
-    widths = varint_widths(lens)
-    starts = np.empty(rows + 1, dtype=np.int64)
-    starts[0] = 0
-    np.cumsum(widths + lens, out=starts[1:])
-    total = int(starts[-1])
-    # tolerant read: a stale sidecar whose claimed total overruns the
-    # remaining stream must degrade to the streaming decode (the "stale
-    # marks are only a missed fast path" contract), not raise EOFError
-    parts = []
-    got = 0
-    while got < total:
-        chunk = buf.read(total - got)
-        if not chunk:
-            break
-        parts.append(chunk)
-        got += len(chunk)
-    data = parts[0] if len(parts) == 1 else b"".join(parts)
-    if got != total:
-        _restore_surplus(buf, data)
+def marks_col_info(marks, name: str, type_str: str, n_rows: int) -> Optional[int]:
+    """The recorded byte span of a column, IF the block's marks (a
+    ``MarksReader.block_at`` entry) hold one for this row count under
+    the block's own type string. A mismatch means a stale sidecar:
+    None, so the caller walks the column."""
+    if marks is None or type_str not in MARKED_TYPES or marks[0] != n_rows:
         return None
-    offsets = np.empty(rows + 1, dtype=np.int64)
-    offsets[0] = 0
-    k = kernels.load()
-    if k is not None:
-        payload = np.empty(int(lens.sum()), dtype=np.uint8)
-        n, used = k.strings_decode(data, 0, total, rows, offsets, 0, payload)
-        if n != rows or used != total or not np.array_equal(
-            np.diff(offsets), lens
-        ):
-            _restore_surplus(buf, data)
-            return None
-        return _string_array(offsets, payload, rows, scrub)
-    view = np.frombuffer(data, dtype=np.uint8)
-    prefix_at = starts[:-1]
-    one = widths == 1
-    ok = bool(
-        np.array_equal(view[prefix_at[one]], lens[one].astype(np.uint8))
-    )
-    # the 2-byte prefix case (values 128..16383 bytes — most real text
-    # corpora) verifies vectorized like the 1-byte case; only 3+ byte
-    # prefixes (values >= 16 KiB) walk per row
-    two = np.zeros(0, dtype=np.int64)
-    rest = ()
-    if not one.all():
-        is_two = widths == 2
-        two = prefix_at[is_two]
-        if ok and two.size:
-            l2 = lens[is_two]
-            ok = bool(
-                np.array_equal(
-                    view[two], ((l2 & 0x7F) | 0x80).astype(np.uint8)
-                )
-                and np.array_equal(view[two + 1], (l2 >> 7).astype(np.uint8))
-            )
-        rest = np.nonzero(widths > 2)[0]
-    if ok:
-        for i in rest:
-            s = int(prefix_at[i])
-            v = int(lens[i])
-            w = int(widths[i])
-            for k in range(w):
-                byte = v & 0x7F
-                v >>= 7
-                if k < w - 1:
-                    byte |= 0x80
-                if view[s + k] != byte:
-                    ok = False
-                    break
-            if not ok:
-                break
-    if not ok:
-        _restore_surplus(buf, data)
-        return None
-    mask = np.ones(total, dtype=bool)
-    mask[prefix_at[one]] = False
-    if two.size:
-        mask[two] = False
-        mask[two + 1] = False
-    for i in rest:
-        s = int(prefix_at[i])
-        mask[s : s + int(widths[i])] = False
-    np.cumsum(lens, out=offsets[1:])
-    return _string_array(offsets, view[mask], rows, scrub)
-
-
-def marks_col_info(marks, name: str, type_str: str, n_rows: int):
-    """The marks entry for a column IF its recorded wire shape matches
-    the block's declared type — plain ``String`` entries only for plain
-    String, ``Nullable(String)`` (flagged ``n``) entries only for the
-    nullable wire. Mismatch means a stale sidecar: return None so the
-    caller streams."""
-    if marks is None or type_str not in ("String", "Nullable(String)"):
-        return None
-    info = marks.col(name, n_rows)
-    if info is None or info[2] != (type_str != "String"):
-        return None
-    return info
+    rec = marks[1].get(name)
+    return rec[1] if rec is not None and rec[0] == type_str else None
 
 
 def _decode_marked_strings(
-    buf: BinaryIO, rows: int, info, *, scrub: bool
+    buf: BinaryIO, t: CHType, rows: int, span: int, *, scrub: bool
 ) -> Optional[pa.Array]:
-    """Decode one marks-covered String / Nullable(String) column;
-    None on stale marks (every consumed byte restored)."""
-    _wire, lens, nullable = info
-    if not nullable:
-        return _decode_strings_from_lengths(buf, rows, lens, scrub=scrub)
-    mask_raw = buf.read(rows)
-    if len(mask_raw) != rows:
-        _restore_surplus(buf, mask_raw)
+    """Decode one marked String / Nullable(String) column: one exact
+    read of its recorded ``span``, the null mask first on the Nullable
+    wire, then the String walk (compiled or pure Python) over the rest
+    as one window. None on stale marks — a span the walk does not end
+    exactly at — with every byte read restored."""
+    data = buf.read(span)
+    src = io.BytesIO(data)
+    arr = is_null = None
+    if len(data) == span:
+        try:
+            if t.nullable:
+                is_null = np.frombuffer(src.read(rows), dtype=np.uint8) != 0
+            arr = _decode_strings(src, rows, scrub=scrub, first=span - src.tell())
+        except (EOFError, ValueError):
+            pass
+    if arr is None or src.tell() != span:
+        _restore_surplus(buf, data)
         return None
-    arr = _decode_strings_from_lengths(buf, rows, lens, scrub=scrub)
-    if arr is None:
-        _restore_surplus(buf, mask_raw)
-        return None
-    mask = np.frombuffer(mask_raw, dtype=np.uint8).astype(bool)  # 1 = NULL
-    if mask.any():
-        valid = pa.array(~mask)
-        arr = pa.compute.if_else(valid, arr, pa.scalar(None, arr.type))
-    return arr
+    return arr if is_null is None else _with_nulls(arr, is_null)
+
+
+_FLAT_TYPES = (
+    pa.types.is_primitive,
+    pa.types.is_decimal,
+    pa.types.is_fixed_size_binary,
+    pa.types.is_string,
+    pa.types.is_large_string,
+    pa.types.is_binary,
+    pa.types.is_large_binary,
+)
+
+
+def _with_nulls(values: pa.Array, is_null: np.ndarray) -> pa.Array:
+    """``values`` with the rows flagged in ``is_null`` made NULL. A
+    flat, null-free array (fixed-width, String, Binary) takes the mask
+    as its validity bitmap over its own buffers, with no copy; nested
+    types go through ``if_else``."""
+    if not is_null.any():
+        return values
+    valid = pa.array(~is_null)
+    t = values.type
+    if values.offset == 0 and values.null_count == 0 and any(f(t) for f in _FLAT_TYPES):
+        return pa.Array.from_buffers(
+            t, len(values), [valid.buffers()[1], *values.buffers()[1:]],
+            null_count=int(is_null.sum()),
+        )
+    return pa.compute.if_else(valid, values, pa.scalar(None, t))
 
 
 def _decode_fixed(buf: BinaryIO, t: CHType, rows: int, *, lossy_uint64: bool) -> pa.Array:
@@ -904,10 +836,7 @@ def decode_column(
         values = decode_column(
             buf, inner, rows, scrub_strings=scrub_strings, lossy_uint64=lossy_uint64
         )
-        if mask.any():
-            valid = pa.array(~mask)
-            values = pa.compute.if_else(valid, values, pa.scalar(None, values.type))
-        return values
+        return _with_nulls(values, mask)
     if b == "String":
         return _decode_strings(buf, rows, scrub=scrub_strings)
     if b == "FixedString":
@@ -1215,8 +1144,7 @@ def _decode_low_cardinality(
     values = dictionary.take(pa.array(idx))
     if inner.nullable:
         # index 0 is the default-value placeholder meaning NULL
-        valid = pa.array(idx != 0)
-        values = pa.compute.if_else(valid, values, pa.scalar(None, values.type))
+        values = _with_nulls(values, idx == 0)
     return values
 
 
@@ -1431,11 +1359,11 @@ def read_block(
 
     ``columns`` projects: payloads of unrequested columns are skipped,
     not decoded, so ``columns=set()`` is the header-only walk (schema
-    probes, block offsets). ``marks`` (a ``native.marks.BlockMarks``
-    for THIS block, or None) short-cuts plain String columns: unwanted
-    columns seek past their recorded wire size instead of walking
-    prefixes, wanted ones decode via the vectorized length path
-    (verified, with streaming fallback).
+    probes, block offsets). ``marks`` (``MarksReader.block_at`` for
+    THIS block, or None) short-cuts String and Nullable(String)
+    columns: unwanted ones seek past their recorded span instead of
+    walking prefixes, wanted ones decode from one exact read of it
+    (``_decode_marked_strings``, with the stream decode as fallback).
 
     ``prewhere`` is ``(names, survives)``: the predicate's columns,
     decoded even when ``columns`` leaves them out, and a test of
@@ -1467,16 +1395,16 @@ def read_block(
         wanted = not blk.dead and (
             columns is None or name in columns or name in pending
         )
-        info = marks_col_info(marks, name, type_str, n_rows)
+        span = marks_col_info(marks, name, type_str, n_rows)
         if not wanted:
-            if info is not None:
-                buf.seek(info[0], io.SEEK_CUR)
+            if span is not None:
+                buf.seek(span, io.SEEK_CUR)
             else:
                 skip_column(buf, t, n_rows)
             continue
         arr = None
-        if info is not None:
-            arr = _decode_marked_strings(buf, n_rows, info, scrub=scrub_strings)
+        if span is not None:
+            arr = _decode_marked_strings(buf, t, n_rows, span, scrub=scrub_strings)
             # None: stale sidecar, bytes were restored; stream decode below
         if arr is None:
             arr = decode_column(
@@ -1552,8 +1480,6 @@ def read_file_schema(
         buf = maybe_compressed_reader(f, compression=compression)
         marks = None
         if buf is f:
-            from .marks import MarksReader
-
             mr = MarksReader.open(path)
             marks = mr.block_at(0) if mr is not None else None
         blk = read_block(
@@ -2055,13 +1981,24 @@ def _promote_nullable(t: CHType, arr: pa.Array) -> CHType:
     return CHType(**{**t.__dict__, "nullable": t.nullable or arr.null_count > 0})
 
 
-def write_block(buf: BinaryIO, batch: pa.RecordBatch, ch_types: list[CHType]) -> None:
+def write_block(
+    buf: BinaryIO, batch: pa.RecordBatch, ch_types: list[CHType]
+) -> Optional[list[tuple[str, str, int]]]:
     """Write one Native block. The declared type string always matches
     the payload: null-bearing columns are promoted to ``Nullable(T)``
     recursively (``_promote_nullable``) — or, for LowCardinality, to
-    ``LowCardinality(Nullable(T))`` since Nullable may not wrap LC."""
+    ``LowCardinality(Nullable(T))`` since Nullable may not wrap LC.
+
+    On a sink with ``tell()`` it returns what it wrote: (name, type
+    string, payload bytes) per column, the marks of ``native/marks.py``.
+    On one without (compressed frames) it returns None."""
     write_varuint(buf, batch.num_columns)
     write_varuint(buf, batch.num_rows)
+    try:
+        buf.tell()
+        written = []
+    except (AttributeError, OSError):
+        written = None
     for i in range(batch.num_columns):
         t = ch_types[i]
         col = batch.column(i)
@@ -2075,4 +2012,8 @@ def write_block(buf: BinaryIO, batch: pa.RecordBatch, ch_types: list[CHType]) ->
             name = _nn(eff)
         write_str(buf, batch.schema.names[i])
         write_str(buf, name)
+        start = None if written is None else buf.tell()
         encode_column(buf, eff, col)
+        if written is not None:
+            written.append((batch.schema.names[i], name, buf.tell() - start))
+    return written

@@ -10,8 +10,8 @@ None for the rest of the process and the callers run their pure-Python
 code instead:
 
 * ``compress.cityhash128`` — the compressed-frame checksum;
-* ``codec._decode_strings_seekable`` / ``_skip_strings_seekable`` /
-  ``_decode_strings_from_lengths`` — the String column walks.
+* ``codec._decode_strings_seekable`` / ``_skip_strings_seekable`` —
+  the String column walks.
 """
 
 from __future__ import annotations

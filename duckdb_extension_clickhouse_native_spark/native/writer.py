@@ -72,39 +72,44 @@ def write_native_stream(
     0-row block (as ClickHouse itself does for empty results) so
     readers can recover the schema.
 
-    ``on_block(offset, piece)`` is invoked with ``buf.tell()`` before
-    each data block — callers use it to build the per-block stats
-    index (only meaningful on uncompressed, tell()-able sinks).
+    ``on_block(offset, piece, written)`` is invoked after each data
+    block with the block's starting ``buf.tell()`` and
+    ``codec.write_block``'s report of its columns — callers use it to
+    build the per-block stats index and the marks (only meaningful on
+    uncompressed, tell()-able sinks).
     """
     total = 0
     wrote_any = False
     types: Optional[list[CHType]] = ch_types
+
+    def put(piece: pa.RecordBatch) -> None:
+        if on_block is None:
+            write_block(buf, piece, types)
+            return
+        offset = buf.tell()
+        on_block(offset, piece, write_block(buf, piece, types))
+
     for batch in batches:
         if types is None:
             types = _ch_types_for_schema(batch.schema)
         if batch.num_rows == 0 and not wrote_any:
-            if on_block is not None:
-                on_block(buf.tell(), batch)
-            write_block(buf, batch, types)
+            put(batch)
             wrote_any = True
             continue
         start = 0
         while start < batch.num_rows:
             piece = batch.slice(start, block_rows)
-            if on_block is not None:
-                on_block(buf.tell(), piece)
-            write_block(buf, piece, types)
+            put(piece)
             start += piece.num_rows
             total += piece.num_rows
             wrote_any = True
     if not wrote_any and schema is not None:
         types = types or _ch_types_for_schema(schema)
-        empty = pa.RecordBatch.from_arrays(
-            [pa.array([], type=f.type) for f in schema], schema=schema
+        put(
+            pa.RecordBatch.from_arrays(
+                [pa.array([], type=f.type) for f in schema], schema=schema
+            )
         )
-        if on_block is not None:
-            on_block(buf.tell(), empty)
-        write_block(buf, empty, types)
     return total
 
 
@@ -499,7 +504,6 @@ class NativePartSink:
 
                 self._buf = CompressedWriter(self._raw, method=self.compression)
             self._ch_types = _ch_types_for_schema(batch.schema, self._ch_types)
-            self._mrec.set_ch_types(batch.schema.names, self._ch_types)
         elif batch.num_rows == 0:
             return
         plain = self._buf is self._raw
@@ -514,9 +518,9 @@ class NativePartSink:
             self._rec.on_block(-1, batch)
             self._rec.blocks.clear()
 
-    def _on_block(self, offset: int, piece: pa.RecordBatch) -> None:
+    def _on_block(self, offset: int, piece: pa.RecordBatch, written) -> None:
         self._rec.on_block(offset, piece)
-        self._mrec.on_block(offset, piece)
+        self._mrec.on_block(offset, piece.num_rows, written)
 
     def finish(self, empty_schema: Optional[pa.Schema] = None) -> Optional[str]:
         """Flush the part and write its sidecars; returns the path. A
@@ -540,9 +544,9 @@ class NativePartSink:
         with open(tmp, "w") as sf:
             sf.write(side)
         os.replace(tmp, stats_sidecar_path(self.path))
-        # string-column marks (native/marks.py): the per-row lengths the
-        # writer just serialized, so readers skip the varint walk. When
-        # nothing was recorded (compression, no eligible column) any
+        # String column marks (native/marks.py): the spans the encoder
+        # just reported, so readers skip the varint walk. When
+        # nothing was recorded (compression, no String column) any
         # PRE-EXISTING marks from an earlier write of the same path
         # must go — stale-but-size-matching marks would pass the
         # file_bytes guard and misdirect the unwanted-column seeks.

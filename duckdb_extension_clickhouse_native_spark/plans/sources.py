@@ -20,6 +20,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..native.marks import MAGIC as MARKS_MAGIC
 from ..sources.native_datasource import read_native
 from .base import REGISTRY, assert_planned_partitions, load_tables
 
@@ -52,7 +53,9 @@ def _write_parts(out_dir: str, table, ch_types, n_files: int = 16, **kw) -> None
 def _materialize_fixture(sf_dir: str, table: str, key: str, write_fn) -> str:
     """Shared fixture scaffold: cache dir keyed on the FULL source path
     plus the parquet's (mtime, size) content stamp — a regenerated or
-    differently-located dataset never reuses stale Native files.
+    differently-located dataset never reuses stale Native files — and
+    the marks sidecar's format, so a format change never leaves cached
+    parts with sidecars the reader refuses.
     ``write_fn(out_dir, arrow_table)`` does the actual writing; a
     ``_DONE`` marker makes the materialization appear atomic."""
     import hashlib
@@ -61,7 +64,7 @@ def _materialize_fixture(sf_dir: str, table: str, key: str, write_fn) -> str:
 
     src = os.path.abspath(f"{sf_dir}/{table}.parquet")
     st = os.stat(src)
-    stamp = f"{int(st.st_mtime)}-{st.st_size}"
+    stamp = f"{int(st.st_mtime)}-{st.st_size}-{MARKS_MAGIC.decode().strip()}"
     tag = hashlib.md5(src.encode()).hexdigest()[:10]
     out_dir = os.path.join(
         tempfile.gettempdir(), "chsql_native_fixtures", tag, f"{key}-{stamp}"

@@ -13,6 +13,21 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
 
 
+@pytest.fixture(params=["kernel", "python"])
+def impl(request, monkeypatch):
+    """Runs a test once with the compiled String walks and once with the
+    pure-Python fallback; the kernel half is skipped on a host without
+    a C compiler."""
+    from duckdb_extension_clickhouse_native_spark.native import kernels
+
+    if request.param == "kernel":
+        if kernels.load() is None:
+            pytest.skip("no compiled kernels on this host")
+    else:
+        monkeypatch.setattr(kernels, "load", lambda: None)
+    return request.param
+
+
 @pytest.fixture(scope="session")
 def spark():
     from duckdb_extension_clickhouse_native_spark import get_spark

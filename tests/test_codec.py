@@ -5,6 +5,7 @@ from __future__ import annotations
 import io
 import os
 
+import numpy as np
 import pyarrow as pa
 import pytest
 
@@ -22,6 +23,7 @@ from duckdb_extension_clickhouse_native_spark.native import (
     write_str,
     write_varuint,
 )
+from duckdb_extension_clickhouse_native_spark.native.codec import _with_nulls
 
 REF_FIXTURE = "/root/reference/numbers.clickhouse"
 
@@ -282,3 +284,41 @@ def test_uuid_vectorized_decode_identity():
         )
     got = decode_column(_io.BytesIO(raw), parse_type("UUID"), rows).to_pylist()
     assert got == expected
+
+
+@pytest.mark.parametrize(
+    "values",
+    [
+        pa.array(["a", "", "ccc", "dd"] * 3, pa.string()),
+        pa.array([b"\x00", b"", b"zz", b"q"] * 3, pa.binary()),
+        pa.array(range(12), pa.int64()),
+        pa.array([0.5 * i for i in range(12)], pa.float64()),
+        pa.array([i % 2 == 0 for i in range(12)]),
+        pa.array([i * 1000 for i in range(12)], pa.timestamp("us")),
+    ],
+    ids=["string", "binary", "int64", "float64", "bool", "timestamp"],
+)
+def test_null_mask_becomes_the_validity_bitmap(values):
+    """A flat array takes a Nullable column's null mask as its validity
+    bitmap: the same array ``if_else`` builds, with the values buffer
+    shared instead of copied."""
+    is_null = np.array([i % 3 == 0 for i in range(len(values))])
+    got = _with_nulls(values, is_null)
+    want = pa.compute.if_else(
+        pa.array(~is_null), values, pa.scalar(None, values.type)
+    )
+    assert got.equals(want) and got.null_count == int(is_null.sum()) == 4
+    assert got.buffers()[-1].address == values.buffers()[-1].address
+    assert _with_nulls(values, np.zeros(len(values), dtype=bool)) is values
+
+
+def test_null_mask_on_nested_and_sliced_arrays():
+    is_null = np.array([True, False, False, True])
+    for values in (
+        pa.array([[1], [], [2, 3], [4]]),
+        pa.array(["w", "x", "y", "z", "v"]).slice(1),
+    ):
+        got = _with_nulls(values, is_null)
+        assert got.to_pylist() == [
+            None if n else v for n, v in zip(is_null, values.to_pylist())
+        ]

@@ -16,7 +16,6 @@ import subprocess
 import sys
 import tempfile
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -146,10 +145,10 @@ def test_compiled_kernel_is_in_use(monkeypatch):
     codec.skip_column(io.BytesIO(raw), t, len(vals))
     assert calls and set(calls) == {"strings_skip"}
     calls.clear()
-    lens = np.array([len(v) for v in vals], dtype=np.int64)
-    got = codec._decode_strings_from_lengths(io.BytesIO(raw), len(vals), lens, scrub=False)
+    got = codec._decode_marked_strings(io.BytesIO(raw), t, len(vals), len(raw), scrub=False)
     assert got.to_pylist() == vals
-    assert calls == ["strings_decode"]
+    # the marked span is one window: offsets, then payload
+    assert calls == ["strings_decode", "strings_decode"]
 
 
 @needs_cc

@@ -1,27 +1,34 @@
 """String-marks sidecar (native/marks.py, the ClickHouse .mrk
 analogue) and the vectorized string wire encoder: byte-identity with
 the row-loop paths on hostile boundary lengths, decode/skip identity
-with and without marks, and the staleness guards (file-size check,
-rows check, per-prefix verification with streaming fallback)."""
+with and without marks, and the staleness guards (sidecar version and
+file-size checks, the recorded type string, and a span the String walk
+must end exactly at, with the stream decode as fallback)."""
 
 from __future__ import annotations
 
 import io
+import json
 import os
+import struct
 
 import numpy as np
 import pyarrow as pa
 import pytest
 
+from duckdb_extension_clickhouse_native_spark.native import codec, kernels
 from duckdb_extension_clickhouse_native_spark.native.codec import (
-    _decode_strings_from_lengths,
     _strings_wire_bytes,
     iter_blocks,
+    marks_col_info,
     read_file_schema,
     varint_widths,
+    write_block,
     write_str,
 )
+from duckdb_extension_clickhouse_native_spark.native.compress import CompressedWriter
 from duckdb_extension_clickhouse_native_spark.native.marks import (
+    MAGIC,
     MarksReader,
     MarksRecorder,
     marks_sidecar_path,
@@ -107,16 +114,57 @@ def _decode_all(p, marks=None, columns=None):
         ]
 
 
-def test_marks_written_and_decode_identity(tmp_path):
+def _rewrite_marks(p, edit) -> None:
+    """Rewrite the part's sidecar header in place through ``edit``
+    (file_bytes kept, so only the later guards can catch it)."""
+    path = marks_sidecar_path(p)
+    header = json.loads(open(path, "rb").read()[len(MAGIC):])
+    edit(header["blocks"])
+    with open(path, "wb") as f:
+        f.write(MAGIC + json.dumps(header).encode())
+
+
+def _spy_marked(monkeypatch) -> list:
+    """Record, per call, whether the marked decode answered (True) or
+    handed the column back to the stream decode (False)."""
+    real = codec._decode_marked_strings
+    answered = []
+
+    def spy(buf, t, rows, span, **kw):
+        start = buf.tell()
+        out = real(buf, t, rows, span, **kw)
+        if out is None:
+            assert buf.tell() == start  # every byte it read went back
+        answered.append(out is not None)
+        return out
+
+    monkeypatch.setattr(codec, "_decode_marked_strings", spy)
+    return answered
+
+
+def _each_walk(monkeypatch):
+    """Yield once with the compiled String walk (when this host built
+    it) and once with ``kernels.load`` patched to None."""
+    if kernels.load() is not None:
+        yield "kernel"
+    monkeypatch.setattr(kernels, "load", lambda: None)
+    yield "python"
+
+
+def test_marks_written_and_decode_identity(tmp_path, monkeypatch):
     p = _write_fixture(tmp_path)
     assert os.path.exists(marks_sidecar_path(p))
     mr = MarksReader.open(p)
     assert mr is not None
-    with_marks = _decode_all(p, marks=mr)
     without = _decode_all(p)
-    assert len(with_marks) == len(without) > 1
-    for a, b in zip(with_marks, without):
-        assert a.equals(b)
+    answered = _spy_marked(monkeypatch)
+    for _walk in _each_walk(monkeypatch):
+        answered.clear()
+        with_marks = _decode_all(p, marks=mr)
+        assert answered == [True] * 10  # two String columns x five blocks
+        assert len(with_marks) == len(without) > 1
+        for a, b in zip(with_marks, without):
+            assert a.equals(b)
 
 
 def test_marks_skip_projection_identity(tmp_path):
@@ -130,13 +178,14 @@ def test_marks_skip_projection_identity(tmp_path):
 
 
 def test_nullable_column_marks_decode_identity(tmp_path):
-    # 'maybe' has nulls in every block -> recorded as Nullable(String)
-    # wire marks (flag "n"); decode via the marks reader must agree
+    # 'maybe' has nulls in every block -> recorded under the
+    # Nullable(String) wire type; decode via the marks reader must agree
     # column-for-column, nulls included
     p = _write_fixture(tmp_path)
     mr = MarksReader.open(p)
-    info = mr.block_at(0).col("maybe", 1024)
-    assert info is not None and info[2] is True  # nullable wire flag
+    assert marks_col_info(mr.block_at(0), "maybe", "Nullable(String)", 1024)
+    assert marks_col_info(mr.block_at(0), "maybe", "String", 1024) is None
+    assert marks_col_info(mr.block_at(0), "maybe", "Nullable(String)", 1023) is None
     with_marks = _decode_all(p, marks=mr)
     without = _decode_all(p)
     for a, b in zip(with_marks, without):
@@ -144,9 +193,42 @@ def test_nullable_column_marks_decode_identity(tmp_path):
         assert a.column(2).null_count > 0
 
 
+def test_sidecar_records_one_span_per_string_column(tmp_path):
+    """The v2 sidecar is the magic and one JSON header: per block its
+    offset, rows and each String column's [wire type, span bytes]. The
+    spans are the columns' true payload sizes, and a 5-block part's
+    sidecar stays under a kilobyte."""
+    p = _write_fixture(tmp_path)
+    raw = open(marks_sidecar_path(p), "rb").read()
+    assert raw.startswith(MAGIC) and len(raw) < 1024
+    header = json.loads(raw[len(MAGIC):])
+    assert header["file_bytes"] == os.path.getsize(p)
+    blocks = header["blocks"]
+    assert [b["r"] for b in blocks] == [1024] * 4 + [904]
+    data = open(p, "rb").read()
+    for b in blocks:
+        assert b["c"]["txt"][0] == "String"
+        assert b["c"]["maybe"][0] == "Nullable(String)"
+        # re-walk the block from its header to measure each payload
+        src = io.BytesIO(data)
+        src.seek(b["o"])
+        assert codec.read_block_header(src) == (3, b["r"])
+        spans = {}
+        for _ in range(3):
+            name = codec.read_str(src)
+            t = parse_type(codec.read_str(src))
+            start = src.tell()
+            codec.skip_column(src, t, b["r"])
+            spans[name] = src.tell() - start
+        assert {c: n for c, (_t, n) in b["c"].items()} == {
+            "txt": spans["txt"],
+            "maybe": spans["maybe"],
+        }
+
+
 def test_nullable_marks_skip_is_seek_and_identity(tmp_path):
     # projecting away the nullable string column goes through the
-    # marks seek (wire bytes include the null mask) — the following
+    # marks seek (the span includes the null mask) — the following
     # columns must still decode correctly
     rows = 2000
     p = os.path.join(str(tmp_path), "part-n.clickhouse")
@@ -171,42 +253,112 @@ def test_nullable_marks_skip_is_seek_and_identity(tmp_path):
         assert a.schema.names == ["k"]
 
 
-def test_stale_nullable_marks_fall_back(tmp_path):
-    # corrupt a nullable column's recorded lengths: verification must
-    # reject, restore the stream (mask bytes included) and the
-    # streaming decode must produce the true rows
+def test_stale_nullable_marks_fall_back(tmp_path, monkeypatch):
+    # a nullable column's span one byte long (its mask included): the
+    # walk ends short of it, the bytes go back and the streaming decode
+    # produces the true rows
     rows = 256
     p = os.path.join(str(tmp_path), "part-sn.clickhouse")
     t = pa.table(
         {
             "m": pa.array(
                 [None if i % 3 == 0 else f"x{i}" * (1 + i % 4) for i in range(rows)]
-            )
+            ),
+            "k": pa.array(np.arange(rows, dtype=np.int64)),
         }
     )
     write_native_file(p, t, block_rows=rows)
-    mr = MarksReader.open(p)
-    lens = np.frombuffer(mr._lens, dtype="<u4").copy()
-    nz = np.nonzero(lens)[0]
-    assert lens[nz[0]] != lens[nz[1]]
-    lens[nz[0]], lens[nz[1]] = lens[nz[1]], lens[nz[0]]
-    mr._lens = lens.tobytes()
-    corrupted = _decode_all(p, marks=mr)
+
+    def edit(blocks):
+        blocks[0]["c"]["m"][1] += 1
+
+    _rewrite_marks(p, edit)
     truth = _decode_all(p)
+    answered = _spy_marked(monkeypatch)
+    for _walk in _each_walk(monkeypatch):
+        answered.clear()
+        corrupted = _decode_all(p, marks=MarksReader.open(p))
+        assert answered == [False]
+        assert len(corrupted) == len(truth) == 1
+        assert corrupted[0].equals(truth[0])
+        assert corrupted[0].column(0).null_count == len(range(0, rows, 3))
+
+
+def _shift_txt_span(delta):
+    def edit(blocks):
+        for b in blocks:
+            b["c"]["txt"][1] += delta
+
+    return edit
+
+
+def _retype_maybe(blocks):
+    for b in blocks:
+        b["c"]["maybe"][0] = "String"  # the blocks say Nullable(String)
+
+
+@pytest.mark.parametrize(
+    "edit, answers",
+    [
+        (_shift_txt_span(-1), [False, True]),  # EOF inside the span
+        (_shift_txt_span(+1), [False, True]),  # the walk ends before it
+        (_retype_maybe, [True]),  # 'maybe' never reaches the marked decode
+    ],
+    ids=["span_one_byte_short", "span_one_byte_long", "wrong_recorded_type"],
+)
+def test_stale_span_falls_back(impl, tmp_path, monkeypatch, edit, answers):
+    """Same file size and block offsets, but a recorded span or type no
+    longer matches the block: the column is decoded from the stream,
+    the rows are exactly right and the other marked column still takes
+    its marks."""
+    p = _write_fixture(tmp_path)
+    _rewrite_marks(p, edit)
+    answered = _spy_marked(monkeypatch)
+    corrupted = _decode_all(p, marks=MarksReader.open(p))
+    assert answered == answers * 5
+    truth = _decode_all(p)
+    assert len(corrupted) == len(truth) == 5
     for a, b in zip(corrupted, truth):
         assert a.equals(b)
 
 
-def test_decode_from_lengths_short_stream_degrades():
-    # a stale sidecar claiming more bytes than the stream holds must
-    # return None with everything restored, not raise EOFError
-    arr = pa.array(["abc", "defg"], type=pa.string())
-    wire = _strings_wire_bytes(arr)
-    buf = io.BytesIO(wire)
-    huge = np.array([1000, 2000], dtype="<u4")
-    out = _decode_strings_from_lengths(buf, 2, huge, scrub=False)
-    assert out is None
-    assert buf.read() == wire
+@pytest.mark.parametrize("type_str", ["String", "Nullable(String)"])
+@pytest.mark.parametrize("delta", [-1, 1])
+def test_marked_decode_restores_every_byte_on_a_wrong_span(impl, type_str, delta):
+    t = parse_type(type_str)
+    if t.nullable:
+        vals = ["abc", None, "é" * 70, "", None, "x" * 200]
+    else:
+        vals = ["abc", "defg", "hi", "y" * 130]
+    buf = io.BytesIO()
+    codec.encode_column(buf, t, pa.array(vals, pa.string()))
+    wire = buf.getvalue()
+    src = io.BytesIO(wire + b"TAIL")
+    got = codec._decode_marked_strings(src, t, len(vals), len(wire), scrub=False)
+    assert got.to_pylist() == vals and src.read() == b"TAIL"
+    src = io.BytesIO(wire + b"TAIL")
+    span = len(wire) + delta
+    assert codec._decode_marked_strings(src, t, len(vals), span, scrub=False) is None
+    assert src.read() == wire + b"TAIL"  # fully pushed back
+
+
+def test_v1_sidecar_reads_mark_less(impl, tmp_path):
+    """A sidecar of the earlier per-row-lengths format (magic CHSMRK1,
+    a length-prefixed header, then u4 lengths) next to a part is not
+    used: the part reads mark-less and returns exactly its rows."""
+    p = _write_fixture(tmp_path)
+    truth = _decode_all(p, marks=MarksReader.open(p))
+    v1 = json.dumps(
+        {
+            "file_bytes": os.path.getsize(p),
+            "blocks": [{"o": 0, "r": 1024, "c": {"txt": {"b": 1, "l": 0}}}],
+        }
+    ).encode()
+    with open(marks_sidecar_path(p), "wb") as f:
+        f.write(b"CHSMRK1\n" + struct.pack("<I", len(v1)) + v1 + b"\0" * 4096)
+    assert MarksReader.open(p) is None
+    assert _decode_all(p, marks=MarksReader.open(p)) == truth
+    assert [n for n, _ in read_file_schema(p)] == ["id", "txt", "maybe"]
 
 
 def test_stale_marks_file_size_mismatch_refused(tmp_path):
@@ -221,32 +373,18 @@ def test_stale_marks_file_size_mismatch_refused(tmp_path):
     assert MarksReader.open(p) is None  # file_bytes guard
 
 
-def test_stale_marks_wrong_lengths_fall_back(tmp_path):
-    """Same file size, same block offsets, but per-row lengths swapped
-    between rows: the prefix verification must reject the marks and the
-    streaming decode must produce the true values."""
-    p = _write_fixture(tmp_path, rows=512, block_rows=512)
-    mr = MarksReader.open(p)
-    # corrupt the in-memory lens region: swap two entries of different
-    # length (keeps totals equal so the wire size still matches)
-    lens = np.frombuffer(mr._lens, dtype="<u4").copy()
-    assert lens[1] != lens[2]
-    lens[1], lens[2] = lens[2], lens[1]
-    mr._lens = lens.tobytes()
-    corrupted = _decode_all(p, marks=mr)
-    truth = _decode_all(p)
-    for a, b in zip(corrupted, truth):
-        assert a.equals(b)  # fallback produced the true rows
-
-
-def test_decode_from_lengths_restores_stream_on_mismatch():
-    arr = pa.array(["abc", "defg", "hi"], type=pa.string())
-    wire = _strings_wire_bytes(arr)
-    buf = io.BytesIO(wire + b"TAIL")
-    bad = np.array([4, 3, 2], dtype="<u4")  # swapped lengths
-    out = _decode_strings_from_lengths(buf, 3, bad, scrub=False)
-    assert out is None
-    assert buf.read() == wire + b"TAIL"  # fully pushed back
+def test_malformed_sidecar_refused(tmp_path):
+    p = _write_fixture(tmp_path)
+    for bad in (
+        lambda blocks: blocks[0]["c"].__setitem__("txt", ["String"]),
+        lambda blocks: blocks[0]["c"].__setitem__("txt", ["String", -5]),
+        lambda blocks: blocks[0].pop("r"),
+    ):
+        _rewrite_marks(p, bad)
+        assert MarksReader.open(p) is None
+    with open(marks_sidecar_path(p), "wb") as f:
+        f.write(MAGIC + b"{not json")
+    assert MarksReader.open(p) is None
 
 
 def test_scrub_through_marks_path(tmp_path):
@@ -318,11 +456,13 @@ def test_sink_writes_marks(spark, tmp_path):
 
 
 def test_recorder_skips_compressed_sink():
-    rec = MarksRecorder()
-    rec.set_ch_types(["s"], [parse_type("String")])
-    rec.on_block(-1, pa.record_batch([pa.array(["a"])], names=["s"]))
-    assert rec.disabled
-    assert rec.write("/nonexistent") is None
+    """Inside compressed frames the encoder cannot report byte spans,
+    so the recorder gets nothing and writes no sidecar."""
+    rb = pa.record_batch([pa.array(["a"])], names=["s"])
+    string = [parse_type("String")]
+    assert write_block(CompressedWriter(io.BytesIO()), rb, string) is None
+    assert write_block(io.BytesIO(), rb, string) == [("s", "String", 2)]
+    assert MarksRecorder().write("/nonexistent") is None
 
 
 def test_compressed_file_has_no_marks(tmp_path):
@@ -332,3 +472,53 @@ def test_compressed_file_has_no_marks(tmp_path):
     )
     assert not os.path.exists(marks_sidecar_path(p))
     assert MarksReader.open(p) is None
+
+
+def test_parts_with_marks_are_the_string_parts(tmp_path):
+    """Exactly the plain parts holding a String or Nullable(String)
+    column (binary columns write the String wire) get a marks file;
+    numeric-only, compressed, LowCardinality, FixedString and Array
+    parts do not — the same parts the per-row-lengths format marked."""
+    n = 3000
+    ints = pa.array(np.arange(n, dtype=np.int64))
+    strs = pa.array([f"s{i}" for i in range(n)])
+    nulls = pa.array([None if i % 4 == 0 else f"n{i}" for i in range(n)])
+    late = pa.array([None if i == n - 1 else "v" for i in range(n)])
+    parts = {
+        "str": (pa.table({"s": strs}), None, None),
+        "nullable": (pa.table({"ns": nulls}), None, None),
+        "numeric": (pa.table({"k": ints, "f": pa.array(np.arange(n) / 3)}), None, None),
+        "mixed": (pa.table({"k": ints, "s": strs, "ns": nulls}), None, None),
+        "late_null": (pa.table({"k": ints, "s": late}), None, None),
+        "empty": (pa.table({"s": pa.array([], pa.string())}), None, None),
+        "lz4": (pa.table({"s": strs}), "lz4", None),
+        "zstd_mixed": (pa.table({"k": ints, "ns": nulls}), "zstd", None),
+        "binary": (pa.table({"b": pa.array([b"x"] * n, pa.binary())}), None, None),
+        "lowcard": (pa.table({"s": strs}), None, "LowCardinality(String)"),
+        "fixed": (pa.table({"s": pa.array(["ab"] * n)}), None, "FixedString(2)"),
+        "array": (pa.table({"a": pa.array([["x"]] * n)}), None, None),
+    }
+    d = str(tmp_path)
+    for name, (t, compression, ch_type) in parts.items():
+        write_native_file(
+            os.path.join(d, f"{name}.clickhouse"),
+            t,
+            block_rows=1000,
+            compression=compression,
+            ch_types=None if ch_type is None else [parse_type(ch_type)],
+        )
+    marked = {
+        name
+        for name in parts
+        if os.path.exists(marks_sidecar_path(os.path.join(d, f"{name}.clickhouse")))
+    }
+    assert marked == {"binary", "empty", "late_null", "mixed", "nullable", "str"}
+    # the one late null promotes only the last block's column
+    p = os.path.join(d, "late_null.clickhouse")
+    mr = MarksReader.open(p)
+    offsets = [o for o, _rows in codec.scan_block_offsets(p)]
+    assert [mr.block_at(o)[1]["s"][0] for o in offsets] == [
+        "String",
+        "String",
+        "Nullable(String)",
+    ]

@@ -61,19 +61,19 @@ def _counting(monkeypatch):
         return real(buf, t, rows, **kw)
 
     monkeypatch.setattr(codec, "decode_column", counting)
-    # the marks sidecar (native/marks.py) decodes String payloads via
-    # the vectorized length path instead of decode_column — count a
-    # SUCCESSFUL marks decode as a String decode so these assertions
+    # a column the marks sidecar (native/marks.py) covers decodes
+    # through _decode_marked_strings instead of decode_column — count a
+    # SUCCESSFUL marked decode as a String decode so these assertions
     # keep meaning "this block's payload was materialized"
-    real_marks = codec._decode_strings_from_lengths
+    real_marks = codec._decode_marked_strings
 
-    def counting_marks(buf, rows, lengths, **kw):
-        out = real_marks(buf, rows, lengths, **kw)
+    def counting_marks(buf, t, rows, span, **kw):
+        out = real_marks(buf, t, rows, span, **kw)
         if out is not None:
             calls.append("String")
         return out
 
-    monkeypatch.setattr(codec, "_decode_strings_from_lengths", counting_marks)
+    monkeypatch.setattr(codec, "_decode_marked_strings", counting_marks)
     return calls
 
 
